@@ -77,38 +77,7 @@ def _prior_verification_status() -> dict[str, int]:
             else:
                 level = -1
             status[key] = level  # later rounds override earlier ones
-    # keys whose SEMANTICS changed after their last official pass are
-    # demoted to never-checked so the change reaches a fresh official
-    # artifact (r7: bounded-cell quantizer under semdedup + graph ANN,
-    # PQ family retrained on the fixed-D stratum, resize checksum fix)
-    for key in _RESAMPLE:
-        if status.get(key) == 2:
-            status[key] = 0
-    # rows-only floor keys (r7 verdict task #7): their only official
-    # records are stale round-1 artifacts; force ONE fresh officially
-    # dated rows-only record each, then they fall back to the floor
-    # (their r8 records will rank them behind never-checked keys again)
-    for key in _FLOOR_REFRESH:
-        if status.get(key, 0) == 1:
-            status[key] = 0
     return status
-
-
-#: semantics changed in round 8 — see _prior_verification_status.
-#: (The r7 set — bounded-cell quantizer, PQ stratum training, resize
-#: checksum — was officially re-verified in CORRECTNESS_r07 50/50 and
-#: is therefore cleared; round 8's bounded_cells totalization and the
-#: heaps pcut guard are value-identical on every real table, so no key
-#: needs a fresh post-change artifact.)
-_RESAMPLE = frozenset()
-
-#: the 7 by-design rows-only keys (real streaming x3, JVM-internal
-#: sketches x3, DEFLATE x1) got their one fresh officially dated
-#: record in CORRECTNESS_r08 (r7 verdict task #7) — the refresh is
-#: DONE, so this set is now empty: leaving them here would re-promote
-#: the permanent floor above never-sampled keys every round and waste
-#: 7 of the driver's ~50 official slots
-_FLOOR_REFRESH = frozenset()
 
 
 # Within the never-verified tier, check one representative key per

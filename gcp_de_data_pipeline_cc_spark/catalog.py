@@ -19,6 +19,8 @@ Physical notes for the 100 TB design point:
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,10 +71,10 @@ def ensure_session_posture(spark: SparkSession) -> None:
 
 def table_fingerprint(sf_dir: str, name: str) -> tuple:
     """Cheap content fingerprint of one warehouse table: the sorted
-    (relative-path, mtime_ns, size) of its parquet file(s).  Session
-    caches key on this so a table REWRITTEN at the same path within one
-    Spark application (the test-suite overwrite pattern) invalidates the
-    cache instead of silently serving frames built on stale data."""
+    (relative-path, mtime_ns, size) of its parquet file(s).  :func:`shared`
+    checks it so a table REWRITTEN at the same path within one Spark
+    application (the test-suite overwrite pattern) forces a rebuild
+    instead of silently serving frames built on stale data."""
     base = os.path.join(sf_dir, f"{name}.parquet")
     entries = []
     if os.path.isdir(base):
@@ -93,6 +95,67 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple:
         except OSError:
             pass
     return tuple(sorted(entries))
+
+
+#: the one session-shared relation store:
+#: (applicationId, sf_dir, builder qualname, bound params)
+#: -> (warehouse fingerprint, built value)
+_SHARED: dict[tuple, tuple] = {}
+
+
+def shared(fn):
+    """Build ``fn(spark, sf_dir, *params)`` once per Spark application and
+    warehouse, and hand every later call the same object.
+
+    Several registry keys read the same derived relation (graph backbones,
+    dedup pairs, PQ codebooks, quality signals); the builder behind this
+    decorator runs once and every consumer — in the same or any later
+    query of the session — reuses what it returned, as built: a
+    DataFrame, a tuple of them, or a list.
+
+    Key: (applicationId, sf_dir, ``fn.__qualname__``, params), with params
+    bound through ``fn``'s signature and defaults applied, so
+    ``f(spark, d)`` and ``f(spark, d, 8)`` share an entry when 8 is the
+    default.  ``sf_dir`` stays in the key on purpose: two hard-linked
+    copies of one warehouse fingerprint alike but must not share builds.
+
+    Invalidation: each entry stores the fingerprint of every
+    :data:`TABLES` entry in ``sf_dir`` at build time.  A lookup whose
+    fingerprint differs rebuilds and replaces the entry, so rewriting any
+    warehouse table mid-session never serves a stale relation, and no
+    per-builder table list has to be kept right by hand.
+
+    Checkpoint policy: builders end their shared relations in
+    ``localCheckpoint(eager=False)`` (executor-local blocks; on a real
+    cluster ``checkpoint()`` survives executor loss).  The session runs
+    with AQE on, and under AQE that call is NOT lazy: it runs every
+    upstream shuffle and broadcast stage at call time, inside whichever
+    caller builds the relation first; only the final stage waits for
+    the first action.  With AQE off only broadcast builds run at the
+    call; shuffle stages wait for the first action.
+    """
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def build_once(spark: SparkSession, sf_dir: str, *args, **kwargs):
+        bound = sig.bind(spark, sf_dir, *args, **kwargs)
+        bound.apply_defaults()
+        params = tuple(bound.arguments.values())[2:]
+        key = (spark.sparkContext.applicationId, sf_dir, fn.__qualname__, params)
+        fp = tuple(table_fingerprint(sf_dir, name) for name in TABLES)
+        hit = _SHARED.get(key)
+        if hit is not None and hit[0] == fp:
+            return hit[1]
+        out = fn(spark, sf_dir, *args, **kwargs)
+        _SHARED[key] = (fp, out)
+        return out
+
+    return build_once
+
+
+def clear() -> None:
+    """Drop every shared relation, for all sessions and warehouses."""
+    _SHARED.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

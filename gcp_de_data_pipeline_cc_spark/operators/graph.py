@@ -12,11 +12,14 @@ injection contract the dedup tier already uses
 
 Cache discipline
 ----------------
-Keyed by (applicationId, sf_dir, K).  The cached value is a
-localCheckpoint(eager=False) DataFrame: the first action materializes the
-≤K·n edge blocks on the executors, every later consumer — in the SAME or
-ANY LATER query of the session — reuses the materialized blocks instead
-of re-running the lineitem scan.  Memory is bounded: the supplier
+Every backbone is a :func:`catalog.shared` builder, keyed by
+(applicationId, sf_dir, builder, K) and rebuilt when any warehouse table
+is rewritten.  The value is a localCheckpoint(eager=False) DataFrame.
+The session runs AQE, so the checkpoint call itself runs the upstream
+shuffle stages (the lineitem scan, pair explode and top-K cut) inside
+the first consumer's plan build; every later consumer — in the SAME or
+ANY LATER query of the session — reads the ≤K·n checkpointed edge
+blocks instead of re-running the scan.  Memory is bounded: the supplier
 backbone is ≤K·n_suppliers rows of two BIGINTs, the brand edge list is
 ≤|brands|² rows — both dim-sized, never fact-sized.  On a real cluster
 swap localCheckpoint for checkpoint() to survive executor loss
@@ -32,26 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
-
-# (applicationId, sf_dir, k) -> DataFrame
-_SUPPLIER_BB: dict[tuple[str, str, int], DataFrame] = {}
-_SUPPLIER_G: dict[tuple[str, str, int], DataFrame] = {}
-_BRAND_E: dict[tuple[str, str], DataFrame] = {}
-_LPA_LABELS: dict[tuple[str, str, int], list[DataFrame]] = {}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
-def clear_cache() -> None:
-    """Drop all cached backbones (tests that mutate a sf_dir in place)."""
-    _SUPPLIER_BB.clear()
-    _SUPPLIER_G.clear()
-    _BRAND_E.clear()
-    _LPA_LABELS.clear()
-    _TRADE_G.clear()
+from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
 
 
 def _pair_col() -> F.Column:
@@ -69,6 +53,7 @@ def _pair_col() -> F.Column:
     )
 
 
+@shared
 def supplier_backbone(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
     """Canonical top-K co-shipment backbone: columns (sa, sb), sa < sb,
     distinct; an edge survives when EITHER endpoint ranks it in its K
@@ -80,10 +65,6 @@ def supplier_backbone(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame
     The top-K cut keeps the backbone ≤K·n — LINEAR in nodes — where a
     weight-quantile cut would stay quadratic (graph_triangles' measured
     argument)."""
-    key = (*_cache_key(spark, sf_dir), k)
-    bb = _SUPPLIER_BB.get(key)
-    if bb is not None:
-        return bb
     li = load_table(spark, sf_dir, "lineitem")
     sets = (
         li.groupBy("l_orderkey")
@@ -108,27 +89,22 @@ def supplier_backbone(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame
     rn = F.row_number().over(
         Window.partitionBy("u").orderBy(F.desc("w"), F.asc("v"))
     )
-    bb = (
+    return (
         d.withColumn("rn", rn)
         .filter(F.col("rn") <= k)
         .select(F.least("u", "v").alias("sa"), F.greatest("u", "v").alias("sb"))
         .distinct()
         .localCheckpoint(eager=False)  # ≤K·n rows, shared by the tier
     )
-    _SUPPLIER_BB[key] = bb
-    return bb
 
 
+@shared
 def supplier_graph(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
     """Both orientations of the supplier backbone: columns (u, v).
     Checkpointed separately — BFS relaxations / k-core peels / wedge
     joins consume it repeatedly."""
-    key = (*_cache_key(spark, sf_dir), k)
-    g = _SUPPLIER_G.get(key)
-    if g is not None:
-        return g
     bb = supplier_backbone(spark, sf_dir, k)
-    g = (
+    return (
         bb.select(
             F.explode(
                 F.array(
@@ -140,18 +116,13 @@ def supplier_graph(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
         .select(F.col("o.u").alias("u"), F.col("o.v").alias("v"))
         .localCheckpoint(eager=False)
     )
-    _SUPPLIER_G[key] = g
-    return g
 
 
+@shared
 def brand_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted brand co-purchase edge list, BOTH orientations:
     columns (v, u, w) — u the label source, v the adoptee (LPA's join
     orientation).  The Σ|basket|² self-join runs once per session."""
-    key = _cache_key(spark, sf_dir)
-    e = _BRAND_E.get(key)
-    if e is not None:
-        return e
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     tx = (
@@ -171,14 +142,12 @@ def brand_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("w"))
         .localCheckpoint(eager=False)  # feeds both orientations
     )
-    e = (
+    return (
         eup.unionAll(
             eup.select(F.col("u").alias("v"), F.col("v").alias("u"), "w")
         )
         .localCheckpoint(eager=False)
     )
-    _BRAND_E[key] = e
-    return e
 
 
 def lpa_step(e: DataFrame, labels: DataFrame) -> DataFrame:
@@ -198,30 +167,23 @@ def lpa_step(e: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
+@shared
 def lpa_labels(
     spark: SparkSession, sf_dir: str, iters: int = 2
 ) -> list[DataFrame]:
     """Checkpointed label tables after rounds 1..iters over the brand
     graph (round 0 = every node its own community).  LPA reports rounds
     1 and 2; modularity scores round 2 — one shared propagation."""
-    key = (*_cache_key(spark, sf_dir), iters)
-    ls = _LPA_LABELS.get(key)
-    if ls is not None:
-        return ls
     e = brand_copurchase_edges(spark, sf_dir)
     labels = e.select("v").distinct().withColumn("label", F.col("v"))
     ls = []
     for _ in range(iters):
         labels = lpa_step(e, labels).localCheckpoint(eager=False)
         ls.append(labels)
-    _LPA_LABELS[key] = ls
     return ls
 
 
-# (applicationId, sf_dir, k) -> symmetrized sparsified trade graph
-_TRADE_G: dict[tuple[str, str, int], DataFrame] = {}
-
-
+@shared
 def trade_sparse_graph(
     spark: SparkSession, sf_dir: str, k: int = 3
 ) -> DataFrame:
@@ -234,10 +196,6 @@ def trade_sparse_graph(
     One tpch_q7-shaped fact pass per session; the result is a
     checkpointed <= 2·k·|nations|-row relation shared by every
     consumer (the supplier_backbone ownership contract)."""
-    key = (*_cache_key(spark, sf_dir), k)
-    g = _TRADE_G.get(key)
-    if g is not None:
-        return g
     customer = load_table(spark, sf_dir, "customer")
     supplier = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
@@ -271,7 +229,7 @@ def trade_sparse_graph(
         )
         .distinct()
     )
-    g = (
+    return (
         kept.select(
             F.explode(
                 F.array(
@@ -283,14 +241,9 @@ def trade_sparse_graph(
         .select(F.col("o.u").alias("u"), F.col("o.v").alias("v"))
         .localCheckpoint(eager=False)
     )
-    _TRADE_G[key] = g
-    return g
 
 
-# (applicationId, sf_dir, k) -> DIRECTED sparsified trade digraph
-_TRADE_DG: dict[tuple[str, str, int], DataFrame] = {}
-
-
+@shared
 def trade_sparse_digraph(
     spark: SparkSession, sf_dir: str, k: int = 3
 ) -> DataFrame:
@@ -302,10 +255,6 @@ def trade_sparse_digraph(
     the point for SCC/condensation analyses (u sells to v is not v
     sells to u).  Same one-fact-pass, checkpointed, session-cached
     ownership contract."""
-    key = (*_cache_key(spark, sf_dir), k)
-    g = _TRADE_DG.get(key)
-    if g is not None:
-        return g
     customer = load_table(spark, sf_dir, "customer")
     supplier = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
@@ -330,20 +279,15 @@ def trade_sparse_digraph(
     rn = F.row_number().over(
         Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst"))
     )
-    g = (
+    return (
         e.withColumn("rn", rn)
         .filter(F.col("rn") <= k)
         .select("src", "dst")
         .localCheckpoint(eager=False)
     )
-    _TRADE_DG[key] = g
-    return g
 
 
-# (applicationId, sf_dir, k, rounds) -> (u, scc_id) labels
-_SCC_LBL: dict[tuple[str, str, int, int], DataFrame] = {}
-
-
+@shared
 def scc_labels(
     spark: SparkSession, sf_dir: str, k: int = 3, rounds: int = 5
 ) -> DataFrame:
@@ -353,10 +297,6 @@ def scc_labels(
     domain), scc_id = min mutually-reachable node.  Session-cached and
     checkpointed — graph_scc and graph_condensation share ONE closure
     build (the supplier_backbone ownership contract)."""
-    key = (*_cache_key(spark, sf_dir), k, rounds)
-    lbl = _SCC_LBL.get(key)
-    if lbl is not None:
-        return lbl
     nation = load_table(spark, sf_dir, "nation")
     g = trade_sparse_digraph(spark, sf_dir, k)
     reach = (
@@ -388,10 +328,8 @@ def scc_labels(
         )
         .select(F.col("r1.u").alias("u"), F.col("r1.v").alias("v"))
     )
-    lbl = (
+    return (
         pair.groupBy("u")
         .agg(F.min("v").cast("long").alias("scc_id"))
         .localCheckpoint(eager=False)
     )
-    _SCC_LBL[key] = lbl
-    return lbl

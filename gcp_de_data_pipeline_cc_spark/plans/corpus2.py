@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators import text as tx
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
@@ -58,6 +58,7 @@ from gcp_de_data_pipeline_cc_spark.plans.registry import query
     GROUP BY tok.doc_id
     """,
 )
+@shared
 def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM quality scoring: train add-one-smoothed unigram
     probabilities on the corpus itself, then score every document by
@@ -70,37 +71,30 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_tokens; the scoring join is keyed on token (vocabulary-sized —
     after a frequency floor it broadcasts), and the corpus totals are a
     one-row broadcast. No second corpus scan: the model and the scoring
-    pass share the exploded-token relation."""
-    from gcp_de_data_pipeline_cc_spark.plans.corpus_stats import (
-        _signal_cached,
+    pass share the exploded-token relation.  Session-shared with
+    quality_composite_score, which consumes this relation verbatim."""
+    docs = load_table(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id", F.explode(tx.tokens_col(F.col("text"))).alias("token")
     )
-
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        tok = docs.select(
-            "doc_id", F.explode(tx.tokens_col(F.col("text"))).alias("token")
+    cnt = tok.groupBy("token").agg(F.count("*").alias("c"))
+    tot = cnt.agg(
+        F.sum("c").alias("n_corpus"), F.count("*").alias("vocab")
+    )
+    bits = F.avg(
+        -F.log2((F.col("c") + 1.0) / (F.col("n_corpus") + F.col("vocab")))
+    )
+    return (
+        tok.join(cnt, "token")
+        .crossJoin(F.broadcast(tot))
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_tokens"),
+            roundn(bits, 4).alias("bits_per_token"),
+            roundn(F.pow(F.lit(2.0), bits), 4).alias("perplexity"),
         )
-        cnt = tok.groupBy("token").agg(F.count("*").alias("c"))
-        tot = cnt.agg(
-            F.sum("c").alias("n_corpus"), F.count("*").alias("vocab")
-        )
-        bits = F.avg(
-            -F.log2((F.col("c") + 1.0) / (F.col("n_corpus") + F.col("vocab")))
-        )
-        return (
-            tok.join(cnt, "token")
-            .crossJoin(F.broadcast(tot))
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").alias("n_tokens"),
-                roundn(bits, 4).alias("bits_per_token"),
-                roundn(F.pow(F.lit(2.0), bits), 4).alias("perplexity"),
-            )
-        )
-
-    # r10: session-shared with quality_composite_score (which consumes
-    # this relation verbatim) — the corpus_stats._signal_cached pattern
-    return _signal_cached(spark, sf_dir, "perplexity", build)
+        .localCheckpoint(eager=False)
+    )
 
 
 #: tokens per dedup block — the "line" analog for punctuation-free feeds

@@ -17,31 +17,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 # ---------------------------------------------------------------------------
-# r10 session-shared quality signals (the recsys/_cf ownership pattern):
-# text_entropy and text_repetition are consumed verbatim by
-# quality_composite_score (and their own registry keys), so each signal
-# relation is built once per (session, warehouse fingerprint) and
-# lazily checkpointed — materialized inside the first consumer's timed
-# region, never persisted across runs.
+# r10 session-shared quality signals (catalog.shared): text_entropy and
+# text_repetition are consumed verbatim by quality_composite_score (and
+# their own registry keys), so each signal relation is built once per
+# (session, warehouse) and checkpointed.  Under the session's AQE the
+# localCheckpoint(eager=False) call runs the signal's shuffle stages
+# right away, in the plan build of whichever key asks first; nothing is
+# persisted across runs.
 # ---------------------------------------------------------------------------
-
-_SIGNAL_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _signal_cached(spark, sf_dir: str, name: str, build) -> DataFrame:
-    from gcp_de_data_pipeline_cc_spark.plans.llm import _session_cache_key
-
-    key = (*_session_cache_key(spark, sf_dir, "documents"), name)
-    df = _SIGNAL_CACHE.get(key)
-    if df is None:
-        df = build().localCheckpoint(eager=False)
-        _SIGNAL_CACHE[key] = df
-    return df
 
 
 @query(
@@ -65,6 +53,7 @@ def _signal_cached(spark, sf_dir: str, name: str, build) -> DataFrame:
     GROUP BY f.doc_id, t.n_distinct_chars
     """,
 )
+@shared
 def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-level Shannon entropy per document: explode characters,
     count per (doc, char), fold -Σ p·log2 p. Low entropy flags repeated-
@@ -74,30 +63,27 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions); this formulation is the exact-alphabet reference.
     Doc-char counts are exact integers; only the final fold is float,
     ≤~100 terms per doc, rounded at 6."""
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        # r10: the r9 fan_out here was reverted — it added 4 exchanges
-        # to the plan for a paired gain (~0.1-0.2 s) inside the host
-        # noise band, against the same revert discipline that dropped
-        # the text_perplexity / fn_surrogate_key fan_outs (r9 verdict
-        # #5)
-        chars = docs.select(
-            "doc_id", F.explode(F.split("text", "")).alias("ch")
-        ).filter(F.col("ch") != "")
-        freq = chars.groupBy("doc_id", "ch").agg(F.count("*").alias("cnt"))
-        tot = freq.groupBy("doc_id").agg(
-            F.sum("cnt").alias("n_chars_split"),
-            F.count("*").cast("int").alias("n_distinct_chars"),
-        )
-        p = F.col("cnt") / F.col("n_chars_split")
-        return (
-            freq.join(tot, "doc_id")
-            .groupBy("doc_id", "n_distinct_chars")
-            .agg(roundn(-F.sum(p * F.log2(p)), 6).alias("entropy"))
-        )
-
-    return _signal_cached(spark, sf_dir, "entropy", build)
-
+    docs = load_table(spark, sf_dir, "documents")
+    # r10: the r9 fan_out here was reverted — it added 4 exchanges
+    # to the plan for a paired gain (~0.1-0.2 s) inside the host
+    # noise band, against the same revert discipline that dropped
+    # the text_perplexity / fn_surrogate_key fan_outs (r9 verdict
+    # #5)
+    chars = docs.select(
+        "doc_id", F.explode(F.split("text", "")).alias("ch")
+    ).filter(F.col("ch") != "")
+    freq = chars.groupBy("doc_id", "ch").agg(F.count("*").alias("cnt"))
+    tot = freq.groupBy("doc_id").agg(
+        F.sum("cnt").alias("n_chars_split"),
+        F.count("*").cast("int").alias("n_distinct_chars"),
+    )
+    p = F.col("cnt") / F.col("n_chars_split")
+    return (
+        freq.join(tot, "doc_id")
+        .groupBy("doc_id", "n_distinct_chars")
+        .agg(roundn(-F.sum(p * F.log2(p)), 6).alias("entropy"))
+        .localCheckpoint(eager=False)
+    )
 
 @query(
     "text_readability",
@@ -177,6 +163,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY doc_id
     """,
 )
+@shared
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeated-n-gram quality signal (the Gopher-style repetition
     filter): per document, the share of all bigrams taken by the single
@@ -189,31 +176,31 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     never leave the (doc_id-keyed) aggregation, so state per doc is
     bounded by its distinct-bigram count.
     """
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        # r10: r9's marginal fan_out reverted (r9 verdict #5 — plan +4
-        # exchanges for a sub-band paired gain; see text_entropy note)
-        base = docs.select(
-            "doc_id", F.split("text", " ").alias("t")
-        ).filter(F.size("t") >= 2)
-        bg = base.select(
-            "doc_id",
-            F.explode(
-                F.expr("transform(sequence(1, size(t) - 1),"
-                       " i -> concat_ws(' ', t[i-1], t[i]))")
-            ).alias("bigram"),
-        )
-        cnt = bg.groupBy("doc_id", "bigram").agg(F.count("*").alias("n"))
-        return cnt.groupBy("doc_id").agg(
+    docs = load_table(spark, sf_dir, "documents")
+    # r10: r9's marginal fan_out reverted (r9 verdict #5 — plan +4
+    # exchanges for a sub-band paired gain; see text_entropy note)
+    base = docs.select(
+        "doc_id", F.split("text", " ").alias("t")
+    ).filter(F.size("t") >= 2)
+    bg = base.select(
+        "doc_id",
+        F.explode(
+            F.expr("transform(sequence(1, size(t) - 1),"
+                   " i -> concat_ws(' ', t[i-1], t[i]))")
+        ).alias("bigram"),
+    )
+    cnt = bg.groupBy("doc_id", "bigram").agg(F.count("*").alias("n"))
+    return (
+        cnt.groupBy("doc_id")
+        .agg(
             F.sum("n").alias("n_bigrams"),
             F.count("*").alias("n_distinct"),
             F.max("n").alias("top_count"),
             roundn(F.max("n") / F.sum("n"), 4).alias("repetition_ratio"),
             roundn(F.count("*") / F.sum("n"), 4).alias("distinct_ratio"),
         )
-
-    return _signal_cached(spark, sf_dir, "repetition", build)
-
+        .localCheckpoint(eager=False)
+    )
 
 @query(
     "corpus_mix_weights",

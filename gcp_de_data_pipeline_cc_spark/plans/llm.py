@@ -10,7 +10,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import fan_out, load_table, table_fingerprint
+from gcp_de_data_pipeline_cc_spark.catalog import fan_out, load_table, shared
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators import dedup as dd
 from gcp_de_data_pipeline_cc_spark.operators import multimodal as mm
@@ -248,74 +248,47 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_dup_pairs(spark, sf_dir)
 
 
-# session-scoped caches for the shared dedup relations (the
-# operators/graph backbone discipline).  Memory bound: the
+# session-shared dedup relations (catalog.shared).  Memory bound: the
 # threshold-filtered PAIR set is sparse (near-dups, not all-pairs) and
-# the cluster assignment is ≤ entity-sized — both orders of magnitude
-# below the shingle relation, which stays per-plan-checkpointed only
-# (a session-pinned shingle cache would hold corpus-scale blocks).
-_DUP_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-_DUP_CC_CACHE: dict[tuple, DataFrame] = {}
-_SHINGLES_CACHE: dict[tuple, DataFrame] = {}
+# the cluster assignment is ≤ entity-sized; the shingle relation is
+# corpus-sized.  Each ends in localCheckpoint(eager=False), which under
+# the session's AQE runs the upstream shuffle stages at call time, in
+# the first consumer's plan build.
 
 
-def _session_cache_key(spark: SparkSession, sf_dir: str, table: str) -> tuple:
-    """Session-cache key that also carries a content fingerprint of the
-    backing table, so rewriting the data at the same path within one
-    Spark application invalidates the cache (r5 ADVICE: path-only keys
-    silently served frames trained on stale data)."""
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, table),
-    )
-
-
+@shared
 def corpus_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-Jaccard near-dup pairs at the 0.5 production threshold,
     built once per (session, sf_dir) and shared by the pair consumer,
     the cluster build, and everything downstream of clusters."""
-    key = _session_cache_key(spark, sf_dir, "documents")
-    pairs = _DUP_PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = dd.ngram_jaccard_pairs(
-            load_table(spark, sf_dir, "documents"),
-            threshold=0.5,
-            shingles=corpus_shingles(spark, sf_dir),
-        ).localCheckpoint(eager=False)
-        _DUP_PAIRS_CACHE[key] = pairs
-    return pairs
+    return dd.ngram_jaccard_pairs(
+        load_table(spark, sf_dir, "documents"),
+        threshold=0.5,
+        shingles=corpus_shingles(spark, sf_dir),
+    ).localCheckpoint(eager=False)
 
 
+@shared
 def corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, shingle) 3-gram relation, built once per
     (session, warehouse): the tokenize + explode + distinct pass every
     shingle consumer (exact-Jaccard pairs, MinHash signature builds,
     LSH calibration, the accuracy eval) otherwise re-runs."""
-    key = _session_cache_key(spark, sf_dir, "documents")
-    sh = _SHINGLES_CACHE.get(key)
-    if sh is None:
-        sh = dd._doc_shingles(
-            load_table(spark, sf_dir, "documents"), "doc_id", "text", 3
-        ).localCheckpoint(eager=False)
-        _SHINGLES_CACHE[key] = sh
-    return sh
+    return dd._doc_shingles(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", 3
+    ).localCheckpoint(eager=False)
 
 
+@shared
 def corpus_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over :func:`corpus_dup_pairs` — the
     iterative label-min loop runs once per session; dedup_clusters,
     the survivorship manifest, and the per-source rate report all
     consume the same (node, cluster_id) relation."""
-    key = _session_cache_key(spark, sf_dir, "documents")
-    cc = _DUP_CC_CACHE.get(key)
-    if cc is None:
-        pairs = corpus_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        cc = dd.connected_components(
-            pairs, src="doc_a", dst="doc_b"
-        ).localCheckpoint(eager=False)
-        _DUP_CC_CACHE[key] = cc
-    return cc
+    pairs = corpus_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    return dd.connected_components(
+        pairs, src="doc_a", dst="doc_b"
+    ).localCheckpoint(eager=False)
 
 
 @query(
@@ -722,23 +695,14 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_topk10(spark, sf_dir)
 
 
-# session-scoped cache: the exact fixed-Q-query top-10 is the registered
-# sim_topk output AND the recall baseline of both approximate searches
-# AND recsys_mmr_rerank's candidate pool — query-subset-sized (tiny)
-_EXACT_TOPK_CACHE: dict[tuple, DataFrame] = {}
-
-
+# session-shared (catalog.shared): the exact fixed-Q-query top-10 is the
+# registered sim_topk output AND the recall baseline of both approximate
+# searches AND recsys_mmr_rerank's candidate pool — query-subset-sized
+@shared
 def exact_topk10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _session_cache_key(spark, sf_dir, "embeddings")
-    out = _EXACT_TOPK_CACHE.get(key)
-    if out is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        queries = sim.sample_queries(emb)
-        out = sim.cosine_topk(queries, emb, k=10).localCheckpoint(
-            eager=False
-        )
-        _EXACT_TOPK_CACHE[key] = out
-    return out
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = sim.sample_queries(emb)
+    return sim.cosine_topk(queries, emb, k=10).localCheckpoint(eager=False)
 
 
 def _sim_lsh_cte() -> str:
@@ -3976,35 +3940,23 @@ def _sim_pq_oracle() -> str:
     """
 
 
-#: session-scoped caches: the K=64 Lloyd-trained codebook+codes and the
-#: exact integer-L2 baseline are shared by sim_topk_pq AND
+#: session-shared (catalog.shared): the K=64 Lloyd-trained codebook+codes
+#: and the exact integer-L2 baseline are read by sim_topk_pq AND
 #: sim_topk_ivfpq (the exact_topk10 discipline) — training runs once
-_PQ_TRAIN_CACHE: dict[tuple, tuple] = {}
-_EXACT_L2_CACHE: dict[tuple, DataFrame] = {}
-
-
+@shared
 def _pq_trained(spark: SparkSession, sf_dir: str):
-    """(flat, cent, codes) at the search operating point, session-cached."""
-    key = _session_cache_key(spark, sf_dir, "embeddings")
-    out = _PQ_TRAIN_CACHE.get(key)
-    if out is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        flat = _pq_flat(emb, k=_PQ_SEARCH_K)
-        flat = flat.localCheckpoint(eager=False)  # train + LUT consumers
-        cent, codes = _pq_train(flat, _PQ_SEARCH_ITERS)
-        out = (flat, cent, codes)
-        _PQ_TRAIN_CACHE[key] = out
-    return out
+    """(flat, cent, codes) at the search operating point."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    flat = _pq_flat(emb, k=_PQ_SEARCH_K)
+    flat = flat.localCheckpoint(eager=False)  # train + LUT consumers
+    cent, codes = _pq_train(flat, _PQ_SEARCH_ITERS)
+    return flat, cent, codes
 
 
+@shared
 def _exact_l2_top10_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _session_cache_key(spark, sf_dir, "embeddings")
-    out = _EXACT_L2_CACHE.get(key)
-    if out is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        out = _exact_l2_top10(emb).localCheckpoint(eager=False)
-        _EXACT_L2_CACHE[key] = out
-    return out
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _exact_l2_top10(emb).localCheckpoint(eager=False)
 
 
 def _pq_train(

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table, table_fingerprint
+from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.plans.registry import REGISTRY, query
 
@@ -38,75 +38,55 @@ from gcp_de_data_pipeline_cc_spark.plans.registry import REGISTRY, query
 # recsys_coverage (which nests the knn plan) and recsys_diversity_ild
 # all derive from the SAME customer-brand incidence and brand
 # co-occurrence relations — build each once per (session, warehouse)
-# like the graph-backbone ownership contract.  recsys_hit_rate
-# retrains on the leakage-safe TRAIN split and cannot share.
+# like the graph-backbone ownership contract (catalog.shared).
+# recsys_hit_rate retrains on the leakage-safe TRAIN split and cannot
+# share.
 # ---------------------------------------------------------------------------
 
-_CF_V: dict[tuple, DataFrame] = {}
-_CF_CO: dict[tuple, DataFrame] = {}
 
-
-def _cf_key(spark: SparkSession, sf_dir: str) -> tuple:
+@shared
+def _cf_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (c, brand) customer-brand incidence, checkpointed."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    part = load_table(spark, sf_dir, "part")
+    # r10 (guide §2.3): dedup (orderkey, brand) before the orders
+    # join — the join and the final (c, brand) distinct then process
+    # the per-order deduped rows instead of every lineitem
+    ob = (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .select(
+            F.col("l_orderkey").alias("k0"),
+            F.col("p_brand").alias("brand"),
+        )
+        .distinct()
+    )
     return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "lineitem"),
-        table_fingerprint(sf_dir, "orders"),
-        table_fingerprint(sf_dir, "part"),
+        ob.join(orders, ob.k0 == orders.o_orderkey)
+        .select(F.col("o_custkey").alias("c"), "brand")
+        .distinct()
+        .localCheckpoint(eager=False)
     )
 
 
-def _cf_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (c, brand) customer-brand incidence, checkpointed."""
-    key = _cf_key(spark, sf_dir)
-    v = _CF_V.get(key)
-    if v is None:
-        li = load_table(spark, sf_dir, "lineitem")
-        orders = load_table(spark, sf_dir, "orders")
-        part = load_table(spark, sf_dir, "part")
-        # r10 (guide §2.3): dedup (orderkey, brand) before the orders
-        # join — the join and the final (c, brand) distinct then process
-        # the per-order deduped rows instead of every lineitem
-        ob = (
-            li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-            .select(
-                F.col("l_orderkey").alias("k0"),
-                F.col("p_brand").alias("brand"),
-            )
-            .distinct()
-        )
-        v = (
-            ob.join(orders, ob.k0 == orders.o_orderkey)
-            .select(F.col("o_custkey").alias("c"), "brand")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        _CF_V[key] = v
-    return v
-
-
+@shared
 def _cf_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(brand_a < brand_b, co_n) co-purchase counts, checkpointed."""
-    key = _cf_key(spark, sf_dir)
-    co = _CF_CO.get(key)
-    if co is None:
-        v = _cf_incidence(spark, sf_dir)
-        a, b = v.alias("a"), v.alias("b")
-        co = (
-            a.join(
-                b,
-                (F.col("a.c") == F.col("b.c"))
-                & (F.col("a.brand") < F.col("b.brand")),
-            )
-            .groupBy(
-                F.col("a.brand").alias("brand_a"),
-                F.col("b.brand").alias("brand_b"),
-            )
-            .agg(F.count("*").alias("co_n"))
-            .localCheckpoint(eager=False)
+    v = _cf_incidence(spark, sf_dir)
+    a, b = v.alias("a"), v.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.c") == F.col("b.c"))
+            & (F.col("a.brand") < F.col("b.brand")),
         )
-        _CF_CO[key] = co
-    return co
+        .groupBy(
+            F.col("a.brand").alias("brand_a"),
+            F.col("b.brand").alias("brand_b"),
+        )
+        .agg(F.count("*").alias("co_n"))
+        .localCheckpoint(eager=False)
+    )
 
 #: neighbors reported per item
 _TOP_N = 5

@@ -52,12 +52,16 @@ def test_udf_cogrouped_stable_across_runs(spark):
 # -------------------------------------------------- shared graph backbone
 
 def test_graph_backbone_cached_per_session(spark):
+    from gcp_de_data_pipeline_cc_spark.catalog import clear
     from gcp_de_data_pipeline_cc_spark.operators import graph as og
 
-    og.clear_cache()
+    clear()
     bb1 = og.supplier_backbone(spark, SF_DIR, 8)
     bb2 = og.supplier_backbone(spark, SF_DIR, 8)
     assert bb1 is bb2  # same checkpointed relation, not a rebuild
+    # the default K binds to the same entry as an explicit 8
+    assert og.supplier_backbone(spark, SF_DIR) is bb1
+    assert og.supplier_backbone(spark, SF_DIR, k=8) is bb1
     g1 = og.supplier_graph(spark, SF_DIR, 8)
     assert g1 is og.supplier_graph(spark, SF_DIR, 8)
     # different K or sf_dir = different backbone
@@ -72,9 +76,9 @@ def test_graph_keys_share_one_backbone_subtree(spark):
     # after clearing, running triangles then assortativity must NOT
     # re-derive the pair-explode subtree: the second key's analyzed plan
     # contains the checkpointed scan, not a lineitem aggregate
-    from gcp_de_data_pipeline_cc_spark.operators import graph as og
+    from gcp_de_data_pipeline_cc_spark.catalog import clear
 
-    og.clear_cache()
+    clear()
     t = REGISTRY["graph_triangles"].spark(spark, SF_DIR)
     t.collect()
     a = REGISTRY["graph_assortativity"].spark(spark, SF_DIR)

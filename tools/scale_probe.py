@@ -28,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from gcp_de_data_pipeline_cc_spark.catalog import clear
 from gcp_de_data_pipeline_cc_spark.session import build_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -216,7 +217,7 @@ def probe_graph_backbone(spark, mult: int) -> float:
     from gcp_de_data_pipeline_cc_spark.operators import graph as og
 
     d = materialize_dir(spark, mult, ("lineitem",))
-    og.clear_cache()
+    clear()
     t0 = time.time()
     og.supplier_backbone(spark, d, 8).count()
     return time.time() - t0
@@ -311,13 +312,12 @@ def probe_articulation(spark, mult: int) -> float:
     the all-deletions propagation state is (|V|+1)·|V| DIMENSION-bounded
     (nations are a fixed dim) — expected shape: the backbone fact scan
     tracks mult, the tagged propagation stays flat."""
-    from gcp_de_data_pipeline_cc_spark.operators import graph as og
     from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 
     d = materialize_dir(
         spark, mult, ("lineitem", "orders", "customer", "supplier", "nation")
     )
-    og.clear_cache()
+    clear()
     t0 = time.time()
     REGISTRY["graph_articulation"].spark(spark, d).collect()
     return time.time() - t0
@@ -417,14 +417,14 @@ def probe_dtw_full_length(spark, mult: int) -> float:
 
 def probe_dedup_rate(spark, mult: int) -> float:
     """corpus_dedup_rate, REGISTERED: exact-Jaccard pair universe +
-    pointer-jumping CC + per-source rollup.  The shared dedup caches
-    are cleared before the timed run so every mult measures the COLD
-    build (the warmup otherwise leaves x1 warm and inflates x8/x1)."""
-    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY, llm
+    pointer-jumping CC + per-source rollup.  The shared relations
+    (shingles included) are cleared before the timed run so every mult
+    measures the COLD build (the warmup otherwise leaves x1 warm and
+    inflates x8/x1)."""
+    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 
     d = materialize_dir(spark, mult, ("documents",))
-    llm._DUP_PAIRS_CACHE.clear()
-    llm._DUP_CC_CACHE.clear()
+    clear()
     t0 = time.time()
     REGISTRY["corpus_dedup_rate"].spark(spark, d).collect()
     return time.time() - t0
@@ -486,7 +486,7 @@ def probe_graph_ann(spark, mult: int) -> float:
     from gcp_de_data_pipeline_cc_spark.plans import REGISTRY, llm
 
     d = materialize_dir(spark, mult, ("embeddings",))
-    llm._EXACT_TOPK_CACHE.clear()
+    clear()
     llm.exact_topk10(spark, d).count()  # warm the shared evidence arm
     t0 = time.time()
     REGISTRY["sim_topk_graph"].spark(spark, d).collect()
@@ -500,7 +500,7 @@ def probe_ann_exact_arm(spark, mult: int) -> float:
     from gcp_de_data_pipeline_cc_spark.plans import llm
 
     d = materialize_dir(spark, mult, ("embeddings",))
-    llm._EXACT_TOPK_CACHE.clear()
+    clear()
     t0 = time.time()
     llm.exact_topk10(spark, d).count()
     return time.time() - t0
@@ -520,11 +520,10 @@ def probe_knn_outliers(spark, mult: int) -> float:
 def probe_pq_rerank(spark, mult: int) -> float:
     """sim_topk_pq_rerank, REGISTERED: codes-only stage 1 + pool-sized
     full-precision stage 2 (cold PQ training per mult)."""
-    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY, llm
+    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 
     d = materialize_dir(spark, mult, ("embeddings",))
-    llm._PQ_TRAIN_CACHE.clear()
-    llm._EXACT_L2_CACHE.clear()
+    clear()
     t0 = time.time()
     REGISTRY["sim_topk_pq_rerank"].spark(spark, d).collect()
     return time.time() - t0
@@ -532,13 +531,12 @@ def probe_pq_rerank(spark, mult: int) -> float:
 
 def probe_ktruss(spark, mult: int) -> float:
     """graph_ktruss, REGISTERED: per-round wedge join on the top-K
-    backbone (cold backbone build per mult — operators/graph caches
+    backbone (cold backbone build per mult — shared relations
     cleared)."""
-    from gcp_de_data_pipeline_cc_spark.operators import graph as og
     from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 
     d = materialize_dir(spark, mult, ("lineitem",))
-    og.clear_cache()
+    clear()
     t0 = time.time()
     REGISTRY["graph_ktruss"].spark(spark, d).collect()
     return time.time() - t0
@@ -561,10 +559,10 @@ def probe_semdedup(spark, mult: int) -> float:
 def probe_binary_search(spark, mult: int) -> float:
     """sim_topk_binary, REGISTERED: 8-byte signature scan per query
     (fixed-Q), cold exact baseline per mult."""
-    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY, llm
+    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 
     d = materialize_dir(spark, mult, ("embeddings",))
-    llm._EXACT_TOPK_CACHE.clear()
+    clear()
     t0 = time.time()
     REGISTRY["sim_topk_binary"].spark(spark, d).collect()
     return time.time() - t0
@@ -584,11 +582,10 @@ def probe_rrf_fusion(spark, mult: int) -> float:
 def probe_soft_dedup(spark, mult: int) -> float:
     """corpus_soft_dedup_weights, REGISTERED: CC relation (cold pair
     build per mult) + broadcast weight join + source rollup."""
-    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY, llm
+    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 
     d = materialize_dir(spark, mult, ("documents",))
-    llm._DUP_PAIRS_CACHE.clear()
-    llm._DUP_CC_CACHE.clear()
+    clear()
     t0 = time.time()
     REGISTRY["corpus_soft_dedup_weights"].spark(spark, d).collect()
     return time.time() - t0

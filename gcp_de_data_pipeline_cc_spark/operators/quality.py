@@ -8,10 +8,10 @@ gate into a composable suite; ``run_gates`` replaces the Airflow
 ``BigQueryCheckOperator`` + task-failure semantics with a plain exception
 in the driver program.
 
-Every gate reduces to ONE aggregate over the checked table, so a full
-suite is a handful of scans (Catalyst merges multiple gates on the same
-table when composed via ``check_all``) — no row-level materialization,
-which is what makes the gates viable as a 100 TB pre-flight.
+Every gate is ONE aggregate action (a ``count()``), run when the gate is
+called — no row-level materialization, which is what makes the gates
+viable as a 100 TB pre-flight. ``run_gates`` takes the results and
+raises :class:`QualityGateError` if any gate failed.
 """
 
 from __future__ import annotations

@@ -3658,20 +3658,10 @@ def _pq_flat(emb: DataFrame, k: int = _PQ_K) -> DataFrame:
     )
 
 
-def _pq_centroids(flat: DataFrame) -> DataFrame:
-    """(m, k, d, cq): the per-subspace codebook — component means of the
-    seed assignment, double-floored identically on both engines."""
-    return flat.groupBy("m", F.col("c0").alias("k"), "d").agg(
-        F.floor(F.sum("q").cast("double") / F.count("*"))
-        .cast("long")
-        .alias("cq")
-    )
-
-
-@query(
-    "embedding_pq_codebook",
-    oracle=f"""
-    WITH ex AS (
+def _pq_flat_sql(k: int) -> str:
+    """The oracle twin of :func:`_pq_flat`: the ``ex`` and ``flat`` CTEs
+    (vec_id, d, q, m, c0) over ``embeddings``."""
+    return f"""ex AS (
         SELECT vec_id,
                UNNEST(list_transform(range(1, len(embedding) + 1),
                    i -> struct_pack(d := i,
@@ -3685,8 +3675,24 @@ def _pq_centroids(flat: DataFrame) -> DataFrame:
                CAST(CAST('0x' || SUBSTR(md5(CAST(vec_id AS VARCHAR)
                          || ':' || CAST((u.d - 1) // {_PQ_M_DIMS}
                                         AS VARCHAR)), 1, 2) AS BIGINT)
-                    % {_PQ_K} AS BIGINT) AS c0
-        FROM ex),
+                    % {k} AS BIGINT) AS c0
+        FROM ex)"""
+
+
+def _pq_centroids(flat: DataFrame) -> DataFrame:
+    """(m, k, d, cq): the per-subspace codebook — component means of the
+    seed assignment, double-floored identically on both engines."""
+    return flat.groupBy("m", F.col("c0").alias("k"), "d").agg(
+        F.floor(F.sum("q").cast("double") / F.count("*"))
+        .cast("long")
+        .alias("cq")
+    )
+
+
+@query(
+    "embedding_pq_codebook",
+    oracle=f"""
+    WITH {_pq_flat_sql(_PQ_K)},
     cent AS (
         SELECT m, c0 AS k, d,
                CAST(FLOOR(CAST(SUM(q) AS DOUBLE) / COUNT(*)) AS BIGINT)
@@ -3809,8 +3815,9 @@ embedding_pq_codebook.__doc__ = embedding_pq_codebook.__doc__.format(
 _PQ_SEARCH_K = 64
 _PQ_SEARCH_ITERS = 3
 #: fixed-size Lloyd TRAINING stratum (hash-rank sample, the faiss
-#: production pattern): training cost is O(D·K·iters) regardless of
-#: corpus size; the final encode pass over the full corpus is the only
+#: production pattern): each subspace group of the grouped training
+#: pass holds ≤512 vectors, so training cost is O(D·K·iters) regardless
+#: of corpus size; the map-only encode of the full corpus is the only
 #: corpus-proportional stage.  512 ≥ the sf0.01 corpus, so small-SF
 #: results are bit-identical to full-corpus training.
 _PQ_TRAIN_D = 512
@@ -3863,22 +3870,7 @@ def _pq_lloyd_sql(iters: int) -> str:
 def _sim_pq_oracle() -> str:
     it = _PQ_SEARCH_ITERS
     return f"""
-    WITH ex AS (
-        SELECT vec_id,
-               UNNEST(list_transform(range(1, len(embedding) + 1),
-                   i -> struct_pack(d := i,
-                        q := CAST(FLOOR(CAST(embedding[i] AS DOUBLE)
-                                        * 1000000.0e0 + 0.5e0)
-                                  AS BIGINT)))) AS u
-        FROM embeddings),
-    flat AS (
-        SELECT vec_id, CAST(u.d AS BIGINT) AS d, u.q AS q,
-               CAST((u.d - 1) // {_PQ_M_DIMS} AS BIGINT) AS m,
-               CAST(CAST('0x' || SUBSTR(md5(CAST(vec_id AS VARCHAR)
-                         || ':' || CAST((u.d - 1) // {_PQ_M_DIMS}
-                                        AS VARCHAR)), 1, 2) AS BIGINT)
-                    % {_PQ_SEARCH_K} AS BIGINT) AS c0
-        FROM ex),
+    WITH {_pq_flat_sql(_PQ_SEARCH_K)},
     {_pq_lloyd_sql(it)},
     qsamp AS ({sim.sql_query_sample_cte()}),
     qflat AS (
@@ -3941,15 +3933,16 @@ def _sim_pq_oracle() -> str:
 
 
 #: session-shared (catalog.shared): the K=64 Lloyd-trained codebook+codes
-#: and the exact integer-L2 baseline are read by sim_topk_pq AND
-#: sim_topk_ivfpq (the exact_topk10 discipline) — training runs once
+#: and the exact integer-L2 baseline are read by sim_topk_pq,
+#: sim_topk_ivfpq and sim_topk_pq_rerank (the exact_topk10 discipline) —
+#: training and encoding run once
 @shared
 def _pq_trained(spark: SparkSession, sf_dir: str):
     """(flat, cent, codes) at the search operating point."""
     emb = load_table(spark, sf_dir, "embeddings")
     flat = _pq_flat(emb, k=_PQ_SEARCH_K)
-    flat = flat.localCheckpoint(eager=False)  # train + LUT consumers
-    cent, codes = _pq_train(flat, _PQ_SEARCH_ITERS)
+    flat = flat.localCheckpoint(eager=False)  # stratum + LUT consumers
+    cent, codes = _pq_train(emb, flat, _PQ_SEARCH_ITERS)
     return flat, cent, codes
 
 
@@ -3959,98 +3952,129 @@ def _exact_l2_top10_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_l2_top10(emb).localCheckpoint(eager=False)
 
 
-def _pq_train(
-    flat: DataFrame, iters: int
-) -> tuple[DataFrame, DataFrame]:
-    """Unrolled Lloyd over the fixed-D hash-rank TRAINING STRATUM
-    (seed assignment -> (centroids -> reassign) x iters on ≤{D}
-    vectors — the faiss production pattern, corpus-independent
-    training cost), then ONE full-corpus encode pass against the
-    final codebook; returns (final centroids (m,k,d,cq), final codes
-    (vec_id,m,k_code)).  Each round checkpoints the assignment so plan
-    depth stays bounded (the kmeans_iterate discipline)."""
-    ids = (
-        flat.select("vec_id")
-        .distinct()
-        .orderBy(
-            F.pmod(F.col("vec_id") * sim._QS_MULT, F.lit(sim._QS_MOD)).asc(),
-            F.col("vec_id").asc(),
+_PQ_CENT_SCHEMA = "m long, k long, d long, cq long"
+
+
+def _pq_nearest(x: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    """Row index of each vector's nearest centroid: exact int64 squared
+    L2, ties to the lowest row (argmin keeps the first minimum)."""
+    diff = x[:, None, :] - cent[None, :, :]
+    return (diff * diff).sum(axis=2).argmin(axis=1)
+
+
+def _pq_lloyd(pdf: pd.DataFrame, iters: int) -> pd.DataFrame:
+    """One subspace's Lloyd chain on its stratum rows (vec_id, m, d, q,
+    c0), densely: centroids are floor(double(sum q) / count) over the
+    non-empty clusters only (an empty cluster drops out of the codebook,
+    as it does from the oracle's GROUP BY), reassignment is exact int64
+    squared L2 with ties to the smallest k.  Returns the codebook after
+    ``iters`` centroid steps as (m, k, d, cq)."""
+    wide = pdf.pivot(index="vec_id", columns="d", values="q")
+    if wide.isna().to_numpy().any():
+        raise ValueError(
+            f"PQ training: subspace {int(pdf.m.iloc[0])} has vectors with"
+            " missing components (ragged embeddings)"
         )
-        .limit(_PQ_TRAIN_D)
+    x = wide.to_numpy(dtype=np.int64)
+    label = (
+        pdf.drop_duplicates("vec_id").set_index("vec_id")["c0"]
+        .reindex(wide.index)
+        .to_numpy(dtype=np.int64)
     )
-    strat = flat.join(F.broadcast(ids), "vec_id", "semi")
-    strat = strat.localCheckpoint(eager=False)  # every training round
-    assign = strat.select("vec_id", "m", "d", "q", F.col("c0").alias("k"))
-    cent = codes = None
     for i in range(iters):
-        cent = assign.groupBy("m", "k", "d").agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cq")
-        )
-        # r10 barrier cut (r9 verdict task #3): one checkpoint per
-        # round (codes) instead of two — cent is consumed exactly once
-        # per training round (the broadcast below), so its checkpoint
-        # bought nothing; only the FINAL codebook, which callers join
-        # repeatedly, keeps one.
-        if i == iters - 1:
-            cent = cent.localCheckpoint(eager=False)
-        # training rounds reassign the stratum; the LAST round encodes
-        # the full corpus against the final codebook (one linear pass)
-        side = flat if i == iters - 1 else strat
-        # r10 exchange cut: repartition by (vec_id, m) BEFORE the ×k
-        # centroid explode — HashPartitioning(vec_id, m) satisfies the
-        # clustering required by BOTH the (vec_id, m, k) distance
-        # aggregate (partitioning exprs ⊆ grouping exprs) and the
-        # (vec_id, m) argmin window, so each round's assignment runs in
-        # ONE exchange of the narrow pre-explode rows instead of two
-        # exchanges of the ×k-exploded partials.  The partition count
-        # is EXPLICIT (defaultParallelism — cluster-adaptive): the
-        # pre-explode rows are tiny in bytes, so AQE's byte-based
-        # coalescing would shrink the exchange to ~1 partition and
-        # serialize the ×k explode + distance folds behind it
-        # (measured: +5 s on the training pass without the explicit N).
-        n_part = side.sparkSession.sparkContext.defaultParallelism
-        dist = (
-            side.repartition(n_part, "vec_id", "m")
-            .join(F.broadcast(cent), ["m", "d"])
-            .groupBy("vec_id", "m", "k")
-            .agg(
-                F.sum(
-                    (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
-                )
-                .cast("long")
-                .alias("dd")
-            )
-        )
-        # argmin as ONE per-(vec, subspace) window instead of the
-        # min-groupBy + equality-join + min-groupBy triple (3 exchanges
-        # → 1): rank by (dd, k) and keep rn = 1 — the same "smallest k
-        # among the minimum distances" selection, exactly
-        wmk = Window.partitionBy("vec_id", "m").orderBy(
-            F.asc("dd"), F.asc("k")
-        )
-        codes = (
-            dist.withColumn("rn", F.row_number().over(wmk))
-            .filter(F.col("rn") == 1)
-            .select(
-                "vec_id", "m", F.col("k").cast("long").alias("k_code")
-            )
-        )
-        codes = codes.localCheckpoint(eager=False)
+        ks, inv = np.unique(label, return_inverse=True)
+        sums = np.zeros((len(ks), x.shape[1]), dtype=np.int64)
+        np.add.at(sums, inv, x)
+        cent = np.floor(sums / np.bincount(inv)[:, None]).astype(np.int64)
         if i < iters - 1:
-            # codes is ≤ |stratum|·m rows — broadcast it so the
-            # reassignment join never shuffles the stratum (the
-            # checkpointed inputs have unknown sizes, so the planner
-            # would otherwise default to a sort-merge join)
-            assign = strat.join(
-                F.broadcast(codes.withColumnRenamed("k_code", "k")),
-                ["vec_id", "m"],
-            ).select("vec_id", "m", "d", "q", "k")
-    return cent, codes
+            label = ks[_pq_nearest(x, cent)]
+    d = wide.columns.to_numpy(dtype=np.int64)
+    return pd.DataFrame({
+        "m": int(pdf.m.iloc[0]),
+        "k": np.repeat(ks, len(d)),
+        "d": np.tile(d, len(ks)),
+        "cq": cent.ravel(),
+    })
 
 
-_pq_train.__doc__ = _pq_train.__doc__.format(D=_PQ_TRAIN_D)
+def _pq_encoder(cent: pd.DataFrame):
+    """mapInPandas body that encodes (vec_id, embedding) batches against
+    the codebook ``cent`` (m, k, d, cq): quantize exactly as _pq_flat
+    does, emit (vec_id, m, k_code) per subspace."""
+    books = []
+    for m, g in cent.groupby("m"):
+        w = g.pivot(index="k", columns="d", values="cq")
+        books.append(
+            (m, w.index.to_numpy(), w.columns.to_numpy() - 1, w.to_numpy())
+        )
+    dims = int(cent.d.max()) if len(cent) else 0
+
+    def encode(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            emb = pdf["embedding"]
+            if emb.str.len().ne(dims).any():
+                raise ValueError(
+                    f"PQ encode: every embedding must be a non-null"
+                    f" {dims}-dim vector (null or ragged input)"
+                )
+            xf = np.stack(emb.to_numpy()).astype(np.float64)
+            # |q| < 2^28 micro-units keeps every 8-dim squared distance
+            # below 2^61: numpy int64 would wrap silently past 2^63
+            if not (np.abs(xf) < 268.0).all():
+                raise ValueError(
+                    "PQ encode: embedding components must be non-null"
+                    " and below 268 in magnitude"
+                )
+            x = np.floor(xf * 1000000.0 + 0.5).astype(np.int64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            for m, ks, cols, c in books:
+                yield pd.DataFrame({
+                    "vec_id": ids,
+                    "m": m,
+                    "k_code": ks[_pq_nearest(x[:, cols], c)],
+                })
+
+    return encode
+
+
+def _pq_train(
+    emb: DataFrame, flat: DataFrame, iters: int
+) -> tuple[DataFrame, DataFrame]:
+    """Lloyd training on the fixed-D hash-rank TRAINING STRATUM, then one
+    encode of the full corpus; returns (final centroids (m,k,d,cq),
+    codes (vec_id,m,k_code)).
+
+    Training is ONE grouped pass: the ≤{D}-vector stratum of ``flat``
+    groups by subspace and each group runs the whole chain — md5 seed
+    assignment -> (centroids -> reassign) x iters — on a dense n x
+    {md} int64 matrix (_pq_lloyd), the faiss production pattern with
+    corpus-independent training cost.  The codebook (≤ M·K·{md} rows,
+    bounded by config) is the one driver collect.
+
+    Encoding is ONE map-only pass over ``emb``: each partition scores
+    its own vectors against the codebook captured in the closure (the
+    REPOSE partition-local index build) — no exchange, no ×K explode,
+    linear in the corpus."""
+    ids = emb.select("vec_id").orderBy(
+        F.pmod(F.col("vec_id") * sim._QS_MULT, F.lit(sim._QS_MOD)).asc(),
+        F.col("vec_id").asc(),
+    ).limit(_PQ_TRAIN_D)
+    strat = flat.join(F.broadcast(ids), "vec_id", "semi")
+    book = (
+        strat.groupBy("m")
+        .applyInPandas(lambda pdf: _pq_lloyd(pdf, iters), _PQ_CENT_SCHEMA)
+        .toPandas()
+    )
+    cent = emb.sparkSession.createDataFrame(book, _PQ_CENT_SCHEMA)
+    codes = emb.select("vec_id", "embedding").mapInPandas(
+        _pq_encoder(book), "vec_id long, m long, k_code long"
+    )
+    return cent, codes.localCheckpoint(eager=False)
+
+
+_pq_train.__doc__ = _pq_train.__doc__.format(D=_PQ_TRAIN_D, md=_PQ_M_DIMS)
 
 
 def _exact_l2_top10(emb: DataFrame) -> DataFrame:
@@ -4122,14 +4146,16 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     its centroid means identically on both engines; rank ties break on
     neighbor id.
 
-    100 TB: training touches only (vec, subspace, centroid) partials
-    through a broadcast codebook; codes are built once; the LUT is
-    |Q| x M x K rows and BROADCASTS; ADC scoring is a map-side
-    broadcast join + per-(query, candidate) partial sum — no vector
-    moves after encoding.  The exact baseline is the deliberate recall
-    reference over the FIXED-Q query sample (O(corpus·Q), linear —
-    the r6 rework of the old corpus-proportional sample), same as the
-    LSH/IVF keys.
+    100 TB: training is one grouped pass over the fixed ≤{d}-vector
+    stratum (one group per subspace), and its codebook — ≤ M x K x {m}
+    values, bounded by config — is the only driver collect; encoding is
+    map-only, each partition scoring its own vectors against that
+    codebook, so no vector crosses an exchange; codes are built once;
+    the LUT is |Q| x M x K rows and BROADCASTS; ADC scoring is a
+    map-side broadcast join + per-(query, candidate) partial sum.  The
+    exact baseline is the deliberate recall reference over the FIXED-Q
+    query sample (O(corpus·Q), linear — the r6 rework of the old
+    corpus-proportional sample), same as the LSH/IVF keys.
     """
     flat, cent, codes = _pq_trained(spark, sf_dir)
     qids = sim.query_sample_ids(load_table(spark, sf_dir, "embeddings"))
@@ -4169,7 +4195,7 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 sim_topk_pq.__doc__ = sim_topk_pq.__doc__.format(
-    m=_PQ_M_DIMS, k=_PQ_SEARCH_K, it=_PQ_SEARCH_ITERS
+    m=_PQ_M_DIMS, k=_PQ_SEARCH_K, it=_PQ_SEARCH_ITERS, d=_PQ_TRAIN_D
 )
 
 
@@ -4188,22 +4214,7 @@ def _sim_ivfpq_oracle() -> str:
         " / sqrt(list_dot_product({b}, {b}))"
     )
     return f"""
-    WITH ex AS (
-        SELECT vec_id,
-               UNNEST(list_transform(range(1, len(embedding) + 1),
-                   i -> struct_pack(d := i,
-                        q := CAST(FLOOR(CAST(embedding[i] AS DOUBLE)
-                                        * 1000000.0e0 + 0.5e0)
-                                  AS BIGINT)))) AS u
-        FROM embeddings),
-    flat AS (
-        SELECT vec_id, CAST(u.d AS BIGINT) AS d, u.q AS q,
-               CAST((u.d - 1) // {_PQ_M_DIMS} AS BIGINT) AS m,
-               CAST(CAST('0x' || SUBSTR(md5(CAST(vec_id AS VARCHAR)
-                         || ':' || CAST((u.d - 1) // {_PQ_M_DIMS}
-                                        AS VARCHAR)), 1, 2) AS BIGINT)
-                    % {_PQ_SEARCH_K} AS BIGINT) AS c0
-        FROM ex),
+    WITH {_pq_flat_sql(_PQ_SEARCH_K)},
     {_pq_lloyd_sql(it)},
     qsamp AS ({sim.sql_query_sample_cte()}),
     qflat AS (
@@ -4389,22 +4400,7 @@ _RERANK_POOL = 20
 def _sim_pq_rerank_oracle() -> str:
     it = _PQ_SEARCH_ITERS
     return f"""
-    WITH ex AS (
-        SELECT vec_id,
-               UNNEST(list_transform(range(1, len(embedding) + 1),
-                   i -> struct_pack(d := i,
-                        q := CAST(FLOOR(CAST(embedding[i] AS DOUBLE)
-                                        * 1000000.0e0 + 0.5e0)
-                                  AS BIGINT)))) AS u
-        FROM embeddings),
-    flat AS (
-        SELECT vec_id, CAST(u.d AS BIGINT) AS d, u.q AS q,
-               CAST((u.d - 1) // {_PQ_M_DIMS} AS BIGINT) AS m,
-               CAST(CAST('0x' || SUBSTR(md5(CAST(vec_id AS VARCHAR)
-                         || ':' || CAST((u.d - 1) // {_PQ_M_DIMS}
-                                        AS VARCHAR)), 1, 2) AS BIGINT)
-                    % {_PQ_SEARCH_K} AS BIGINT) AS c0
-        FROM ex),
+    WITH {_pq_flat_sql(_PQ_SEARCH_K)},
     {_pq_lloyd_sql(it)},
     qsamp AS ({sim.sql_query_sample_cte()}),
     qflat AS (

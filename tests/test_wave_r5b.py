@@ -1,10 +1,7 @@
-"""Semantic laws for the r5b/r5c wave: artifact-repo sync + PQ-ADC
-search."""
+"""Semantic laws for the r5b wave: artifact-repo sync (the PQ-ADC
+laws live in test_pq.py)."""
 
 from __future__ import annotations
-
-import numpy as np
-from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 from tests.conftest import SF_DIR
@@ -35,92 +32,3 @@ def test_artifact_sync_rerun_is_deterministic(spark):
     a = REGISTRY["ops_artifact_sync"].spark(spark, SF_DIR).toPandas()
     b = REGISTRY["ops_artifact_sync"].spark(spark, SF_DIR).toPandas()
     assert a.equals(b)
-
-
-# ---------------------------------------------------------------------------
-# sim_topk_pq
-# ---------------------------------------------------------------------------
-
-def _write_clustered_embeddings(spark, tmp_path, n_clusters=8, per=10):
-    """Tight, well-separated clusters of exactly 10: centers drawn at
-    scale 1.0, members jittered at scale 0.01.  With 80 vectors the
-    fixed-Q hash-rank sample (Q=64 < 80 vectors) selects 64 vectors as queries, so
-    the law is asserted for all 80 — one row per vector.
-
-    The structural law this enables: PQ collapses a tight cluster to
-    one code per subspace, so it CANNOT rank within a cluster (the
-    known Voronoi-cell blindness — quantization error ~ jitter scale),
-    but it MUST separate clusters; with 9 mates vs 10 exact slots the
-    approx top-10 provably contains all 9 mates => recall >= 0.9."""
-    rows = []
-    rng = np.random.default_rng(7)
-    centers = rng.normal(size=(n_clusters, 64))
-    for c in range(n_clusters):
-        for j in range(per):
-            v = centers[c] + 0.01 * rng.normal(size=64)
-            rows.append((c * 50 + j, c, [float(x) for x in v]))
-    spark.createDataFrame(
-        rows, "vec_id BIGINT, label BIGINT, embedding ARRAY<DOUBLE>"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-
-
-def test_pq_adc_separates_planted_clusters(spark, tmp_path):
-    _write_clustered_embeddings(spark, tmp_path)
-    out = REGISTRY["sim_topk_pq"].spark(spark, str(tmp_path)).toPandas()
-    assert len(out) == 64  # the fixed-Q sample size
-    # all 9 cluster-mates must appear in the approx top-10: recall >= 0.9
-    assert (out.recall >= 0.9).all(), out.recall.describe()
-
-
-def test_pq_adc_fixture_recall_floor(spark):
-    """The documented operating point on the near-structureless fixture:
-    mean recall@10 >= 0.3 (measured ~0.41) — a regression guard on the
-    codebook training, not a quality claim."""
-    out = REGISTRY["sim_topk_pq"].spark(spark, SF_DIR).toPandas()
-    assert (out.n_exact == 10).all()
-    assert (out.recall <= 1.0).all() and (out.recall >= 0.0).all()
-    assert out.recall.mean() >= 0.3, out.recall.describe()
-
-
-def test_ivfpq_separates_planted_clusters(spark, tmp_path):
-    """Composed index on planted 10-clusters with labels = cluster ids:
-    the coarse probe must pick the query's own cell and PQ must keep
-    the 9 mates in the top-10 — both stages align, recall >= 0.9."""
-    _write_clustered_embeddings(spark, tmp_path)
-    out = REGISTRY["sim_topk_ivfpq"].spark(spark, str(tmp_path)).toPandas()
-    assert len(out) == 64  # the fixed-Q sample size
-    assert (out.recall >= 0.9).all(), out.recall.describe()
-
-
-def test_ivfpq_fixture_recall_floor(spark):
-    """Regression guard at the fixture operating point (measured ~0.34:
-    coarse pruning loss compounds quantization loss — the decomposition
-    the ivf/pq/ivfpq key triple exists to expose)."""
-    out = REGISTRY["sim_topk_ivfpq"].spark(spark, SF_DIR).toPandas()
-    assert (out.n_exact == 10).all()
-    assert out.recall.mean() >= 0.2, out.recall.describe()
-
-
-def test_pq_codes_are_codebook_sized(spark):
-    """Structural: every vector gets exactly one code per subspace and
-    codes live in [0, K) — the 6-byte-per-vector claim."""
-    from gcp_de_data_pipeline_cc_spark.catalog import load_table
-    from gcp_de_data_pipeline_cc_spark.plans.llm import (
-        _PQ_SEARCH_ITERS,
-        _PQ_SEARCH_K,
-        _pq_flat,
-        _pq_train,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    flat = _pq_flat(emb, k=_PQ_SEARCH_K).localCheckpoint(eager=False)
-    _, codes = _pq_train(flat, _PQ_SEARCH_ITERS)
-    n_vec = emb.count()
-    stats = codes.agg(
-        F.count("*").alias("n"),
-        F.countDistinct("vec_id").alias("nv"),
-        F.min("k_code").alias("lo"),
-        F.max("k_code").alias("hi"),
-    ).first()
-    assert stats.n == n_vec * 8 and stats.nv == n_vec
-    assert 0 <= stats.lo and stats.hi < _PQ_SEARCH_K

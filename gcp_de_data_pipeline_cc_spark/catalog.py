@@ -108,10 +108,11 @@ def shared(fn):
     warehouse, and hand every later call the same object.
 
     Several registry keys read the same derived relation (graph backbones,
-    dedup pairs, PQ codebooks, quality signals); the builder behind this
+    dedup pairs, quality signals) or the same driver-side values bounded
+    by config (the PQ codebook and query index); the builder behind this
     decorator runs once and every consumer — in the same or any later
     query of the session — reuses what it returned, as built: a
-    DataFrame, a tuple of them, or a list.
+    DataFrame, a pandas frame, a tuple, or a list.
 
     Key: (applicationId, sf_dir, ``fn.__qualname__``, params), with params
     bound through ``fn``'s signature and defaults applied, so

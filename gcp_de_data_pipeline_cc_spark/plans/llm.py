@@ -3817,7 +3817,7 @@ _PQ_SEARCH_ITERS = 3
 #: fixed-size Lloyd TRAINING stratum (hash-rank sample, the faiss
 #: production pattern): each subspace group of the grouped training
 #: pass holds ≤512 vectors, so training cost is O(D·K·iters) regardless
-#: of corpus size; the map-only encode of the full corpus is the only
+#: of corpus size; each key's fused search scan (_pq_search) is the only
 #: corpus-proportional stage.  512 ≥ the sf0.01 corpus, so small-SF
 #: results are bit-identical to full-corpus training.
 _PQ_TRAIN_D = 512
@@ -3832,7 +3832,7 @@ def _pq_lloyd_sql(iters: int) -> str:
     from it{i-1} and reassigns the stratum (d{i}/g{i}/a{i}/it{i});
     the LAST reassignment (d{iters}/a{iters}) runs over the FULL
     corpus — one linear encode pass against the final codebook.
-    Mirrors _pq_train exactly."""
+    Mirrors _pq_trained + _pq_encoder exactly."""
     parts = [
         f"""ts AS (
         SELECT vec_id FROM embeddings
@@ -3932,24 +3932,64 @@ def _sim_pq_oracle() -> str:
     """
 
 
-#: session-shared (catalog.shared): the K=64 Lloyd-trained codebook+codes
-#: and the exact integer-L2 baseline are read by sim_topk_pq,
-#: sim_topk_ivfpq and sim_topk_pq_rerank (the exact_topk10 discipline) —
-#: training and encoding run once
+#: session-shared (catalog.shared): the K=64 Lloyd-trained codebook and
+#: the query index built on it serve sim_topk_pq, sim_topk_ivfpq and
+#: sim_topk_pq_rerank — training and the LUT build run once per session
+#: and warehouse; each key then runs its own fused search scan
 @shared
-def _pq_trained(spark: SparkSession, sf_dir: str):
-    """(flat, cent, codes) at the search operating point."""
+def _pq_trained(spark: SparkSession, sf_dir: str) -> pd.DataFrame:
+    """The search codebook (m, k, d, cq) as a driver-side frame: Lloyd
+    training on the fixed-D hash-rank TRAINING STRATUM.
+
+    Training is ONE grouped pass: the ≤{D}-vector stratum groups by
+    subspace and each group runs the whole chain — md5 seed assignment
+    -> (centroids -> reassign) x iters — on a dense n x {md} int64
+    matrix (_pq_lloyd), the faiss production pattern with
+    corpus-independent training cost.  The codebook (≤ M·K·{md} rows,
+    bounded by config) is the one driver collect."""
     emb = load_table(spark, sf_dir, "embeddings")
-    flat = _pq_flat(emb, k=_PQ_SEARCH_K)
-    flat = flat.localCheckpoint(eager=False)  # stratum + LUT consumers
-    cent, codes = _pq_train(emb, flat, _PQ_SEARCH_ITERS)
-    return flat, cent, codes
+    ids = emb.select("vec_id").orderBy(
+        F.pmod(F.col("vec_id") * sim._QS_MULT, F.lit(sim._QS_MOD)).asc(),
+        F.col("vec_id").asc(),
+    ).limit(_PQ_TRAIN_D)
+    strat = _pq_flat(emb, k=_PQ_SEARCH_K).join(
+        F.broadcast(ids), "vec_id", "semi"
+    )
+    return (
+        strat.groupBy("m")
+        .applyInPandas(
+            lambda pdf: _pq_lloyd(pdf, _PQ_SEARCH_ITERS), _PQ_CENT_SCHEMA
+        )
+        .toPandas()
+    )
+
+
+_pq_trained.__doc__ = _pq_trained.__doc__.format(
+    D=_PQ_TRAIN_D, md=_PQ_M_DIMS
+)
 
 
 @shared
-def _exact_l2_top10_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pq_index(spark: SparkSession, sf_dir: str):
+    """(qids, qv, lut, encode): the driver-side search state, bounded by
+    config only — the fixed-Q query sample's ids (ascending) and
+    micro-unit vectors (Q x D int64), the |Q| x M x K ADC lookup table
+    (lut[q, j, k] = exact int64 squared L2 between query q's j-th
+    subspace and centroid k), and the codebook's encoder."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return _exact_l2_top10(emb).localCheckpoint(eager=False)
+    book = _pq_trained(spark, sf_dir)
+    encode = _pq_encoder(book)
+    qs = (
+        sim.sample_queries(emb).select("vec_id", "embedding").toPandas()
+        .sort_values("vec_id")
+    )
+    qv, _ = encode(qs["embedding"])
+    books = _pq_books(book)
+    lut = np.zeros((len(qs), len(books), int(book.k.max()) + 1), np.int64)
+    for j, (ks, cols, c) in enumerate(books):
+        diff = qv[:, None, cols] - c[None, :, :]
+        lut[:, j, ks] = (diff * diff).sum(axis=2)
+    return qs["vec_id"].to_numpy(dtype=np.int64), qv, lut, encode
 
 
 _PQ_CENT_SCHEMA = "m long, k long, d long, cq long"
@@ -3997,122 +4037,188 @@ def _pq_lloyd(pdf: pd.DataFrame, iters: int) -> pd.DataFrame:
     })
 
 
-def _pq_encoder(cent: pd.DataFrame):
-    """mapInPandas body that encodes (vec_id, embedding) batches against
-    the codebook ``cent`` (m, k, d, cq): quantize exactly as _pq_flat
-    does, emit (vec_id, m, k_code) per subspace."""
+def _pq_books(cent: pd.DataFrame) -> list:
+    """The codebook ``cent`` (m, k, d, cq) as one dense block per
+    subspace in m order: (codes k, 0-based dimension columns, K_m x
+    dims centroid matrix)."""
     books = []
-    for m, g in cent.groupby("m"):
+    for _, g in cent.groupby("m"):
         w = g.pivot(index="k", columns="d", values="cq")
         books.append(
-            (m, w.index.to_numpy(), w.columns.to_numpy() - 1, w.to_numpy())
+            (w.index.to_numpy(), w.columns.to_numpy() - 1, w.to_numpy())
         )
+    return books
+
+
+def _pq_encoder(cent: pd.DataFrame):
+    """encode(embedding) -> (x, codes) against the codebook ``cent``:
+    quantize a pandas column of vectors exactly as _pq_flat does (x, n
+    x D micro-unit int64) and code every subspace to its nearest
+    centroid (codes, n x M, column j = the j-th subspace in m order).
+    The one encode path: the query index, the search scan and the
+    codebook tests all go through it."""
+    books = _pq_books(cent)
     dims = int(cent.d.max()) if len(cent) else 0
 
-    def encode(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emb = pdf["embedding"]
-            if emb.str.len().ne(dims).any():
-                raise ValueError(
-                    f"PQ encode: every embedding must be a non-null"
-                    f" {dims}-dim vector (null or ragged input)"
-                )
-            xf = np.stack(emb.to_numpy()).astype(np.float64)
-            # |q| < 2^28 micro-units keeps every 8-dim squared distance
-            # below 2^61: numpy int64 would wrap silently past 2^63
-            if not (np.abs(xf) < 268.0).all():
-                raise ValueError(
-                    "PQ encode: embedding components must be non-null"
-                    " and below 268 in magnitude"
-                )
-            x = np.floor(xf * 1000000.0 + 0.5).astype(np.int64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            for m, ks, cols, c in books:
-                yield pd.DataFrame({
-                    "vec_id": ids,
-                    "m": m,
-                    "k_code": ks[_pq_nearest(x[:, cols], c)],
-                })
+    def encode(emb: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+        if emb.str.len().ne(dims).any():
+            raise ValueError(
+                f"PQ encode: every embedding must be a non-null"
+                f" {dims}-dim vector (null or ragged input)"
+            )
+        xf = np.stack(emb.to_numpy()).astype(np.float64)
+        # |q| < 2^28 micro-units keeps every 8-dim squared distance
+        # below 2^61: numpy int64 would wrap silently past 2^63
+        if not (np.abs(xf) < 268.0).all():
+            raise ValueError(
+                "PQ encode: embedding components must be non-null"
+                " and below 268 in magnitude"
+            )
+        x = np.floor(xf * 1000000.0 + 0.5).astype(np.int64)
+        codes = np.stack(
+            [ks[_pq_nearest(x[:, cols], c)] for ks, cols, c in books], axis=1
+        )
+        return x, codes
 
     return encode
 
 
-def _pq_train(
-    emb: DataFrame, flat: DataFrame, iters: int
-) -> tuple[DataFrame, DataFrame]:
-    """Lloyd training on the fixed-D hash-rank TRAINING STRATUM, then one
-    encode of the full corpus; returns (final centroids (m,k,d,cq),
-    codes (vec_id,m,k_code)).
-
-    Training is ONE grouped pass: the ≤{D}-vector stratum of ``flat``
-    groups by subspace and each group runs the whole chain — md5 seed
-    assignment -> (centroids -> reassign) x iters — on a dense n x
-    {md} int64 matrix (_pq_lloyd), the faiss production pattern with
-    corpus-independent training cost.  The codebook (≤ M·K·{md} rows,
-    bounded by config) is the one driver collect.
-
-    Encoding is ONE map-only pass over ``emb``: each partition scores
-    its own vectors against the codebook captured in the closure (the
-    REPOSE partition-local index build) — no exchange, no ×K explode,
-    linear in the corpus."""
-    ids = emb.select("vec_id").orderBy(
-        F.pmod(F.col("vec_id") * sim._QS_MULT, F.lit(sim._QS_MOD)).asc(),
-        F.col("vec_id").asc(),
-    ).limit(_PQ_TRAIN_D)
-    strat = flat.join(F.broadcast(ids), "vec_id", "semi")
-    book = (
-        strat.groupBy("m")
-        .applyInPandas(lambda pdf: _pq_lloyd(pdf, iters), _PQ_CENT_SCHEMA)
-        .toPandas()
-    )
-    cent = emb.sparkSession.createDataFrame(book, _PQ_CENT_SCHEMA)
-    codes = emb.select("vec_id", "embedding").mapInPandas(
-        _pq_encoder(book), "vec_id long, m long, k_code long"
-    )
-    return cent, codes.localCheckpoint(eager=False)
+#: candidate rows scored per step of the search scan: bounds the
+#: Q x block x D exact-L2 temporaries (8 MB at Q = 64, D = 64)
+_PQ_SCAN_BLOCK = 256
+#: |q| < 1.89e8 micro-units keeps every 64-dim squared distance
+#: (64 * (2|q|)^2) below 2^63: numpy int64 would wrap silently where
+#: Spark's ANSI arithmetic raised
+_PQ_L2_MAX = 189_000_000
+_PQ_FAR = np.iinfo(np.int64).max
+_PQ_HIT_SCHEMA = "query_id long, vec_id long, ad long, dd long, exact boolean"
+_PQ_RECALL_SCHEMA = (
+    "query_id long, k int, n_exact int, n_hit int, recall double"
+)
 
 
-_pq_train.__doc__ = _pq_train.__doc__.format(D=_PQ_TRAIN_D, md=_PQ_M_DIMS)
+def _row_topk(k: int, key: np.ndarray, ids: np.ndarray, *more: np.ndarray):
+    """Per row of Q x n arrays, the k entries smallest by (key, id),
+    with the aligned arrays ``more`` carried along."""
+    order = np.lexsort((ids, key), axis=1)[:, :k]
+    return [np.take_along_axis(a, order, axis=1) for a in (key, ids, *more)]
 
 
-def _exact_l2_top10(emb: DataFrame) -> DataFrame:
-    """(query_id, neighbor_id, rank<=10): the exact integer-L2
-    brute-force baseline on the micro-unit grid — the shared recall
-    reference for the PQ family (sim_topk_pq, sim_topk_ivfpq)."""
-    # fan_out: the broadcast pair join inherits the scan's 1-3 splits
-    # and otherwise runs every per-pair distance fold on one core
-    qi = fan_out(
-        emb.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-                " * 1000000.0 + 0.5) AS BIGINT))"
-            ).alias("qi"),
-        )
+def _pq_search(
+    emb: DataFrame,
+    index,
+    *,
+    pool: int,
+    rerank: bool = False,
+    cells: dict | None = None,
+) -> DataFrame:
+    """Per-query recall@10 of PQ-ADC search against the exact integer-L2
+    top-10 (query_id, k, n_exact, n_hit, recall), from ONE fused scan of
+    ``emb`` and ONE per-query merge.
+
+    Scan (mapInPandas, no exchange): each partition encodes its own
+    vectors in blocks of {b} (_pq_encoder), scores every candidate
+    against the Q queries of ``index`` twice — ADC as a LUT gather-sum
+    and exact int64 squared L2 — and keeps per query the best ``pool``
+    by (ADC, vec_id), carrying the exact distance, and the best 10 by
+    (exact, vec_id); the query itself never counts, and with ``cells``
+    (query_id -> probed IVF labels) the ADC arm keeps only candidates
+    in the query's probed cells.  A partition emits at most
+    Q·(pool + 10) rows.
+
+    Merge (groupBy query_id + applyInPandas): the per-partition top
+    lists of a total order contain the global ones, so the merge is
+    exact.  The approximate top-10 is the ADC top-10, or with
+    ``rerank`` the global ADC pool re-ordered by (exact, vec_id); the
+    recall rounds as roundn does: floor(n_hit / n_exact · 10000 + 0.5)
+    / 10000.
+
+    Both arms read every vector once, in this key's own scan: the
+    exact arm is the recall evidence and is O(corpus · Q · D) by
+    design, so the scan derives the ADC arm from the same read instead
+    of joining codes against a shared exact relation.  Input contract:
+    null or ragged vectors and components of magnitude ≥ 189 raise."""
+    qids, qv, lut, encode = index
+    subspaces = np.arange(lut.shape[1])
+    allowed = None if cells is None else [cells.get(q, []) for q in qids]
+
+    def scan(batches):
+        none = np.empty((len(qids), 0), np.int64)
+        pool_ad = pool_id = pool_dd = top_dd = top_id = top_ad = none
+        for pdf in batches:
+            for s in range(0, len(pdf), _PQ_SCAN_BLOCK):
+                blk = pdf.iloc[s:s + _PQ_SCAN_BLOCK]
+                x, codes = encode(blk["embedding"])
+                if (np.abs(x) >= _PQ_L2_MAX).any():
+                    raise ValueError(
+                        "PQ search: embedding components must be below"
+                        " 189 in magnitude (64-dim int64 squared L2)"
+                    )
+                ids = np.broadcast_to(
+                    blk["vec_id"].to_numpy(dtype=np.int64),
+                    (len(qids), len(blk)),
+                )
+                own = ids == qids[:, None]
+                diff = x[None, :, :] - qv[:, None, :]
+                dd = (diff * diff).sum(axis=2)
+                ad = lut[:, subspaces, codes].sum(axis=2)
+                off = own
+                if allowed is not None:
+                    lab = blk["label"]
+                    off = own | ~np.stack(
+                        [lab.isin(c).to_numpy() for c in allowed]
+                    )
+                pool_ad, pool_id, pool_dd = _row_topk(
+                    pool,
+                    np.hstack([pool_ad, np.where(off, _PQ_FAR, ad)]),
+                    np.hstack([pool_id, ids]),
+                    np.hstack([pool_dd, dd]),
+                )
+                top_dd, top_id, top_ad = _row_topk(
+                    10,
+                    np.hstack([top_dd, np.where(own, _PQ_FAR, dd)]),
+                    np.hstack([top_id, ids]),
+                    np.hstack([top_ad, ad]),
+                )
+        for key, vid, adc, l2, exact in (
+            (pool_ad, pool_id, pool_ad, pool_dd, False),
+            (top_dd, top_id, top_ad, top_dd, True),
+        ):
+            q, j = np.nonzero(key < _PQ_FAR)
+            yield pd.DataFrame({
+                "query_id": qids[q],
+                "vec_id": vid[q, j],
+                "ad": adc[q, j],
+                "dd": l2[q, j],
+                "exact": exact,
+            })
+
+    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+        exact = pdf[pdf.exact].sort_values(["dd", "vec_id"]).vec_id.head(10)
+        approx = pdf[~pdf.exact].sort_values(["ad", "vec_id"]).head(pool)
+        if rerank:
+            approx = approx.sort_values(["dd", "vec_id"])
+        n_hit = int(exact.isin(approx.vec_id.head(10)).sum())
+        recall = n_hit / len(exact)
+        return pd.DataFrame({
+            "query_id": pdf.query_id.iloc[:1],
+            "k": np.int32(10),
+            "n_exact": np.int32(len(exact)),
+            "n_hit": np.int32(n_hit),
+            "recall": _math.floor(recall * 10000.0 + 0.5) / 10000.0,
+        })
+
+    cols = ["vec_id", "embedding"] + ([] if cells is None else ["label"])
+    return (
+        emb.select(*cols)
+        .mapInPandas(scan, _PQ_HIT_SCHEMA)
+        .groupBy("query_id")
+        .applyInPandas(merge, _PQ_RECALL_SCHEMA)
+        .orderBy("query_id")
     )
-    qi = qi.localCheckpoint(eager=False)  # queries + candidates
-    qs = sim.sample_queries(qi).select(
-        F.col("vec_id").alias("query_id"), F.col("qi").alias("qv")
-    )
-    pairs = qi.crossJoin(F.broadcast(qs)).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    exact = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr(
-            "aggregate(zip_with(qi, qv, (a, b) -> (a - b) * (a - b)),"
-            " 0L, (acc, v) -> acc + v)"
-        ).alias("dd"),
-    )
-    we = Window.partitionBy("query_id").orderBy(
-        F.asc("dd"), F.asc("neighbor_id")
-    )
-    return exact.select(
-        "query_id", "neighbor_id", F.row_number().over(we).alias("rank")
-    ).filter(F.col("rank") <= 10)
+
+
+_pq_search.__doc__ = _pq_search.__doc__.format(b=_PQ_SCAN_BLOCK)
 
 
 @query("sim_topk_pq", oracle=_sim_pq_oracle())
@@ -4148,50 +4254,20 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: training is one grouped pass over the fixed ≤{d}-vector
     stratum (one group per subspace), and its codebook — ≤ M x K x {m}
-    values, bounded by config — is the only driver collect; encoding is
-    map-only, each partition scoring its own vectors against that
-    codebook, so no vector crosses an exchange; codes are built once;
-    the LUT is |Q| x M x K rows and BROADCASTS; ADC scoring is a
-    map-side broadcast join + per-(query, candidate) partial sum.  The
-    exact baseline is the deliberate recall reference over the FIXED-Q
-    query sample (O(corpus·Q), linear — the r6 rework of the old
-    corpus-proportional sample), same as the LSH/IVF keys.
+    values, bounded by config — is a driver collect, as are the Q
+    query vectors and their |Q| x M x K LUT; serving is ONE map-only
+    scan in which each partition encodes its own vectors and keeps a
+    bounded partial top-k per query (the REPOSE partition-local shape),
+    then ONE per-query merge — no vector crosses an exchange, no
+    nested-loop join.  The exact baseline is the deliberate recall
+    reference over the FIXED-Q query sample (O(corpus·Q), linear — the
+    r6 rework of the old corpus-proportional sample), same as the
+    LSH/IVF keys; it shares this key's scan (_pq_search), so every key
+    of the family pays its own O(corpus·Q·D) pass instead of reading
+    one shared exact relation through joins.
     """
-    flat, cent, codes = _pq_trained(spark, sf_dir)
-    qids = sim.query_sample_ids(load_table(spark, sf_dir, "embeddings"))
-    qflat = flat.join(F.broadcast(qids), "vec_id", "semi").select(
-        F.col("vec_id").alias("query_id"), "m", "d", "q"
-    )
-    lut = (
-        qflat.join(F.broadcast(cent), ["m", "d"])
-        .groupBy("query_id", F.col("m").alias("lm"), F.col("k").alias("lk"))
-        .agg(
-            F.sum((F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq")))
-            .cast("long")
-            .alias("l")
-        )
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut),
-            (F.col("m") == F.col("lm")) & (F.col("k_code") == F.col("lk")),
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("l").cast("long").alias("ad"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.asc("ad"), F.asc("vec_id")
-    )
-    approx = adc.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.row_number().over(wq).alias("rank"),
-    ).filter(F.col("rank") <= 10)
-
-    return sim.topk_recall(
-        approx, _exact_l2_top10_cached(spark, sf_dir), k=10
-    ).orderBy("query_id")
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _pq_search(emb, _pq_index(spark, sf_dir), pool=10)
 
 
 sim_topk_pq.__doc__ = sim_topk_pq.__doc__.format(
@@ -4324,63 +4400,22 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines); codes/LUT/ADC sums are exact int64; ties break on
     (cell, neighbor) ids.
 
-    100 TB: the probe table is |Q| x nprobe rows and broadcasts onto
-    the cell-partitioned candidate scan — the fraction of the corpus
-    ever touched per query is nprobe/|cells|; ADC scoring then costs M
-    lookups per touched candidate via the broadcast LUT.  Composing
-    the two verified stages changes no plan shape — it only narrows
-    the candidate generation, which is the entire point.
+    100 TB: the probe runs in Spark (its cosine is the one double
+    expression matched against the oracle) and its |Q| x nprobe
+    (query, cell) rows are collected — bounded by config — into the
+    fused search scan, which ADC-scores only candidates in each query's
+    probed cells with M LUT lookups apiece; the exact recall arm reads
+    every vector in the same scan (_pq_search), so no vector crosses an
+    exchange and the plan has no nested-loop join.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = sim.sample_queries(emb)
     probed = sim.ivf_probe_portable(
-        queries, emb, nprobe=_IVFPQ_NPROBE
-    )  # (query_id, label)
-    flat, cent, codes = _pq_trained(spark, sf_dir)
-    qflat = flat.join(
-        F.broadcast(sim.query_sample_ids(emb)), "vec_id", "semi"
-    ).select(F.col("vec_id").alias("query_id"), "m", "d", "q")
-    lut = (
-        qflat.join(F.broadcast(cent), ["m", "d"])
-        .groupBy(
-            F.col("query_id").alias("lq"),
-            F.col("m").alias("lm"),
-            F.col("k").alias("lk"),
-        )
-        .agg(
-            F.sum((F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq")))
-            .cast("long")
-            .alias("l")
-        )
-    )
-    cand = (
-        emb.select("vec_id", "label")
-        .join(F.broadcast(probed), "label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
-    adc = (
-        cand.join(codes, "vec_id")
-        .join(
-            F.broadcast(lut),
-            (F.col("query_id") == F.col("lq"))
-            & (F.col("m") == F.col("lm"))
-            & (F.col("k_code") == F.col("lk")),
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("l").cast("long").alias("ad"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.asc("ad"), F.asc("vec_id")
-    )
-    approx = adc.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.row_number().over(wq).alias("rank"),
-    ).filter(F.col("rank") <= 10)
-    return sim.topk_recall(
-        approx, _exact_l2_top10_cached(spark, sf_dir), k=10
-    ).orderBy("query_id")
+        sim.sample_queries(emb), emb, nprobe=_IVFPQ_NPROBE
+    ).collect()
+    cells: dict = {}
+    for r in probed:
+        cells.setdefault(r.query_id, []).append(r.label)
+    return _pq_search(emb, _pq_index(spark, sf_dir), pool=10, cells=cells)
 
 
 sim_topk_ivfpq.__doc__ = sim_topk_ivfpq.__doc__.format(
@@ -4496,80 +4531,17 @@ def sim_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64; ties break on neighbor id; same evidence contract as the
     rest of the family (query_id, k, n_exact, n_hit, recall).
 
-    100 TB: stage 1 never touches vectors (codes-only scan through a
-    broadcast LUT); stage 2 fetches {p} full vectors per query — a
-    |Q|·{p}-row equi-join against the vector store, the entire point
-    of reranking (full-precision work is pool-sized, not
-    corpus-sized)."""
-    flat, cent, codes = _pq_trained(spark, sf_dir)
+    100 TB: both stages and the exact recall arm run in ONE fused scan
+    (_pq_search): each partition keeps its own top-{p} ADC candidates
+    per query with their exact distances already attached, and the
+    per-query merge takes the global top-{p} pool and reorders it —
+    the pool-sized rerank needs no fetch join against the vector store,
+    because the scan that scored the codes held the full vectors.
+    """
     emb = load_table(spark, sf_dir, "embeddings")
-    qids = sim.query_sample_ids(emb)
-    qflat = flat.join(F.broadcast(qids), "vec_id", "semi").select(
-        F.col("vec_id").alias("query_id"), "m", "d", "q"
+    return _pq_search(
+        emb, _pq_index(spark, sf_dir), pool=_RERANK_POOL, rerank=True
     )
-    lut = (
-        qflat.join(F.broadcast(cent), ["m", "d"])
-        .groupBy("query_id", F.col("m").alias("lm"), F.col("k").alias("lk"))
-        .agg(
-            F.sum((F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq")))
-            .cast("long")
-            .alias("l")
-        )
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut),
-            (F.col("m") == F.col("lm")) & (F.col("k_code") == F.col("lk")),
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("l").cast("long").alias("ad"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("ad"), F.asc("vec_id"))
-    pool = (
-        adc.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.row_number().over(wq).alias("rank"),
-        )
-        .filter(F.col("rank") <= _RERANK_POOL)
-        .select("query_id", "neighbor_id")
-    )
-    qi = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-            " * 1000000.0 + 0.5) AS BIGINT))"
-        ).alias("qi"),
-    )
-    qi = qi.localCheckpoint(eager=False)  # pool vectors + query vectors
-    qv = sim.sample_queries(qi).select(
-        F.col("vec_id").alias("query_id"), F.col("qi").alias("qv")
-    )
-    rr = (
-        pool.join(
-            qi.select(F.col("vec_id").alias("neighbor_id"), "qi"),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(
-                "aggregate(zip_with(qi, qv, (a, b) -> (a - b) * (a - b)),"
-                " 0L, (acc, v) -> acc + v)"
-            ).alias("dd"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.asc("dd"), F.asc("neighbor_id")
-    )
-    rr_top = rr.select(
-        "query_id", "neighbor_id", F.row_number().over(wr).alias("rank")
-    ).filter(F.col("rank") <= 10)
-    return sim.topk_recall(
-        rr_top, _exact_l2_top10_cached(spark, sf_dir), k=10
-    ).orderBy("query_id")
 
 
 sim_topk_pq_rerank.__doc__ = sim_topk_pq_rerank.__doc__.format(

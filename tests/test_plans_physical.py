@@ -569,12 +569,11 @@ _BNLJ_REVIEWED = frozenset({
     "graph_articulation_tarjan", "sim_topk_ivf_sweep",
     # r5 waves: graph_betweenness_sampled crosses nation with one-row
     # node/source totals; train_curriculum_schedule and
-    # eval_agreement_krippendorff cross with one-row totals;
-    # sim_topk_pq / sim_topk_ivfpq broadcast the query set onto the
-    # candidate scan for the exact-L2 recall baseline (the sim_topk
-    # pattern) — category (a)
+    # eval_agreement_krippendorff cross with one-row totals — category
+    # (a).  The PQ search keys are not here: their exact-L2 arm and IVF
+    # probe cells feed one fused scan, which plans no nested-loop join
     "graph_betweenness_sampled", "train_curriculum_schedule",
-    "eval_agreement_krippendorff", "sim_topk_pq", "sim_topk_ivfpq",
+    "eval_agreement_krippendorff",
     # r4p wave: stats_jackknife crosses the 25-row group table with
     # one-row totals/moments — category (a)
     "stats_jackknife",

@@ -4,9 +4,12 @@ rewritten, and dropped by catalog.clear()."""
 
 from __future__ import annotations
 
+import importlib
 import os
+import pkgutil
 import shutil
 
+import gcp_de_data_pipeline_cc_spark as pkg
 from gcp_de_data_pipeline_cc_spark import catalog
 from gcp_de_data_pipeline_cc_spark.operators import graph as og
 from gcp_de_data_pipeline_cc_spark.plans import corpus2, corpus_stats, llm, recsys
@@ -28,13 +31,28 @@ _READS = {
     llm.corpus_dup_clusters: {"documents"},
     llm.exact_topk10: {"embeddings"},
     llm._pq_trained: {"embeddings"},
-    llm._exact_l2_top10_cached: {"embeddings"},
+    llm._pq_index: {"embeddings"},
     recsys._cf_incidence: {"lineitem", "orders", "part"},
     recsys._cf_cooccurrence: {"lineitem", "orders", "part"},
     corpus_stats.text_entropy: {"documents"},
     corpus_stats.text_repetition: {"documents"},
     corpus2.text_perplexity: {"documents"},
 }
+
+
+def test_reads_map_names_every_shared_builder():
+    """Every catalog.shared wrapper in the package is in _READS, so a
+    builder added or removed without updating the map fails here."""
+    build_once = catalog.shared(lambda spark, sf_dir: None).__code__
+    found = set()
+    for mod in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        for obj in vars(importlib.import_module(mod.name)).values():
+            if getattr(obj, "__code__", None) is build_once:
+                found.add(obj)
+    assert found == set(_READS), {
+        "missing": sorted(f.__qualname__ for f in found - set(_READS)),
+        "stale": sorted(f.__qualname__ for f in set(_READS) - found),
+    }
 
 
 def _rewrite(sf_dir: str, table: str) -> None:

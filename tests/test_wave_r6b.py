@@ -1,47 +1,9 @@
-"""Semantic laws for the r6b wave: retrieve-then-rerank + the IVF
-nprobe tuning sweep."""
+"""Semantic laws for the r6b wave: the IVF nprobe tuning sweep."""
 
 from __future__ import annotations
 
-import numpy as np
-
 from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 from tests.conftest import SF_DIR
-
-
-def test_rerank_never_loses_to_pq(spark):
-    """Structural law: stage-2 exact rerank of the top-20 ADC pool can
-    only improve on the ADC top-10 — per the pool-superset argument,
-    mean recall(rerank) >= mean recall(pq)."""
-    pq = REGISTRY["sim_topk_pq"].spark(spark, SF_DIR).toPandas()
-    rr = REGISTRY["sim_topk_pq_rerank"].spark(spark, SF_DIR).toPandas()
-    assert len(rr) == len(pq)
-    assert rr.recall.mean() >= pq.recall.mean() - 1e-9
-    # and the reorder stage actually buys something on this fixture
-    assert rr.recall.mean() > pq.recall.mean()
-
-
-def _write_clustered(spark, tmp_path, n_clusters=8, per=10):
-    rows = []
-    rng = np.random.default_rng(7)
-    centers = rng.normal(size=(n_clusters, 64))
-    for c in range(n_clusters):
-        for j in range(per):
-            v = centers[c] + 0.01 * rng.normal(size=64)
-            rows.append((c * 50 + j, c, [float(x) for x in v]))
-    spark.createDataFrame(
-        rows, "vec_id BIGINT, label BIGINT, embedding ARRAY<DOUBLE>"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-
-
-def test_rerank_recovers_voronoi_blindness(spark, tmp_path):
-    """On planted 10-clusters PQ cannot rank WITHIN a cluster (all
-    mates share a code) — but the top-20 pool contains every mate, so
-    the exact rerank recovers the full top-10: recall = 1.0."""
-    _write_clustered(spark, tmp_path)
-    out = REGISTRY["sim_topk_pq_rerank"].spark(spark, str(tmp_path)).toPandas()
-    assert len(out) == 64  # fixed-Q sample
-    assert (out.recall == 1.0).all(), out.recall.describe()
 
 
 def test_ivf_sweep_monotone(spark):

@@ -518,8 +518,10 @@ def probe_knn_outliers(spark, mult: int) -> float:
 
 
 def probe_pq_rerank(spark, mult: int) -> float:
-    """sim_topk_pq_rerank, REGISTERED: codes-only stage 1 + pool-sized
-    full-precision stage 2 (cold PQ training per mult)."""
+    """sim_topk_pq_rerank, REGISTERED: one fused scan scoring every
+    vector by ADC and exact L2 with per-partition top-k, then the
+    per-query pool rerank (cold PQ training and query index per
+    mult)."""
     from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 
     d = materialize_dir(spark, mult, ("embeddings",))

@@ -1,28 +1,30 @@
-"""Config-driven end-to-end pipeline — the reference DAG as ONE key.
+"""Config-driven end-to-end pipeline — the reference DAG as registry keys.
 
 The reference's entire identity is a YAML-driven composite run:
 ``dags/config/pipeline_config.yaml`` (tables, file patterns, sensor
 settings, QC, curation model) loaded by ``load_config``
 (``dags/pipeline_orchestration_dag.py:19-25``) and threaded through
 ``wait_files >> gcs_to_raw >> raw_to_staging >> data_quality >> run_dbt
->> archive`` (``dags/pipeline_orchestration_dag.py:64-212``).  The repo
-had every STAGE as a separate verified key plus the imperative
-``pipeline.run_pipeline`` driver; this module closes the two r3
-"What's missing" items in one place:
+>> archive`` (``dags/pipeline_orchestration_dag.py:64-212``).
 
-1. ``end_to_end_pipeline`` — a driver-visible, ORACLE-PAIRED key that
-   executes the whole chain tier-to-tier with real scratch-parquet
-   handoffs (landing CSV → all-string raw parquet → typed staging
-   parquet → QC gates → curation join + SCD2 init → curated parquet →
-   landing archive with the ``{{ ds }}`` date suffix), returning the
-   final curated table with per-stage row-count AUDIT COLUMNS the
-   oracle independently recomputes.
-2. The run is parameterized by a CHECKED-IN JSON config
-   (``configs/pipeline_e2e.json``, the ``pipeline_config.yaml``
-   analog — JSON because the sandbox guarantees no YAML parser):
-   entities, casts, required/unique keys, FK checks, the curation
-   select, and the SCD2 contract all come from the file.  A second
-   config exercises the same runner in tests.
+The stages live in ``pipeline.py``, the one spine ``run_pipeline``
+composes; this module supplies a TPC-H spec and the oracle-paired keys
+that run it.  ``end_to_end_pipeline`` is ``run_pipeline`` end to end
+(landing CSV → all-string raw parquet → typed staging parquet → QC
+gates → curation join + SCD2 → curated parquet → archive with the
+``{{ ds }}`` suffix), returning the curated table plus per-stage AUDIT
+COLUMNS read off its ``PipelineResult``, which the oracle recomputes
+independently.  ``pipeline_gcs_to_raw``, ``pipeline_raw_to_staging``
+and ``pipeline_staging_to_curation`` run the stage prefix ending at
+their reference DAG and return that tier's audit.
+
+The spec is a CHECKED-IN JSON config (``configs/pipeline_e2e.json``,
+the ``pipeline_config.yaml`` analog, JSON so that no YAML parser is
+needed): entities, casts, required/unique keys, FK
+checks, the curation select, and the SCD2 contract.  Its ``source`` /
+``landing`` / ``load_date`` / ``pipeline_id`` fields drive only the
+keys' fixture step, :func:`_stage_land`.  A second config exercises the
+same runner in tests.
 
 100 TB: each tier is a full parquet write/read (the reference's
 BigQuery-dataset handoff), so every stage restarts from columnar
@@ -37,23 +39,16 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import shutil
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_de_data_pipeline_cc_spark import pipeline as pl
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
-from gcp_de_data_pipeline_cc_spark.operators import quality as q
-from gcp_de_data_pipeline_cc_spark.operators.scd2 import scd2_init
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
-from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir, scratch_path
-from gcp_de_data_pipeline_cc_spark.sources.csv_ingest import (
-    quarantine,
-    raw_to_staging,
-    read_landing_csv,
-)
-from gcp_de_data_pipeline_cc_spark.sources.sink import read_table, write_table
+from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir
+from gcp_de_data_pipeline_cc_spark.sources.csv_ingest import quarantine
 
 _CONFIG_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -71,159 +66,43 @@ def load_pipeline_config(path: str = _CONFIG_PATH) -> dict[str, Any]:
 
 def _stage_land(
     spark: SparkSession, sf_dir: str, config: dict[str, Any]
-) -> str:
-    """Stage 0 — land the source extracts as header CSVs and run the
-    file sensor (reference gcs_to_raw_dag.py's wait_files upstream);
-    returns the landing directory."""
+) -> tuple[str, str]:
+    """The keys' fixture step: land each entity's source table as a
+    header CSV under a fresh per-key scratch dir, which is also the
+    run's warehouse root; returns (warehouse, landing)."""
     work = scratch_dir(config["pipeline_id"])
     landing = os.path.join(work, config["landing"]["prefix"])
-    os.makedirs(landing, exist_ok=True)
     for name, ent in config["entities"].items():
         src = load_table(spark, sf_dir, ent["source"]).select(*ent["columns"])
         src.write.mode("overwrite").option("header", "true").csv(
             os.path.join(landing, f"{name}.csv")
         )
-    from gcp_de_data_pipeline_cc_spark.pipeline import wait_for_files
-
-    wait_for_files(
-        landing,
-        files=tuple(f"{n}.csv" for n in config["entities"]),
-        timeout_s=5.0,
-        poke_interval_s=0.05,
-    )
-    return landing
+    return work, landing
 
 
-def _stage_gcs_to_raw(
-    spark: SparkSession, config: dict[str, Any], load_date: dt.date
-) -> tuple[dict[str, DataFrame], dict[str, int]]:
-    """Stage 1 — landing CSV → all-string raw parquet per entity
-    (reference gcs_to_raw_dag.py:1-95); returns (raw tables, audit)."""
-    work = scratch_dir_of(config)
-    landing = os.path.join(work, config["landing"]["prefix"])
-    raw_tables: dict[str, DataFrame] = {}
-    audit: dict[str, int] = {}
-    for name, ent in config["entities"].items():
-        raw = read_landing_csv(
-            spark,
-            os.path.join(landing, f"{name}.csv"),
-            ent["columns"],
-            ingest_date=load_date,
-        )
-        raw_path = os.path.join(work, "raw", f"{name}_raw")
-        write_table(raw, raw_path)
-        raw_tables[name] = read_table(spark, raw_path)
-        audit[f"n_raw_{name}"] = raw_tables[name].count()
-    return raw_tables, audit
-
-
-def _stage_raw_to_staging(
-    spark: SparkSession,
-    config: dict[str, Any],
-    raw_tables: dict[str, DataFrame],
-) -> tuple[dict[str, DataFrame], dict[str, int]]:
-    """Stage 2 — raw → typed/cleansed staging parquet per entity
-    (reference raw_to_staging_dag.py:1-76); returns (staged, audit)."""
-    work = scratch_dir_of(config)
-    staged: dict[str, DataFrame] = {}
-    audit: dict[str, int] = {}
-    for name, ent in config["entities"].items():
-        stg = raw_to_staging(
-            raw_tables[name], ent["casts"], required=ent["required"]
-        ).drop("ingest_date")
-        stg_path = os.path.join(work, "stg", f"{name}_stg")
-        write_table(stg, stg_path)
-        staged[name] = read_table(spark, stg_path)
-        audit[f"n_stg_{name}"] = staged[name].count()
-    return staged, audit
-
-
-def _stage_quality(
-    staged: dict[str, DataFrame], config: dict[str, Any]
-) -> int:
-    """Stage 3 — QC gates: non-empty + unique key per entity + config FK
-    checks; raises on violation, returns the number of gates passed."""
-    gates: list[q.GateResult] = []
-    for name, ent in config["entities"].items():
-        gates.append(q.non_empty(staged[name], f"{name}_stg"))
-        gates.append(q.unique_key(staged[name], ent["unique"], f"{name}_stg"))
-    for fact, col, dim, ref in config["quality"]["foreign_keys"]:
-        gates.append(
-            q.referential_integrity(
-                staged[fact], col, staged[dim], ref, f"{fact}_stg"
-            )
-        )
-    q.run_gates(gates)
-    return len(gates)
-
-
-def _stage_curation(
-    spark: SparkSession,
-    config: dict[str, Any],
-    staged: dict[str, DataFrame],
-    load_date: dt.date,
-) -> DataFrame:
-    """Stage 4 — curation join + SCD2 init → curated parquet (reference
-    staging_to_curation_dag.py:1-98); returns the curated table."""
-    work = scratch_dir_of(config)
-    cur = config["curation"]
-    fact, dim = staged[cur["fact"]], staged[cur["dim"]]
-    lcol, rcol = cur["join_on"]
-    snapshot = fact.join(
-        F.broadcast(dim), F.col(lcol) == F.col(rcol), "left"
-    ).select(*[F.expr(expr).alias(alias) for alias, expr in cur["select"]])
-    curated = scd2_init(
-        snapshot, cur["scd2_key"], cur["scd2_tracked"], load_date
-    )
-    cur_path = os.path.join(work, "cur", f"{cur['fact']}_{cur['dim']}_cur")
-    write_table(curated, cur_path)
-    return read_table(spark, cur_path)
-
-
-def scratch_dir_of(config: dict[str, Any]) -> str:
-    """The pipeline's existing per-process scratch dir WITHOUT wiping it
-    (scratch_dir() clears on each call — stages within one run must not
-    erase the tiers their upstream just wrote)."""
-    return scratch_path(config["pipeline_id"])
+def _load_date(config: dict[str, Any]) -> dt.date:
+    return dt.date.fromisoformat(config["load_date"])
 
 
 def run_configured_pipeline(
     spark: SparkSession, sf_dir: str, config: dict[str, Any]
 ) -> DataFrame:
-    """Execute the configured chain with real inter-tier writes and
-    return the curated table + audit columns (see module docstring)."""
-    load_date = dt.date.fromisoformat(config["load_date"])
-    landing = _stage_land(spark, sf_dir, config)
-    work = scratch_dir_of(config)
-    archive = os.path.join(work, config["landing"]["archive_prefix"])
-    os.makedirs(archive, exist_ok=True)
-
-    raw_tables, audit = _stage_gcs_to_raw(spark, config, load_date)
-    staged, stg_audit = _stage_raw_to_staging(spark, config, raw_tables)
-    audit.update(stg_audit)
-    audit["n_gates_passed"] = _stage_quality(staged, config)
-    curated = _stage_curation(spark, config, staged, load_date)
-
-    # --- stage 5: archive with the load-date suffix ----------------------
-    n_archived = 0
-    for name in config["entities"]:
-        src = os.path.join(landing, f"{name}.csv")
-        if os.path.exists(src):
-            shutil.move(
-                src,
-                os.path.join(
-                    archive, f"{name}.csv.{load_date.isoformat()}"
-                ),
-            )
-            n_archived += 1
-    audit["n_archived"] = n_archived
-
+    """Land the config's sources, run ``pipeline.run_pipeline`` over
+    them, and return the curated table + audit columns (see module
+    docstring)."""
+    work, landing = _stage_land(spark, sf_dir, config)
+    r = pl.run_pipeline(spark, landing, work, _load_date(config), spec=config)
+    audit = {
+        "n_archived": len(r.archived),
+        "n_gates_passed": len(r.gates),
+        **{f"n_raw_{n}": c for n, c in r.raw_counts.items()},
+        **{f"n_stg_{n}": c for n, c in r.staging_counts.items()},
+    }
     audit_cols = [
         F.lit(v).cast("long").alias(k) for k, v in sorted(audit.items())
     ]
-    cur = config["curation"]
-    key_cols = [F.col(c) for c in cur["scd2_key"]]
-    return curated.select("*", *audit_cols).orderBy(*key_cols)
+    key_cols = [F.col(c) for c in config["curation"]["scd2_key"]]
+    return r.curated.select("*", *audit_cols).orderBy(*key_cols)
 
 
 _E2E_ORACLE = """
@@ -267,17 +146,27 @@ ORDER BY h.cust_id
 # The reference ships each tier as an independently runnable DAG
 # (gcs_to_raw_dag.py:1-95, raw_to_staging_dag.py:1-76,
 # staging_to_curation_dag.py:1-98) precisely so one tier can be re-run
-# without the whole chain.  Each key below runs ITS stage from the same
-# configs/pipeline_e2e.json and returns that tier's audit relation; the
-# upstream tiers it needs are materialized hermetically from the same
-# config (in production the stage reads the standing raw/staging
-# datasets — the handoff contract is identical parquet either way).
+# without the whole chain.  Each key below runs pipeline.py's stages up
+# to and including ITS stage over configs/pipeline_e2e.json and returns
+# that tier's audit relation; the upstream tiers it needs are
+# materialized hermetically by the same stages (in production the stage
+# reads the standing raw/staging datasets — the handoff contract is
+# identical parquet either way).
 # Each key uses its own pipeline_id so concurrent driver runs of the
 # composite and a standalone tier never share scratch.
 
 
-def _tier_config(pipeline_id: str) -> dict[str, Any]:
-    return {**load_pipeline_config(), "pipeline_id": pipeline_id}
+def _tier_run(
+    spark: SparkSession, sf_dir: str, pipeline_id: str
+) -> tuple[dict[str, Any], str, dict[str, DataFrame], pl.PipelineResult]:
+    """Land the config's sources under ``pipeline_id``'s scratch and run
+    the spine's first stage (sensor + raw tier); returns (config,
+    warehouse, raw tables, result) for the key's later stages."""
+    config = {**load_pipeline_config(), "pipeline_id": pipeline_id}
+    work, landing = _stage_land(spark, sf_dir, config)
+    result = pl.PipelineResult()
+    raw = pl.to_raw(spark, config, landing, work, _load_date(config), result)
+    return config, work, raw, result
 
 
 @query(
@@ -311,10 +200,7 @@ def pipeline_gcs_to_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the tier is a per-entity CSV scan → parquet write; audits
     are map-side aggregates on the written tier (what LANDED, not what
     was planned)."""
-    config = _tier_config("pipeline_gcs_to_raw")
-    load_date = dt.date.fromisoformat(config["load_date"])
-    _stage_land(spark, sf_dir, config)
-    raw_tables, _ = _stage_gcs_to_raw(spark, config, load_date)
+    config, _, raw_tables, _ = _tier_run(spark, sf_dir, "pipeline_gcs_to_raw")
     parts = []
     for name, ent in config["entities"].items():
         raw = raw_tables[name]
@@ -369,11 +255,10 @@ def pipeline_raw_to_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: casts compile to Catalyst expressions over a single tier
     scan; quarantine is the same scan's complement filter."""
-    config = _tier_config("pipeline_raw_to_staging")
-    load_date = dt.date.fromisoformat(config["load_date"])
-    _stage_land(spark, sf_dir, config)
-    raw_tables, _ = _stage_gcs_to_raw(spark, config, load_date)
-    staged, _ = _stage_raw_to_staging(spark, config, raw_tables)
+    config, work, raw_tables, result = _tier_run(
+        spark, sf_dir, "pipeline_raw_to_staging"
+    )
+    staged = pl.to_staging(spark, config, work, raw_tables, result)
     parts = []
     for name, ent in config["entities"].items():
         quar = quarantine(raw_tables[name], ent["casts"], ent["required"])
@@ -440,16 +325,17 @@ def pipeline_staging_to_curation(
 
     100 TB: gates are count aggregates; the curation join broadcasts
     the dim side; SCD2 init is a narrow projection over one scan."""
-    config = _tier_config("pipeline_staging_to_curation")
-    load_date = dt.date.fromisoformat(config["load_date"])
-    _stage_land(spark, sf_dir, config)
-    raw_tables, _ = _stage_gcs_to_raw(spark, config, load_date)
-    staged, _ = _stage_raw_to_staging(spark, config, raw_tables)
-    n_gates = _stage_quality(staged, config)
-    curated = _stage_curation(spark, config, staged, load_date)
+    config, work, raw_tables, result = _tier_run(
+        spark, sf_dir, "pipeline_staging_to_curation"
+    )
+    staged = pl.to_staging(spark, config, work, raw_tables, result)
+    pl.check_gates(config, staged, result)
+    curated = pl.curate(
+        spark, config, work, staged, _load_date(config), result
+    )
     key_cols = [F.col(c) for c in config["curation"]["scd2_key"]]
     return curated.select(
-        "*", F.lit(n_gates).cast("long").alias("n_gates_passed")
+        "*", F.lit(len(result.gates)).cast("long").alias("n_gates_passed")
     ).orderBy(*key_cols)
 
 

@@ -5,6 +5,8 @@ archive), plus the sensor-timeout and QC-failure paths."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -87,7 +89,6 @@ def test_qc_gate_failure_stops_before_curation(spark, tmp_path):
     with pytest.raises(QualityGateError, match="ref_integrity"):
         pl.run_pipeline(spark, landing, wh, D1)
     # curation never ran
-    import os
     assert not os.path.exists(pl._curated_path(wh))
 
 
@@ -100,3 +101,55 @@ def test_rerun_same_day_is_idempotent(spark, tmp_path):
     assert r.curated_versions == 3  # no duplicate versions
     cur = read_table(spark, pl._curated_path(wh))
     assert cur.filter(F.col("is_current")).count() == 3
+
+
+def test_failed_swap_keeps_scd2_history(spark, tmp_path, monkeypatch):
+    """A load that dies between retiring the old curated table and
+    moving the new one in must not cost the history: the re-run restores
+    the old table and applies on top of it instead of re-initialising."""
+    wh = str(tmp_path / "warehouse")
+    pl.run_pipeline(spark, _land(tmp_path, EMP_D1), wh, D1)
+
+    move = shutil.move
+    failed = []
+
+    def move_failing_once(src, dst, *a, **k):
+        if ".load-" in str(src) and not failed:
+            failed.append(src)
+            raise OSError("injected failure moving the new curated table")
+        return move(src, dst, *a, **k)
+
+    monkeypatch.setattr(shutil, "move", move_failing_once)
+    landing = _land(tmp_path, EMP_D2)
+    with pytest.raises(OSError, match="injected"):
+        pl.run_pipeline(spark, landing, wh, D2)
+    assert failed
+
+    r = pl.run_pipeline(spark, landing, wh, D2)
+    assert r.curated_versions == 5
+    cur = read_table(spark, pl._curated_path(wh))
+    assert cur.filter(F.col("effective_from") == D1).count() == 3
+
+
+#: Spark jobs of one run_pipeline load on this fixture: (init, apply)
+_PIPELINE_JOBS = (34, 38)
+
+
+def test_pipeline_job_budget(spark, tmp_path):
+    """The spine's jobs per load are pinned (a change that adds a job —
+    or removes one — must update the pin), and the second load runs the
+    SCD2 apply branch."""
+    sc = spark.sparkContext
+    wh = str(tmp_path / "warehouse")
+    jobs, versions = [], []
+    for load_date, emp in ((D1, EMP_D1), (D2, EMP_D2)):
+        group = f"test_pipeline_job_budget:{load_date}"
+        landing = _land(tmp_path, emp)
+        sc.setJobGroup(group, "pipeline load budget")
+        try:
+            versions.append(pl.run_pipeline(spark, landing, wh, load_date).curated_versions)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert versions == [3, 5]
+    assert tuple(jobs) == _PIPELINE_JOBS

@@ -18,7 +18,7 @@ from tests.conftest import SF_DIR
 SUPPLIER_CONFIG = {
     "pipeline_id": "e2e_alt_supplier",
     "load_date": "2024-07-15",
-    "landing": {"prefix": "landing", "archive_prefix": "archived"},
+    "landing": {"prefix": "landing"},
     "entities": {
         "supplier": {
             "source": "supplier",
@@ -100,10 +100,31 @@ def test_failed_gate_aborts_the_run(spark, tmp_path):
     with pytest.raises(QualityGateError):
         run_configured_pipeline(spark, str(tmp_path), cfg)
     # ...and nothing was curated or archived
-    from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir
+    from gcp_de_data_pipeline_cc_spark.scratch import scratch_path
 
-    work = os.path.join(os.path.dirname(scratch_dir("probe")), "e2e_gate_fail")
+    work = scratch_path("e2e_gate_fail")
     assert not os.path.exists(os.path.join(work, "cur"))
     assert os.path.exists(
         os.path.join(work, "landing", "customer.csv")
     )  # not archived
+
+
+#: (build, exec) Spark jobs of end_to_end_pipeline at the test scale
+_E2E_JOBS = (38, 3)
+
+
+def test_end_to_end_pipeline_job_budget(spark):
+    sc = spark.sparkContext
+    group = "test_end_to_end_pipeline_job_budget"
+    try:
+        sc.setJobGroup(f"{group}:build", "end_to_end_pipeline build budget")
+        df = REGISTRY["end_to_end_pipeline"].spark(spark, SF_DIR)
+        sc.setJobGroup(f"{group}:exec", "end_to_end_pipeline exec budget")
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = tuple(
+        len(sc.statusTracker().getJobIdsForGroup(f"{group}:{phase}"))
+        for phase in ("build", "exec")
+    )
+    assert jobs == _E2E_JOBS

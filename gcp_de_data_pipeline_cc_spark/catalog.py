@@ -22,6 +22,7 @@ from __future__ import annotations
 import functools
 import inspect
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -128,12 +129,13 @@ def shared(fn):
 
     Checkpoint policy: builders end their shared relations in
     ``localCheckpoint(eager=False)`` (executor-local blocks; on a real
-    cluster ``checkpoint()`` survives executor loss).  The session runs
-    with AQE on, and under AQE that call is NOT lazy: it runs every
-    upstream shuffle and broadcast stage at call time, inside whichever
-    caller builds the relation first; only the final stage waits for
-    the first action.  With AQE off only broadcast builds run at the
-    call; shuffle stages wait for the first action.
+    cluster ``checkpoint()`` survives executor loss), and every Spark
+    iteration loop cuts its state the same way through :func:`fixpoint`.
+    The session runs with AQE on, and under AQE that call is NOT lazy:
+    it runs every upstream shuffle and broadcast stage at call time,
+    inside whichever caller builds the relation first; only the final
+    stage waits for the first action.  With AQE off only broadcast
+    builds run at the call; shuffle stages wait for the first action.
     """
     sig = inspect.signature(fn)
 
@@ -157,6 +159,41 @@ def shared(fn):
 def clear() -> None:
     """Drop every shared relation, for all sessions and warehouses."""
     _SHARED.clear()
+
+
+class NonConvergence(RuntimeError):
+    """A :func:`fixpoint` loop hit its round cap before ``done`` held."""
+
+    def __init__(self, name: str, max_rounds: int):
+        super().__init__(f"{name}: no fixpoint within {max_rounds} rounds")
+        self.name, self.max_rounds = name, max_rounds
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    *,
+    max_rounds: int,
+    name: str,
+    done: Callable[[DataFrame, int], bool] | None = None,
+) -> DataFrame:
+    """The one Spark iteration loop: round ``r`` (0-based) runs
+    ``state = step(state, r).localCheckpoint(eager=False)``, so each
+    round's plan stays the size of one step (the :func:`shared`
+    checkpoint policy: under AQE the rounds run while the caller builds
+    its plan).  Without ``done`` it runs exactly ``max_rounds`` rounds.
+    With ``done``, the test runs on the checkpointed state every round
+    and the loop returns at the first ``True``; if it never holds within
+    ``max_rounds`` the loop raises :class:`NonConvergence` rather than
+    hand back an unconverged state.
+    """
+    for r in range(max_rounds):
+        state = step(state, r).localCheckpoint(eager=False)
+        if done is not None and done(state, r):
+            return state
+    if done is not None:
+        raise NonConvergence(name, max_rounds)
+    return state
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

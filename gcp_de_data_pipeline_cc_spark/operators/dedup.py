@@ -29,6 +29,7 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gcp_de_data_pipeline_cc_spark.catalog import fixpoint
 from gcp_de_data_pipeline_cc_spark.operators.text import (
     MERSENNE_31,
     portable_token_hash,
@@ -349,7 +350,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    checkpoint_dir: str | None = None,
     pointer_jump: bool = False,
 ) -> DataFrame:
     """Connected components over an undirected edge list by iterative
@@ -357,49 +357,41 @@ def connected_components(
     PAIRS into dedup GROUPS (keep one representative per component).
 
     Each round every node adopts ``min(own label, neighbors' labels)``:
-    one hash shuffle keyed on node id per round, Pregel-style, with
-    lineage cut per round so the plan stays constant-size. Rounds needed
-    = component diameter; near-dup clusters are shallow (a hub document
-    links its variants), so a handful of rounds converges even at corpus
-    scale — measured 2 rounds on the documents corpus. For deep graphs
-    set ``pointer_jump=True``: each round additionally adopts the label
-    currently held by the label node (path doubling), collapsing chains
-    in O(log diameter) rounds at the price of a second shuffle per round
-    — a win only when diameter >> 4, so it is opt-in.
+    one hash shuffle keyed on node id per round, Pregel-style, run
+    through :func:`catalog.fixpoint` so the plan stays constant-size.
+    Rounds needed = component diameter; near-dup clusters are shallow (a
+    hub document links its variants), so a handful of rounds converges
+    even at corpus scale — measured 2 rounds on the documents corpus.
+    For deep graphs set ``pointer_jump=True``: each round additionally
+    adopts the label currently held by the label node (path doubling),
+    collapsing chains in O(log diameter) rounds at the price of a second
+    shuffle per round — a win only when diameter >> 4, so it is opt-in.
 
-    When ``checkpoint_dir`` is set the lineage cut is a reliable
-    ``checkpoint()`` (survives executor loss — required on a real
-    cluster); otherwise ``localCheckpoint()`` (executor-local, fine for
-    local mode). The label sum is monotonically non-increasing, giving a
-    one-scalar convergence test per round — the only driver-side value
-    in the loop.
+    Convergence: labels only decrease, so the first round in which no
+    label drops is the fixpoint; the per-round test is one emptiness
+    probe — the only driver-side value in the loop.  A graph that needs
+    more than ``max_iterations`` rounds raises
+    :class:`catalog.NonConvergence`.
 
     Returns (node, cluster_id) with cluster_id = min node id reachable.
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def cut(df: DataFrame) -> DataFrame:
-            return df.checkpoint()
-    else:
-
-        def cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
-    # materialize the edge list once BEFORE symmetrizing: the union scans
+    # checkpoint the edge list once BEFORE symmetrizing: the union scans
     # its input twice, and upstream edge generation (e.g. an n-gram
     # similarity self-join) is far too expensive to run twice
-    e0 = cut(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
-    sym = cut(
+    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e0 = e0.localCheckpoint(eager=False)
+    sym = (
         e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    labels = cut(
+    labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    def step(lbl: DataFrame) -> DataFrame:
+
+    def step(lbl: DataFrame, _r: int) -> DataFrame:
         neigh = (
             sym.join(lbl, sym.a == lbl.node)
             .groupBy(F.col("b").alias("nb_node"))
@@ -412,6 +404,7 @@ def connected_components(
                 F.least(
                     F.col("label"), F.coalesce(F.col("nb_min"), F.col("label"))
                 ).alias("label"),
+                F.col("label").alias("was"),
             )
         )
         if pointer_jump:
@@ -426,23 +419,21 @@ def connected_components(
                 F.least(
                     F.col("label"), F.coalesce(F.col("j_label"), F.col("label"))
                 ).alias("label"),
+                "was",
             )
-        return stepped
+        return stepped.select(
+            "node", "label", (F.col("label") < F.col("was")).alias("dropped")
+        )
 
-    # r10 MEASURED NEGATIVE (r9 verdict task #7): batching TWO
-    # propagation steps per materialization+probe was built and A/B'd —
-    # it halves the probe/checkpoint jobs, but every consumer graph here
-    # converges in ~2 rounds, so the batch runs 2× the propagation
-    # steps (each a join+agg+join) to save one tiny probe job:
-    # geo_cluster_grid 4.09 → 6.12 s, corpus_dedup_rate 8.02 → 7.76 s
-    # (flat) in the paired sf0.1 A/B.  Reverted; batching only pays
-    # when diameter >> 2 — the same regime as the existing opt-in
-    # ``pointer_jump``.
-    prev_sum = None
-    for _ in range(max_iterations):
-        labels = cut(step(labels))
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+    # r10 MEASURED NEGATIVE: probing every other round (two propagation
+    # steps per checkpoint + probe) lost — consumer graphs converge in
+    # ~2 rounds, so it ran 2× the steps to save one tiny probe job
+    # (geo_cluster_grid 4.09 → 6.12 s in the paired sf0.1 A/B)
+    labels = fixpoint(
+        labels,
+        step,
+        max_rounds=max_iterations,
+        name="connected_components",
+        done=lambda lbl, _r: lbl.filter("dropped").isEmpty(),
+    )
     return labels.select("node", F.col("label").alias("cluster_id"))

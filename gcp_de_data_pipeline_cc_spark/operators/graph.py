@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
+from gcp_de_data_pipeline_cc_spark.catalog import fixpoint, load_table, shared
 
 
 def _pair_col() -> F.Column:
@@ -187,42 +187,16 @@ def lpa_labels(
 def trade_sparse_graph(
     spark: SparkSession, sf_dir: str, k: int = 3
 ) -> DataFrame:
-    """Sparsified undirected nation trade graph, columns (u, v): keep
-    each nation's ``k`` strongest trade partners (weight = lineitems
-    shipped customer-nation -> supplier-nation, self-flows dropped,
-    rank ties on partner key), symmetrize.  The raw flow matrix is
-    near-complete — distance-1 everywhere — so the centrality keys
-    (closeness, betweenness) are only informative on this backbone.
-    One tpch_q7-shaped fact pass per session; the result is a
-    checkpointed <= 2·k·|nations|-row relation shared by every
-    consumer (the supplier_backbone ownership contract)."""
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    e = (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(
-            F.broadcast(customer.select("c_custkey", "c_nationkey")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(supplier.select("s_suppkey", "s_nationkey")),
-            lineitem.l_suppkey == F.col("s_suppkey"),
-        )
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count("*").cast("long").alias("w"))
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst"))
-    )
+    """Sparsified undirected nation trade graph, columns (u, v):
+    :func:`trade_sparse_digraph`'s top-``k`` flows per source nation,
+    symmetrized.  The raw flow matrix is near-complete — distance-1
+    everywhere — so the centrality keys (closeness, betweenness) are
+    only informative on this backbone.  It reuses the digraph's one fact
+    pass per session; the result is a checkpointed <= 2·k·|nations|-row
+    relation shared by every consumer (the supplier_backbone ownership
+    contract)."""
     kept = (
-        e.withColumn("rn", rn)
-        .filter(F.col("rn") <= k)
+        trade_sparse_digraph(spark, sf_dir, k)
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
@@ -251,10 +225,10 @@ def trade_sparse_digraph(
     keep each source nation's ``k`` strongest outgoing trade flows
     (weight = lineitems shipped customer-nation -> supplier-nation,
     self-flows dropped, rank ties on partner key), WITHOUT the
-    symmetrization :func:`trade_sparse_graph` applies — direction is
-    the point for SCC/condensation analyses (u sells to v is not v
-    sells to u).  Same one-fact-pass, checkpointed, session-cached
-    ownership contract."""
+    symmetrization :func:`trade_sparse_graph` adds — direction is the
+    point for SCC/condensation analyses (u sells to v is not v sells to
+    u).  One tpch_q7-shaped fact pass per session, checkpointed and
+    session-cached; the undirected graph is built from it."""
     customer = load_table(spark, sf_dir, "customer")
     supplier = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
@@ -310,15 +284,16 @@ def scc_labels(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    for _ in range(rounds):
+
+    def square(reach: DataFrame, _r: int) -> DataFrame:
         hop = (
             reach.alias("a")
             .join(reach.alias("b"), F.col("a.v") == F.col("b.u"))
             .select(F.col("a.u").alias("u"), F.col("b.v").alias("v"))
         )
-        reach = (
-            reach.unionByName(hop).distinct().localCheckpoint(eager=False)
-        )
+        return reach.unionByName(hop).distinct()
+
+    reach = fixpoint(reach, square, max_rounds=rounds, name="scc_labels")
     pair = (
         reach.alias("r1")
         .join(

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import fixpoint, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn
 from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
@@ -679,10 +679,8 @@ def eval_elo_bt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wins = wins.localCheckpoint(eager=False)  # per-iteration + output
     pairs = pairs.localCheckpoint(eager=False)
-    p = models.select(
-        F.col("i").alias("k"), F.lit(q // m).cast("long").alias("v")
-    )
-    for _ in range(_BT_ITERS):
+
+    def mm_step(p: DataFrame, _r: int) -> DataFrame:
         # every relation in an MM iteration is model-cardinality
         # (≤ m(m-1)/2 rows) but hidden behind checkpoints/aggregates the
         # planner cannot size — broadcast them explicitly so each
@@ -740,22 +738,25 @@ def eval_elo_bt(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         t = raw.agg(F.sum("r").cast("long").alias("t"))
-        p = (
-            raw.crossJoin(F.broadcast(t))
-            .select(
-                F.col("i").alias("k"),
-                F.floor(
-                    F.col("r").cast("double") / F.col("t").cast("double")
-                    * F.lit(float(q))
-                    + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("v"),
+        return raw.crossJoin(F.broadcast(t)).select(
+            F.col("i").alias("k"),
+            F.floor(
+                F.col("r").cast("double") / F.col("t").cast("double")
+                * F.lit(float(q))
+                + F.lit(0.5)
             )
+            .cast("long")
+            .alias("v"),
         )
-        # shallow plan per iteration: without this the rating relation's
-        # subtree doubles every loop (raw feeds both t and p)
-        p = p.localCheckpoint(eager=False)
+
+    p = fixpoint(
+        models.select(
+            F.col("i").alias("k"), F.lit(q // m).cast("long").alias("v")
+        ),
+        mm_step,
+        max_rounds=_BT_ITERS,
+        name="eval_elo_bt",
+    )
     return (
         wins.join(p, wins.i == p.k)
         .select(

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import fixpoint, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators.graph import (
     trade_sparse_graph,
@@ -1045,6 +1045,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PPR_A_NUM, _PPR_A_DEN = 3, 20  # alpha = 0.15
 _PPR_SEED = 0  # n_nationkey of the personalization seed
 _PPR_U = 1_000_000
+_PPR_ITERS = 3  # power iterations (the oracle unrolls p1..p3)
 
 
 def _ppr_oracle() -> str:
@@ -1148,7 +1149,8 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("v"),
     )
-    for _ in range(3):
+
+    def power_step(p: DataFrame, _r: int) -> DataFrame:
         contrib = (
             e.join(F.broadcast(p), e.src == p.k)
             .join(F.broadcast(outw), "src")
@@ -1161,21 +1163,19 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("r")
             )
         )
-        p = (
-            nodes.join(contrib, nodes.k == contrib.dst, "left")
-            .select(
-                "k",
-                (
-                    F.coalesce("r", F.lit(0))
-                    + F.when(
-                        F.col("k") == seed, F.lit((an * u) // ad)
-                    ).otherwise(F.lit(0))
+        return nodes.join(contrib, nodes.k == contrib.dst, "left").select(
+            "k",
+            (
+                F.coalesce("r", F.lit(0))
+                + F.when(F.col("k") == seed, F.lit((an * u) // ad)).otherwise(
+                    F.lit(0)
                 )
-                .cast("long")
-                .alias("v"),
             )
+            .cast("long")
+            .alias("v"),
         )
-        p = p.localCheckpoint(eager=False)  # shallow plan per iteration
+
+    p = fixpoint(p, power_step, max_rounds=_PPR_ITERS, name="graph_ppr")
     return (
         nodes.join(p, "k")
         .select(
@@ -1282,12 +1282,11 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (graph_bfs_khop) is the swap."""
     nation = load_table(spark, sf_dir, "nation")
     g = trade_sparse_graph(spark, sf_dir, _CLOSE_K)
-    d = g.select("u", "v", F.lit(1).alias("dist"))
-    for _ in range(2, _CLOSE_H + 1):
-        d = d.localCheckpoint(eager=False)  # shallow plan per expansion
-        step = (
+
+    def expand(d: DataFrame, _r: int) -> DataFrame:
+        step = (  # g: <= 2k|nations| rows the planner cannot size
             d.alias("d")
-            .join(g.alias("g"), F.col("g.u") == F.col("d.v"))
+            .join(F.broadcast(g.alias("g")), F.col("g.u") == F.col("d.v"))
             .filter(F.col("g.v") != F.col("d.u"))
             .select(
                 F.col("d.u").alias("u"),
@@ -1295,9 +1294,12 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("d.dist") + 1).alias("dist"),
             )
         )
-        d = d.unionByName(step).groupBy("u", "v").agg(
+        return d.unionByName(step).groupBy("u", "v").agg(
             F.min("dist").alias("dist")
         )
+
+    d = g.select("u", "v", F.lit(1).alias("dist"))
+    d = fixpoint(d, expand, max_rounds=_CLOSE_H - 1, name="graph_closeness")
     agg = d.groupBy("u").agg(
         F.count("*").cast("long").alias("n_reachable"),
         F.sum("dist").cast("long").alias("sum_dist"),
@@ -1407,6 +1409,47 @@ def _betweenness_oracle() -> str:
     """
 
 
+def _btw_forward(g: DataFrame, first: DataFrame, name: str) -> DataFrame:
+    """Layered (s, t, dist, cnt = σ) expansion over ``g`` (u, v) from
+    the one-hop paths ``first`` ⊆ ``g`` to the ``_BTW_H``-hop horizon:
+    round r extends the dist = r+1 frontier by one hop, sums path
+    counts per (s, t, dist) and keeps each pair's shortest layer —
+    every kept entry is final (the BFS invariant)."""
+    m = first.select(
+        F.col("u").alias("s"),
+        F.col("v").alias("t"),
+        F.lit(1).alias("dist"),
+        F.lit(1).cast("long").alias("cnt"),
+    )
+
+    def expand(m: DataFrame, r: int) -> DataFrame:
+        frontier = m.filter(F.col("dist") == r + 1)
+        cand = (
+            frontier.alias("f")
+            .join(g.alias("g"), F.col("g.u") == F.col("f.t"))
+            .filter(F.col("g.v") != F.col("f.s"))
+            .select(
+                F.col("f.s").alias("s"),
+                F.col("g.v").alias("t"),
+                (F.col("f.dist") + 1).alias("dist"),
+                F.col("f.cnt").alias("cnt"),
+            )
+        )
+        merged = (
+            m.unionByName(cand)
+            .groupBy("s", "t", "dist")
+            .agg(F.sum("cnt").cast("long").alias("cnt"))
+        )
+        shortest = Window.partitionBy("s", "t").orderBy("dist")
+        return (
+            merged.withColumn("rn", F.row_number().over(shortest))
+            .filter(F.col("rn") == 1)
+            .drop("rn")
+        )
+
+    return fixpoint(m, expand, max_rounds=_BTW_H - 1, name=name)
+
+
 @query("graph_betweenness", oracle=_betweenness_oracle())
 def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph family — EXACT betweenness centrality (Freeman/Brandes
@@ -1433,42 +1476,7 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-partitioned)."""
     nation = load_table(spark, sf_dir, "nation")
     g = trade_sparse_graph(spark, sf_dir, _BTW_K)
-    m = g.select(
-        F.col("u").alias("s"),
-        F.col("v").alias("t"),
-        F.lit(1).alias("dist"),
-        F.lit(1).cast("long").alias("cnt"),
-    )
-    for i in range(1, _BTW_H):
-        m = m.localCheckpoint(eager=False)  # frontier + carry consumers
-        frontier = m.filter(F.col("dist") == i)
-        cand = (
-            frontier.alias("f")
-            .join(g.alias("g"), F.col("g.u") == F.col("f.t"))
-            .filter(F.col("g.v") != F.col("f.s"))
-            .select(
-                F.col("f.s").alias("s"),
-                F.col("g.v").alias("t"),
-                (F.col("f.dist") + 1).alias("dist"),
-                F.col("f.cnt").alias("cnt"),
-            )
-        )
-        merged = (
-            m.unionByName(cand)
-            .groupBy("s", "t", "dist")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
-        m = (
-            merged.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("s", "t").orderBy("dist")
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-    m = m.localCheckpoint(eager=False)  # three accumulation consumers
+    m = _btw_forward(g, g, "graph_betweenness")
     sv, vt, st = m.alias("sv"), m.alias("vt"), m.alias("st")
     acc = (
         sv.join(vt, F.col("vt.s") == F.col("sv.t"))
@@ -1635,9 +1643,8 @@ def graph_articulation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    doubling_rounds = max(1, (_ART_H - 1).bit_length())  # 2^r >= _ART_H
-    for _ in range(doubling_rounds):
-        reach = reach.localCheckpoint(eager=False)
+
+    def square(reach: DataFrame, _r: int) -> DataFrame:
         hop = (
             reach.alias("r1")
             .join(
@@ -1651,7 +1658,10 @@ def graph_articulation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("r2.b").alias("b"),
             )
         )
-        reach = reach.unionByName(hop).distinct()
+        return reach.unionByName(hop).distinct()
+
+    rounds = max(1, (_ART_H - 1).bit_length())  # 2^rounds >= _ART_H
+    reach = fixpoint(reach, square, max_rounds=rounds, name="graph_articulation")
     lbl = reach.groupBy("chain", F.col("a").alias("v")).agg(
         F.min("b").alias("lbl")
     )
@@ -1899,7 +1909,8 @@ def graph_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # longest path via max-plus squaring: 5 rounds cover 2^5 > |SCCs|
     lp = ce.select("src", "dst", F.lit(1).cast("long").alias("len"))
     lp = lp.localCheckpoint(eager=False)
-    for _ in range(_SCC_ROUNDS):
+
+    def square(lp: DataFrame, _r: int) -> DataFrame:
         ext = (
             lp.alias("a")
             .join(lp.alias("b"), F.col("a.dst") == F.col("b.src"))
@@ -1909,12 +1920,13 @@ def graph_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("a.len") + F.col("b.len")).alias("len"),
             )
         )
-        lp = (
+        return (
             lp.unionByName(ext)
             .groupBy("src", "dst")
             .agg(F.max("len").cast("long").alias("len"))
-            .localCheckpoint(eager=False)
         )
+
+    lp = fixpoint(lp, square, max_rounds=_SCC_ROUNDS, name="graph_condensation")
     lvl = lp.groupBy("dst").agg(
         F.max("len").cast("long").alias("topo_level")
     ).withColumnRenamed("dst", "scc_id")
@@ -2329,42 +2341,7 @@ def _btw_sampled_frame(
     # forward (dist, sigma) restricted to sampled sources: state is
     # |S|x|V| rows, the per-source partitioning that scales where the
     # all-pairs |V|^2 state cannot
-    m = g.filter(F.col("u") % mod == 0).select(
-        F.col("u").alias("s"),
-        F.col("v").alias("t"),
-        F.lit(1).alias("dist"),
-        F.lit(1).cast("long").alias("cnt"),
-    )
-    for i in range(1, _BTW_H):
-        m = m.localCheckpoint(eager=False)  # frontier + carry consumers
-        frontier = m.filter(F.col("dist") == i)
-        cand = (
-            frontier.alias("f")
-            .join(g.alias("ge"), F.col("ge.u") == F.col("f.t"))
-            .filter(F.col("ge.v") != F.col("f.s"))
-            .select(
-                F.col("f.s").alias("s"),
-                F.col("ge.v").alias("t"),
-                (F.col("f.dist") + 1).alias("dist"),
-                F.col("f.cnt").alias("cnt"),
-            )
-        )
-        merged = (
-            m.unionByName(cand)
-            .groupBy("s", "t", "dist")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
-        m = (
-            merged.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("s", "t").orderBy("dist")
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-    m = m.localCheckpoint(eager=False)  # per-layer backward consumers
+    m = _btw_forward(g, g.filter(F.col("u") % mod == 0), "graph_betweenness_sampled")
 
     # backward dependency accumulation (Brandes): for v at layer i,
     # delta(v) = sum over shortest-path-DAG successors w at layer i+1 of
@@ -2613,23 +2590,33 @@ def graph_articulation_tarjan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _fwbw_reach(state: DataFrame, pivots: DataFrame, ed: DataFrame) -> DataFrame:
+#: FW-BW round caps over ≤ |nation| = 25 nodes: a BFS has ≤ 24 non-empty
+#: frontiers plus the empty one, and each level (trim round + pivot
+#: round) retires at least its pivot
+_FWBW_MAX_HOPS = 25
+_FWBW_MAX_ROUNDS = 2 * 25
+
+
+def _fwbw_reach(live: DataFrame, pivots: DataFrame, ed: DataFrame) -> DataFrame:
     """Tagged forward+backward BFS from each part's pivot, both
     directions in ONE frontier loop: ``ed`` carries dir∈{1 fwd, 2 bwd}
-    orientations of the digraph; reach rows are (part, dir, v),
-    restricted to the part's live node set.  Iterations ≤ the part
-    diameter; the per-round convergence scalar is the dedup_clusters
-    driver-scalar discipline (a bounded count, never data).  Every
-    join broadcasts its bounded side, so each hop is one
-    exchange-free stage (at wide-graph scale the frontier is the
-    broadcast side and the edge relation stays partitioned in place)."""
-    reach = pivots.select(
-        "part", F.lit(1).alias("dir"), F.col("pv").alias("v")
-    ).unionByName(
-        pivots.select("part", F.lit(2).alias("dir"), F.col("pv").alias("v"))
-    ).coalesce(1).localCheckpoint(eager=False)
-    frontier = reach
-    while True:
+    orientations of the digraph; reach rows are (part, dir, v, hop),
+    restricted to the part's ``live`` node set, and the frontier is the
+    last round's ``hop``.  Rounds ≤ the part diameter + 1; the per-round
+    convergence test is one emptiness probe on the new frontier (a
+    bounded scalar, never data).  Every join broadcasts its bounded
+    side, so each hop is one exchange-free stage (at wide-graph scale
+    the frontier is the broadcast side and the edge relation stays
+    partitioned in place)."""
+    seeds = pivots.select(
+        "part",
+        F.explode(F.array(F.lit(1), F.lit(2))).alias("dir"),
+        F.col("pv").alias("v"),
+        F.lit(0).alias("hop"),
+    ).coalesce(1)
+
+    def hop(reach: DataFrame, r: int) -> DataFrame:
+        frontier = reach.filter(F.col("hop") == r)
         nxt = (
             ed.join(
                 F.broadcast(frontier),
@@ -2637,15 +2624,22 @@ def _fwbw_reach(state: DataFrame, pivots: DataFrame, ed: DataFrame) -> DataFrame
             )
             .select("part", frontier.dir.alias("dir"), ed.t.alias("v"))
             .distinct()
-            .join(F.broadcast(state.select("part", "v")), ["part", "v"], "semi")
-            .join(F.broadcast(reach), ["part", "dir", "v"], "left_anti")
-            .coalesce(1)
-            .localCheckpoint(eager=False)
+            .join(F.broadcast(live), ["part", "v"], "semi")
+            .join(
+                F.broadcast(reach.select("part", "dir", "v")),
+                ["part", "dir", "v"],
+                "left_anti",
+            )
         )
-        if nxt.isEmpty():
-            return reach
-        reach = reach.unionByName(nxt).coalesce(1).localCheckpoint(eager=False)
-        frontier = nxt
+        return reach.unionByName(nxt.withColumn("hop", F.lit(r + 1))).coalesce(1)
+
+    return fixpoint(
+        seeds,
+        hop,
+        max_rounds=_FWBW_MAX_HOPS,
+        name="graph_scc_fwbw:reach",
+        done=lambda reach, r: reach.filter(F.col("hop") == r + 1).isEmpty(),
+    )
 
 
 @query("graph_scc_fwbw", oracle=_scc_oracle())
@@ -2693,84 +2687,83 @@ def graph_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(2).alias("dir"), F.col("dst").alias("f"), F.col("src").alias("t")
         )
     ).localCheckpoint(eager=False)
+    # state: one row per nation (part, v, scc_id); scc_id is NULL while
+    # v is live and set once v retires into its SCC
     state = (
         nation.select(F.col("n_nationkey").cast("long").alias("v"))
         .withColumn("part", F.lit(0).cast("long"))
+        .withColumn("scc_id", F.lit(None).cast("long"))
         .coalesce(1)
         .localCheckpoint(eager=False)
     )
-    done: DataFrame | None = None
-    while not state.isEmpty():
-        # TRIM (the FW-BW-Trim variant): a node lacking an in-edge or an
-        # out-edge WITHIN its part is a singleton SCC — retire it now.
-        # One pass retires every leaf the previous level stranded, which
-        # is what keeps the recursion depth near the component-tree
-        # height instead of the component count.
-        within = (
-            ed.join(
-                F.broadcast(state.select("part", F.col("v").alias("f"))),
-                "f",
+
+    def level(state: DataFrame, r: int) -> DataFrame:
+        live = state.filter(F.col("scc_id").isNull()).select("part", "v")
+        if r % 2 == 0:
+            # TRIM (the FW-BW-Trim variant): a node lacking an in-edge or
+            # an out-edge WITHIN its part is a singleton SCC — retire it
+            # now.  One pass retires every leaf the previous level
+            # stranded, which is what keeps the recursion depth near the
+            # component-tree height instead of the component count.
+            dirs = (
+                ed.join(F.broadcast(live.withColumnRenamed("v", "f")), "f")
+                .join(
+                    F.broadcast(live.withColumnRenamed("v", "t")),
+                    ["part", "t"],
+                    "semi",
+                )
+                .groupBy("part", F.col("f").alias("v"))
+                .agg(F.count_distinct("dir").alias("nd"))
             )
-            .join(
-                F.broadcast(state.select("part", F.col("v").alias("t"))),
-                ["part", "t"],
-                "semi",
+            trimmed = F.coalesce("nd", F.lit(0)) < 2
+            return (
+                state.join(F.broadcast(dirs), ["part", "v"], "left")
+                .select(
+                    "part",
+                    "v",
+                    F.coalesce("scc_id", F.when(trimmed, F.col("v"))).alias("scc_id"),
+                )
+                .coalesce(1)
             )
-            .select("part", F.col("f").alias("v"), "dir")
-            .distinct()
-        )
-        kept = (
-            within.groupBy("part", "v")
-            .agg(F.count_distinct("dir").alias("nd"))
-            .filter(F.col("nd") == 2)
-            .select("part", "v")
-            .coalesce(1)
-            .localCheckpoint(eager=False)
-        )
-        trimmed = state.join(F.broadcast(kept), ["part", "v"], "left_anti")
-        singles = trimmed.select("v", F.col("v").cast("long").alias("scc_id"))
-        done = singles if done is None else done.unionByName(singles)
-        done = done.coalesce(1).localCheckpoint(eager=False)
-        state = kept
-        if state.isEmpty():
-            break
+        # PIVOT: F∩B of each part's min node is its SCC, labeled by that
+        # node; F∖S, B∖S and the untouched rest become parts
+        # 4·part + side for side = 1, 2, 3 (side = Σ dir over F and B)
         pivots = (
-            state.groupBy("part")
+            live.groupBy("part")
             .agg(F.min("v").alias("pv"))
             .coalesce(1)
             .localCheckpoint(eager=False)
         )
-        reach = _fwbw_reach(state, pivots, ed)
-        fw = reach.filter(F.col("dir") == 1).select("part", "v")
-        bw = reach.filter(F.col("dir") == 2).select("part", "v")
-        scc = (
-            fw.join(F.broadcast(bw), ["part", "v"], "semi")
-            .coalesce(1)
-            .localCheckpoint(eager=False)
+        side = (
+            _fwbw_reach(live, pivots, ed)
+            .groupBy("part", "v")
+            .agg(F.sum("dir").alias("side"))
         )
-        lab = scc.groupBy("part").agg(F.min("v").cast("long").alias("scc_id"))
-        comp = scc.join(F.broadcast(lab), "part").select("v", "scc_id")
-        done = done.unionByName(comp).coalesce(1).localCheckpoint(eager=False)
-        tags = (
-            fw.join(F.broadcast(scc), ["part", "v"], "left_anti")
-            .withColumn("tag", F.lit(1))
-            .unionByName(
-                bw.join(F.broadcast(scc), ["part", "v"], "left_anti")
-                .withColumn("tag", F.lit(2))
-            )
-        )
-        state = (
-            state.join(F.broadcast(scc), ["part", "v"], "left_anti")
-            .join(F.broadcast(tags), ["part", "v"], "left")
-            .select(
-                (F.col("part") * 4 + F.coalesce("tag", F.lit(3)))
+        in_scc = F.col("side") == 3
+        return (
+            state.join(F.broadcast(side), ["part", "v"], "left")
+            .join(F.broadcast(pivots), "part", "left")
+            .select(  # a retired row's part is never read again
+                F.when(
+                    F.col("scc_id").isNull(),
+                    F.col("part") * 4 + F.coalesce("side", F.lit(3)),
+                )
+                .otherwise(F.col("part"))
                 .cast("long")
                 .alias("part"),
                 "v",
+                F.coalesce("scc_id", F.when(in_scc, F.col("pv"))).alias("scc_id"),
             )
             .coalesce(1)
-            .localCheckpoint(eager=False)
         )
+
+    done = fixpoint(
+        state,
+        level,
+        max_rounds=_FWBW_MAX_ROUNDS,
+        name="graph_scc_fwbw",
+        done=lambda st, _r: st.filter(F.col("scc_id").isNull()).isEmpty(),
+    ).select("v", "scc_id")
     sz = done.groupBy("scc_id").agg(
         F.count("*").cast("long").alias("scc_size")
     )
@@ -2795,6 +2788,10 @@ def graph_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _LPC_K = 3   # same sparsifying cut as the articulation/centrality keys
+
+#: round cap: a label crosses ≤ 24 hops in a ≤ |nation| = 25-node
+#: component, plus the one round that changes nothing
+_LPC_MAX_ROUNDS = 25
 
 
 def _lpa_converged_oracle() -> str:
@@ -2863,9 +2860,9 @@ def graph_label_propagation_converged(
     the fixpoint itself as evidence (r5 verdict task #7): unlike the
     fixed-iteration demonstrations (LPA 2 iters, k-means 2, power
     iteration 2), this is the production shape — labels propagate
-    until a round changes NOTHING, the per-round change count is the
-    dedup_clusters driver-scalar discipline (a bounded integer, never
-    data), and ``rounds_to_convergence`` is an OUTPUT column: per
+    until a round changes NOTHING (a :func:`catalog.fixpoint` loop: one
+    emptiness probe per round, capped at ``_LPC_MAX_ROUNDS``), and
+    ``rounds_to_convergence`` is an OUTPUT column: per
     community, the round its last member settled, which equals the
     max BFS distance from the community's min node — exactly what the
     oracle recomputes from scratch with recursive-CTE BFS, so the
@@ -2891,9 +2888,8 @@ def graph_label_propagation_converged(
         .coalesce(1)
         .localCheckpoint(eager=False)
     )
-    r = 0
-    while True:
-        r += 1
+
+    def propagate(lbl: DataFrame, r: int) -> DataFrame:
         prop = (
             g.join(
                 F.broadcast(
@@ -2904,28 +2900,24 @@ def graph_label_propagation_converged(
             .groupBy("v")
             .agg(F.min("nl").alias("nl"))
         )
-        nxt = (
+        new_lbl = F.least("lbl", F.coalesce("nl", F.col("lbl")))
+        return (
             lbl.join(F.broadcast(prop), "v", "left")
             .select(
                 "v",
-                F.least("lbl", F.coalesce("nl", F.col("lbl"))).alias("new_lbl"),
-                "lbl",
-                "chg",
-            )
-            .select(
-                "v",
-                F.col("new_lbl").alias("lbl"),
-                F.when(F.col("new_lbl") < F.col("lbl"), F.lit(r))
-                .otherwise(F.col("chg"))
-                .alias("chg"),
+                new_lbl.alias("lbl"),
+                F.when(new_lbl < F.col("lbl"), r + 1).otherwise(F.col("chg")).alias("chg"),
             )
             .coalesce(1)
-            .localCheckpoint(eager=False)
         )
-        n_changed = nxt.filter(F.col("chg") == r).count()  # driver scalar
-        lbl = nxt
-        if n_changed == 0:
-            break
+
+    lbl = fixpoint(
+        lbl,
+        propagate,
+        max_rounds=_LPC_MAX_ROUNDS,
+        name="graph_label_propagation_converged",
+        done=lambda lbl, r: lbl.filter(F.col("chg") == r + 1).isEmpty(),
+    )
     rounds = lbl.groupBy("lbl").agg(
         F.max("chg").cast("long").alias("rounds_to_convergence"),
         F.count("*").cast("long").alias("community_size"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import fixpoint
 from gcp_de_data_pipeline_cc_spark.operators.graph import supplier_backbone
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
@@ -104,10 +104,10 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per round, support is one wedge join of the surviving edge
     list against its own adjacency — Σ deg² work on the top-K backbone
     (≤K·n edges, deg ≤ 2K after the cut), monotonically shrinking per
-    round; each round's survivor set is localCheckpointed so no round
-    re-derives its predecessor. The backbone itself is built once per
-    session (operators/graph caches). Run-to-convergence uses the
-    dedup_clusters checkpointed-loop shape with this exact per-round
+    round; each round's survivor set is checkpointed (catalog.fixpoint)
+    so no round re-derives its predecessor. The backbone itself is built
+    once per session (operators/graph caches). Run-to-convergence is the
+    same fixpoint call with a ``done`` test on this exact per-round
     plan."""
     sup_min = _KT_K - 2
     edges = supplier_backbone(spark, sf_dir, _KT_BK)  # (sa, sb), sa < sb
@@ -136,13 +136,10 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("sup"))
         )
 
-    for _ in range(_KT_ROUNDS):
-        edges = (
-            support(edges)
-            .filter(F.col("sup") >= sup_min)
-            .select("sa", "sb")
-            .localCheckpoint(eager=False)
-        )
+    def peel(e: DataFrame, _r: int) -> DataFrame:
+        return support(e).filter(F.col("sup") >= sup_min).select("sa", "sb")
+
+    edges = fixpoint(edges, peel, max_rounds=_KT_ROUNDS, name="graph_ktruss")
     final_sup = support(edges)
     sv = (
         edges.join(final_sup, ["sa", "sb"], "left")

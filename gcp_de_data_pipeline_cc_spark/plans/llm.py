@@ -286,9 +286,7 @@ def corpus_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the survivorship manifest, and the per-source rate report all
     consume the same (node, cluster_id) relation."""
     pairs = corpus_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return dd.connected_components(
-        pairs, src="doc_a", dst="doc_b"
-    ).localCheckpoint(eager=False)
+    return dd.connected_components(pairs, src="doc_a", dst="doc_b")
 
 
 @query(
@@ -3750,8 +3748,9 @@ def embedding_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the expansion is a narrow positional explode (64 rows per
     vector, map-side); the codebook is a 256-row broadcast; distances
     partial-aggregate per (vec, subspace, centroid) before the only
-    wide exchange.  At serving scale the assigned codes join against
-    precomputed query-to-centroid tables — the classic ADC lookup.
+    wide exchange.  At serving scale the search keys score the codes
+    with :func:`_pq_search`'s fused Arrow scan: per partition, an ADC
+    table gather-sum per query, with no join against the codes.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     flat = _pq_flat(emb)

@@ -180,26 +180,6 @@ def test_connected_components_chain_needs_iterations(spark):
     assert len(jumped) == 10
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    # checkpoint_dir set → reliable checkpoint() lineage cuts (the real-
-    # cluster fault-tolerant path); same result as localCheckpoint
-    from gcp_de_data_pipeline_cc_spark.operators import dedup as dd
-
-    ckpt = str(tmp_path / "cc_ckpt")
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)] + [(100, 101)], ["src", "dst"]
-    )
-    got = {
-        r.node: r.cluster_id
-        for r in dd.connected_components(edges, checkpoint_dir=ckpt).collect()
-    }
-    want = {i: 0 for i in range(7)} | {100: 100, 101: 100}
-    assert got == want
-    import os
-
-    assert os.listdir(ckpt), "reliable checkpoint dir should contain RDD data"
-
-
 def test_ngram_jaccard_hash_join_mode_equivalent(spark):
     """join_on_hash=True (8-byte shuffle keys, the 100 TB profile) must
     produce the identical pair set and jaccard values as the string-join

@@ -8,9 +8,11 @@ gate into a composable suite; ``run_gates`` replaces the Airflow
 ``BigQueryCheckOperator`` + task-failure semantics with a plain exception
 in the driver program.
 
-Every gate is ONE aggregate action (a ``count()``), run when the gate is
-called — no row-level materialization, which is what makes the gates
-viable as a 100 TB pre-flight. ``run_gates`` takes the results and
+``non_empty`` reads a row count its caller already has (the pipeline
+observes it while writing the staging table), so it runs no Spark job.
+Every other gate is ONE aggregate action (a ``count()``), run when the
+gate is called — no row-level materialization, which is what makes the
+gates viable as a 100 TB pre-flight. ``run_gates`` takes the results and
 raises :class:`QualityGateError` if any gate failed.
 """
 
@@ -35,10 +37,9 @@ class QualityGateError(RuntimeError):
     reference DAG failing at the data_quality task group."""
 
 
-def non_empty(df: DataFrame, name: str) -> GateResult:
-    """The reference's literal gate: COUNT(*) > 0."""
-    n = df.count()
-    return GateResult(f"{name}_non_empty", n > 0, n)
+def non_empty(rows: int, name: str) -> GateResult:
+    """The reference's literal gate: COUNT(*) > 0, over a known count."""
+    return GateResult(f"{name}_non_empty", rows > 0, rows)
 
 
 def unique_key(df: DataFrame, cols: Sequence[str], name: str) -> GateResult:

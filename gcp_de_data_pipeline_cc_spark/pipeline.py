@@ -38,7 +38,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.operators import quality as q
@@ -51,12 +51,18 @@ from gcp_de_data_pipeline_cc_spark.sources.csv_ingest import (
     raw_to_staging,
     read_landing_csv,
 )
-from gcp_de_data_pipeline_cc_spark.sources.sink import read_table, write_table
+from gcp_de_data_pipeline_cc_spark.sources.sink import recover_swap, swap_in, write_table
 
 # The benchmark's traced run (perfbench/run.py, instrument_pipeline)
 # wraps write_table, wait_for_files, _archive and the quality gates by
 # replacing these module attributes, so the stages must call them as
-# module globals of this file and as q.<gate>.
+# module globals of this file and as q.<gate>. Its write_table wrapper
+# returns None, so the row count of a write is observed by the caller
+# (_write_counted), never returned by write_table.
+#
+# Each stage reads a table it wrote back with the schema of the frame
+# that wrote it: a parquet read that infers its schema runs a Spark job,
+# one given the schema runs none.
 
 _EMP_TRACKED = ["emp_name", "dept_id", "dept_name", "location", "salary", "hire_date"]
 
@@ -155,6 +161,16 @@ def _curated_path(warehouse_dir: str, spec: dict[str, Any] = EMPLOYEE_DEPARTMENT
     return os.path.join(warehouse_dir, "cur", curated_table(spec))
 
 
+def _write_counted(df: DataFrame, path: str) -> int:
+    """Write ``df`` to ``path`` and return the rows that entered the
+    writer. The count rides the write as an Observation (the result stage
+    merges each task's metrics once), so it costs no Spark job of its own;
+    an empty write observes 0."""
+    obs = Observation()
+    write_table(df.observe(obs, F.count(F.lit(1)).alias("n")), path)
+    return obs.get["n"]
+
+
 def to_raw(
     spark: SparkSession,
     spec: dict[str, Any],
@@ -171,9 +187,9 @@ def to_raw(
     for name, ent in spec["entities"].items():
         csv = os.path.join(landing_dir, f"{name}.csv")
         path = os.path.join(warehouse_dir, "raw", f"{name}_raw")
-        write_table(read_landing_csv(spark, csv, ent["columns"], load_date), path)
-        raw[name] = read_table(spark, path)
-        result.raw_counts[name] = raw[name].count()
+        df = read_landing_csv(spark, csv, ent["columns"], load_date)
+        result.raw_counts[name] = _write_counted(df, path)
+        raw[name] = spark.read.schema(df.schema).parquet(path)
     return raw
 
 
@@ -189,9 +205,8 @@ def to_staging(
     for name, ent in spec["entities"].items():
         df = raw_to_staging(raw[name], ent["casts"], ent["required"]).drop("ingest_date")
         path = os.path.join(warehouse_dir, "stg", f"{name}_stg")
-        write_table(df, path)
-        staged[name] = read_table(spark, path)
-        result.staging_counts[name] = staged[name].count()
+        result.staging_counts[name] = _write_counted(df, path)
+        staged[name] = spark.read.schema(df.schema).parquet(path)
     return staged
 
 
@@ -201,7 +216,7 @@ def check_gates(
     """Quality gates; raise (failing the run) on any violation."""
     gates: list[q.GateResult] = []
     for name, ent in spec["entities"].items():
-        gates.append(q.non_empty(staged[name], f"{name}_stg"))
+        gates.append(q.non_empty(result.staging_counts[name], f"{name}_stg"))
         gates.append(q.unique_key(staged[name], ent["unique"], f"{name}_stg"))
     for fact, col, dim, ref in spec["quality"]["foreign_keys"]:
         gates.append(q.referential_integrity(staged[fact], col, staged[dim], ref, f"{fact}_stg"))
@@ -230,30 +245,19 @@ def curate(
         .select(*[F.expr(expr).alias(alias) for alias, expr in cur["select"]])
     )
     cur_path = _curated_path(warehouse_dir, spec)
-    prev_path = f"{cur_path}.prev"
-    if os.path.exists(prev_path):  # an earlier run died inside the swap
-        if os.path.exists(cur_path):
-            shutil.rmtree(prev_path)
-        else:
-            shutil.move(prev_path, cur_path)
+    recover_swap(cur_path)  # an earlier run may have died inside the swap
     key, tracked = cur["scd2_key"], cur["scd2_tracked"]
+    # scd2_init's schema is the curated table's schema by construction
+    curated = scd2_init(snapshot, key, tracked, load_date)
     if os.path.exists(cur_path):
-        current = read_table(spark, cur_path)
+        current = spark.read.schema(curated.schema).parquet(cur_path)
         curated = scd2_apply(current, snapshot, key, tracked, load_date, close_missing=True)
-    else:
-        curated = scd2_init(snapshot, key, tracked, load_date)
-    # write-then-swap by rename: never overwrite the table still being
-    # read, never collect to the driver, and never leave a moment where
-    # neither the old nor the new table exists on disk
+    # write-then-swap: never overwrite the table still being read, and
+    # never collect to the driver
     new_path = f"{cur_path}.load-{load_date.isoformat()}"
-    write_table(curated, new_path)
-    if os.path.exists(cur_path):
-        shutil.move(cur_path, prev_path)
-    shutil.move(new_path, cur_path)
-    shutil.rmtree(prev_path, ignore_errors=True)
-    out = read_table(spark, cur_path)
-    result.curated_versions = out.count()
-    return out
+    result.curated_versions = _write_counted(curated, new_path)
+    swap_in(new_path, cur_path)
+    return spark.read.schema(curated.schema).parquet(cur_path)
 
 
 def run_pipeline(

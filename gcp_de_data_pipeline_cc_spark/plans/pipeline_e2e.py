@@ -29,9 +29,11 @@ same runner in tests.
 100 TB: each tier is a full parquet write/read (the reference's
 BigQuery-dataset handoff), so every stage restarts from columnar
 storage — the run survives any single-stage failure with tier-level
-retry; counts are Spark actions on the written tables (audit = what
-landed, not what was planned); the curation join broadcasts the dim
-side; SCD2 init is a narrow projection.  Nothing collects rows.
+retry; counts are observed during each tier's write (audit = the rows
+that entered the writer, not what was planned) and each tier is read
+back with its known schema, so neither costs a Spark job; the curation
+join broadcasts the dim side; SCD2 init is a narrow projection.
+Nothing collects rows.
 """
 
 from __future__ import annotations

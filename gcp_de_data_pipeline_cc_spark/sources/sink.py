@@ -11,6 +11,8 @@ downstream reads prune; writer tasks scale with upstream partitions.
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,3 +33,27 @@ def write_table(
 
 def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     return spark.read.format(fmt).load(path)
+
+
+def swap_in(new_path: str, path: str) -> None:
+    """Replace the table at ``path`` with the one written at ``new_path``
+    by rename: ``path`` → ``<path>.prev``, ``new_path`` → ``path``, then
+    drop ``.prev``. At every moment the old or the new table is on disk,
+    so a crash inside the swap loses neither (see :func:`recover_swap`)."""
+    prev = f"{path}.prev"
+    if os.path.exists(path):
+        shutil.move(path, prev)
+    shutil.move(new_path, path)
+    shutil.rmtree(prev, ignore_errors=True)
+
+
+def recover_swap(path: str) -> None:
+    """Undo what a :func:`swap_in` that died midway left behind: a
+    stranded ``<path>.prev`` moves back into place if ``path`` is missing,
+    and is dropped otherwise."""
+    prev = f"{path}.prev"
+    if os.path.exists(prev):
+        if os.path.exists(path):
+            shutil.rmtree(prev)
+        else:
+            shutil.move(prev, path)

@@ -16,14 +16,18 @@ itself (the dimension table IS the state).
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from gcp_de_data_pipeline_cc_spark.operators.merge import scd1_upsert
-from gcp_de_data_pipeline_cc_spark.sources.sink import read_table, write_table
+from gcp_de_data_pipeline_cc_spark.sources.sink import (
+    read_table,
+    recover_swap,
+    swap_in,
+    write_table,
+)
 
 
 def streaming_scd1_sink(
@@ -42,6 +46,7 @@ def streaming_scd1_sink(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates(list(key_cols))
+        recover_swap(target_path)  # an earlier batch may have died inside the swap
         if os.path.exists(target_path):
             target = read_table(spark, target_path)
             merged = scd1_upsert(target, batch, key_cols)
@@ -49,9 +54,7 @@ def streaming_scd1_sink(
             merged = batch
         tmp = f"{target_path}.batch-{batch_id}"
         write_table(merged, tmp)
-        if os.path.exists(target_path):
-            shutil.rmtree(target_path)
-        shutil.move(tmp, target_path)
+        swap_in(tmp, target_path)
 
     return (
         updates_stream.writeStream.foreachBatch(apply_batch)

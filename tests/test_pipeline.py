@@ -92,6 +92,21 @@ def test_qc_gate_failure_stops_before_curation(spark, tmp_path):
     assert not os.path.exists(pl._curated_path(wh))
 
 
+def test_empty_staging_fails_the_non_empty_gate(spark, tmp_path):
+    # every emp_id fails the bigint cast, so staging is written empty and
+    # the row count observed during that write must read 0, not block
+    bad = (
+        "emp_id,emp_name,dept_id,salary,hire_date\n"
+        "x1,alice,10,100.0,2020-01-01\n"
+        "x2,bob,10,200.0,2021-06-15\n"
+    )
+    landing = _land(tmp_path, bad)
+    wh = str(tmp_path / "warehouse")
+    with pytest.raises(QualityGateError, match=r"Employee_stg_non_empty \(observed=0\)"):
+        pl.run_pipeline(spark, landing, wh, D1)
+    assert not os.path.exists(pl._curated_path(wh))
+
+
 def test_rerun_same_day_is_idempotent(spark, tmp_path):
     wh = str(tmp_path / "warehouse")
     landing = _land(tmp_path, EMP_D1)
@@ -132,7 +147,7 @@ def test_failed_swap_keeps_scd2_history(spark, tmp_path, monkeypatch):
 
 
 #: Spark jobs of one run_pipeline load on this fixture: (init, apply)
-_PIPELINE_JOBS = (34, 38)
+_PIPELINE_JOBS = (15, 18)
 
 
 def test_pipeline_job_budget(spark, tmp_path):

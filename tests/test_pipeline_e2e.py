@@ -110,7 +110,7 @@ def test_failed_gate_aborts_the_run(spark, tmp_path):
 
 
 #: (build, exec) Spark jobs of end_to_end_pipeline at the test scale
-_E2E_JOBS = (38, 3)
+_E2E_JOBS = (19, 3)
 
 
 def test_end_to_end_pipeline_job_budget(spark):

@@ -23,13 +23,13 @@ def depts(spark):
 
 
 def test_non_empty_passes(staged):
-    r = q.non_empty(staged, "staged")
+    r = q.non_empty(staged.count(), "staged")
     assert r.passed and r.observed == 3
 
 
 def test_non_empty_fails_on_empty(spark, staged):
     empty = staged.limit(0)
-    r = q.non_empty(empty, "staged")
+    r = q.non_empty(empty.count(), "staged")
     assert not r.passed
     with pytest.raises(q.QualityGateError, match="staged_non_empty"):
         q.run_gates([r])
@@ -67,5 +67,5 @@ def test_no_nulls_empty_cols_trivially_passes(staged):
 
 
 def test_run_gates_passes_through(staged):
-    results = q.run_gates([q.non_empty(staged, "staged")])
+    results = q.run_gates([q.non_empty(staged.count(), "staged")])
     assert len(results) == 1

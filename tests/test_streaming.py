@@ -5,9 +5,12 @@ streaming semantics)."""
 
 from __future__ import annotations
 
+import os
 import shutil
+import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table, normalize_event_ts
@@ -16,6 +19,7 @@ from gcp_de_data_pipeline_cc_spark.streaming.file_ingest import (
     ingest_available_now,
     landing_stream,
 )
+from gcp_de_data_pipeline_cc_spark.streaming.foreach_sink import streaming_scd1_sink
 from gcp_de_data_pipeline_cc_spark.streaming.windows import (
     streaming_dedup,
     tumbling_counts,
@@ -145,14 +149,16 @@ def test_tumbling_stream_equals_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_foreachbatch_scd1_sink_maintains_dimension(spark, tmp_path):
-    """Two micro-batches of employee updates upserted via foreachBatch
-    must leave the dimension equal to applying the loads sequentially."""
-    import os
-    import time
+#: the dimension after the two SCD1 batches of _land_scd1_drops
+_SCD1_DIMENSION = {
+    "1": ("20", "150.0"),  # updated by batch 2 (raw tier is all-string)
+    "2": ("10", "200.0"),  # untouched from batch 1
+    "3": ("20", "300.0"),  # inserted by batch 2
+}
 
-    from gcp_de_data_pipeline_cc_spark.streaming.foreach_sink import streaming_scd1_sink
 
+def _land_scd1_drops(tmp_path):
+    """Two employee drops with distinct mtimes: one micro-batch each."""
     landing = tmp_path / "landing"
     landing.mkdir()
     (landing / "a_day1.csv").write_text(
@@ -164,19 +170,53 @@ def test_foreachbatch_scd1_sink_maintains_dimension(spark, tmp_path):
     )
     os.utime(landing / "b_day2.csv")
 
-    stream = landing_stream(spark, str(landing), EMPLOYEE_COLUMNS,
+
+def _start_scd1_sink(spark, tmp_path):
+    """Start (or restart from its checkpoint) the foreachBatch SCD1 sink
+    over the landed drops; returns (query, dimension path)."""
+    stream = landing_stream(spark, str(tmp_path / "landing"), EMPLOYEE_COLUMNS,
                             max_files_per_trigger=1).drop("ingest_ts")
     target = str(tmp_path / "dim" / "employee")
-    q = streaming_scd1_sink(stream, target, ["emp_id"], str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    return streaming_scd1_sink(stream, target, ["emp_id"], str(tmp_path / "ckpt")), target
 
-    rows = {r.emp_id: (r.dept_id, r.salary)
-            for r in spark.read.parquet(target).collect()}
-    assert rows == {
-        "1": ("20", "150.0"),  # updated by batch 2 (raw tier is all-string)
-        "2": ("10", "200.0"),  # untouched from batch 1
-        "3": ("20", "300.0"),  # inserted by batch 2
-    }
+
+def _dimension(spark, target):
+    return {r.emp_id: (r.dept_id, r.salary) for r in spark.read.parquet(target).collect()}
+
+
+def test_foreachbatch_scd1_sink_maintains_dimension(spark, tmp_path):
+    """Two micro-batches of employee updates upserted via foreachBatch
+    must leave the dimension equal to applying the loads sequentially."""
+    _land_scd1_drops(tmp_path)
+    q, target = _start_scd1_sink(spark, tmp_path)
+    q.awaitTermination(120)
+    assert _dimension(spark, target) == _SCD1_DIMENSION
+
+
+def test_foreachbatch_scd1_failed_swap_keeps_dimension(spark, tmp_path, monkeypatch):
+    """A batch that dies between retiring the old dimension and moving
+    the new one in must not cost the dimension: the restarted query
+    restores it and re-applies the batch on top of it instead of
+    re-seeding the dimension from that one batch."""
+    move = shutil.move
+    failed = []
+
+    def move_failing_once(src, dst, *a, **k):
+        if str(src).endswith(".batch-1") and not failed:
+            failed.append(src)
+            raise OSError("injected failure moving the new dimension")
+        return move(src, dst, *a, **k)
+
+    monkeypatch.setattr(shutil, "move", move_failing_once)
+    _land_scd1_drops(tmp_path)
+    q, target = _start_scd1_sink(spark, tmp_path)
+    with pytest.raises(StreamingQueryException, match="injected"):
+        q.awaitTermination(120)
+    assert failed
+
+    q, target = _start_scd1_sink(spark, tmp_path)  # restart from the checkpoint
+    q.awaitTermination(120)
+    assert _dimension(spark, target) == _SCD1_DIMENSION
 
 
 def test_stream_stream_interval_join_equals_batch(spark, tmp_path):

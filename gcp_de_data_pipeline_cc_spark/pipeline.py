@@ -4,8 +4,12 @@ The reference orchestrates
 ``wait_files >> gcs_to_raw >> raw_to_staging >> data_quality >> run_dbt
 >> archive`` across Airflow + Dataflow + BigQuery + dbt
 (reference dags/pipeline_orchestration_dag.py:212). Here the same spine
-is plain Python sequencing over DataFrame transforms — one process, one
-IR; Spark's DAGScheduler handles all intra-query parallelism.
+is one driver program over DataFrame transforms. The stages run in
+order; only the ``>>`` edges are barriers. Within a stage the entities
+fan out like the reference's task groups (Employee and Department side by
+side): each entity's write or gate is a separate Spark job, submitted
+from its own driver thread, and Spark runs jobs from separate threads at
+the same time (:func:`_fan_out`).
 
 Every stage takes an entity *spec*: the ``entities`` / ``quality`` /
 ``curation`` parts of ``configs/pipeline_e2e.json``.
@@ -35,9 +39,13 @@ import datetime as dt
 import os
 import shutil
 import time
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,7 +66,10 @@ from gcp_de_data_pipeline_cc_spark.sources.sink import recover_swap, swap_in, wr
 # replacing these module attributes, so the stages must call them as
 # module globals of this file and as q.<gate>. Its write_table wrapper
 # returns None, so the row count of a write is observed by the caller
-# (_write_counted), never returned by write_table.
+# (_write_counted), never returned by write_table. A stage that fans out
+# (_fan_out) looks these globals up each time it runs, never once at
+# import, and makes the call itself inside the worker thread, so each
+# wrapper's span times its own thread's job.
 #
 # Each stage reads a table it wrote back with the schema of the frame
 # that wrote it: a parquet read that infers its schema runs a Spark job,
@@ -171,6 +182,21 @@ def _write_counted(df: DataFrame, path: str) -> int:
     return obs.get["n"]
 
 
+def _fan_out(spark: SparkSession, fn: Callable[[Any], Any], items: Iterable[Any]) -> list[Any]:
+    """Run ``fn`` over ``items``, one driver thread each, and return the
+    results in item order. Each thread inherits the caller's local
+    properties (job group) and tags. Like ``Executor.map``, the first
+    failure in item order is re-raised, but only once every thread has
+    finished, so no write is left running behind the error."""
+    items = list(items)
+    # one wrapper per item: each thread gets its own copy of the local
+    # properties, which Spark mutates per query (the SQL execution id)
+    targets = [inheritable_thread_target(spark)(fn) for _ in items]
+    with ThreadPoolExecutor(max_workers=max(len(items), 1)) as pool:
+        futures = [pool.submit(t, item) for t, item in zip(targets, items)]
+    return [f.result() for f in futures]
+
+
 def to_raw(
     spark: SparkSession,
     spec: dict[str, Any],
@@ -183,13 +209,18 @@ def to_raw(
 ) -> dict[str, DataFrame]:
     """Sensor, then landing CSV → all-string raw parquet + lineage."""
     wait_for_files(landing_dir, landing_files(spec), sensor_timeout_s, poke_interval_s)
-    raw: dict[str, DataFrame] = {}
-    for name, ent in spec["entities"].items():
+
+    def land(entity: tuple[str, dict[str, Any]]) -> tuple[int, DataFrame]:
+        name, ent = entity
         csv = os.path.join(landing_dir, f"{name}.csv")
         path = os.path.join(warehouse_dir, "raw", f"{name}_raw")
         df = read_landing_csv(spark, csv, ent["columns"], load_date)
-        result.raw_counts[name] = _write_counted(df, path)
-        raw[name] = spark.read.schema(df.schema).parquet(path)
+        return _write_counted(df, path), spark.read.schema(df.schema).parquet(path)
+
+    raw: dict[str, DataFrame] = {}
+    for name, (n, df) in zip(spec["entities"], _fan_out(spark, land, spec["entities"].items())):
+        result.raw_counts[name] = n
+        raw[name] = df
     return raw
 
 
@@ -201,26 +232,35 @@ def to_staging(
     result: PipelineResult,
 ) -> dict[str, DataFrame]:
     """Raw → typed + cleansed staging parquet."""
-    staged: dict[str, DataFrame] = {}
-    for name, ent in spec["entities"].items():
+
+    def stage(entity: tuple[str, dict[str, Any]]) -> tuple[int, DataFrame]:
+        name, ent = entity
         df = raw_to_staging(raw[name], ent["casts"], ent["required"]).drop("ingest_date")
         path = os.path.join(warehouse_dir, "stg", f"{name}_stg")
-        result.staging_counts[name] = _write_counted(df, path)
-        staged[name] = spark.read.schema(df.schema).parquet(path)
+        return _write_counted(df, path), spark.read.schema(df.schema).parquet(path)
+
+    staged: dict[str, DataFrame] = {}
+    for name, (n, df) in zip(spec["entities"], _fan_out(spark, stage, spec["entities"].items())):
+        result.staging_counts[name] = n
+        staged[name] = df
     return staged
 
 
 def check_gates(
     spec: dict[str, Any], staged: dict[str, DataFrame], result: PipelineResult
 ) -> None:
-    """Quality gates; raise (failing the run) on any violation."""
-    gates: list[q.GateResult] = []
+    """Quality gates, run side by side; raise (failing the run) on any
+    violation."""
+    gates: list[Callable[[], q.GateResult]] = []
     for name, ent in spec["entities"].items():
-        gates.append(q.non_empty(result.staging_counts[name], f"{name}_stg"))
-        gates.append(q.unique_key(staged[name], ent["unique"], f"{name}_stg"))
+        gates.append(partial(q.non_empty, result.staging_counts[name], f"{name}_stg"))
+        gates.append(partial(q.unique_key, staged[name], ent["unique"], f"{name}_stg"))
     for fact, col, dim, ref in spec["quality"]["foreign_keys"]:
-        gates.append(q.referential_integrity(staged[fact], col, staged[dim], ref, f"{fact}_stg"))
-    result.gates = q.run_gates(gates)
+        gates.append(
+            partial(q.referential_integrity, staged[fact], col, staged[dim], ref, f"{fact}_stg")
+        )
+    spark = next(iter(staged.values())).sparkSession
+    result.gates = q.run_gates(_fan_out(spark, lambda gate: gate(), gates))
 
 
 def curate(

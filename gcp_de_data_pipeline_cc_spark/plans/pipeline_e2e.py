@@ -29,7 +29,10 @@ same runner in tests.
 100 TB: each tier is a full parquet write/read (the reference's
 BigQuery-dataset handoff), so every stage restarts from columnar
 storage — the run survives any single-stage failure with tier-level
-retry; counts are observed during each tier's write (audit = the rows
+retry; a stage's independent entity jobs are submitted together and
+share the cluster under the FIFO scheduler, so a small entity's job
+runs on the cores a large one leaves free instead of waiting for it;
+counts are observed during each tier's write (audit = the rows
 that entered the writer, not what was planned) and each tier is read
 back with its known schema, so neither costs a Spark job; the curation
 join broadcasts the dim side; SCD2 init is a narrow projection.
@@ -71,14 +74,19 @@ def _stage_land(
 ) -> tuple[str, str]:
     """The keys' fixture step: land each entity's source table as a
     header CSV under a fresh per-key scratch dir, which is also the
-    run's warehouse root; returns (warehouse, landing)."""
+    run's warehouse root; returns (warehouse, landing). The entities
+    land side by side, like the stages' own entity writes."""
     work = scratch_dir(config["pipeline_id"])
     landing = os.path.join(work, config["landing"]["prefix"])
-    for name, ent in config["entities"].items():
+
+    def land(entity: tuple[str, dict[str, Any]]) -> None:
+        name, ent = entity
         src = load_table(spark, sf_dir, ent["source"]).select(*ent["columns"])
         src.write.mode("overwrite").option("header", "true").csv(
             os.path.join(landing, f"{name}.csv")
         )
+
+    pl._fan_out(spark, land, config["entities"].items())
     return work, landing
 
 

@@ -22,12 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from gcp_de_data_pipeline_cc_spark.operators.merge import scd1_upsert
-from gcp_de_data_pipeline_cc_spark.sources.sink import (
-    read_table,
-    recover_swap,
-    swap_in,
-    write_table,
-)
+from gcp_de_data_pipeline_cc_spark.sources.sink import recover_swap, swap_in, write_table
 
 
 def streaming_scd1_sink(
@@ -48,7 +43,9 @@ def streaming_scd1_sink(
         batch = batch_df.dropDuplicates(list(key_cols))
         recover_swap(target_path)  # an earlier batch may have died inside the swap
         if os.path.exists(target_path):
-            target = read_table(spark, target_path)
+            # the dimension was written from a batch-shaped frame, so read
+            # it with the batch's schema: inferring it would cost a job
+            target = spark.read.schema(batch.schema).parquet(target_path)
             merged = scd1_upsert(target, batch, key_cols)
         else:
             merged = batch

@@ -1,12 +1,14 @@
 """End-to-end pipeline test — two consecutive manual-trigger runs of the
 full reference spine (sensor → raw → staging → QC → SCD2 curation →
-archive), plus the sensor-timeout and QC-failure paths."""
+archive), plus the sensor-timeout and QC-failure paths, and the fan-out
+of each stage's entities."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
 import shutil
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -144,6 +146,47 @@ def test_failed_swap_keeps_scd2_history(spark, tmp_path, monkeypatch):
     assert r.curated_versions == 5
     cur = read_table(spark, pl._curated_path(wh))
     assert cur.filter(F.col("effective_from") == D1).count() == 3
+
+
+def test_entity_writes_of_a_stage_run_together(spark, tmp_path, monkeypatch):
+    """Each raw write waits at a two-party barrier before it writes, so
+    the run completes only if both entities' raw writes are in flight at
+    once; a stage that wrote them one after another breaks the barrier."""
+    barrier = threading.Barrier(2, timeout=20)
+    write = pl.write_table
+
+    def write_after_barrier(df, path, *a, **k):
+        if f"{os.sep}raw{os.sep}" in path:
+            barrier.wait()
+        return write(df, path, *a, **k)
+
+    monkeypatch.setattr(pl, "write_table", write_after_barrier)
+    r = pl.run_pipeline(spark, _land(tmp_path, EMP_D1), str(tmp_path / "warehouse"), D1)
+    assert r.raw_counts == {"Employee": 3, "Department": 2}
+    assert r.curated_versions == 3
+
+
+def test_failed_entity_write_fails_the_run_after_its_sibling(spark, tmp_path, monkeypatch):
+    """One entity's failed write fails the stage, but only once the other
+    entity's write has finished: nothing is left running, nothing is
+    curated or archived, and no thread outlives the run."""
+    write = pl.write_table
+
+    def write_failing_department(df, path, *a, **k):
+        if path.endswith("Department_raw"):
+            raise OSError("injected Department_raw write failure")
+        return write(df, path, *a, **k)
+
+    monkeypatch.setattr(pl, "write_table", write_failing_department)
+    landing = _land(tmp_path, EMP_D1)
+    wh = str(tmp_path / "warehouse")
+    threads = threading.active_count()
+    with pytest.raises(OSError, match="injected Department_raw"):
+        pl.run_pipeline(spark, landing, wh, D1)
+    assert os.path.exists(os.path.join(wh, "raw", "Employee_raw", "_SUCCESS"))
+    assert not os.path.exists(pl._curated_path(wh))
+    assert sorted(os.listdir(landing)) == ["Department.csv", "Employee.csv"]
+    assert threading.active_count() == threads
 
 
 #: Spark jobs of one run_pipeline load on this fixture: (init, apply)

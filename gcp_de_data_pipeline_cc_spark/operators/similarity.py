@@ -168,36 +168,6 @@ def lsh_signature(vec, planes: list[list[float]]):
     return sig
 
 
-def with_lsh_code(
-    df: DataFrame,
-    bits: int,
-    dim: int,
-    vec_col: str = "embedding",
-    out_col: str = "bucket",
-    seed: int = 42,
-) -> DataFrame:
-    """Append one ``bits``-wide random-hyperplane code column.
-
-    Same Arrow-batched numpy matmul as :func:`_lsh_buckets` (single
-    table): one GEMM per batch instead of a ``bits × dim``-literal
-    expression tree, whose driver-side analysis cost dominates at any
-    scale. Bit j of the code is the sign of <v, r_j> (LSB-first, matching
-    :func:`lsh_signature`)."""
-    from pyspark.sql.types import LongType
-
-    planes = np.asarray(_hyperplanes(dim, bits, seed))  # (bits, dim)
-    weights = 2 ** np.arange(bits, dtype=np.int64)  # LSB-first
-
-    @F.pandas_udf(LongType())
-    def _code(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=np.int64)
-        v = np.vstack(vecs.to_numpy()).astype(np.float64)
-        return pd.Series(((v @ planes.T) > 0) @ weights)
-
-    return df.withColumn(out_col, _code(F.col(vec_col)))
-
-
 def _lsh_buckets(
     df: DataFrame,
     out_id: str,

@@ -44,16 +44,6 @@ def shingles_col(toks: Column, k: int = 3) -> Column:
     )
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document token statistics (narrow; no shuffle)."""
-    toks = tokens_col(F.col(text_col))
-    return docs.withColumn("tokens", toks).select(
-        "*",
-        F.size("tokens").alias("n_tokens"),
-        F.size(F.array_distinct("tokens")).alias("n_distinct_tokens"),
-    )
-
-
 def quality_columns(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring signals: type-token ratio, stopword ratio, average
     token length, and a composite score — the standard cheap pre-filters

@@ -362,7 +362,7 @@ def hypothesis_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     attach as WINDOW aggregates over that r×c table — ONE fact pass.
     The earlier join formulation gave each marginal its own consumer
     subtree and re-ran the orders scan seven times (the
-    tools/plan_report.py census finding; Spark reuses exchanges, not
+    PLANS.md census finding; Spark reuses exchanges, not
     shared subtrees — the market_basket lesson applied here)."""
     from pyspark.sql import Window
 

@@ -12,8 +12,10 @@ now a FAST tier that finishes in ~13-15 min:
   r10 full-suite timing) are skipped;
 - the two registry-wide parametrized sweeps (test_differential,
   test_schema_parity) run a deterministic 1-in-8 key sample
-  (crc32(key) % 8 == 0) — full cross-engine coverage stays with the
-  heavy tier AND with the driver's own independent oracle gate;
+  (crc32(key) % 8 == 0) plus every key whose plan changed since its
+  last official check (``__spark_entry__.plan_changed_keys``, the same
+  set ``queries()`` puts first) — full cross-engine coverage stays with
+  the heavy tier AND with the driver's own independent oracle gate;
 - the hypothesis property suites (test_scd2_properties) are heavy-tier.
 
 The FULL suite is opt-in: `pytest tests/ --runslow` or
@@ -76,9 +78,12 @@ def pytest_collection_modifyitems(config, items):
         "run with --runslow or SPARK_GRAFT_FULL_TESTS=1"
     )
     skip_sample = pytest.mark.skip(
-        reason="registry sweep sampled 1-in-8 in the fast tier; "
-        "full sweep with --runslow or SPARK_GRAFT_FULL_TESTS=1"
+        reason="registry sweep sampled 1-in-8 (plus changed plans) in the "
+        "fast tier; full sweep with --runslow or SPARK_GRAFT_FULL_TESTS=1"
     )
+    from __spark_entry__ import plan_changed_keys
+
+    changed = plan_changed_keys()
     for item in items:
         fname = os.path.basename(str(item.fspath))
         if item.nodeid in manifest or fname in _SLOW_FILES:
@@ -86,7 +91,8 @@ def pytest_collection_modifyitems(config, items):
             continue
         if fname in _SAMPLED_SWEEP_FILES:
             m = re.search(r"\[(.+)\]$", item.name)
-            if m and zlib.crc32(m.group(1).encode()) % 8 != 0:
+            key = m.group(1) if m else None
+            if key and key not in changed and zlib.crc32(key.encode()) % 8:
                 item.add_marker(skip_sample)
 
 

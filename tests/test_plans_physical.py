@@ -598,52 +598,21 @@ _BNLJ_REVIEWED = frozenset({
 })
 
 
-def test_no_cartesian_anywhere_in_registry(spark):
-    """Registry-wide physical audit: NO query may plan a CartesianProduct,
-    and nested-loop joins must be broadcast (bounded small side). A
-    cartesian sneaking into any of the 200+ plans is the single worst
-    100 TB failure mode — this pins the invariant for every current and
-    future registry entry in one sweep. Streaming/write-side queries are
-    exercised via their batch plan where one exists; exclusions are
-    queries whose plan cannot be built without side effects.
+def test_manifest_has_no_cartesian_and_only_reviewed_bnlj():
+    """Registry-wide physical audit over the committed plan manifest
+    (tools/plan_manifest.py): NO query may plan a CartesianProduct, and
+    only reviewed queries may plan a BroadcastNestedLoopJoin.  A
+    cartesian sneaking into any plan is the single worst 100 TB failure
+    mode.  That every plan still builds, and that the committed counts
+    are the current ones, is tests/test_plan_manifest.py's heavy-tier
+    freshness check."""
+    from tools.plan_manifest import load
 
-    fn_levenshtein is the one allowed BroadcastNestedLoopJoin consumer
-    beyond the band/calendar joins — its docstring documents the bounded
-    blocking requirement.
-    """
-    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
-
-    # plans that run streams / write tables as a side effect of building
-    # the DataFrame: plan text still obtainable, but building them is
-    # slow — they have dedicated plan tests instead
-    skip = {
-        "stream_ingest_e2e", "stream_watermark_dedup",
-        "stream_custom_stateful", "stream_tumbling", "stream_sliding",
-        "stream_topk", "stream_stream_join", "stream_static_enrich",
-        "stream_foreachbatch_upsert",
-        "join_bucketed", "compact_small_files", "zorder_layout",
-        "time_travel_read", "log_compact_retention", "file_stats_manifest",
-        "partition_overwrite", "json_corrupt_quarantine", "csv_roundtrip",
-        "sink_roundtrip", "json_roundtrip", "orc_roundtrip",
-        "xml_roundtrip", "text_roundtrip", "schema_evolution_read",
-        "custom_datasource_scan", "join_partition_pruned", "scd2_merge",
-        "scd1_upsert", "scd3_merge", "join_bloom_pruned", "agg_incremental",
-        "corpus_curation", "training_prep", "dedup_clusters",
-        "incremental_watermark_ingest",
-        "graph_pagerank", "sessionize_path",
-    }
     offenders = {}
-    for name in sorted(REGISTRY):
-        if name in skip:
-            continue
-        try:
-            plan = plan_of(spark, name)
-        except Exception as ex:  # plan must at least build
-            offenders[name] = f"plan build failed: {ex}"[:120]
-            continue
-        if "CartesianProduct" in plan:
+    for name, entry in load().items():
+        if entry["cartesian"]:
             offenders[name] = "CartesianProduct"
-        elif "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_REVIEWED:
+        elif entry["bnlj"] and name not in _BNLJ_REVIEWED:
             offenders[name] = "non-allowlisted BroadcastNestedLoopJoin"
     assert not offenders, offenders
 
@@ -770,17 +739,20 @@ def _sp_audit() -> dict:
 
 
 def test_sp_audit_covers_current_registry():
-    """The committed audit must have run over exactly today's registry
-    (minus the shared side-effect SKIP set) — adding a key without
-    re-running tools/sp_audit.py fails here first."""
-    from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
-    from tools.plan_report import SKIP
+    """The committed audit must have run over exactly today's plans: it
+    records each audited key's plan fingerprint, which must equal the
+    committed plan manifest's (itself checked against the registry by
+    tests/test_entry_ordering.py).  Adding a key, or changing a plan,
+    without re-running tools/sp_audit.py fails here first."""
+    from tools.plan_manifest import load
 
-    audit = _sp_audit()
-    expected = sorted(n for n in REGISTRY if n not in SKIP)
-    assert audit.get("audited_keys") == expected, (
-        "sp_audit.json is stale — rerun tools/sp_audit.py"
+    manifest_fps = {k: e["fp"] for k, e in load().items()}
+    audit_fps = _sp_audit()["fps"]
+    stale = sorted(
+        k for k in manifest_fps.keys() | audit_fps.keys()
+        if manifest_fps.get(k) != audit_fps.get(k)
     )
+    assert not stale, f"sp_audit.json is stale for {stale} — rerun tools/sp_audit.py"
 
 
 def test_sp_single_partition_exchanges_all_bounded():

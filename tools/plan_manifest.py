@@ -1,0 +1,296 @@
+"""The one plan manifest: capture, fingerprint and count every registry
+key's plans → plan_manifest.json + PLANS.md.
+
+For every registry key outside ``SKIP`` the manifest holds one line:
+
+- ``fp``: the first 16 hex digits of the sha256 of the key's normalised
+  *analyzed* logical plans: the top-level plan, then every plan a
+  ``localCheckpoint`` hid while the key was built, in creation order.
+  Analyzed plans, not physical ones: ``RewriteDistinctAggregates``
+  orders its ``Expand`` projections by expression hash, so the formatted
+  physical plan of the same code can differ between two JVMs.
+  Normalising strips the counters the analyzer hands out (exprIds,
+  lambda-variable suffixes, CTE and UnionLoop ids); the analyzed text
+  holds no file path and no RDD id.
+- the physical census: the ``_METRICS`` counts on the top-level
+  formatted plan (no plan a checkpoint hides is counted).
+- ``since``: the first official verification round that could have
+  checked this plan.  A regenerated entry keeps the committed ``since``
+  while its fp and counts are unchanged; otherwise it gets the latest
+  ``CORRECTNESS_rNN.json`` round + 1.  ``__spark_entry__.queries()``
+  puts a key whose ``since`` is past its last official check first in
+  line for the driver's sample.
+
+Every key is built from cold session caches (``catalog.clear()``) at
+``SF_DIR`` (the sf0.001 warehouse ``entry()`` smoke-runs on) in one
+fixed session shape (``session()``), so the manifest depends neither on
+key order nor on the host's core count.
+
+Blind spots.  A fingerprint does not see:
+
+- Python UDF bodies and closures: ``sim_topk_pq`` and
+  ``sim_topk_pq_rerank`` share one fp because they differ only in the
+  closure's ``pool``/``rerank``;
+- side effects while the plan is built: the pipeline keys' tier writes
+  have changed while their plans did not.
+
+So an algorithm change behind an unchanged fp still needs a by-hand
+check at sf0.1.
+
+Usage:
+    python tools/plan_manifest.py            # rewrite plan_manifest.json + PLANS.md
+    python tools/plan_manifest.py --check    # recompute, write nothing; exit 1 on drift
+    python tools/plan_manifest.py <key>...   # print those keys' plans, write nothing
+"""
+
+from __future__ import annotations
+
+import glob
+import hashlib
+import json
+import os
+import re
+import sys
+from collections import Counter
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from pyspark.sql.classic.dataframe import DataFrame  # noqa: E402
+
+from __spark_entry__ import SMOKE_SF_DIR as SF_DIR  # noqa: E402
+from gcp_de_data_pipeline_cc_spark import catalog  # noqa: E402
+from gcp_de_data_pipeline_cc_spark.plans import REGISTRY  # noqa: E402
+from gcp_de_data_pipeline_cc_spark.session import build_session  # noqa: E402
+
+MANIFEST = os.path.join(REPO, "plan_manifest.json")
+
+#: queries whose plan cannot be built without side effects (streams,
+#: table writes); they have dedicated plan tests instead
+SKIP = frozenset({
+    "incremental_watermark_ingest",
+    "stream_ingest_e2e", "stream_watermark_dedup", "stream_custom_stateful",
+    "stream_tumbling", "stream_sliding", "stream_topk", "stream_stream_join",
+    "stream_static_enrich", "stream_foreachbatch_upsert",
+    "join_bucketed", "compact_small_files", "zorder_layout",
+    "time_travel_read", "log_compact_retention", "file_stats_manifest",
+    "partition_overwrite", "json_corrupt_quarantine", "csv_roundtrip",
+    "sink_roundtrip", "json_roundtrip", "orc_roundtrip", "xml_roundtrip",
+    "text_roundtrip", "schema_evolution_read", "custom_datasource_scan",
+    "join_partition_pruned", "scd2_merge", "scd1_upsert", "scd3_merge",
+    "join_bloom_pruned", "agg_incremental", "corpus_curation",
+    "training_prep", "dedup_clusters", "graph_pagerank", "sessionize_path",
+})
+
+#: counted on the "(N) NodeName" detail lines of the formatted explain
+#: (tree lines would double-count every node); exchange partitioning
+#: lives on the Arguments: line under the Exchange detail node
+_METRICS = {
+    "scans": r"\(\d+\) Scan parquet",
+    "exchanges": r"Arguments: hashpartitioning",
+    "single_part": r"Arguments: SinglePartition",
+    "broadcasts": r"\(\d+\) BroadcastExchange",
+    "bhj": r"\(\d+\) BroadcastHashJoin",
+    "smj": r"\(\d+\) SortMergeJoin",
+    "shj": r"\(\d+\) ShuffledHashJoin",
+    "bnlj": r"\(\d+\) BroadcastNestedLoopJoin",
+    "cartesian": r"\(\d+\) CartesianProduct",
+    "windows": r"\(\d+\) Window\b",
+    "group_limit": r"\(\d+\) WindowGroupLimit",
+    "top_k": r"\(\d+\) TakeOrderedAndProject",
+    "pushed": r"PushedFilters: \[[^\]]",
+    "python": r"EvalPython",
+}
+
+#: counters the analyzer hands out; they differ between runs and orders
+_COUNTERS = (
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1"),
+    (re.compile(r"(CTERelation(?:Def|Ref)) \d+"), r"\1"),
+    (re.compile(r"(UnionLoop(?:Ref)?) \d+"), r"\1"),
+)
+
+
+def session():
+    return build_session(
+        app_name="plan-manifest",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.enabled": "false"},
+    )
+
+
+def analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
+
+
+def formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted"  # noqa: SLF001
+    )
+
+
+def capture(spark, key: str, explain=analyzed):
+    """Build ``key`` at ``SF_DIR`` from cold session caches.  Returns the
+    frame and ``explain`` of its top-level plan followed by ``explain``
+    of every frame a ``localCheckpoint`` hid, taken as each checkpoint is
+    called (in creation order)."""
+    hidden: list[str] = []
+    original = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        hidden.append(explain(self))
+        return original(self, *args, **kwargs)
+
+    catalog.clear()
+    DataFrame.localCheckpoint = recording
+    try:
+        df = REGISTRY[key].spark(spark, SF_DIR)
+    finally:
+        DataFrame.localCheckpoint = original
+    return df, [explain(df), *hidden]
+
+
+def fingerprint(plans: list[str]) -> str:
+    text = "\n\n".join(plans)
+    for pattern, repl in _COUNTERS:
+        text = pattern.sub(repl, text)
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
+def census(df) -> dict[str, int]:
+    plan = formatted(df)
+    return {k: len(re.findall(pat, plan)) for k, pat in _METRICS.items()}
+
+
+def load() -> dict[str, dict]:
+    try:
+        with open(MANIFEST) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {}
+
+
+def _latest_round() -> int:
+    rounds = [
+        int(m.group(1))
+        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
+        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
+    ]
+    return max(rounds, default=0)
+
+
+def build(committed: dict[str, dict]) -> tuple[dict[str, dict], dict[str, str]]:
+    """Recompute every entry; returns (entries, {key: build error})."""
+    spark = session()
+    next_round = _latest_round() + 1
+    entries: dict[str, dict] = {}
+    failed: dict[str, str] = {}
+    for key in sorted(REGISTRY):
+        if key in SKIP:
+            continue
+        try:
+            df, plans = capture(spark, key)
+            entry = {"fp": fingerprint(plans), "since": next_round, **census(df)}
+        except Exception as ex:  # noqa: BLE001 — report every key, then fail
+            failed[key] = f"{type(ex).__name__}: {ex}"[:200]
+            continue
+        old = committed.get(key)
+        if old is not None and {**old, "since": 0} == {**entry, "since": 0}:
+            entry["since"] = old["since"]
+        entries[key] = entry
+    spark.stop()
+    return entries, failed
+
+
+def dump(entries: dict[str, dict]) -> str:
+    """One line per key, so a diff of the file names exactly the keys
+    whose plans changed."""
+    body = ",\n".join(
+        f"{json.dumps(k)}: {json.dumps(v)}" for k, v in sorted(entries.items())
+    )
+    return "{\n" + body + "\n}\n"
+
+
+def plans_md(entries: dict[str, dict]) -> str:
+    totals = Counter()
+    for e in entries.values():
+        totals.update({k: e[k] for k in _METRICS})
+    lines = [
+        "# PLANS — physical-plan census",
+        "",
+        f"{len(entries)} registered queries planned (streams/write-side "
+        f"excluded: {len(SKIP)}); generated by tools/plan_manifest.py from "
+        "plan_manifest.json; the invariants behind these numbers are "
+        "enforced by tests/test_plans_physical.py. Caveat: the counts "
+        "read the top-level plan only, and a localCheckpoint boundary "
+        "hides its upstream subtree there, so checkpointed queries "
+        "under-count scans (the manifest's fp does cover the hidden "
+        "plans; `python tools/plan_manifest.py <key>` prints them).",
+        "",
+        "| metric | total | queries with >0 |",
+        "|---|---|---|",
+    ]
+    for k in _METRICS:
+        n_q = sum(1 for e in entries.values() if e[k])
+        lines.append(f"| {k} | {totals[k]} | {n_q} |")
+    lines += [
+        "",
+        "Heaviest plans by shuffle count:",
+        "",
+        "| query | scans | exchanges | joins (bhj/smj/shj/bnlj) | windows |",
+        "|---|---|---|---|---|",
+    ]
+    top = sorted(entries.items(), key=lambda kv: (-kv[1]["exchanges"], kv[0]))
+    for name, e in top[:15]:
+        lines.append(
+            f"| `{name}` | {e['scans']} | {e['exchanges']} | "
+            f"{e['bhj']}/{e['smj']}/{e['shj']}/{e['bnlj']} | {e['windows']} |"
+        )
+    return "\n".join(lines) + "\n"
+
+
+def print_plans(keys: list[str]) -> None:
+    spark = session()
+    for key in keys:
+        _, plans = capture(spark, key, explain=formatted)
+        print(f"== TOP-LEVEL PLAN: {key} ==\n{plans[0]}")
+        for i, sub in enumerate(plans[1:]):
+            print(f"\n== PRE-CHECKPOINT SUB-PLAN {i} (creation order) ==\n{sub}")
+    spark.stop()
+
+
+def main(argv: list[str]) -> int:
+    check = argv == ["--check"]
+    if argv and not check:
+        print_plans(argv)
+        return 0
+    committed = load()
+    entries, failed = build(committed)
+    problems = {k: f"plan build failed: {why}" for k, why in failed.items()}
+    if check:
+        for key in sorted((entries.keys() | committed.keys()) - failed.keys()):
+            if key not in committed:
+                problems[key] = "missing from plan_manifest.json"
+            elif key not in entries:
+                problems[key] = "extra in plan_manifest.json"
+            elif entries[key] != committed[key]:
+                problems[key] = f"{committed[key]} -> {entries[key]}"
+    for key, why in sorted(problems.items()):
+        print(f"{key}: {why}")
+    if problems or check:
+        print(f"{len(problems)} keys differ from plan_manifest.json or fail to build")
+        return 1 if problems else 0
+    with open(MANIFEST, "w") as f:
+        f.write(dump(entries))
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
+        f.write(plans_md(entries))
+    changed = sorted(k for k in entries if entries[k] != committed.get(k))
+    print(f"plan_manifest.json: {len(entries)} keys, {len(changed)} changed")
+    for key in changed:
+        print(f"  {key}")
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main(sys.argv[1:]))

@@ -42,18 +42,11 @@ TABLES = (
     "embeddings",
 )
 
-#: small dimension tables — always broadcast-eligible in joins. At 100 TB
-#: the facts (orders/lineitem/events/documents/embeddings) grow; these stay
-#: dimension-sized (region=5, nation=25, supplier/part/customer grow slowly).
-DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 #: runtime-settable SQL confs the engine's semantics depend on; enforced
 #: here so results are correct even on a SparkSession built elsewhere
 #: (e.g. the verification driver's own session).
-_REQUIRED_SQL_CONFS = {
+REQUIRED_SQL_CONFS = {
     # instant semantics must match the oracle engine (naive UTC)
     "spark.sql.session.timeZone": "UTC",
     # events.ts is parquet TIMESTAMP(NANOS); legacy readers need this to
@@ -65,7 +58,7 @@ _REQUIRED_SQL_CONFS = {
 
 def ensure_session_posture(spark: SparkSession) -> None:
     """Idempotently apply the SQL confs correctness depends on."""
-    for key, want in _REQUIRED_SQL_CONFS.items():
+    for key, want in REQUIRED_SQL_CONFS.items():
         if spark.conf.get(key, None) != want:
             spark.conf.set(key, want)
 
@@ -258,19 +251,3 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     elif isinstance(ts_type, TimestampNTZType):
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-class Warehouse:
-    """Convenience handle over one scale-factor directory."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
-        self.spark = spark
-        self.sf_dir = sf_dir
-
-    def table(self, name: str) -> DataFrame:
-        return load_table(self.spark, self.sf_dir, name)
-
-    def register_views(self) -> None:
-        """Register every table as a temp view for spark.sql access."""
-        for name in TABLES:
-            self.table(name).createOrReplaceTempView(name)

@@ -42,8 +42,6 @@ OPEN_END = dt.date(9999, 12, 31)
 _FIELD_SEP = "\x1f"
 _NULL_SENTINEL = "\x01"
 
-META_COLS = ("row_hash", "effective_from", "effective_to", "is_current")
-
 
 def row_fingerprint(tracked_cols: Sequence[str]) -> Column:
     """Null-safe sha256 fingerprint of the tracked attributes (op F5).

@@ -1,6 +1,8 @@
 """Embedding similarity search (op C5 + extension mandate): brute-force
-cosine top-k as the exact baseline, random-hyperplane LSH bucketing as
-the scale path.
+cosine top-k as the exact baseline, engine-exact random-hyperplane LSH
+and IVF cell probing as the scale paths.  The search operators read the
+embeddings table's columns by name: ``vec_id``, ``embedding`` and
+``label`` (the IVF cell).
 
 Scale design (PAPERS.md: distributed top-k similarity search):
 
@@ -12,8 +14,9 @@ Scale design (PAPERS.md: distributed top-k similarity search):
 - top-k per query uses a rank window, which Spark executes as a
   per-partition group-limit below the shuffle (WindowGroupLimit);
 - brute force is O(|Q|·n) — right for moderate |Q|, and the exactness
-  oracle for the LSH variant, whose bucketing cuts the candidate set to
-  ~n/2^bits per query at tunable recall.
+  oracle for the LSH and IVF variants, which cut the candidate set to
+  ~n/2^bits (LSH) or ~nprobe·n/|cells| (IVF) per query at tunable
+  recall.
 """
 
 from __future__ import annotations
@@ -94,22 +97,38 @@ def sql_query_sample_cte(
     )
 
 
-def as_double_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Widen float32 embeddings to double once (exact) so all scoring is
-    double-precision."""
+def as_double_vectors(df: DataFrame) -> DataFrame:
+    """Widen float32 ``embedding`` vectors to double once (exact) so all
+    scoring is double-precision."""
     return df.withColumn(
-        vec_col, F.transform(F.col(vec_col), lambda x: x.cast("double"))
+        "embedding", F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of scored ``(query_id, neighbor_id, cos_raw)``
+    pairs: rank by cosine descending, ties broken on neighbor id for
+    determinism; the cosine is rounded to 4 places."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_raw").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            roundn(F.col("cos_raw"), 4).alias("cosine"),
+            "rank",
+        )
     )
 
 
 def cosine_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    queries: DataFrame, candidates: DataFrame, k: int = 10
 ) -> DataFrame:
-    """Exact brute-force cosine top-k: (query_id, neighbor_id, cos, rank).
+    """Exact brute-force cosine top-k over ``(vec_id, embedding)`` frames:
+    (query_id, neighbor_id, cosine, rank).
 
     Self-matches are excluded. Ties break on neighbor id for determinism.
     """
@@ -121,13 +140,14 @@ def cosine_topk(
     # (under-)split and otherwise folds every pair on one core
     from gcp_de_data_pipeline_cc_spark.catalog import fan_out
 
-    q = as_double_vectors(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+    q = as_double_vectors(queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
     ).withColumn("q_nrm", _norm(F.col("q_vec")))
     c = fan_out(
-        as_double_vectors(candidates, vec_col).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        as_double_vectors(candidates).select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_vec"),
         )
     ).withColumn("c_nrm", _norm(F.col("c_vec")))
     pairs = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -136,229 +156,8 @@ def cosine_topk(
         / F.col("q_nrm")
         / F.col("c_nrm")
     )
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_raw"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            roundn(F.col("cos_raw"), 4).alias("cosine"),
-            "rank",
-        )
-    )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def lsh_signature(vec, planes: list[list[float]]):
-    """Random-hyperplane (SimHash-for-vectors) bucket id: bit j = sign of
-    <v, r_j>. Cosine-similar vectors collide with probability
-    1 - θ/π per bit."""
-    sig = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        d = _dot(vec, F.array(*[F.lit(float(x)) for x in plane]))
-        sig = sig + F.when(d > 0, F.lit(2**j)).otherwise(F.lit(0))
-    return sig
-
-
-def _lsh_buckets(
-    df: DataFrame,
-    out_id: str,
-    n_tables: int,
-    bits: int,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """One (table_id, bucket) row per vector per hash table.
-
-    The n_tables·bits hyperplane signs are computed by one Arrow-batched
-    pandas UDF doing a single numpy matmul per batch. The earlier
-    pure-expression formulation (a 2048-literal plane matrix walked by
-    ``transform``/``aggregate``) spent 5-20 s in driver-side
-    analysis/codegen per invocation; the matmul UDF keeps the plan tiny
-    and is the vectorized scale path anyway (one (batch × dim) ·
-    (dim × planes) GEMM per Arrow batch, no per-row Python).
-    """
-    from pyspark.sql.types import ArrayType, LongType
-
-    planes = np.asarray(_hyperplanes(dim, n_tables * bits))  # (T·b, dim)
-    weights = 2 ** np.arange(bits - 1, -1, -1, dtype=np.int64)  # MSB-first
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _codes(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        v = np.vstack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-        signs = (v @ planes.T) > 0  # (n, T·b)
-        grouped = signs.reshape(len(v), -1, len(weights))  # (n, T, b)
-        codes = grouped @ weights  # (n, T)
-        return pd.Series(list(codes))
-
-    # r10 (guide §4.4): the posexplode over the UDF column collapses
-    # into the projection and the plan evaluates the GEMM UDF TWICE per
-    # relation (two ArrowEvalPython nodes over the same input — seen in
-    # every bucket consumer's plan).  Non-deterministic marking fences
-    # the duplication; the function is pure, results unchanged.
-    codes_once = _codes.asNondeterministic()
-    return df.select(
-        F.col(id_col).alias(out_id), codes_once(F.col(vec_col)).alias("_codes")
-    ).select(out_id, F.posexplode("_codes").alias("table_id", "bucket"))
-
-
-def ivf_centroids(
-    vectors: DataFrame,
-    cell_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantizer: element-wise mean vector per cell.
-
-    posexplode → per-(cell, position) mean → re-assemble ordered arrays.
-    Cells here come from a pre-assigned column (a trained k-means would
-    produce the same shape); the centroid table is dimension-sized.
-    """
-    per_pos = (
-        as_double_vectors(vectors, vec_col)
-        .select(cell_col, F.posexplode(vec_col).alias("pos", "x"))
-        .groupBy(cell_col, "pos")
-        .agg(F.avg("x").alias("m"))
-    )
-    return (
-        per_pos.groupBy(cell_col)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.getField("m"),
-            ).alias("centroid")
-        )
-    )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    nprobe: int = 3,
-    cell_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-style approximate top-k: route each query to its ``nprobe``
-    nearest cells (by centroid cosine), score only those cells' vectors.
-
-    Cost per query drops from n to ~nprobe·n/|cells|; the centroid table
-    and the query set broadcast, so the candidate scan is the only big
-    side and it is filtered by cell membership *before* scoring.
-    """
-    cents = ivf_centroids(candidates, cell_col, vec_col)
-    q = as_double_vectors(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    qc = q.crossJoin(F.broadcast(cents))
-    cent_cos = (
-        _dot(F.col("q_vec"), F.col("centroid"))
-        / _norm(F.col("q_vec"))
-        / _norm(F.col("centroid"))
-    )
-    w_cell = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col(cell_col)
-    )
-    probed = (
-        qc.select("query_id", "q_vec", cell_col, cent_cos.alias("cell_cos"))
-        .withColumn("cell_rank", F.row_number().over(w_cell))
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "q_vec", cell_col)
-    )
-    c = as_double_vectors(candidates, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), cell_col
-    )
-    pairs = c.join(F.broadcast(probed), on=cell_col).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    cos = (
-        _dot(F.col("q_vec"), F.col("c_vec"))
-        / _norm(F.col("q_vec"))
-        / _norm(F.col("c_vec"))
-    )
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_raw"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            roundn(F.col("cos_raw"), 4).alias("cosine"),
-            "rank",
-        )
-    )
-
-
-def cosine_topk_lsh(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    n_tables: int = 8,
-    bits: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k with multi-table random-hyperplane LSH.
-
-    A candidate is scored iff it shares a bucket with the query in ANY of
-    the ``n_tables`` tables (recall 1-(1-p^bits)^n_tables for per-bit
-    collision p = 1-θ/π) — the standard recall/cost dial. Per query,
-    expected candidates ≈ n_tables · n / 2^bits ≪ n. Same output schema
-    as :func:`cosine_topk`; recall is measured against it in tests.
-    """
-    qb = _lsh_buckets(queries, "query_id", n_tables, bits, dim, id_col, vec_col)
-    cb = _lsh_buckets(candidates, "neighbor_id", n_tables, bits, dim, id_col, vec_col)
-    pairs = (
-        cb.join(F.broadcast(qb), ["table_id", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    # per-side norm hoist (the cosine_topk discipline): the fold value
-    # is the identical expression over the identical vector, evaluated
-    # once per row instead of once per collided pair — the division
-    # consumes bit-identical operands
-    q = as_double_vectors(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    ).withColumn("q_nrm", _norm(F.col("q_vec")))
-    c = as_double_vectors(candidates, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    ).withColumn("c_nrm", _norm(F.col("c_vec")))
-    cos = (
-        _dot(F.col("q_vec"), F.col("c_vec")) / F.col("q_nrm") / F.col("c_nrm")
-    )
-    scored = (
-        pairs.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos_raw"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            roundn(F.col("cos_raw"), 4).alias("cosine"),
-            "rank",
-        )
+    return _rank_topk(
+        pairs.select("query_id", "neighbor_id", cos.alias("cos_raw")), k
     )
 
 
@@ -371,7 +170,8 @@ def topk_recall(
     exact brute-force one: (query_id, k, n_exact, n_hit, recall).
 
     Both inputs are (query_id, neighbor_id, ..., rank) frames as produced
-    by :func:`cosine_topk` / :func:`cosine_topk_lsh` / :func:`ivf_topk`.
+    by :func:`cosine_topk` / :func:`cosine_topk_lsh_portable` /
+    :func:`ivf_topk_portable`.
     The join is a left-semi on (query_id, neighbor_id) — the hit count
     shuffles id pairs only, never vectors — and the output is one scalar
     row per query, so an approximate-search query can ship quantitative
@@ -413,36 +213,30 @@ PORTABLE_Q_SCALE = 8192
 _PORTABLE_PLANE_MAX = 8192
 
 
-def portable_int_planes(
-    n_planes: int, dim: int, seed: int = 424242
-) -> np.ndarray:
-    """Deterministic integer hyperplanes, shared verbatim by the Spark
-    UDF (int64 matmul) and the DuckDB oracle (literal lists) — the
-    float-hyperplane portability problem is that GEMM vs sequential-fold
-    summation order flips signs near zero; integer dots are order-free
-    and exact on both engines (the dedup_minhash portable-hash
-    discipline applied to vectors)."""
-    rng = np.random.RandomState(seed)
+def portable_int_planes(n_planes: int, dim: int) -> np.ndarray:
+    """Deterministic integer hyperplanes (fixed seed), shared verbatim by
+    the Spark UDF (int64 matmul) and the DuckDB oracle (literal lists) —
+    the float-hyperplane portability problem is that GEMM vs
+    sequential-fold summation order flips signs near zero; integer dots
+    are order-free and exact on both engines (the dedup_minhash
+    portable-hash discipline applied to vectors)."""
+    rng = np.random.RandomState(424242)
     return rng.randint(
         -_PORTABLE_PLANE_MAX, _PORTABLE_PLANE_MAX + 1, size=(n_planes, dim)
     ).astype(np.int64)
 
 
 def portable_lsh_buckets(
-    df: DataFrame,
-    out_id: str,
-    n_tables: int,
-    bits: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, out_id: str, n_tables: int, bits: int, dim: int
 ) -> DataFrame:
-    """One (table_id, bucket) row per vector per hash table, with
-    ENGINE-EXACT bucket ids: quantize each component to
+    """One (table_id, bucket) row per ``(vec_id, embedding)`` vector per
+    hash table, with ENGINE-EXACT bucket ids: quantize each component to
     floor(x·2^13 + 0.5) (exact), then bit j of table t = sign of the
-    int64 dot with plane t·bits+j.  Vectors narrower than ``dim`` use
-    the leading plane columns (planes are seeded per (n_tables·bits,
-    dim), truncation keeps determinism)."""
+    int64 dot with plane t·bits+j.  The n_tables·bits plane signs come
+    from one Arrow-batched pandas UDF doing a single int64 matmul per
+    batch, so the plan stays tiny and no Python runs per row.  Vectors
+    narrower than ``dim`` use the leading plane columns (planes are
+    seeded per (n_tables·bits, dim), truncation keeps determinism)."""
     from pyspark.sql.types import ArrayType, LongType
 
     planes = portable_int_planes(n_tables * bits, dim)  # (T·b, dim)
@@ -466,7 +260,8 @@ def portable_lsh_buckets(
     # the duplication; the function is pure, results unchanged.
     codes_once = _codes.asNondeterministic()
     return df.select(
-        F.col(id_col).alias(out_id), codes_once(F.col(vec_col)).alias("_codes")
+        F.col("vec_id").alias(out_id),
+        codes_once(F.col("embedding")).alias("_codes"),
     ).select(out_id, F.posexplode("_codes").alias("table_id", "bucket"))
 
 
@@ -499,16 +294,15 @@ def sql_portable_lsh_buckets(
     return exprs
 
 
-def quantized_int_vectors(
-    df: DataFrame, vec_col: str = "embedding", out_col: str = "qvec"
-) -> DataFrame:
-    """Exact integer quantization floor(x·2^13 + 0.5) per component —
-    the portable-LSH quantizer exposed for centroid building (every
-    step exact IEEE, bit-identical on any engine)."""
+def quantized_int_vectors(df: DataFrame) -> DataFrame:
+    """Adds ``qvec``: the exact integer quantization floor(x·2^13 + 0.5)
+    of each ``embedding`` component — the portable-LSH quantizer exposed
+    for centroid building (every step exact IEEE, bit-identical on any
+    engine)."""
     return df.withColumn(
-        out_col,
+        "qvec",
         F.transform(
-            F.col(vec_col),
+            F.col("embedding"),
             lambda x: F.floor(
                 x.cast("double") * F.lit(float(PORTABLE_Q_SCALE)) + F.lit(0.5)
             ),
@@ -523,20 +317,20 @@ def cosine_topk_lsh_portable(
     n_tables: int = 8,
     bits: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """:func:`cosine_topk_lsh` with ENGINE-EXACT bucketing
-    (:func:`portable_lsh_buckets`): the candidate set — and therefore
-    the whole result — is deterministic and SQL-reproducible, so the
-    approximate search can be ORACLE-PAIRED instead of rows-only.
-    Same output schema as :func:`cosine_topk`."""
-    qb = portable_lsh_buckets(
-        queries, "query_id", n_tables, bits, dim, id_col, vec_col
-    )
-    cb = portable_lsh_buckets(
-        candidates, "neighbor_id", n_tables, bits, dim, id_col, vec_col
-    )
+    """Approximate top-k with multi-table random-hyperplane LSH and
+    ENGINE-EXACT bucketing (:func:`portable_lsh_buckets`).
+
+    A candidate is scored iff it shares a bucket with the query in ANY of
+    the ``n_tables`` tables (recall 1-(1-p^bits)^n_tables for per-bit
+    collision p = 1-θ/π) — the standard recall/cost dial. Per query,
+    expected candidates ≈ n_tables · n / 2^bits ≪ n.  The candidate set
+    — and therefore the whole result — is deterministic and
+    SQL-reproducible, so the approximate search is ORACLE-PAIRED instead
+    of rows-only.  Same output schema as :func:`cosine_topk`; recall is
+    measured against it (:func:`topk_recall`)."""
+    qb = portable_lsh_buckets(queries, "query_id", n_tables, bits, dim)
+    cb = portable_lsh_buckets(candidates, "neighbor_id", n_tables, bits, dim)
     pairs = (
         cb.join(F.broadcast(qb), ["table_id", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -547,11 +341,11 @@ def cosine_topk_lsh_portable(
     # is the identical expression over the identical vector, evaluated
     # once per row instead of once per collided pair — the division
     # consumes bit-identical operands
-    q = as_double_vectors(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    q = as_double_vectors(queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).withColumn("q_nrm", _norm(F.col("q_vec")))
-    c = as_double_vectors(candidates, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    c = as_double_vectors(candidates).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     ).withColumn("c_nrm", _norm(F.col("c_vec")))
     cos = (
         _dot(F.col("q_vec"), F.col("c_vec")) / F.col("q_nrm") / F.col("c_nrm")
@@ -561,38 +355,25 @@ def cosine_topk_lsh_portable(
         .join(c, "neighbor_id")
         .select("query_id", "neighbor_id", cos.alias("cos_raw"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            roundn(F.col("cos_raw"), 4).alias("cosine"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, k)
 
 
-def ivf_centroids_portable(
-    vectors: DataFrame,
-    cell_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantizer with ENGINE-EXACT centroids: the per-cell
-    per-position SUM of integer-quantized components (int64 — exact
-    and summation-order-free, unlike a float mean).  Cosine is
-    scale-invariant, so the un-normalized sum vector ranks cells
-    identically to the mean — no division, no float accumulation."""
+def ivf_centroids_portable(vectors: DataFrame) -> DataFrame:
+    """IVF coarse quantizer with ENGINE-EXACT centroids, one per ``label``
+    cell: the per-cell per-position SUM of integer-quantized components
+    (int64 — exact and summation-order-free, unlike a float mean).
+    Cosine is scale-invariant, so the un-normalized sum vector ranks
+    cells identically to the mean — no division, no float accumulation.
+    Cells come from the pre-assigned ``label`` column (a trained k-means
+    would produce the same shape); the centroid table is
+    dimension-sized."""
     per_pos = (
-        quantized_int_vectors(vectors, vec_col, "qvec")
-        .select(cell_col, F.posexplode("qvec").alias("pos", "x"))
-        .groupBy(cell_col, "pos")
+        quantized_int_vectors(vectors)
+        .select("label", F.posexplode("qvec").alias("pos", "x"))
+        .groupBy("label", "pos")
         .agg(F.sum("x").alias("s"))
     )
-    return per_pos.groupBy(cell_col).agg(
+    return per_pos.groupBy("label").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "s"))),
             lambda st: st.getField("s").cast("double"),
@@ -600,21 +381,14 @@ def ivf_centroids_portable(
     )
 
 
-def ivf_probe_portable(
-    queries: DataFrame,
-    candidates: DataFrame,
-    nprobe: int = 3,
-    cell_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def _probe_cells(
+    queries: DataFrame, candidates: DataFrame, nprobe: int, cols: tuple[str, ...]
 ) -> DataFrame:
-    """(query_id, cell): each query's ``nprobe`` nearest coarse cells by
-    cosine against the engine-exact integer-sum centroids — the probe
-    stage alone, for composed indexes (IVF+PQ) that score the probed
-    cells with a different fine quantizer."""
-    cents = ivf_centroids_portable(candidates, cell_col, vec_col)
-    q = as_double_vectors(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    """``cols`` of each query's ``nprobe`` nearest cells by cosine against
+    the engine-exact centroids (ties on the cell label)."""
+    cents = ivf_centroids_portable(candidates)
+    q = as_double_vectors(queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     qc = q.crossJoin(F.broadcast(cents))
     cent_cos = (
@@ -623,14 +397,24 @@ def ivf_probe_portable(
         / _norm(F.col("centroid"))
     )
     w_cell = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col(cell_col)
+        F.col("cell_cos").desc(), F.col("label")
     )
     return (
-        qc.select("query_id", cell_col, cent_cos.alias("cell_cos"))
+        qc.select(*cols, cent_cos.alias("cell_cos"))
         .withColumn("cell_rank", F.row_number().over(w_cell))
         .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", cell_col)
+        .select(*cols)
     )
+
+
+def ivf_probe_portable(
+    queries: DataFrame, candidates: DataFrame, nprobe: int = 3
+) -> DataFrame:
+    """(query_id, label): each query's ``nprobe`` nearest coarse cells by
+    cosine against the engine-exact integer-sum centroids — the probe
+    stage alone, for composed indexes (IVF+PQ) that score the probed
+    cells with a different fine quantizer."""
+    return _probe_cells(queries, candidates, nprobe, ("query_id", "label"))
 
 
 def ivf_topk_portable(
@@ -638,38 +422,25 @@ def ivf_topk_portable(
     candidates: DataFrame,
     k: int = 10,
     nprobe: int = 3,
-    cell_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """:func:`ivf_topk` with engine-exact centroids
-    (:func:`ivf_centroids_portable`) — probing is deterministic and
-    SQL-reproducible, so the IVF search can be oracle-paired."""
-    cents = ivf_centroids_portable(candidates, cell_col, vec_col)
-    q = as_double_vectors(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    """IVF approximate top-k: route each query to its ``nprobe`` nearest
+    cells (:func:`ivf_probe_portable`'s probe), score only those cells'
+    vectors.
+
+    Cost per query drops from n to ~nprobe·n/|cells|; the centroid table
+    and the query set broadcast, so the candidate scan is the only big
+    side and it is filtered by cell membership *before* scoring.  The
+    engine-exact centroids make probing deterministic and
+    SQL-reproducible, so the IVF search is oracle-paired."""
+    probed = _probe_cells(
+        queries, candidates, nprobe, ("query_id", "q_vec", "label")
     )
-    qc = q.crossJoin(F.broadcast(cents))
-    cent_cos = (
-        _dot(F.col("q_vec"), F.col("centroid"))
-        / _norm(F.col("q_vec"))
-        / _norm(F.col("centroid"))
+    c = as_double_vectors(candidates).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        "label",
     )
-    w_cell = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col(cell_col)
-    )
-    probed = (
-        qc.select("query_id", "q_vec", cell_col, cent_cos.alias("cell_cos"))
-        .withColumn("cell_rank", F.row_number().over(w_cell))
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "q_vec", cell_col)
-    )
-    c = as_double_vectors(candidates, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        cell_col,
-    )
-    pairs = c.join(F.broadcast(probed), on=cell_col).filter(
+    pairs = c.join(F.broadcast(probed), on="label").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
     cos = (
@@ -677,19 +448,8 @@ def ivf_topk_portable(
         / _norm(F.col("q_vec"))
         / _norm(F.col("c_vec"))
     )
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos_raw"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            roundn(F.col("cos_raw"), 4).alias("cosine"),
-            "rank",
-        )
+    return _rank_topk(
+        pairs.select("query_id", "neighbor_id", cos.alias("cos_raw")), k
     )
 
 
@@ -704,25 +464,24 @@ def ivf_topk_portable(
 #: never corpus^2, no matter how skewed the labels get
 BOUNDED_CELL_SIZE = 32
 
+#: the projection's width: the embeddings table's vector length
+_BOUNDED_CELL_DIM = 64
 
-def _bounded_cell_plane(dim: int) -> np.ndarray:
+
+def _bounded_cell_plane() -> np.ndarray:
     """The single deterministic integer projection plane shared verbatim
     by the Spark expression and the DuckDB twin (portable_int_planes
     seed; plane 0 of a 1-plane family)."""
-    return portable_int_planes(1, dim)[0]
+    return portable_int_planes(1, _BOUNDED_CELL_DIM)[0]
 
 
 def bounded_cells(
     df: DataFrame,
-    bound: int = BOUNDED_CELL_SIZE,
-    id_col: str = "vec_id",
     label_col: str = "label",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    out_col: str = "chunk",
     keep_proj: str | None = None,
 ) -> DataFrame:
-    """Adds ``out_col``: the BOUNDED-CELL id within each label cell.
+    """Adds ``chunk``: the BOUNDED-CELL id of each ``(vec_id, embedding)``
+    row within its ``label_col`` cell.
 
     The coarse quantizer behind the ANN/semantic-dedup tier previously
     used the raw label column as the cell, so replicated/skewed corpora
@@ -733,8 +492,9 @@ def bounded_cells(
     dot of the 2^13-quantized vector with a fixed integer hyperplane —
     a locality-preserving order, so near-duplicates stay chunk-mates
     except at chunk boundaries) and cut the ranked run into chunks of
-    at most ``bound`` vectors. |cell| ≤ bound is a HARD invariant; the
-    cell COUNT grows with the corpus instead.
+    at most ``BOUNDED_CELL_SIZE`` vectors. |cell| ≤ bound is a HARD
+    invariant; the cell COUNT grows with the corpus instead.
+    ``keep_proj`` names a column that keeps the projection.
 
     Exactness: the projection is exact integer arithmetic (components
     ≤ 2^13, plane entries ≤ 2^13, dim ≤ 64 → |dot| < 2^33), ties break
@@ -745,10 +505,9 @@ def bounded_cells(
     replaces unbounded quadratic growth in every downstream
     (label, chunk)-scoped join; the projection itself is map-side
     codegen."""
-    plane = _bounded_cell_plane(dim)
-    plane_arr = F.array(*[F.lit(int(x)) for x in plane])
+    plane_arr = F.array(*[F.lit(int(x)) for x in _bounded_cell_plane()])
     q = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.floor(
             x.cast("double") * F.lit(float(PORTABLE_Q_SCALE)) + F.lit(0.5)
         ).cast("long"),
@@ -761,7 +520,7 @@ def bounded_cells(
     # of bounds, no ANSI error), so the fold can never go NULL.
     proj = F.aggregate(
         F.transform(
-            F.sequence(F.lit(1), F.lit(int(dim))),
+            F.sequence(F.lit(1), F.lit(_BOUNDED_CELL_DIM)),
             lambda i: F.get(plane_arr, i - 1)
             * F.coalesce(F.get(q, i - 1), F.lit(0).cast("long")),
         ),
@@ -769,13 +528,13 @@ def bounded_cells(
         lambda acc, v: acc + v,
     )
     w = Window.partitionBy(label_col).orderBy(
-        F.asc("__bc_proj"), F.asc(id_col)
+        F.asc("__bc_proj"), F.asc("vec_id")
     )
     out = df.withColumn("__bc_proj", proj).withColumn(
-        out_col,
+        "chunk",
         F.floor(
             (F.row_number().over(w) - F.lit(1)) * F.lit(1.0)
-            / F.lit(float(bound))
+            / F.lit(float(BOUNDED_CELL_SIZE))
         ).cast("long"),
     )
     if keep_proj is not None:
@@ -783,31 +542,28 @@ def bounded_cells(
     return out.drop("__bc_proj")
 
 
-def sql_bounded_cells_proj(vec_expr: str, dim: int = 64) -> str:
+def sql_bounded_cells_proj(vec_expr: str) -> str:
     """The DuckDB twin of :func:`bounded_cells`' integer projection
     (exact: quantized components x integer plane, all < 2^53).  Same
     truncate-to-dim / zero-pad totalization as the Spark side: list
     indexing past the end is NULL in DuckDB, coalesced to 0, so both
     engines agree on any vector length instead of one erroring."""
-    plane = _bounded_cell_plane(dim)
-    lits = "[" + ", ".join(f"{int(x)}.0" for x in plane) + "]"
+    lits = "[" + ", ".join(f"{int(x)}.0" for x in _bounded_cell_plane()) + "]"
     qexpr = (
-        f"list_transform(range(1, {dim} + 1), "
+        f"list_transform(range(1, {_BOUNDED_CELL_DIM} + 1), "
         f"i -> COALESCE(FLOOR(CAST({vec_expr}[i] AS DOUBLE) "
         f"* {PORTABLE_Q_SCALE}.0 + 0.5), 0.0))"
     )
     return f"list_dot_product({qexpr}, {lits})"
 
 
-def sql_bounded_cells_order(
-    vec_expr: str, id_expr: str, dim: int = 64
-) -> str:
+def sql_bounded_cells_order(vec_expr: str, id_expr: str) -> str:
     """The DuckDB ORDER BY twin of :func:`bounded_cells`' ranking:
     ``ROW_NUMBER() OVER (PARTITION BY label ORDER BY {this})`` with the
     identical integer projection and id tie-break."""
-    return f"{sql_bounded_cells_proj(vec_expr, dim)}, {id_expr}"
+    return f"{sql_bounded_cells_proj(vec_expr)}, {id_expr}"
 
 
-def sql_bounded_cells_chunk(bound: int = BOUNDED_CELL_SIZE) -> str:
+def sql_bounded_cells_chunk() -> str:
     """The chunk expression over the twin's row number ``rn``."""
-    return f"CAST(FLOOR((rn - 1) * 1.0e0 / {bound}) AS BIGINT)"
+    return f"CAST(FLOOR((rn - 1) * 1.0e0 / {BOUNDED_CELL_SIZE}) AS BIGINT)"

@@ -773,12 +773,6 @@ def eval_auc_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # eval_err — expected reciprocal rank over the shared ANN eval ranking
 # ---------------------------------------------------------------------------
 
-#: graded-relevance cascade: rel 1-10 folds to grades 0-4 so every
-#: stop-probability is a /16 dyadic rational and all prefix products
-#: stay exact int64 (16^10 = 2^40)
-_ERR_GMAX_DEN = 16
-
-
 def _err_oracle() -> str:
     from gcp_de_data_pipeline_cc_spark.plans.llm import _sim_lsh_cte
 

@@ -1397,13 +1397,12 @@ def qc_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(cents.cast("string"), 1, 1).cast("long").alias("digit")
     )
     exp_rows = [(d_, p) for d_, p in _BENFORD_P.items()]
-    exp_p = F.broadcast(
-        d.sparkSession.createDataFrame(
-            exp_rows, "digit BIGINT, p_benford DOUBLE"
-        )
+    exp_p = d.sparkSession.createDataFrame(
+        exp_rows, "digit BIGINT, p_benford DOUBLE"
     )
+    counts = F.broadcast(d.groupBy("digit").agg(F.count("*").alias("n")))
     byd = (
-        exp_p.join(d.groupBy("digit").agg(F.count("*").alias("n")), "digit", "left")
+        exp_p.join(counts, "digit", "left")
         .select("digit", "p_benford", F.coalesce("n", F.lit(0)).alias("n"))
     )
     wfull = Window.partitionBy()

@@ -198,8 +198,7 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grid = spark.range(10).select(F.col("id").cast("int").alias("bin"))
     cells = (
-        F.broadcast(grid)
-        .join(bins, "bin", "left")
+        grid.join(F.broadcast(bins), "bin", "left")
         .select(
             "bin",
             F.coalesce("bp", F.lit(0)).alias("bp"),
@@ -1430,10 +1429,6 @@ def eval_reward_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # eval_bandit_replay — offline policy evaluation by replay
 # --------------------------------------------------------------------------
-
-#: the action space = the event-type domain
-_BR_ACTIONS = ("click", "error", "purchase", "signup", "view")
-
 
 @query(
     "eval_bandit_replay",

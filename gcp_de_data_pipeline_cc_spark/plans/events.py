@@ -153,12 +153,12 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM PARTIAL aggregates (user_id, n, v), not raw events — map-side
     combine BEFORE the Arrow/Python state boundary, so keyed state
     processes |keys| rows per batch regardless of event volume. The
-    raw-row operator (`running_user_totals`) remains the
-    direct-ingest form and keeps its own batch-equality and
-    kill-restart recovery tests; totals are identical (count/sum are
-    associative). Measured at sf0.1: stream wall 3-8 s -> ~1 s, and
-    the r8 official bench's 34.6 s outlier on this key (Python-path
-    payload x host band) is structurally removed."""
+    same operator takes a raw event stream as one-event partials
+    ``(user_id, 1, value)``; its batch-equality and kill-restart
+    recovery tests feed it that way, and totals are identical
+    (count/sum are associative). Measured at sf0.1: stream wall
+    3-8 s -> ~1 s, and the r8 official bench's 34.6 s outlier on this
+    key (Python-path payload x host band) is structurally removed."""
     from gcp_de_data_pipeline_cc_spark.catalog import ensure_session_posture
     from gcp_de_data_pipeline_cc_spark.streaming.stateful import (
         running_user_totals_from_partials,
@@ -221,7 +221,6 @@ def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of keys in state — bounded memory on an unbounded stream.
     """
     import shutil
-    import tempfile
 
     from gcp_de_data_pipeline_cc_spark.catalog import (
         ensure_session_posture,
@@ -344,8 +343,6 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude smaller than the stream. Oracle-checkable because both
     halves are deterministic.
     """
-    import tempfile
-
     from pyspark.sql import Window
 
     from gcp_de_data_pipeline_cc_spark.catalog import (
@@ -448,7 +445,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unboundedly — the 100 TB failure mode this operator exists to avoid.
     """
     import shutil
-    import tempfile
 
     from gcp_de_data_pipeline_cc_spark.catalog import (
         ensure_session_posture,
@@ -525,7 +521,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     with maxFilesPerTrigger=1 force three micro-batches so the per-batch
     re-resolution actually executes."""
     import shutil
-    import tempfile
 
     from gcp_de_data_pipeline_cc_spark.catalog import ensure_session_posture
 
@@ -597,12 +592,13 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     never lives in the stream (no watermark, no state store): the
     target IS the state, which is why restarts are safe — re-merging a
     batch is idempotent."""
+    import os
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
     from gcp_de_data_pipeline_cc_spark.catalog import ensure_session_posture
+    from gcp_de_data_pipeline_cc_spark.sources.sink import recover_swap, swap_in
 
     ensure_session_posture(spark)
     stage = scratch_dir("stream_fb_src")
@@ -613,7 +609,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_id", "ts", "event_type", "value"
     )
     ev.repartition(3).write.mode("overwrite").parquet(stage)
-    schema = spark.read.parquet(stage).schema
 
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
@@ -625,12 +620,13 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        bspark = batch.sparkSession
-        try:
-            current = bspark.read.parquet(target)
+        recover_swap(target)  # an earlier batch may have died inside the swap
+        merged = latest
+        if os.path.exists(target):
+            # the target was written from batch-shaped frames, so read it
+            # with the batch's schema: inferring it would cost a job
+            current = batch.sparkSession.read.schema(latest.schema).parquet(target)
             merged = current.unionByName(latest)
-        except Exception:  # first batch: target does not exist yet
-            merged = latest
         merged = (
             merged.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
@@ -638,11 +634,10 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tmp_out = f"{root}/merge_{batch_id}"
         merged.write.mode("overwrite").parquet(tmp_out)
-        shutil.rmtree(target, ignore_errors=True)
-        shutil.move(tmp_out, target)
+        swap_in(tmp_out, target)
 
     q = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
         .writeStream.foreachBatch(merge)

@@ -2000,9 +2000,8 @@ dedup_lsh_calibration.__doc__ = dedup_lsh_calibration.__doc__.format(
 # MMR diversity rerank (r4d wave)
 # ---------------------------------------------------------------------------
 
-#: MMR trade-off λ (exact binary fraction) and selection depth
+#: MMR trade-off λ (exact binary fraction) and candidate pool depth
 _MMR_LAMBDA = 0.5
-_MMR_K = 3
 _MMR_POOL = 10
 
 

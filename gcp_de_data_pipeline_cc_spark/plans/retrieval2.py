@@ -34,7 +34,7 @@ def _rebalance_oracle() -> str:
         " / sqrt(list_dot_product({b}, {b}))"
     )
     bound = sim.BOUNDED_CELL_SIZE
-    plane = sim._bounded_cell_plane(64)
+    plane = sim._bounded_cell_plane()
     lits = "[" + ", ".join(f"{int(x)}.0" for x in plane) + "]"
     return f"""
     WITH e AS (

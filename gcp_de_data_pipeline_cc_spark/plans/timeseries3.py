@@ -2276,7 +2276,6 @@ ts_changepoint_binseg.__doc__ = ts_changepoint_binseg.__doc__.format(
 _HW_ALPHA = 0.5
 _HW_BETA = 0.25
 _HW_GAMMA = 0.5
-_HW_M = 7  # weekly season
 
 
 @query(

@@ -625,8 +625,6 @@ def ts_demand_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: the four touch channels, alphabetical; bit d of a user's touch mask
 _SHAP_CHANNELS = ("click", "error", "signup", "view")
-#: |S|!(k-1-|S|)!/k! in 24ths for k = 4 channels
-_SHAP_W24 = (6, 2, 2, 6)
 
 
 def _shapley_oracle() -> str:

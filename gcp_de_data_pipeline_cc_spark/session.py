@@ -8,7 +8,8 @@ for the 100 TB design point and merely *scaled down* for local testing:
   THROUGHPUT_BASED Dataflow autoscaling knob
   (reference scripts/trigger_dataflow.sh:43).
 - UTC session timezone — all fixtures and oracles agree on instant
-  semantics.
+  semantics (this and ``nanosAsLong`` are the correctness confs
+  ``catalog.REQUIRED_SQL_CONFS`` owns).
 - Arrow on — every Python-boundary crossing (pandas UDF, toPandas) is
   columnar-batched.
 - `nanosAsLong` — the events fixture carries parquet TIMESTAMP(NANOS),
@@ -21,6 +22,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from gcp_de_data_pipeline_cc_spark.catalog import REQUIRED_SQL_CONFS
+
 
 def _default_shuffle_partitions() -> int:
     """SPARK_GRAFT_CPUS doubles as the local[...] core spec, so it may be
@@ -51,9 +55,6 @@ def build_session(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        # --- correctness posture ---
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # --- optimizer posture ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -73,7 +74,8 @@ def build_session(
         # --- quieter local runs ---
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    # correctness posture: the confs catalog.ensure_session_posture owns
+    for k, v in {**REQUIRED_SQL_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

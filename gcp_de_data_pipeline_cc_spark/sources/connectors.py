@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, DataFrameReader, DataFrameWriter
+from pyspark.sql import DataFrame, DataFrameWriter
 
 #: Spark confs that enable gs:// paths (public Hadoop GCS connector).
 GCS_SESSION_CONFS: dict[str, str] = {
@@ -62,9 +62,3 @@ def bigquery_writer(
         .option("temporaryGcsBucket", temporary_gcs_bucket)
         .option("intermediateFormat", "parquet")
     )
-
-
-def bigquery_reader(reader: DataFrameReader, table: str) -> DataFrameReader:
-    """Reader configured for the BigQuery connector (S3-analog of
-    `spark.read.table`); pushdown/pruning travel through the connector."""
-    return reader.format("bigquery").option("table", table)

@@ -23,12 +23,6 @@ _KNUTH = 2654435761
 _M31 = 2_147_483_647
 
 
-def row_for(i: int) -> tuple[int, int, float]:
-    """Deterministic row content for id ``i`` — mirrored by the SQL
-    oracle, so keep it expressible in portable arithmetic."""
-    return (i, i % 16, (i * _KNUTH) % _M31 / _M31)
-
-
 class _RangePartition(InputPartition):
     def __init__(self, start: int, end: int) -> None:
         self.start = start
@@ -68,10 +62,11 @@ class SyntheticRowsReader(DataSourceReader):
         """Yield ONE Arrow RecordBatch per partition (the PySpark 4
         DataSource API's vectorized path) — the whole range is generated
         by numpy and crosses the Python↔JVM boundary as a columnar
-        batch. The row-at-a-time tuple path (``yield row_for(i)``)
-        measured ~6 s for 10k rows against ~1 s batched; per-row Python
-        in a source is the same anti-pattern as a per-row UDF.
-        ``row_for`` remains the scalar contract used by tests."""
+        batch. A row-at-a-time tuple path measured ~6 s for 10k rows
+        against ~1 s batched; per-row Python in a source is the same
+        anti-pattern as a per-row UDF.  Row ``i`` is ``(i, i % 16,
+        (i * 2654435761 % (2^31 - 1)) / (2^31 - 1))`` — portable
+        arithmetic the SQL oracle mirrors."""
         import numpy as np
         import pyarrow as pa
 

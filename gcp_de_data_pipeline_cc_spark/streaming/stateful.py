@@ -7,6 +7,10 @@ enrichment, fraud scores — the Structured Streaming analog of a Beam
 stateful DoFn (the extension point the reference's external Dataflow
 jobs would use).
 
+One operator: per-user running totals over ``(user_id, n, v)`` partial
+aggregates. A raw event stream feeds it as ``(user_id, 1, value)``; a
+stream combined in the JVM first feeds one row per (batch, user).
+
 Scale: state lives in the state store partitioned by key (RocksDB-backed
 on a real cluster); each micro-batch touches only keys present in the
 batch. The pandas boundary is Arrow-batched per key-group.
@@ -23,35 +27,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUTPUT_SCHEMA = "user_id long, n_events long, value_sum double"
 STATE_SCHEMA = "n long, v double"
-
-
-def _accumulate(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Running per-user totals across micro-batches."""
-    n, v = state.get if state.exists else (0, 0.0)
-    for pdf in batches:
-        n += len(pdf)
-        v += float(pdf["value"].sum())
-    state.update((n, v))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "value_sum": [round(v, 2)]}
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Per-user lifetime event count + value sum, updated every
-    micro-batch (update output mode: each batch emits the keys it
-    touched with their new running totals)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _accumulate,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def _accumulate_partials(
@@ -80,10 +55,10 @@ def running_user_totals_from_partials(partials: DataFrame) -> DataFrame:
     state operator's shuffle and per-key pandas batches carry one row
     per (batch, key) — not one row per event. At 100 TB the python
     state path sees |keys| rows per batch regardless of event volume;
-    the alternative (raw rows into state) makes the Python worker the
-    stream's throughput ceiling. Totals are exactly the raw-path
-    totals: counts are associative and the value sum merely reassociates
-    float addition (bench: 1.5M raw rows -> ~300 partial rows at sf0.1,
+    raw rows into state (each event as ``(user_id, 1, value)``) make
+    the Python worker the stream's throughput ceiling. Totals are
+    exactly the raw-row totals: counts are associative and the value
+    sum merely reassociates float addition (bench: 1.5M raw rows -> ~300 partial rows at sf0.1,
     stream wall 3-8 s -> ~1 s)."""
     return partials.groupBy("user_id").applyInPandasWithState(
         _accumulate_partials,
@@ -91,65 +66,4 @@ def running_user_totals_from_partials(partials: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs ``google.protobuf`` for its
-    state-server protocol; this container doesn't ship it (and has no
-    network to fetch it), so the forward-API variant is capability-gated
-    exactly like the Avro datasource. On a real deployment,
-    ``pip install protobuf`` lights it up with no code change."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Same running totals on the transformWithStateInPandas API (the
-    Spark 4 successor to applyInPandasWithState): typed state variables
-    on a ``StatefulProcessorHandle`` instead of a single state tuple —
-    composable state (values/lists/maps/timers) per key, same
-    RocksDB-backed store and per-key-group Arrow batching underneath.
-    Both variants are kept: applyInPandasWithState is the stable
-    workhorse; this is the forward API. Requires ``tws_available()``
-    (see there); callers must gate on it."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n long, v double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, v = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                v += float(pdf["value"].sum())
-            self._totals.update((n, v))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "value_sum": [round(v, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

@@ -10,16 +10,18 @@ now a FAST tier that finishes in ~13-15 min:
 
 - tests listed in tests/slow_manifest.txt (individually > 2.5 s in the
   r10 full-suite timing) are skipped;
-- the two registry-wide parametrized sweeps (test_differential,
-  test_schema_parity) run a deterministic 1-in-8 key sample
-  (crc32(key) % 8 == 0) plus every key whose plan changed since its
-  last official check (``__spark_entry__.plan_changed_keys``, the same
-  set ``queries()`` puts first) — full cross-engine coverage stays with
-  the heavy tier AND with the driver's own independent oracle gate;
+- the registry-wide differential sweep (test_differential) runs a
+  deterministic 1-in-8 key sample (crc32(key) % 8 == 0) plus every key
+  whose plan changed since its last official check
+  (``__spark_entry__.plan_changed_keys``, the same set ``queries()``
+  puts first) — full cross-engine coverage stays with the heavy tier
+  AND with the driver's own independent oracle gate; the schema sweep
+  (test_schema_parity) reads committed manifest schemas and runs
+  unsampled;
 - the hypothesis property suites (test_scd2_properties) are heavy-tier.
 
-The FULL suite is opt-in: `pytest tests/ --runslow` or
-SPARK_GRAFT_FULL_TESTS=1 — run it before any round close."""
+The FULL suite is opt-in: `SPARK_GRAFT_FULL_TESTS=1 pytest tests/` —
+run it before any round close."""
 
 from __future__ import annotations
 
@@ -37,8 +39,8 @@ from gcp_de_data_pipeline_cc_spark.session import build_session
 # same comparisons at sf0.01
 SF_DIR = "/root/testdata/sf0.001"
 
-#: registry-wide parametrized sweeps sampled 1-in-8 in the fast tier
-_SAMPLED_SWEEP_FILES = ("test_differential.py", "test_schema_parity.py")
+#: registry-wide parametrized sweep sampled 1-in-8 in the fast tier
+_SAMPLED_SWEEP_FILE = "test_differential.py"
 
 #: whole modules in the heavy tier (long-running property/e2e suites)
 _SLOW_FILES = ("test_scd2_properties.py",)
@@ -58,28 +60,17 @@ def _slow_manifest() -> frozenset[str]:
     return frozenset(out)
 
 
-def pytest_addoption(parser):
-    parser.addoption(
-        "--runslow",
-        action="store_true",
-        default=False,
-        help="run the full suite including the heavy tier",
-    )
-
-
 def pytest_collection_modifyitems(config, items):
-    if config.getoption("--runslow") or os.environ.get(
-        "SPARK_GRAFT_FULL_TESTS"
-    ) == "1":
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
     manifest = _slow_manifest()
     skip_slow = pytest.mark.skip(
         reason="heavy tier (fast default for the driver window); "
-        "run with --runslow or SPARK_GRAFT_FULL_TESTS=1"
+        "run with SPARK_GRAFT_FULL_TESTS=1"
     )
     skip_sample = pytest.mark.skip(
         reason="registry sweep sampled 1-in-8 (plus changed plans) in the "
-        "fast tier; full sweep with --runslow or SPARK_GRAFT_FULL_TESTS=1"
+        "fast tier; full sweep with SPARK_GRAFT_FULL_TESTS=1"
     )
     from __spark_entry__ import plan_changed_keys
 
@@ -89,7 +80,7 @@ def pytest_collection_modifyitems(config, items):
         if item.nodeid in manifest or fname in _SLOW_FILES:
             item.add_marker(skip_slow)
             continue
-        if fname in _SAMPLED_SWEEP_FILES:
+        if fname == _SAMPLED_SWEEP_FILE:
             m = re.search(r"\[(.+)\]$", item.name)
             key = m.group(1) if m else None
             if key and key not in changed and zlib.crc32(key.encode()) % 8:

@@ -12,7 +12,10 @@ from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.operators import dedup as dd
 from gcp_de_data_pipeline_cc_spark.operators import multimodal as mm
 from gcp_de_data_pipeline_cc_spark.operators import similarity as sim
-from gcp_de_data_pipeline_cc_spark.operators.similarity import cosine_topk, cosine_topk_lsh
+from gcp_de_data_pipeline_cc_spark.operators.similarity import (
+    cosine_topk,
+    cosine_topk_lsh_portable,
+)
 from tests.conftest import SF_DIR
 
 
@@ -103,7 +106,9 @@ def test_lsh_topk_recall_on_clustered_vectors(spark):
     # exact top-1 of each twin must be its base vector
     assert all(exact1[1000 + i] == i for i in range(n))
 
-    approx = cosine_topk_lsh(queries, df, k=1, n_tables=8, bits=4, dim=dim)
+    approx = cosine_topk_lsh_portable(
+        queries, df, k=1, n_tables=8, bits=4, dim=dim
+    )
     approx1 = {r.query_id: r.neighbor_id for r in approx.collect()}
     hits = sum(approx1.get(1000 + i) == i for i in range(n))
     assert hits / n >= 0.8, f"LSH top-1 recall {hits / n:.2f}"
@@ -276,7 +281,9 @@ def test_topk_recall_on_clustered_vectors(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = df.filter(F.col("vec_id") % 100 == 0)
     exact = cosine_topk(queries, df, k=5)
-    approx = cosine_topk_lsh(queries, df, k=5, n_tables=8, bits=4, dim=dim)
+    approx = cosine_topk_lsh_portable(
+        queries, df, k=5, n_tables=8, bits=4, dim=dim
+    )
     rec = sim.topk_recall(approx, exact, k=5).collect()
     assert len(rec) == n_clusters
     assert all(r.n_exact == 5 for r in rec)

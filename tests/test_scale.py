@@ -14,7 +14,10 @@ from gcp_de_data_pipeline_cc_spark.operators.scale import (
     salted_join,
     write_bucketed,
 )
-from gcp_de_data_pipeline_cc_spark.operators.similarity import cosine_topk, ivf_topk
+from gcp_de_data_pipeline_cc_spark.operators.similarity import (
+    cosine_topk,
+    ivf_topk_portable,
+)
 from tests.conftest import SF_DIR
 
 
@@ -71,7 +74,7 @@ def test_ivf_recall_on_clustered_vectors(spark):
     }
     approx = {
         (r.query_id, r.rank): r.neighbor_id
-        for r in ivf_topk(queries, df, k=5, nprobe=2).collect()
+        for r in ivf_topk_portable(queries, df, k=5, nprobe=2).collect()
     }
     hits = sum(approx.get(key) == nid for key, nid in exact.items())
     recall = hits / len(exact)

@@ -4,9 +4,14 @@ category-by-category. Catches silent engine-type divergences (DuckDB
 SUM(int)→HUGEINT, RANK()→BIGINT vs Spark int) that a value-tolerant
 comparison hides but a strict driver-side schema/hash check would flag.
 
-Declared types (Spark `df.schema`, DuckDB `rel.types`) are compared —
-not pandas dtypes, which mangle both engines' DATE into different
+Declared types (Spark schema, DuckDB `rel.types`) are compared — not
+pandas dtypes, which mangle both engines' DATE into different
 representations.
+
+A key's Spark schema is the one the committed plan manifest recorded
+(tools/plan_manifest.py; its heavy-tier freshness test rebuilds every
+plan), so only the side-effecting keys the manifest skips are built
+here, and a build error fails the test.
 """
 
 from __future__ import annotations
@@ -17,8 +22,12 @@ import pytest
 
 from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 from tests.conftest import SF_DIR
+from tools.plan_manifest import load, output_schema
 
 ORACLE_KEYS = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
+
+_MANIFEST = load()
+_BUILT: dict[str, list[list[str]]] = {}
 
 _SPARK_CATEGORY = {
     "tinyint": "int8",
@@ -66,11 +75,19 @@ def _duck_cat(decl: str) -> str:
     return _DUCK_CATEGORY.get(decl, decl)
 
 
+def _output_schema(spark, name: str) -> list[list[str]]:
+    """``[column, simpleString type]`` pairs of a key's output."""
+    if name in _MANIFEST:
+        return _MANIFEST[name]["schema"]
+    if name not in _BUILT:
+        _BUILT[name] = output_schema(REGISTRY[name].spark(spark, SF_DIR))
+    return _BUILT[name]
+
+
 @pytest.mark.parametrize("name", ORACLE_KEYS)
 def test_declared_types_match(spark, duck, name):
     spec = REGISTRY[name]
-    sdf = spec.spark(spark, SF_DIR)
-    spark_types = {f.name: _spark_cat(f.dataType.simpleString()) for f in sdf.schema}
+    spark_types = {c: _spark_cat(t) for c, t in _output_schema(spark, name)}
     rel = duck.sql(re.sub(r"\s+", " ", spec.oracle))
     duck_types = dict(zip(rel.columns, (_duck_cat(str(t)) for t in rel.types)))
     assert set(spark_types) == set(duck_types), f"{name}: column sets differ"
@@ -86,23 +103,9 @@ def test_all_registered_outputs_are_scalar_typed(spark):
     registered query's output schema must therefore be atomic-typed
     only. Library operators may return arrays; the registered WRAPPER
     serializes them (to_json/concat_ws)."""
-    from pyspark.sql.types import (
-        ArrayType,
-        BinaryType,
-        MapType,
-        StructType,
-    )
-
     offenders = {}
-    for name, spec in sorted(REGISTRY.items()):
-        try:
-            df = spec.spark(spark, SF_DIR)
-        except Exception:
-            continue  # side-effecting builds have dedicated tests
-        for f in df.schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType, StructType,
-                                       BinaryType)):
-                offenders.setdefault(name, []).append(
-                    f"{f.name}: {f.dataType.simpleString()}"
-                )
+    for name in sorted(REGISTRY):
+        for col, typ in _output_schema(spark, name):
+            if typ == "binary" or typ.startswith(("array<", "map<", "struct<")):
+                offenders.setdefault(name, []).append(f"{col}: {typ}")
     assert not offenders, offenders

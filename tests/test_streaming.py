@@ -278,10 +278,20 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
     assert got == want
 
 
+def _one_event_partials(events):
+    """Raw events as the stateful operator's ``(user_id, n, v)`` partials."""
+    return events.select(
+        "user_id", F.lit(1).cast("long").alias("n"), F.col("value").alias("v")
+    )
+
+
 def test_custom_stateful_totals_equal_batch(spark, tmp_path):
     """applyInPandasWithState across two micro-batches must equal the
-    batch aggregate (state genuinely carries across batches)."""
-    from gcp_de_data_pipeline_cc_spark.streaming.stateful import running_user_totals
+    batch aggregate (state genuinely carries across batches); raw events
+    feed the operator as one-event partials."""
+    from gcp_de_data_pipeline_cc_spark.streaming.stateful import (
+        running_user_totals_from_partials,
+    )
 
     raw = spark.read.parquet(f"{SF_DIR}/events.parquet")
     src = str(tmp_path / "src")
@@ -290,7 +300,7 @@ def test_custom_stateful_totals_equal_batch(spark, tmp_path):
     sdf = spark.readStream.schema(raw.schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(src)
-    totals = running_user_totals(sdf.select("user_id", "value"))
+    totals = running_user_totals_from_partials(_one_event_partials(sdf))
     q = (
         totals.writeStream.format("memory")
         .queryName("stateful_test")
@@ -336,68 +346,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert spark.read.parquet(out).count() == 3
 
 
-def test_transform_with_state_totals_match_batch(spark, tmp_path):
-    """transformWithStateInPandas running totals must equal the batch
-    aggregate, like the applyInPandasWithState variant. Capability-gated:
-    the API's state protocol needs google.protobuf, absent from this
-    container — the gate (not this test) is what callers rely on."""
-    from gcp_de_data_pipeline_cc_spark.streaming.stateful import (
-        running_user_totals_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf absent: transformWithState gated off")
-
-    raw = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    src = str(tmp_path / "src_tws")
-    raw.repartition(2).write.parquet(src)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        sdf = spark.readStream.schema(raw.schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(src)
-        totals = running_user_totals_tws(sdf.select("user_id", "value"))
-        q = (
-            totals.writeStream.format("memory")
-            .queryName("tws_test")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    got = {
-        r.user_id: (r.n_events, r.value_sum)
-        for r in spark.table("tws_test")
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("value_sum", "n_events").alias("value_sum"),
-        )
-        .collect()
-    }
-    want = {
-        r.user_id: (r.n, round(r.v, 2))
-        for r in raw.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("v"))
-        .collect()
-    }
-    assert set(got) == set(want)
-    for u in want:
-        assert got[u][0] == want[u][0]
-        assert abs(got[u][1] - want[u][1]) < 0.05
-
-
 def test_custom_stateful_state_store_survives_kill_and_restart(
     spark, tmp_path
 ):
@@ -413,7 +361,7 @@ def test_custom_stateful_state_store_survives_kill_and_restart(
     import time as _t
 
     from gcp_de_data_pipeline_cc_spark.streaming.stateful import (
-        running_user_totals,
+        running_user_totals_from_partials,
     )
 
     src_dir = str(tmp_path / "src")
@@ -441,7 +389,7 @@ def test_custom_stateful_state_store_survives_kill_and_restart(
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         try:
             return (
-                running_user_totals(sdf)
+                running_user_totals_from_partials(_one_event_partials(sdf))
                 .writeStream.foreachBatch(sink)
                 .option("checkpointLocation", ckpt)
                 .outputMode("update")

@@ -20,6 +20,9 @@ For every registry key outside ``SKIP`` the manifest holds one line:
   ``CORRECTNESS_rNN.json`` round + 1.  ``__spark_entry__.queries()``
   puts a key whose ``since`` is past its last official check first in
   line for the driver's sample.
+- ``schema``: the output's ``[column, type]`` pairs (Spark
+  ``simpleString`` types), which tests/test_schema_parity.py checks
+  without building the key.
 
 Every key is built from cold session caches (``catalog.clear()``) at
 ``SF_DIR`` (the sf0.001 warehouse ``entry()`` smoke-runs on) in one
@@ -163,6 +166,10 @@ def census(df) -> dict[str, int]:
     return {k: len(re.findall(pat, plan)) for k, pat in _METRICS.items()}
 
 
+def output_schema(df) -> list[list[str]]:
+    return [[f.name, f.dataType.simpleString()] for f in df.schema]
+
+
 def load() -> dict[str, dict]:
     try:
         with open(MANIFEST) as f:
@@ -191,12 +198,19 @@ def build(committed: dict[str, dict]) -> tuple[dict[str, dict], dict[str, str]]:
             continue
         try:
             df, plans = capture(spark, key)
-            entry = {"fp": fingerprint(plans), "since": next_round, **census(df)}
+            entry = {
+                "fp": fingerprint(plans),
+                "since": next_round,
+                **census(df),
+                "schema": output_schema(df),
+            }
         except Exception as ex:  # noqa: BLE001 — report every key, then fail
             failed[key] = f"{type(ex).__name__}: {ex}"[:200]
             continue
         old = committed.get(key)
-        if old is not None and {**old, "since": 0} == {**entry, "since": 0}:
+        if old is not None and all(
+            old.get(k) == entry[k] for k in ("fp", *_METRICS)
+        ):
             entry["since"] = old["since"]
         entries[key] = entry
     spark.stop()

@@ -11,9 +11,9 @@ by verification need, read from data alone (the ``CORRECTNESS_rNN.json``
 records and the committed ``plan_manifest.json``, no Spark):
 
 1. keys whose most recent official check failed;
-2. keys whose plan changed after their last official check: the
-   manifest's ``since`` round (the first round that could have checked
-   the current plan) is past it;
+2. keys whose plan or oracle changed after their last official check:
+   the manifest's ``since`` round (the first round that could have
+   checked the current plan and oracle) is past it;
 3. keys never checked;
 4. rows-only keys;
 5. verified keys.
@@ -108,7 +108,8 @@ def _plan_manifest() -> dict[str, dict]:
 
 def plan_changed_keys(status: dict[str, tuple[int, int]] | None = None) -> set[str]:
     """Registry keys whose manifest ``since`` round is past their last
-    official check: the driver has not yet seen their current plan."""
+    official check: the driver has not yet seen their current plan or
+    oracle."""
     if status is None:
         status = _prior_verification_status()
     return {

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from gcp_de_data_pipeline_cc_spark.catalog import fixpoint
 from gcp_de_data_pipeline_cc_spark.operators.text import (
     MERSENNE_31,
+    SHINGLES_SQL,
     portable_token_hash,
     shingles_col,
     tokens_col,
@@ -126,6 +127,37 @@ def ngram_jaccard_pairs(
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+def shingle_overlap_sql(src: str = "documents", inter: str = "inter") -> str:
+    """The oracle twin of :func:`ngram_jaccard_pairs`' relations for
+    3-gram shingles of ``src``: the CTE ``sh`` (doc_id, shingle), then
+    :func:`overlap_sql`'s ``cnt`` and ``inter``."""
+    return f"""sh AS (
+        SELECT DISTINCT doc_id, UNNEST({SHINGLES_SQL}) AS shingle
+        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM {src})
+        WHERE len(t) >= 3),
+    {overlap_sql(inter)}"""
+
+
+def overlap_sql(inter: str = "inter") -> str:
+    """The CTEs ``cnt`` (doc_id, n_sh) and ``inter`` (doc_a, doc_b,
+    n_both), doc_a < doc_b, over a ``sh`` (doc_id, shingle) CTE."""
+    return f"""cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+    {inter} AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
+        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2)"""
+
+
+#: the near-duplicate pairs (doc_a, doc_b) at ngram_jaccard_pairs'
+#: default threshold, over :func:`overlap_sql`'s CTEs
+JACCARD_PAIRS_SQL = """
+        SELECT doc_a, doc_b
+        FROM inter
+        JOIN cnt ca ON ca.doc_id = doc_a
+        JOIN cnt cb ON cb.doc_id = doc_b
+        WHERE n_both / (ca.n_sh + cb.n_sh - n_both) >= 0.5"""
 
 
 def _hash_params(num_perms: int, seed: int = 42) -> list[tuple[int, int]]:

@@ -37,6 +37,15 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import fixpoint, load_table, shared
 
+#: the supplier backbone's cut: strongest co-shipment partners kept per
+#: supplier
+SUPPLIER_K = 8
+
+#: the trade backbones' cut: strongest outgoing flows kept per nation (the
+#: raw nation x nation flow matrix is near-complete, distance 1
+#: everywhere; centrality is only informative on the backbone)
+TRADE_K = 3
+
 
 def _pair_col() -> F.Column:
     """All ordered pairs (bs[i-1], x) inside one sorted supplier set —
@@ -54,10 +63,11 @@ def _pair_col() -> F.Column:
 
 
 @shared
-def supplier_backbone(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
+def supplier_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical top-K co-shipment backbone: columns (sa, sb), sa < sb,
     distinct; an edge survives when EITHER endpoint ranks it in its K
-    strongest partners (weight DESC, partner ASC tie-break).
+    strongest partners (weight DESC, partner ASC tie-break), K =
+    :data:`SUPPLIER_K`.
 
     One lineitem scan total per session: per-order supplier sets via
     collect_set, pairs generated inside the sorted array, both edge
@@ -91,19 +101,50 @@ def supplier_backbone(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame
     )
     return (
         d.withColumn("rn", rn)
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= SUPPLIER_K)
         .select(F.least("u", "v").alias("sa"), F.greatest("u", "v").alias("sb"))
         .distinct()
         .localCheckpoint(eager=False)  # ≤K·n rows, shared by the tier
     )
 
 
+def supplier_backbone_sql(
+    bb: str = "bb", d: str = "d", r: str = "r", materialize: bool = False
+) -> str:
+    """The oracle twin of :func:`supplier_backbone`: the CTEs ``pl``,
+    ``e``, ``d``, ``r`` and ``bb`` (sa, sb) at the :data:`SUPPLIER_K`
+    cut.  ``bb``, ``d`` and ``r`` name those CTEs as each consumer's
+    oracle spells them (an oracle's hash covers its text);
+    ``materialize`` marks e, d, r and bb MATERIALIZED for the consumer
+    that reads them once per peeling round."""
+    m = " MATERIALIZED" if materialize else ""
+    return f"""pl AS (
+        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
+    e AS{m} (
+        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
+               CAST(COUNT(*) AS BIGINT) AS w
+        FROM pl a JOIN pl b
+          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+        GROUP BY 1, 2),
+    {d} AS{m} (
+        SELECT sa AS u, sb AS v, w FROM e
+        UNION ALL SELECT sb, sa, w FROM e),
+    {r} AS{m} (
+        SELECT u, v,
+               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
+                   AS rn
+        FROM {d}),
+    {bb} AS{m} (
+        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
+        FROM {r} WHERE rn <= {SUPPLIER_K})"""
+
+
 @shared
-def supplier_graph(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
+def supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both orientations of the supplier backbone: columns (u, v).
     Checkpointed separately — BFS relaxations / k-core peels / wedge
     joins consume it repeatedly."""
-    bb = supplier_backbone(spark, sf_dir, k)
+    bb = supplier_backbone(spark, sf_dir)
     return (
         bb.select(
             F.explode(
@@ -116,6 +157,16 @@ def supplier_graph(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
         .select(F.col("o.u").alias("u"), F.col("o.v").alias("v"))
         .localCheckpoint(eager=False)
     )
+
+
+def supplier_graph_sql() -> str:
+    """The oracle twin of :func:`supplier_graph`: the
+    :func:`supplier_backbone_sql` CTEs and ``g`` (u, v), both
+    orientations of ``bb``."""
+    return f"""{supplier_backbone_sql()},
+    g AS (
+        SELECT sa AS u, sb AS v FROM bb
+        UNION ALL SELECT sb, sa FROM bb)"""
 
 
 @shared
@@ -183,20 +234,51 @@ def lpa_labels(
     return ls
 
 
+def lpa_labels_sql() -> str:
+    """The oracle twin of :func:`lpa_labels` with two rounds: the CTEs
+    ``tx``, ``eup``, ``e`` (v, u, w), both orientations, and the label
+    tables ``l0``, ``l1``, ``l2`` (v, label)."""
+    rounds = "".join(
+        f""",
+    s{i} AS (
+        SELECT e.v, l{i - 1}.label, SUM(e.w) AS tw
+        FROM e JOIN l{i - 1} ON l{i - 1}.v = e.u
+        GROUP BY 1, 2),
+    l{i} AS (
+        SELECT v, label FROM (
+            SELECT v, label,
+                   row_number() OVER (PARTITION BY v
+                                      ORDER BY tw DESC, label) AS rn
+            FROM s{i}) WHERE rn = 1)"""
+        for i in (1, 2)
+    )
+    return f"""tx AS (
+        SELECT DISTINCT l.l_orderkey, p.p_brand
+        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
+    eup AS (
+        SELECT a.p_brand AS v, b.p_brand AS u, CAST(COUNT(*) AS BIGINT) AS w
+        FROM tx a JOIN tx b
+          ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
+        GROUP BY 1, 2),
+    e AS (
+        SELECT v, u, w FROM eup
+        UNION ALL
+        SELECT u AS v, v AS u, w FROM eup),
+    l0 AS (SELECT DISTINCT v, v AS label FROM e){rounds}"""
+
+
 @shared
-def trade_sparse_graph(
-    spark: SparkSession, sf_dir: str, k: int = 3
-) -> DataFrame:
+def trade_sparse_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparsified undirected nation trade graph, columns (u, v):
-    :func:`trade_sparse_digraph`'s top-``k`` flows per source nation,
+    :func:`trade_sparse_digraph`'s top-:data:`TRADE_K` flows per source nation,
     symmetrized.  The raw flow matrix is near-complete — distance-1
     everywhere — so the centrality keys (closeness, betweenness) are
     only informative on this backbone.  It reuses the digraph's one fact
-    pass per session; the result is a checkpointed <= 2·k·|nations|-row
+    pass per session; the result is a checkpointed <= 2·TRADE_K·|nations|-row
     relation shared by every consumer (the supplier_backbone ownership
     contract)."""
     kept = (
-        trade_sparse_digraph(spark, sf_dir, k)
+        trade_sparse_digraph(spark, sf_dir)
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
@@ -218,11 +300,9 @@ def trade_sparse_graph(
 
 
 @shared
-def trade_sparse_digraph(
-    spark: SparkSession, sf_dir: str, k: int = 3
-) -> DataFrame:
+def trade_sparse_digraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed sparsified nation trade digraph, columns (src, dst):
-    keep each source nation's ``k`` strongest outgoing trade flows
+    keep each source nation's :data:`TRADE_K` strongest outgoing trade flows
     (weight = lineitems shipped customer-nation -> supplier-nation,
     self-flows dropped, rank ties on partner key), WITHOUT the
     symmetrization :func:`trade_sparse_graph` adds — direction is the
@@ -255,16 +335,58 @@ def trade_sparse_digraph(
     )
     return (
         e.withColumn("rn", rn)
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= TRADE_K)
         .select("src", "dst")
         .localCheckpoint(eager=False)
     )
 
 
+#: the nation trade flows (src, dst, w) both trade backbones cut
+_TRADE_FLOW_SQL = """
+        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+               CAST(COUNT(*) AS BIGINT) AS w
+        FROM lineitem l
+        JOIN orders o ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        WHERE c.c_nationkey <> s.s_nationkey
+        GROUP BY 1, 2"""
+
+
+def trade_graph_sql(materialize_g: bool = False) -> str:
+    """The oracle twin of :func:`trade_sparse_graph`: the CTEs ``e``
+    (flows), ``r``, ``kept`` (a, b), a < b, at the :data:`TRADE_K` cut,
+    and ``g`` (u, v), both orientations; ``materialize_g`` marks ``g``
+    MATERIALIZED."""
+    m = " MATERIALIZED" if materialize_g else ""
+    return f"""e AS ({_TRADE_FLOW_SQL}),
+    r AS (
+        SELECT src, dst,
+               ROW_NUMBER() OVER (PARTITION BY src
+                                  ORDER BY w DESC, dst) AS rn
+        FROM e),
+    kept AS (
+        SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
+        FROM r WHERE rn <= {TRADE_K}),
+    g AS{m} (
+        SELECT a AS u, b AS v FROM kept
+        UNION ALL SELECT b, a FROM kept)"""
+
+
+def trade_digraph_sql() -> str:
+    """The oracle twin of :func:`trade_sparse_digraph`: one CTE ``e``
+    (src, dst) at the :data:`TRADE_K` cut."""
+    return f"""e AS (
+        SELECT src, dst FROM (
+            SELECT src, dst,
+                   ROW_NUMBER() OVER (PARTITION BY src
+                                      ORDER BY w DESC, dst) AS rn
+            FROM ({_TRADE_FLOW_SQL}))
+        WHERE rn <= {TRADE_K})"""
+
+
 @shared
-def scc_labels(
-    spark: SparkSession, sf_dir: str, k: int = 3, rounds: int = 5
-) -> DataFrame:
+def scc_labels(spark: SparkSession, sf_dir: str, rounds: int = 5) -> DataFrame:
     """Strongly-connected-component labels (u, scc_id) over
     :func:`trade_sparse_digraph`: transitive closure by ``rounds``
     squaring steps over R0 = I ∪ E (paths ≤ 2^rounds cover the nation
@@ -272,7 +394,7 @@ def scc_labels(
     checkpointed — graph_scc and graph_condensation share ONE closure
     build (the supplier_backbone ownership contract)."""
     nation = load_table(spark, sf_dir, "nation")
-    g = trade_sparse_digraph(spark, sf_dir, k)
+    g = trade_sparse_digraph(spark, sf_dir)
     reach = (
         nation.select(
             F.col("n_nationkey").alias("u"),

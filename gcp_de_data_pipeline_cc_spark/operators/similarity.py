@@ -200,6 +200,20 @@ def topk_recall(
     )
 
 
+#: the oracle twin of ``topk_recall(approx, exact, 10)`` over an oracle's
+#: ``exact_top`` (query_id, neighbor_id) and ``hits`` (query_id, n_hit)
+#: CTEs: the CTE ``tot`` and the recall rows
+SQL_TOPK_RECALL = """tot AS (
+        SELECT query_id, CAST(COUNT(*) AS INT) AS n_exact
+        FROM exact_top GROUP BY 1)
+    SELECT t.query_id, CAST(10 AS INT) AS k, t.n_exact,
+           CAST(COALESCE(h.n_hit, 0) AS INT) AS n_hit,
+           FLOOR(COALESCE(h.n_hit, 0) / t.n_exact * 10000.0 + 0.5)
+               / 10000.0 AS recall
+    FROM tot t LEFT JOIN hits h USING (query_id)
+    ORDER BY t.query_id"""
+
+
 # ---------------------------------------------------------------------------
 # portable (engine-exact) integer LSH
 # ---------------------------------------------------------------------------
@@ -356,6 +370,32 @@ def cosine_topk_lsh_portable(
         .select("query_id", "neighbor_id", cos.alias("cos_raw"))
     )
     return _rank_topk(scored, k)
+
+
+#: the DuckDB twin of :func:`quantized_int_vectors` beside the double
+#: vectors: the CTE ``e`` (vec_id, label, v, qi)
+SQL_QUANTIZED_VECTORS = """e AS (
+        SELECT vec_id, label, embedding::DOUBLE[] AS v,
+               list_transform(embedding,
+                   x -> FLOOR(CAST(x AS DOUBLE) * 8192.0 + 0.5)) AS qi
+        FROM embeddings)"""
+
+#: the cosine of two DuckDB double lists ``{a}`` and ``{b}`` (a
+#: ``str.format`` template)
+SQL_COSINE = (
+    "list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}))"
+    " / sqrt(list_dot_product({b}, {b}))"
+)
+
+
+def sql_ivf_centroids(src: str = "e") -> str:
+    """The DuckDB twin of :func:`ivf_centroids_portable` over the ``qi``
+    vectors of ``src``: the CTEs ``pp`` and ``cents`` (label, cvec)."""
+    return f"""pp AS (
+        SELECT label, i AS pos, SUM(qi[i]) AS s
+        FROM {src}, UNNEST(range(1, len(qi) + 1)) AS t(i)
+        GROUP BY 1, 2),
+    cents AS (SELECT label, list(s ORDER BY pos) AS cvec FROM pp GROUP BY 1)"""
 
 
 def ivf_centroids_portable(vectors: DataFrame) -> DataFrame:

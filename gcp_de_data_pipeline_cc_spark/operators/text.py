@@ -44,6 +44,13 @@ def shingles_col(toks: Column, k: int = 3) -> Column:
     )
 
 
+#: the DuckDB twin of ``shingles_col(t, 3)`` over a token list ``t``
+SHINGLES_SQL = (
+    "list_transform(range(1, len(t) - 1), "
+    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])"
+)
+
+
 def quality_columns(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring signals: type-token ratio, stopword ratio, average
     token length, and a composite score — the standard cheap pre-filters

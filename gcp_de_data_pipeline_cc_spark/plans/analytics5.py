@@ -36,9 +36,11 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
+from gcp_de_data_pipeline_cc_spark.functions.uniform import u48
 from gcp_de_data_pipeline_cc_spark.operators.graph import (
     supplier_backbone,
     supplier_graph,
+    supplier_graph_sql,
 )
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
@@ -133,34 +135,12 @@ def ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_adamic_adar
 # ---------------------------------------------------------------------------
 
-_AA_K = 8     # same backbone cut as graph_link_prediction
 _AA_TOP = 20
 
 
 def _adamic_adar_oracle() -> str:
     return f"""
-    WITH pl AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    e AS (
-        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM pl a JOIN pl b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-        GROUP BY 1, 2),
-    d AS (
-        SELECT sa AS u, sb AS v, w FROM e
-        UNION ALL SELECT sb, sa, w FROM e),
-    r AS (
-        SELECT u, v,
-               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
-                   AS rn
-        FROM d),
-    bb AS (
-        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM r WHERE rn <= {_AA_K}),
-    g AS (
-        SELECT sa AS u, sb AS v FROM bb
-        UNION ALL SELECT sb, sa FROM bb),
+    WITH {supplier_graph_sql()},
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM g GROUP BY u),
     wedge AS (
         SELECT g1.u AS a, g2.v AS b, g1.v AS z
@@ -204,8 +184,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤K·n session-cached backbone (fan-out K² per node, never
     all-pairs); degrees ride a broadcast; top-{top} is
     TakeOrderedAndProject."""
-    bb = supplier_backbone(spark, sf_dir, _AA_K)
-    g = supplier_graph(spark, sf_dir, _AA_K)
+    bb = supplier_backbone(spark, sf_dir)
+    g = supplier_graph(spark, sf_dir)
     deg = g.groupBy("u").agg(F.count("*").cast("long").alias("deg"))
     g1, g2 = g.alias("g1"), g.alias("g2")
     wedge = g1.join(
@@ -707,10 +687,10 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from gcp_de_data_pipeline_cc_spark.operators.graph import (  # noqa: E402
+    trade_graph_sql,
     trade_sparse_graph,
 )
 
-_BR_K = 3    # same sparsifying cut as articulation / closeness
 _BR_H = 24   # min-label rounds ≥ any 25-node diameter (path = 24)
 
 
@@ -727,26 +707,7 @@ def _bridges_oracle() -> str:
               ON ge.chain = p.chain AND ge.u = p.v)
         GROUP BY chain, v)""")
     return f"""
-    WITH e AS (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY 1, 2),
-    r AS (
-        SELECT src, dst,
-               ROW_NUMBER() OVER (PARTITION BY src
-                                  ORDER BY w DESC, dst) AS rn
-        FROM e),
-    kept AS (
-        SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM r WHERE rn <= {_BR_K}),
-    g AS (
-        SELECT a AS u, b AS v FROM kept
-        UNION ALL SELECT b, a FROM kept),
+    WITH {trade_graph_sql()},
     nodes AS (SELECT DISTINCT u AS v FROM g),
     chains AS (
         SELECT CAST(-1 AS BIGINT) AS chain
@@ -852,7 +813,7 @@ def graph_bridges_tarjan(spark: SparkSession, sf_dir: str) -> DataFrame:
     below-cutoff strategy graph_articulation_tarjan states); the
     relational per-edge sweep is the wide-graph fallback exactly as
     for articulation."""
-    g = trade_sparse_graph(spark, sf_dir, _BR_K)
+    g = trade_sparse_graph(spark, sf_dir)
     return (
         g.groupBy(F.lit(1).alias("grp"))
         .applyInPandas(
@@ -927,16 +888,7 @@ def privacy_dp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ranking are category-cardinality scalar math."""
     docs = load_table(spark, sf_dir, "documents")
     g = docs.groupBy("source").agg(F.count("*").alias("true_count"))
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dptopk:"), F.col("source"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(281474976710656.0)
+    u = u48("dptopk", F.col("source"))
     b = F.lit(float(_DPT_K) * _DPT_EPS_DEN / _DPT_EPS_NUM)
     noise = (
         -b

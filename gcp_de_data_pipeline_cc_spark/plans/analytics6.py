@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
+from gcp_de_data_pipeline_cc_spark.functions.uniform import sql_u48, u48
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 # ---------------------------------------------------------------------------
@@ -434,36 +435,11 @@ def eval_wer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # eval_brier_decomposition
 # ---------------------------------------------------------------------------
 
-#: same planted eval log as eval_calibration_ece (salts c/z), binned to
-#: 10 bins with MIDPOINT forecasts so the Murphy identity is EXACT
-_BRIER_U48_SQL = (
-    "(CAST(CAST('0x' || SUBSTR(md5('{salt}:' || CAST(o_orderkey AS VARCHAR)),"
-    " 1, 12) AS BIGINT) AS DOUBLE) + 0.5) / 281474976710656.0"
-)
-
-
-def _brier_u48(salt: str) -> F.Column:
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"{salt}:"), F.col("o_orderkey").cast("string")
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(281474976710656.0)
-
-
 def _brier_oracle() -> str:
-    u1 = _BRIER_U48_SQL.format(salt="c")
-    u2 = _BRIER_U48_SQL.format(salt="z")
+    # the planted eval log of eval_calibration_ece (salts c/z), binned to
+    # 10 bins with MIDPOINT forecasts so the Murphy identity is EXACT
+    u1 = sql_u48("c")
+    u2 = sql_u48("z")
     return f"""
     WITH log AS (
         SELECT LEAST(CAST(FLOOR((0.05e0 + 0.9e0 * ({u1})) * 10000.0e0
@@ -534,8 +510,8 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one map-side-combined 10-group aggregate plus a one-row
     broadcast — the eval_calibration_ece cost class exactly."""
     orders = load_table(spark, sf_dir, "orders")
-    u1 = _brier_u48("c")
-    u2 = _brier_u48("z")
+    u1 = u48("c")
+    u2 = u48("z")
     conf = F.lit(0.05) + F.lit(0.9) * u1
     c_int = F.floor(conf * F.lit(10000.0) + F.lit(0.5)).cast("long")
     o = (u2 < F.greatest(conf - F.lit(0.08), F.lit(0.0))).cast("int")
@@ -634,19 +610,15 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # eval_auc_pr
 # ---------------------------------------------------------------------------
 
-#: shared eval-log derivation with eval_auc_roc (salt "s", md5 label
-#: coin at ~30% prevalence) so ROC-AUC and PR-AUC read the same model
-_PR_U48_SQL = (
-    "(CAST(CAST('0x' || SUBSTR(md5('s:' || CAST(o_orderkey AS VARCHAR)),"
-    " 1, 12) AS BIGINT) AS DOUBLE) + 0.5) / 281474976710656.0"
-)
+#: the md5 label coin (~30% prevalence) of eval_auc_roc, which also
+#: shares its salt-"s" score draw, so ROC-AUC and PR-AUC read one model
 _PR_POS_SQL = "SUBSTR(md5('y:' || CAST(o_orderkey AS VARCHAR)), 1, 2) < '4d'"
 
 
 def _auc_pr_oracle() -> str:
     return f"""
     WITH scored AS (
-        SELECT FLOOR((0.6e0 * ({_PR_U48_SQL}) +
+        SELECT FLOOR((0.6e0 * ({sql_u48("s")}) +
                       CASE WHEN {_PR_POS_SQL} THEN 0.4e0 ELSE 0.0e0 END)
                      * 1000000.0e0 + 0.5e0) / 1000000.0e0 AS score,
                CASE WHEN {_PR_POS_SQL} THEN 1 ELSE 0 END AS pos
@@ -705,7 +677,7 @@ def eval_auc_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 
     orders = load_table(spark, sf_dir, "orders")
-    u = _brier_u48("s")
+    u = u48("s")
     pos = F.substring(
         F.md5(F.concat(F.lit("y:"), F.col("o_orderkey").cast("string"))),
         1,

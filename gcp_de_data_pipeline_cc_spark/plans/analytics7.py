@@ -35,32 +35,16 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import fixpoint, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
+from gcp_de_data_pipeline_cc_spark.operators.graph import (
+    supplier_backbone,
+    supplier_backbone_sql,
+)
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
-#: the supplier co-shipment kNN backbone CTE — same construction as
-#: operators/graph.supplier_backbone (and the graph_triangles oracle,
-#: plans/graph.py:136): top-K strongest partners per node, K = 8
-_BB_K = 8
+#: the supplier co-shipment kNN backbone CTEs (operators/graph
+#: .supplier_backbone's oracle twin)
 _BB_SQL = f"""
-    pl AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    e AS (
-        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM pl a JOIN pl b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-        GROUP BY 1, 2),
-    dd AS (
-        SELECT sa AS u, sb AS v, w FROM e
-        UNION ALL SELECT sb, sa, w FROM e),
-    r AS (
-        SELECT u, v,
-               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
-                   AS rn
-        FROM dd),
-    bb AS (
-        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM r WHERE rn <= {_BB_K})
+    {supplier_backbone_sql(d="dd")}
 """
 
 
@@ -119,9 +103,7 @@ def graph_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: K sparse propagation rounds over a ≤2K·|V| edge list —
     the graph_pagerank cost class (one shuffle per round, no
     all-pairs anywhere)."""
-    from gcp_de_data_pipeline_cc_spark.operators.graph import supplier_backbone
-
-    bb = supplier_backbone(spark, sf_dir, k=_BB_K)
+    bb = supplier_backbone(spark, sf_dir)
     und = bb.select(
         F.col("sa").alias("u"), F.col("sb").alias("v")
     ).unionAll(bb.select(F.col("sb").alias("u"), F.col("sa").alias("v")))
@@ -207,9 +189,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the a<b<c ordered triangle join touches each backbone
     wedge once; the backbone's top-K cut bounds wedges by K²·|V| —
     linear in nodes, never quadratic in suppliers."""
-    from gcp_de_data_pipeline_cc_spark.operators.graph import supplier_backbone
-
-    bb = supplier_backbone(spark, sf_dir, k=_BB_K)
+    bb = supplier_backbone(spark, sf_dir)
     bb = bb.localCheckpoint(eager=False)  # three join sides + degrees
     e1, e2, e3 = bb.alias("e1"), bb.alias("e2"), bb.alias("e3")
     tri = (

@@ -33,6 +33,11 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
+from gcp_de_data_pipeline_cc_spark.operators.graph import (
+    supplier_backbone,
+    supplier_backbone_sql,
+    supplier_graph,
+)
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 # ---------------------------------------------------------------------------
@@ -147,29 +152,10 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_link_scores
 # ---------------------------------------------------------------------------
 
-_LS_K = 8
 _LS_TOP = 30
 
 _LS_BB_SQL = f"""
-    pl AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    e AS (
-        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM pl a JOIN pl b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-        GROUP BY 1, 2),
-    dd AS (
-        SELECT sa AS u, sb AS v, w FROM e
-        UNION ALL SELECT sb, sa, w FROM e),
-    rr AS (
-        SELECT u, v,
-               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
-                   AS rn
-        FROM dd),
-    bb AS (
-        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM rr WHERE rn <= {_LS_K}),
+    {supplier_backbone_sql(d="dd", r="rr")},
     und AS (
         SELECT sa AS u, sb AS v FROM bb
         UNION ALL SELECT sb, sa FROM bb),
@@ -225,13 +211,8 @@ def graph_link_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the same ≤K² fan-out wedge join as the sibling keys over
     the session-cached backbone; degrees broadcast; top-30 is
     TakeOrderedAndProject."""
-    from gcp_de_data_pipeline_cc_spark.operators.graph import (
-        supplier_backbone,
-        supplier_graph,
-    )
-
-    bb = supplier_backbone(spark, sf_dir, _LS_K)
-    und = supplier_graph(spark, sf_dir, _LS_K)
+    bb = supplier_backbone(spark, sf_dir)
+    und = supplier_graph(spark, sf_dir)
     deg = und.groupBy("u").agg(F.count("*").cast("long").alias("deg"))
     a, b = und.alias("a"), und.alias("b")
     wedge = a.join(

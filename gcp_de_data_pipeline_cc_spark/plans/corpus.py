@@ -16,6 +16,7 @@ from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn
 from gcp_de_data_pipeline_cc_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    shingle_overlap_sql,
 )
 from gcp_de_data_pipeline_cc_spark.operators.text import tokens_col
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
@@ -86,19 +87,7 @@ def curate_corpus(
         SELECT * FROM q
         WHERE dr >= {MIN_DISTINCT_RATIO} AND n_tokens >= {MIN_TOKENS}
     ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               UNNEST(list_transform(range(1, len(t) - 1),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM quality_pass)
-        WHERE len(t) >= 3
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    {shingle_overlap_sql(src="quality_pass", inter="pairs")},
     dropped AS (
         SELECT DISTINCT doc_b FROM pairs
         JOIN cnt ca ON ca.doc_id = doc_a

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from gcp_de_data_pipeline_cc_spark.catalog import load_table, shared
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators import text as tx
+from gcp_de_data_pipeline_cc_spark.operators.dedup import overlap_sql
+from gcp_de_data_pipeline_cc_spark.operators.text import SHINGLES_SQL
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 
@@ -216,19 +218,13 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_containment",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
         SELECT DISTINCT doc_id, UNNEST(
-            list_transform(range(1, len(t) - 1),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-            AS shingle
+            {SHINGLES_SQL}) AS shingle
         FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
         WHERE len(t) >= 3),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
+    {overlap_sql()}
     SELECT doc_a, doc_b, CAST(n_both AS BIGINT) AS n_both,
            FLOOR(n_both * 1.0e0 / ca.n_sh * 1000000.0e0 + 0.5e0)
                / 1000000.0e0 AS cont_a_in_b,
@@ -290,12 +286,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "inverted_index",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
         SELECT DISTINCT doc_id, UNNEST(
-            list_transform(range(1, len(t) - 1),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-            AS term
+            {SHINGLES_SQL}) AS term
         FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
         WHERE len(t) >= 3)
     SELECT term,

@@ -41,6 +41,11 @@ from pyspark.sql import functions as F
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators import text as tx
+from gcp_de_data_pipeline_cc_spark.operators.dedup import (
+    JACCARD_PAIRS_SQL,
+    shingle_overlap_sql,
+)
+from gcp_de_data_pipeline_cc_spark.operators.text import SHINGLES_SQL
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 #: non-overlapping block width (tokens) for the line-rewrite pass — the
@@ -629,8 +634,7 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sh AS (
         SELECT DISTINCT doc_id,
-               UNNEST(list_transform(range(1, len(t) - 1),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
+               UNNEST({SHINGLES_SQL})
                    AS shingle
         FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
         WHERE len(t) >= 3),
@@ -686,24 +690,8 @@ def corpus_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "source_mirror_matrix",
     oracle=f"""
-    WITH sh AS (
-        SELECT DISTINCT doc_id,
-               UNNEST(list_transform(range(1, len(t) - 1),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                   AS shingle
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        WHERE len(t) >= 3),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-    pairs AS (
-        SELECT doc_a, doc_b
-        FROM inter
-        JOIN cnt ca ON ca.doc_id = doc_a
-        JOIN cnt cb ON cb.doc_id = doc_b
-        WHERE n_both / (ca.n_sh + cb.n_sh - n_both) >= 0.5),
+    WITH {shingle_overlap_sql()},
+    pairs AS ({JACCARD_PAIRS_SQL}),
     tagged AS (
         SELECT LEAST(da.source, db.source) AS source_a,
                GREATEST(da.source, db.source) AS source_b,

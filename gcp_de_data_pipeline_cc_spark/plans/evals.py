@@ -20,36 +20,13 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import fixpoint, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn
+from gcp_de_data_pipeline_cc_spark.functions.uniform import sql_u48, u48
 from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 # --------------------------------------------------------------------------
 # shared deterministic eval-log derivation
 # --------------------------------------------------------------------------
-
-#: 48-bit dyadic-rational uniform from a salted md5 of the example key —
-#: the privacy_dp_count derivation (identical string->int path on both
-#: engines); (hex48 + 0.5) / 2^48
-_U48_SQL = (
-    "(CAST(CAST('0x' || SUBSTR(md5('{salt}:' || CAST(o_orderkey AS VARCHAR)),"
-    " 1, 12) AS BIGINT) AS DOUBLE) + 0.5) / 281474976710656.0"
-)
-
-
-def _u48(salt: str) -> F.Column:
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{salt}:"), F.col("o_orderkey").cast("string"))),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(281474976710656.0)
-
 
 #: positive-label md5-prefix coin: first hex byte < 0x4d (~30% positives)
 _POS_SQL = "SUBSTR(md5('y:' || CAST(o_orderkey AS VARCHAR)), 1, 2) < '4d'"
@@ -70,7 +47,7 @@ def _pos() -> F.Column:
 
 
 def _auc_oracle() -> str:
-    u = _U48_SQL.format(salt="s")
+    u = sql_u48("s")
     return f"""
     WITH scored AS (
         SELECT FLOOR((0.6e0 * ({u}) +
@@ -159,7 +136,7 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     pos = _pos()
     score = roundn(
-        F.lit(0.6) * _u48("s") + F.when(pos, F.lit(0.4)).otherwise(F.lit(0.0)), 6
+        F.lit(0.6) * u48("s") + F.when(pos, F.lit(0.4)).otherwise(F.lit(0.0)), 6
     )
     scored = orders.select(
         score.alias("score"), pos.cast("int").alias("pos")
@@ -253,8 +230,8 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ece_oracle() -> str:
-    u1 = _U48_SQL.format(salt="c")
-    u2 = _U48_SQL.format(salt="z")
+    u1 = sql_u48("c")
+    u2 = sql_u48("z")
     return f"""
     WITH log AS (
         SELECT CAST(FLOOR((0.05e0 + 0.9e0 * ({u1})) * 10000.0e0 + 0.5e0)
@@ -313,8 +290,8 @@ def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the totals — no windows, no shuffle beyond the
     10-key exchange; the eval-log derivation is projection-side."""
     orders = load_table(spark, sf_dir, "orders")
-    u1 = _u48("c")
-    u2 = _u48("z")
+    u1 = u48("c")
+    u2 = u48("z")
     conf = F.lit(0.05) + F.lit(0.9) * u1
     c_int = F.floor(conf * F.lit(10000.0) + F.lit(0.5)).cast("long")
     correct = (
@@ -537,7 +514,7 @@ _BT_Q = 1_000_000_000
 
 def _bt_oracle() -> str:
     m, q = _BT_M, _BT_Q
-    u = _U48_SQL.format(salt="m")
+    u = sql_u48("m")
 
     def it(cur: str, nxt: str) -> str:
         # MM step: pi'_i = W_i / sum_j n_ij/(pi_i + pi_j), renormalized
@@ -634,7 +611,7 @@ def eval_elo_bt(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     a = (F.col("o_orderkey") % m).cast("long")
     b = (F.expr(f"o_orderkey DIV {m}") % m).cast("long")
-    u = _u48("m")
+    u = u48("m")
     match = (
         orders.where(a != b)
         .select(

@@ -17,6 +17,7 @@ from contextlib import contextmanager
 from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
+from gcp_de_data_pipeline_cc_spark.streaming import await_drained
 from gcp_de_data_pipeline_cc_spark.streaming.windows import (
     session_windows,
     sliding_counts,
@@ -196,7 +197,7 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_drained(q)
     # update mode appends one row per touched key per batch; the running
     # total is the LATEST row per user = the one with the highest event
     # count (monotone), not independent column maxima (value_sum can
@@ -250,7 +251,7 @@ def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_drained(q)
     return spark.table(name)
 
 
@@ -371,7 +372,7 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_drained(q)
 
     agg = spark.table(name).select(
         F.col("win.start").alias("day_start"), "event_type", "n_events"
@@ -493,7 +494,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_drained(q)
     return spark.table(name)
 
 
@@ -528,7 +529,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = scratch_dir("stream_enrich")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     raw.repartition(3).write.mode("overwrite").parquet(tmp)
-    schema = spark.read.parquet(tmp).schema
 
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("segment"), "c_nationkey"
@@ -537,7 +537,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey"), F.col("n_name").alias("nation")
     )
     sdf = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(tmp)
         .select("event_id", "user_id")
@@ -553,7 +553,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_drained(q)
     result = spark.table(name).localCheckpoint()
     shutil.rmtree(tmp, ignore_errors=True)
     return result
@@ -644,7 +644,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_drained(q)
     result = (
         spark.read.parquet(target)
         .select("user_id", "event_id", "ts", "event_type", "value")

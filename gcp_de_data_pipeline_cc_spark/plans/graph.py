@@ -18,11 +18,20 @@ from pyspark.sql import functions as F
 from gcp_de_data_pipeline_cc_spark.catalog import fixpoint, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators.graph import (
-    trade_sparse_graph,
+    SUPPLIER_K,
+    TRADE_K,
     brand_copurchase_edges,
     lpa_labels,
+    lpa_labels_sql,
+    scc_labels,
     supplier_backbone,
+    supplier_backbone_sql,
     supplier_graph,
+    supplier_graph_sql,
+    trade_digraph_sql,
+    trade_graph_sql,
+    trade_sparse_digraph,
+    trade_sparse_graph,
 )
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
@@ -128,31 +137,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("node", roundn(F.col("rank"), 6).alias("rank"))
 
 
-_TRI_K = 8  # kNN backbone: strongest partners kept per node
-
-
 @query(
     "graph_triangles",
     oracle=f"""
-    WITH pl AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    e AS (
-        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM pl a JOIN pl b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-        GROUP BY 1, 2),
-    d AS (
-        SELECT sa AS u, sb AS v, w FROM e
-        UNION ALL SELECT sb, sa, w FROM e),
-    r AS (
-        SELECT u, v,
-               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
-                   AS rn
-        FROM d),
-    bb AS (
-        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM r WHERE rn <= {_TRI_K}),
+    WITH {supplier_backbone_sql()},
     tri AS (
         SELECT e1.sa AS a, e1.sb AS b, e2.sb AS c
         FROM bb e1
@@ -197,7 +185,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumeration joins broadcast the checkpointed backbone so the wedge
     set is probed map-side; orientation sa<sb yields each triangle
     exactly once."""
-    bb = supplier_backbone(spark, sf_dir, _TRI_K)
+    bb = supplier_backbone(spark, sf_dir)
     e1, e2, e3 = bb.alias("e1"), bb.alias("e2"), bb.alias("e3")
     tri = (
         e1.join(F.broadcast(e2), F.col("e1.sb") == F.col("e2.sa"))
@@ -227,40 +215,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _lpa_oracle() -> str:
-    return """
-    WITH tx AS (
-        SELECT DISTINCT l.l_orderkey, p.p_brand
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    eup AS (
-        SELECT a.p_brand AS v, b.p_brand AS u, CAST(COUNT(*) AS BIGINT) AS w
-        FROM tx a JOIN tx b
-          ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-        GROUP BY 1, 2),
-    e AS (
-        SELECT v, u, w FROM eup
-        UNION ALL
-        SELECT u AS v, v AS u, w FROM eup),
-    l0 AS (SELECT DISTINCT v, v AS label FROM e),
-    s1 AS (
-        SELECT e.v, l0.label, SUM(e.w) AS tw
-        FROM e JOIN l0 ON l0.v = e.u
-        GROUP BY 1, 2),
-    l1 AS (
-        SELECT v, label FROM (
-            SELECT v, label,
-                   row_number() OVER (PARTITION BY v
-                                      ORDER BY tw DESC, label) AS rn
-            FROM s1) WHERE rn = 1),
-    s2 AS (
-        SELECT e.v, l1.label, SUM(e.w) AS tw
-        FROM e JOIN l1 ON l1.v = e.u
-        GROUP BY 1, 2),
-    l2 AS (
-        SELECT v, label FROM (
-            SELECT v, label,
-                   row_number() OVER (PARTITION BY v
-                                      ORDER BY tw DESC, label) AS rn
-            FROM s2) WHERE rn = 1)
+    return f"""
+    WITH {lpa_labels_sql()}
     SELECT l1.v AS brand, l1.label AS label_1, l2.label AS label_2
     FROM l1 JOIN l2 ON l2.v = l1.v
     ORDER BY brand
@@ -304,33 +260,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BFS_HOPS = 4
-_BFS_K = 8  # same kNN backbone cut as graph_triangles
 
 
 def _bfs_oracle() -> str:
     prelude = f"""
-    WITH pl AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    e AS (
-        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM pl a JOIN pl b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-        GROUP BY 1, 2),
-    d AS (
-        SELECT sa AS u, sb AS v, w FROM e
-        UNION ALL SELECT sb, sa, w FROM e),
-    r AS (
-        SELECT u, v,
-               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
-                   AS rn
-        FROM d),
-    bb AS (
-        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM r WHERE rn <= {_BFS_K}),
-    g AS (
-        SELECT sa AS u, sb AS v FROM bb
-        UNION ALL SELECT sb, sa FROM bb),
+    WITH {supplier_graph_sql()},
     d0 AS (SELECT (SELECT MIN(sa) FROM bb) AS node, 0 AS dist)"""
     steps = []
     for i in range(1, _BFS_HOPS + 1):
@@ -370,8 +304,8 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-sized groupBy — per-step cost proportional to |edges|, and
     the expensive pair build runs ONCE PER SESSION via the shared
     operators/graph.supplier_backbone cache."""
-    bb = supplier_backbone(spark, sf_dir, _BFS_K)
-    g = supplier_graph(spark, sf_dir, _BFS_K)
+    bb = supplier_backbone(spark, sf_dir)
+    g = supplier_graph(spark, sf_dir)
 
     src = bb.agg(F.min("sa").alias("node")).select(
         "node", F.lit(0).alias("dist")
@@ -396,34 +330,12 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # common-neighbor link prediction (r3r wave)
 # ---------------------------------------------------------------------------
 
-_LP_K = 8      # same backbone cut as graph_triangles / graph_bfs_khop
 _LP_TOP = 20   # predicted links reported
 
 
 def _linkpred_oracle() -> str:
     return f"""
-    WITH pl AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    e AS (
-        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM pl a JOIN pl b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-        GROUP BY 1, 2),
-    d AS (
-        SELECT sa AS u, sb AS v, w FROM e
-        UNION ALL SELECT sb, sa, w FROM e),
-    r AS (
-        SELECT u, v,
-               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
-                   AS rn
-        FROM d),
-    bb AS (
-        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM r WHERE rn <= {_LP_K}),
-    g AS (
-        SELECT sa AS u, sb AS v FROM bb
-        UNION ALL SELECT sb, sa FROM bb),
+    WITH {supplier_graph_sql()},
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM g GROUP BY u),
     cn AS (
         SELECT g1.u AS a, g2.v AS b, CAST(COUNT(*) AS BIGINT) AS common
@@ -469,8 +381,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     list; degrees ride a broadcast; the final top-{top} is a
     TakeOrderedAndProject heap, not a global sort; the pair build runs
     ONCE PER SESSION via the shared operators/graph caches."""
-    bb = supplier_backbone(spark, sf_dir, _LP_K)
-    g = supplier_graph(spark, sf_dir, _LP_K)
+    bb = supplier_backbone(spark, sf_dir)
+    g = supplier_graph(spark, sf_dir)
     deg = g.groupBy("u").agg(F.count("*").alias("deg"))
     g1, g2 = g.alias("g1"), g.alias("g2")
     cn = (
@@ -522,33 +434,11 @@ graph_link_prediction.__doc__ = graph_link_prediction.__doc__.format(
 
 _KCORE_K = 3      # core threshold
 _KCORE_ROUNDS = 4  # unrolled peeling rounds
-_KCORE_BK = 8      # same backbone cut as the rest of the graph tier
 
 
 def _kcore_oracle() -> str:
     prelude = f"""
-    WITH pl AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    e AS (
-        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM pl a JOIN pl b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-        GROUP BY 1, 2),
-    d AS (
-        SELECT sa AS u, sb AS v, w FROM e
-        UNION ALL SELECT sb, sa, w FROM e),
-    r AS (
-        SELECT u, v,
-               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
-                   AS rn
-        FROM d),
-    bb AS (
-        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM r WHERE rn <= {_KCORE_BK}),
-    g AS (
-        SELECT sa AS u, sb AS v FROM bb
-        UNION ALL SELECT sb, sa FROM bb),
+    WITH {supplier_graph_sql()},
     n0 AS (SELECT DISTINCT u AS node FROM g)"""
     steps = []
     for i in range(1, _KCORE_ROUNDS + 1):
@@ -600,7 +490,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     is built once per session (operators/graph caches). Run-to-
     convergence uses the dedup_clusters checkpointed-loop shape with
     the same per-round plan."""
-    g = supplier_graph(spark, sf_dir, _KCORE_BK)  # every round reuses it
+    g = supplier_graph(spark, sf_dir)  # every round reuses it
 
     def survivors(nodes):
         return (
@@ -636,7 +526,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 graph_kcore.__doc__ = graph_kcore.__doc__.format(
-    k=_KCORE_K, bk=_KCORE_BK, r=_KCORE_ROUNDS
+    k=_KCORE_K, bk=SUPPLIER_K, r=_KCORE_ROUNDS
 )
 
 
@@ -645,38 +535,8 @@ graph_kcore.__doc__ = graph_kcore.__doc__.format(
 # ---------------------------------------------------------------------------
 
 def _modularity_oracle() -> str:
-    return """
-    WITH tx AS (
-        SELECT DISTINCT l.l_orderkey, p.p_brand
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    eup AS (
-        SELECT a.p_brand AS v, b.p_brand AS u, CAST(COUNT(*) AS BIGINT) AS w
-        FROM tx a JOIN tx b
-          ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-        GROUP BY 1, 2),
-    e AS (
-        SELECT v, u, w FROM eup
-        UNION ALL
-        SELECT u AS v, v AS u, w FROM eup),
-    l0 AS (SELECT DISTINCT v, v AS label FROM e),
-    s1 AS (
-        SELECT e.v, l0.label, SUM(e.w) AS tw
-        FROM e JOIN l0 ON l0.v = e.u GROUP BY 1, 2),
-    l1 AS (
-        SELECT v, label FROM (
-            SELECT v, label,
-                   row_number() OVER (PARTITION BY v
-                                      ORDER BY tw DESC, label) AS rn
-            FROM s1) WHERE rn = 1),
-    s2 AS (
-        SELECT e.v, l1.label, SUM(e.w) AS tw
-        FROM e JOIN l1 ON l1.v = e.u GROUP BY 1, 2),
-    l2 AS (
-        SELECT v, label FROM (
-            SELECT v, label,
-                   row_number() OVER (PARTITION BY v
-                                      ORDER BY tw DESC, label) AS rn
-            FROM s2) WHERE rn = 1),
+    return f"""
+    WITH {lpa_labels_sql()},
     m AS (SELECT CAST(SUM(w) AS BIGINT) AS m2 FROM e),
     deg AS (SELECT v, CAST(SUM(w) AS BIGINT) AS deg FROM e GROUP BY v),
     com AS (
@@ -789,33 +649,10 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # degree assortativity (r4f wave)
 # ---------------------------------------------------------------------------
 
-_ASSORT_BK = 8  # same backbone cut as the rest of the graph tier
-
 
 def _assort_oracle() -> str:
     return f"""
-    WITH pl AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    e AS (
-        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM pl a JOIN pl b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-        GROUP BY 1, 2),
-    d AS (
-        SELECT sa AS u, sb AS v, w FROM e
-        UNION ALL SELECT sb, sa, w FROM e),
-    r AS (
-        SELECT u, v,
-               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
-                   AS rn
-        FROM d),
-    bb AS (
-        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM r WHERE rn <= {_ASSORT_BK}),
-    g AS (
-        SELECT sa AS u, sb AS v FROM bb
-        UNION ALL SELECT sb, sa FROM bb),
+    WITH {supplier_graph_sql()},
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM g GROUP BY u),
     ed AS (
         SELECT da.deg AS du, db.deg AS dv
@@ -857,9 +694,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge-degree join broadcasts the node-sized degree table; the
     moment sums are a single map-side-combined pass; the backbone is
     built once per session (operators/graph caches)."""
-    bb = supplier_backbone(spark, sf_dir, _ASSORT_BK)
+    bb = supplier_backbone(spark, sf_dir)
     deg = (
-        supplier_graph(spark, sf_dir, _ASSORT_BK)
+        supplier_graph(spark, sf_dir)
         .groupBy("u")
         .agg(F.count("*").alias("deg"))
     )
@@ -1192,11 +1029,6 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # closeness / harmonic centrality on the sparsified trade graph (r4x wave)
 # ---------------------------------------------------------------------------
 
-#: keep each nation's K strongest trade partners (the sparsifying cut —
-#: the raw nation x nation flow matrix is near-complete, distance 1
-#: everywhere; centrality is only informative on the backbone)
-_CLOSE_K = 3
-
 #: hop horizon for the unrolled min-plus distance expansion
 _CLOSE_H = 4
 
@@ -1216,26 +1048,7 @@ def _closeness_oracle() -> str:
             WHERE g.v <> d{i-1}.u)
         GROUP BY u, v)""")
     return f"""
-    WITH e AS (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY 1, 2),
-    r AS (
-        SELECT src, dst,
-               ROW_NUMBER() OVER (PARTITION BY src
-                                  ORDER BY w DESC, dst) AS rn
-        FROM e),
-    kept AS (
-        SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM r WHERE rn <= {_CLOSE_K}),
-    g AS (
-        SELECT a AS u, b AS v FROM kept
-        UNION ALL SELECT b, a FROM kept),
+    WITH {trade_graph_sql()},
     d1 AS (SELECT u, v, 1 AS dist FROM g),{",".join(steps)},
     agg AS (
         SELECT u,
@@ -1281,7 +1094,7 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs state is too wide, the per-seed BFS form
     (graph_bfs_khop) is the swap."""
     nation = load_table(spark, sf_dir, "nation")
-    g = trade_sparse_graph(spark, sf_dir, _CLOSE_K)
+    g = trade_sparse_graph(spark, sf_dir)
 
     def expand(d: DataFrame, _r: int) -> DataFrame:
         step = (  # g: <= 2k|nations| rows the planner cannot size
@@ -1329,7 +1142,7 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 graph_closeness.__doc__ = graph_closeness.__doc__.format(
-    k=_CLOSE_K, h=_CLOSE_H
+    k=TRADE_K, h=_CLOSE_H
 )
 
 
@@ -1337,15 +1150,18 @@ graph_closeness.__doc__ = graph_closeness.__doc__.format(
 # exact betweenness centrality on the sparsified trade graph (r5a wave)
 # ---------------------------------------------------------------------------
 
-_BTW_K = 3  # same sparsifying cut as graph_closeness
 _BTW_H = 4  # hop horizon
 _BTW_U = 1_000_000
 
 
-def _betweenness_oracle() -> str:
-    steps = []
-    for i in range(1, _BTW_H):
-        steps.append(f"""
+def _btw_counts_sql(materialize: bool = False) -> str:
+    """The shortest-path counts of both betweenness oracles: ``c{i}``
+    and ``m{i}`` (s, t, dist, cnt) for 1 < i <= _BTW_H, expanded from
+    ``m1`` over ``g``; ``materialize`` marks each ``m{i}``
+    MATERIALIZED."""
+    m = " MATERIALIZED" if materialize else ""
+    return ",".join(
+        f"""
     c{i+1} AS (
         SELECT s, t, dist, CAST(SUM(cnt) AS BIGINT) AS cnt FROM (
             SELECT s, t, dist, cnt FROM m{i}
@@ -1354,36 +1170,22 @@ def _betweenness_oracle() -> str:
             FROM m{i} f JOIN g ON g.u = f.t
             WHERE f.dist = {i} AND g.v <> f.s)
         GROUP BY s, t, dist),
-    m{i+1} AS (
+    m{i+1} AS{m} (
         SELECT s, t, dist, cnt FROM (
             SELECT s, t, dist, cnt,
                    ROW_NUMBER() OVER (PARTITION BY s, t
                                       ORDER BY dist) AS rn
-            FROM c{i+1}) WHERE rn = 1)""")
+            FROM c{i+1}) WHERE rn = 1)"""
+        for i in range(1, _BTW_H)
+    )
+
+
+def _betweenness_oracle() -> str:
     return f"""
-    WITH e AS (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY 1, 2),
-    r AS (
-        SELECT src, dst,
-               ROW_NUMBER() OVER (PARTITION BY src
-                                  ORDER BY w DESC, dst) AS rn
-        FROM e),
-    kept AS (
-        SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM r WHERE rn <= {_BTW_K}),
-    g AS (
-        SELECT a AS u, b AS v FROM kept
-        UNION ALL SELECT b, a FROM kept),
+    WITH {trade_graph_sql()},
     m1 AS (
         SELECT u AS s, v AS t, 1 AS dist, CAST(1 AS BIGINT) AS cnt
-        FROM g),{",".join(steps)},
+        FROM g),{_btw_counts_sql()},
     acc AS (
         SELECT sv.t AS v,
                CAST(SUM((sv.cnt * vt.cnt * {_BTW_U}) // st.cnt)
@@ -1475,7 +1277,7 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation over sampled sources is the swap (same recurrence,
     source-partitioned)."""
     nation = load_table(spark, sf_dir, "nation")
-    g = trade_sparse_graph(spark, sf_dir, _BTW_K)
+    g = trade_sparse_graph(spark, sf_dir)
     m = _btw_forward(g, g, "graph_betweenness")
     sv, vt, st = m.alias("sv"), m.alias("vt"), m.alias("st")
     acc = (
@@ -1523,7 +1325,6 @@ graph_betweenness.__doc__ = graph_betweenness.__doc__.format(h=_BTW_H)
 # articulation nodes on the sparsified trade graph (r5n wave)
 # ---------------------------------------------------------------------------
 
-_ART_K = 3   # same sparsifying cut as closeness / betweenness
 _ART_H = 12  # min-label propagation rounds (>= graph diameter)
 
 
@@ -1540,26 +1341,7 @@ def _articulation_oracle() -> str:
               ON ge.chain = p.chain AND ge.u = p.v)
         GROUP BY chain, v)""")
     return f"""
-    WITH e AS (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY 1, 2),
-    r AS (
-        SELECT src, dst,
-               ROW_NUMBER() OVER (PARTITION BY src
-                                  ORDER BY w DESC, dst) AS rn
-        FROM e),
-    kept AS (
-        SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM r WHERE rn <= {_ART_K}),
-    g AS (
-        SELECT a AS u, b AS v FROM kept
-        UNION ALL SELECT b, a FROM kept),
+    WITH {trade_graph_sql()},
     nodes AS (SELECT DISTINCT u AS v FROM g),
     chains AS (
         SELECT -1 AS chain
@@ -1609,7 +1391,7 @@ def graph_articulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same backbone in a single mapPartitions pass — this relational
     form is the bounded-dim variant."""
     nation = load_table(spark, sf_dir, "nation")
-    g = trade_sparse_graph(spark, sf_dir, _ART_K)
+    g = trade_sparse_graph(spark, sf_dir)
     nodes = g.select(F.col("u").alias("v")).distinct()
     chains = (
         spark.range(1)
@@ -1691,8 +1473,6 @@ def graph_articulation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # strongly connected components on the directed trade digraph (r5w wave)
 # ---------------------------------------------------------------------------
 
-_SCC_K = 3   # same sparsifying cut as closeness / betweenness / articulation
-
 #: closure-by-squaring rounds: paths up to 2^5 = 32 > |nations| cover
 #: every simple path in the 25-node digraph
 _SCC_ROUNDS = 5
@@ -1700,21 +1480,7 @@ _SCC_ROUNDS = 5
 
 def _scc_oracle() -> str:
     return f"""
-    WITH RECURSIVE e AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY w DESC, dst) AS rn
-            FROM (
-                SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-                       CAST(COUNT(*) AS BIGINT) AS w
-                FROM lineitem l
-                JOIN orders o ON l.l_orderkey = o.o_orderkey
-                JOIN customer c ON o.o_custkey = c.c_custkey
-                JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                WHERE c.c_nationkey <> s.s_nationkey
-                GROUP BY 1, 2))
-        WHERE rn <= {_SCC_K}),
+    WITH RECURSIVE {trade_digraph_sql()},
     reach(u, v) AS (
         SELECT n_nationkey, n_nationkey FROM nation
         UNION
@@ -1765,10 +1531,8 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     task graph); SCC is that assertion's general form — any SCC of
     size > 1 IS a cycle.
     """
-    from gcp_de_data_pipeline_cc_spark.operators.graph import scc_labels
-
     nation = load_table(spark, sf_dir, "nation")
-    scc = scc_labels(spark, sf_dir, _SCC_K, _SCC_ROUNDS)
+    scc = scc_labels(spark, sf_dir, rounds=_SCC_ROUNDS)
     sz = scc.groupBy("scc_id").agg(
         F.count("*").cast("long").alias("scc_size")
     )
@@ -1788,7 +1552,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-graph_scc.__doc__ = graph_scc.__doc__.format(k=_SCC_K, r=_SCC_ROUNDS)
+graph_scc.__doc__ = graph_scc.__doc__.format(k=TRADE_K, r=_SCC_ROUNDS)
 
 
 # ---------------------------------------------------------------------------
@@ -1798,21 +1562,7 @@ graph_scc.__doc__ = graph_scc.__doc__.format(k=_SCC_K, r=_SCC_ROUNDS)
 
 def _condensation_oracle() -> str:
     return f"""
-    WITH RECURSIVE e AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY w DESC, dst) AS rn
-            FROM (
-                SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-                       CAST(COUNT(*) AS BIGINT) AS w
-                FROM lineitem l
-                JOIN orders o ON l.l_orderkey = o.o_orderkey
-                JOIN customer c ON o.o_custkey = c.c_custkey
-                JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                WHERE c.c_nationkey <> s.s_nationkey
-                GROUP BY 1, 2))
-        WHERE rn <= {_SCC_K}),
+    WITH RECURSIVE {trade_digraph_sql()},
     reach(u, v) AS (
         SELECT n_nationkey, n_nationkey FROM nation
         UNION
@@ -1882,13 +1632,8 @@ def graph_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's task graph (dags/pipeline_orchestration_dag.py) —
     levels are its execution waves.
     """
-    from gcp_de_data_pipeline_cc_spark.operators.graph import (
-        scc_labels,
-        trade_sparse_digraph,
-    )
-
-    labels = scc_labels(spark, sf_dir, _SCC_K, _SCC_ROUNDS)
-    g = trade_sparse_digraph(spark, sf_dir, _SCC_K)
+    labels = scc_labels(spark, sf_dir, rounds=_SCC_ROUNDS)
+    g = trade_sparse_digraph(spark, sf_dir)
     sz = labels.groupBy("scc_id").agg(
         F.count("*").cast("long").alias("scc_size")
     )
@@ -1989,21 +1734,7 @@ def _walk_oracle() -> str:
                COALESCE(nxt, cur) AS cur
         FROM w{s})""")
     return f"""
-    WITH e AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY w DESC, dst) AS rn
-            FROM (
-                SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-                       CAST(COUNT(*) AS BIGINT) AS w
-                FROM lineitem l
-                JOIN orders o ON l.l_orderkey = o.o_orderkey
-                JOIN customer c ON o.o_custkey = c.c_custkey
-                JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                WHERE c.c_nationkey <> s.s_nationkey
-                GROUP BY 1, 2))
-        WHERE rn <= {_SCC_K}),
+    WITH {trade_digraph_sql()},
     adj AS (
         SELECT src, list(dst ORDER BY dst) AS dsts FROM e GROUP BY src),
     s0 AS (
@@ -2044,12 +1775,8 @@ def graph_walk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled join runs hash-partitioned on cur with the adjacency
     bucketed.
     """
-    from gcp_de_data_pipeline_cc_spark.operators.graph import (
-        trade_sparse_digraph,
-    )
-
     nation = load_table(spark, sf_dir, "nation")
-    g = trade_sparse_digraph(spark, sf_dir, _SCC_K)
+    g = trade_sparse_digraph(spark, sf_dir)
     adj = g.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("dsts")
     )
@@ -2134,21 +1861,7 @@ def graph_walk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _motifs_oracle() -> str:
     return f"""
-    WITH e AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY w DESC, dst) AS rn
-            FROM (
-                SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-                       CAST(COUNT(*) AS BIGINT) AS w
-                FROM lineitem l
-                JOIN orders o ON l.l_orderkey = o.o_orderkey
-                JOIN customer c ON o.o_custkey = c.c_custkey
-                JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                WHERE c.c_nationkey <> s.s_nationkey
-                GROUP BY 1, 2))
-        WHERE rn <= {_SCC_K}),
+    WITH {trade_digraph_sql()},
     paths AS (
         SELECT ab.src AS a, ab.dst AS b, bc.dst AS c
         FROM e ab JOIN e bc ON bc.src = ab.dst
@@ -2188,11 +1901,7 @@ def graph_motifs_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the |V|-bounded sparsified edge list; the fact pass is the
     shared flow-matrix collapse.
     """
-    from gcp_de_data_pipeline_cc_spark.operators.graph import (
-        trade_sparse_digraph,
-    )
-
-    e = trade_sparse_digraph(spark, sf_dir, _SCC_K)
+    e = trade_sparse_digraph(spark, sf_dir)
     ab, bc = e.alias("ab"), e.alias("bc")
     paths = (
         ab.join(bc, F.col("ab.dst") == F.col("bc.src"))
@@ -2245,23 +1954,6 @@ def _btw_sampled_oracle(mod: int = _BTWS_MOD) -> str:
     # MATERIALIZED is load-bearing: DuckDB inlines plain CTEs per
     # reference, and the backward dl-chain references the forward
     # m-chain repeatedly — measured 110 s -> 0.3 s at sf0.01
-    steps = []
-    for i in range(1, _BTW_H):
-        steps.append(f"""
-    c{i+1} AS (
-        SELECT s, t, dist, CAST(SUM(cnt) AS BIGINT) AS cnt FROM (
-            SELECT s, t, dist, cnt FROM m{i}
-            UNION ALL
-            SELECT f.s, g.v AS t, f.dist + 1 AS dist, f.cnt
-            FROM m{i} f JOIN g ON g.u = f.t
-            WHERE f.dist = {i} AND g.v <> f.s)
-        GROUP BY s, t, dist),
-    m{i+1} AS MATERIALIZED (
-        SELECT s, t, dist, cnt FROM (
-            SELECT s, t, dist, cnt,
-                   ROW_NUMBER() OVER (PARTITION BY s, t
-                                      ORDER BY dist) AS rn
-            FROM c{i+1}) WHERE rn = 1)""")
     back = []
     for i in range(_BTW_H - 1, 0, -1):
         dep = (
@@ -2286,29 +1978,10 @@ def _btw_sampled_oracle(mod: int = _BTWS_MOD) -> str:
         f"SELECT * FROM dl{i}" for i in range(1, _BTW_H)
     )
     return f"""
-    WITH e AS (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY 1, 2),
-    r AS (
-        SELECT src, dst,
-               ROW_NUMBER() OVER (PARTITION BY src
-                                  ORDER BY w DESC, dst) AS rn
-        FROM e),
-    kept AS (
-        SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM r WHERE rn <= {_BTW_K}),
-    g AS MATERIALIZED (
-        SELECT a AS u, b AS v FROM kept
-        UNION ALL SELECT b, a FROM kept),
+    WITH {trade_graph_sql(materialize_g=True)},
     m1 AS MATERIALIZED (
         SELECT u AS s, v AS t, 1 AS dist, CAST(1 AS BIGINT) AS cnt
-        FROM g WHERE u % {mod} = 0),{",".join(steps)},{",".join(back)},
+        FROM g WHERE u % {mod} = 0),{_btw_counts_sql(materialize=True)},{",".join(back)},
     alln AS (SELECT CAST(COUNT(DISTINCT u) AS BIGINT) AS n_nodes FROM g),
     ns AS (SELECT CAST(COUNT(DISTINCT u) AS BIGINT) AS n_srcs
            FROM g WHERE u % {mod} = 0),
@@ -2336,7 +2009,7 @@ def _btw_sampled_frame(
     modulus — mod=1 (all sources) is the law-test arm that must agree
     with the all-pairs graph_betweenness up to micro-unit truncation."""
     nation = load_table(spark, sf_dir, "nation")
-    g = trade_sparse_graph(spark, sf_dir, _BTW_K)
+    g = trade_sparse_graph(spark, sf_dir)
     g = g.localCheckpoint(eager=False)  # forward layers + backward sweeps
     # forward (dist, sigma) restricted to sampled sources: state is
     # |S|x|V| rows, the per-source partitioning that scales where the
@@ -2556,7 +2229,7 @@ def graph_articulation_tarjan(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep (`graph_articulation`) is the fallback — the two keys are
     the two sides of that size cutoff, stated as code."""
     nation = load_table(spark, sf_dir, "nation")
-    g = trade_sparse_graph(spark, sf_dir, _ART_K)
+    g = trade_sparse_graph(spark, sf_dir)
     res = (
         g.groupBy(F.lit(1).alias("grp"))
         .applyInPandas(
@@ -2588,7 +2261,6 @@ def graph_articulation_tarjan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # FW-BW pivot SCC — the wide-digraph swap (r6 wave)
 # ---------------------------------------------------------------------------
-
 
 #: FW-BW round caps over ≤ |nation| = 25 nodes: a BFS has ≤ 24 non-empty
 #: frontiers plus the empty one, and each level (trim round + pivot
@@ -2674,12 +2346,8 @@ def graph_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
     BFS hop one equi-join against the edge relation, and the tags keep
     every recursion branch in one shuffle.  Driver scalars are the
     per-level emptiness checks, bounded by recursion depth."""
-    from gcp_de_data_pipeline_cc_spark.operators.graph import (
-        trade_sparse_digraph,
-    )
-
     nation = load_table(spark, sf_dir, "nation")
-    dg = trade_sparse_digraph(spark, sf_dir, _SCC_K)
+    dg = trade_sparse_digraph(spark, sf_dir)
     ed = dg.select(
         F.lit(1).alias("dir"), F.col("src").alias("f"), F.col("dst").alias("t")
     ).unionByName(
@@ -2787,8 +2455,6 @@ def graph_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
 # convergence-looped min-label propagation with fixpoint evidence (r6 wave)
 # ---------------------------------------------------------------------------
 
-_LPC_K = 3   # same sparsifying cut as the articulation/centrality keys
-
 #: round cap: a label crosses ≤ 24 hops in a ≤ |nation| = 25-node
 #: component, plus the one round that changes nothing
 _LPC_MAX_ROUNDS = 25
@@ -2796,26 +2462,7 @@ _LPC_MAX_ROUNDS = 25
 
 def _lpa_converged_oracle() -> str:
     return f"""
-    WITH RECURSIVE e AS (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY 1, 2),
-    r AS (
-        SELECT src, dst,
-               ROW_NUMBER() OVER (PARTITION BY src
-                                  ORDER BY w DESC, dst) AS rn
-        FROM e),
-    kept AS (
-        SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM r WHERE rn <= {_LPC_K}),
-    g AS (
-        SELECT a AS u, b AS v FROM kept
-        UNION ALL SELECT b, a FROM kept),
+    WITH RECURSIVE {trade_graph_sql()},
     nodes AS (SELECT DISTINCT u AS v FROM g),
     reach(u, v) AS (
         SELECT v, v FROM nodes
@@ -2880,7 +2527,7 @@ def graph_label_propagation_converged(
     connected-components (dedup_clusters' engine) — here instrumented
     to emit its own convergence certificate."""
     nation = load_table(spark, sf_dir, "nation")
-    g = trade_sparse_graph(spark, sf_dir, _LPC_K)
+    g = trade_sparse_graph(spark, sf_dir)
     lbl = (
         g.select(F.col("u").alias("v"))
         .distinct()

@@ -17,36 +17,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import fixpoint
-from gcp_de_data_pipeline_cc_spark.operators.graph import supplier_backbone
+from gcp_de_data_pipeline_cc_spark.operators.graph import (
+    SUPPLIER_K,
+    supplier_backbone,
+    supplier_backbone_sql,
+)
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 _KT_K = 4          # truss order: edges need support ≥ k−2 = 2
 _KT_ROUNDS = 3     # unrolled peeling rounds
-_KT_BK = 8         # same backbone cut as the rest of the graph tier
 
 
 def _ktruss_oracle() -> str:
     sup = _KT_K - 2
     prelude = f"""
-    WITH pl AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    e AS MATERIALIZED (
-        SELECT a.l_suppkey AS sa, b.l_suppkey AS sb,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM pl a JOIN pl b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-        GROUP BY 1, 2),
-    d AS MATERIALIZED (
-        SELECT sa AS u, sb AS v, w FROM e
-        UNION ALL SELECT sb, sa, w FROM e),
-    r AS MATERIALIZED (
-        SELECT u, v,
-               ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
-                   AS rn
-        FROM d),
-    e0 AS MATERIALIZED (
-        SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM r WHERE rn <= {_KT_BK}),
+    WITH {supplier_backbone_sql("e0", materialize=True)},
     g0 AS MATERIALIZED (
         SELECT sa AS u, sb AS w FROM e0
         UNION ALL SELECT sb, sa FROM e0)"""
@@ -110,7 +95,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     same fixpoint call with a ``done`` test on this exact per-round
     plan."""
     sup_min = _KT_K - 2
-    edges = supplier_backbone(spark, sf_dir, _KT_BK)  # (sa, sb), sa < sb
+    edges = supplier_backbone(spark, sf_dir)  # (sa, sb), sa < sb
 
     def adjacency(e: DataFrame) -> DataFrame:
         return e.select(
@@ -163,5 +148,5 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 graph_ktruss.__doc__ = graph_ktruss.__doc__.format(
-    k=_KT_K, bk=_KT_BK, r=_KT_ROUNDS, s=_KT_K - 2
+    k=_KT_K, bk=SUPPLIER_K, r=_KT_ROUNDS, s=_KT_K - 2
 )

@@ -22,16 +22,13 @@ from gcp_de_data_pipeline_cc_spark.plans.registry import query
 from gcp_de_data_pipeline_cc_spark.sources.csv_ingest import raw_to_staging, read_landing_csv
 from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir
 from gcp_de_data_pipeline_cc_spark.sources.sink import read_table, write_table
+from gcp_de_data_pipeline_cc_spark.streaming import await_drained
 from gcp_de_data_pipeline_cc_spark.streaming.file_ingest import (
     ingest_available_now,
     landing_stream,
 )
 
 CUSTOMER_COLS = ("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
-
-def _work_dir(name: str) -> str:
-    """Per-(process, query) scratch dir — see scratch.scratch_dir."""
-    return scratch_dir(name)
 
 
 @query(
@@ -46,7 +43,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the raw (all-string) tier, cast at staging. Losslessness makes
     the source projection the oracle."""
     src = load_table(spark, sf_dir, "customer").select(*CUSTOMER_COLS)
-    tmp = _work_dir("csv_roundtrip")
+    tmp = scratch_dir("csv_roundtrip")
     src.write.mode("overwrite").option("header", "true").csv(f"{tmp}/landing")
     raw = read_landing_csv(spark, f"{tmp}/landing", CUSTOMER_COLS)
     staged = raw_to_staging(
@@ -78,7 +75,7 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     )
-    tmp = _work_dir("sink_roundtrip")
+    tmp = scratch_dir("sink_roundtrip")
     write_table(staged, f"{tmp}/orders_f", partition_by=["o_orderstatus"])
     back = read_table(spark, f"{tmp}/orders_f")
     # partitionBy moves the partition column last and reads it as string;
@@ -109,7 +106,7 @@ def json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus") == "O")
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
     )
-    tmp = _work_dir("json_roundtrip")
+    tmp = scratch_dir("json_roundtrip")
     src.write.mode("overwrite").json(f"{tmp}/orders_o")
     return spark.read.schema(src.schema).json(f"{tmp}/orders_o")
 
@@ -131,7 +128,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_returnflag") == "A")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
     )
-    tmp = _work_dir("orc_roundtrip")
+    tmp = scratch_dir("orc_roundtrip")
     src.write.mode("overwrite").orc(f"{tmp}/li_a")
     return spark.read.orc(f"{tmp}/li_a")
 
@@ -157,7 +154,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the catalog and use it instead of re-inferring from footers.
     """
     src = load_table(spark, sf_dir, "supplier")
-    tmp = _work_dir("schema_evo")
+    tmp = scratch_dir("schema_evo")
     old = src.filter(F.col("s_suppkey") % 2 == 0).select("s_suppkey", "s_name")
     new = src.filter(F.col("s_suppkey") % 2 == 1).select(
         "s_suppkey", "s_name", "s_acctbal"
@@ -213,7 +210,7 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    tmp = _work_dir("avro_roundtrip")
+    tmp = scratch_dir("avro_roundtrip")
     if avro_available():
         src.write.mode("overwrite").format("avro").save(f"{tmp}/supp")
         return spark.read.format("avro").load(f"{tmp}/supp")
@@ -270,14 +267,14 @@ def stream_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns the ingested raw tier. Tests assert archive/output counts.
     """
     src = load_table(spark, sf_dir, "customer").select(*CUSTOMER_COLS)
-    tmp = _work_dir("stream_ingest")
+    tmp = scratch_dir("stream_ingest")
     landing, archive = f"{tmp}/landing", f"{tmp}/archived"
     out, ckpt = f"{tmp}/raw", f"{tmp}/ckpt"
     src.coalesce(4).write.mode("overwrite").option("header", "true").csv(landing)
 
     stream = landing_stream(spark, landing, CUSTOMER_COLS, archive_dir=archive)
     q = ingest_available_now(stream, out, ckpt)
-    q.awaitTermination(120)
+    await_drained(q)
 
     raw = spark.read.parquet(out)
     return raw.select(
@@ -304,7 +301,7 @@ def text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source projection is the oracle. At scale `text` sources split by
     line ranges exactly like CSV — same maxPartitionBytes parallelism."""
     docs = load_table(spark, sf_dir, "documents")
-    tmp = _work_dir("text_roundtrip")
+    tmp = scratch_dir("text_roundtrip")
     docs.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), F.col("text")).alias(
             "value"
@@ -335,7 +332,7 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    tmp = _work_dir("xml_roundtrip")
+    tmp = scratch_dir("xml_roundtrip")
     (
         src.write.format("xml")
         .option("rowTag", "nation")
@@ -384,7 +381,7 @@ def partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.date_trunc("day", F.col("ts"))
     )
-    tmp = _work_dir("part_overwrite")
+    tmp = scratch_dir("part_overwrite")
     path = f"{tmp}/events_by_day"
     # repartition on the partition column BEFORE the partitioned write:
     # without it every shuffle partition writes a sliver into every day
@@ -457,7 +454,7 @@ def json_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    tmp = _work_dir("json_corrupt")
+    tmp = scratch_dir("json_corrupt")
     path = f"{tmp}/orders_dirty"
     # fabricate the dirty feed deterministically: every 50th record's
     # JSON line is truncated (drop its closing brace and tail)
@@ -531,7 +528,7 @@ def qc_reconcile_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     them.
     """
     src = load_table(spark, sf_dir, "orders")
-    tmp = _work_dir("reconcile_sink")
+    tmp = scratch_dir("reconcile_sink")
     curated = src.select("o_orderkey", "o_custkey", "o_totalprice",
                          "o_orderdate")
     curated.write.mode("overwrite").parquet(f"{tmp}/orders_curated")

@@ -19,11 +19,6 @@ from gcp_de_data_pipeline_cc_spark.operators import text as tx
 from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
-#: shared shingle-list SQL fragment (3-gram over whitespace tokens)
-_SHINGLES_SQL = (
-    "list_transform(range(1, len(t) - 1), "
-    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -158,7 +153,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_fingerprint",
     oracle=f"""
     SELECT doc_id,
-           list_aggregate(list_transform({_SHINGLES_SQL}, s -> md5(s)), 'min')
+           list_aggregate(list_transform({tx.SHINGLES_SQL}, s -> md5(s)), 'min')
                AS fingerprint
     FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
     WHERE len(t) >= 3
@@ -219,27 +214,22 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
-@query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH sh AS (
-        SELECT DISTINCT doc_id, UNNEST({_SHINGLES_SQL}) AS shingle
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        WHERE len(t) >= 3
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+#: the exact-Jaccard pairs of both shingle-join modes (the hash mode
+#: changes the SHUFFLE representation, not the result)
+_NGRAM_JACCARD_ORACLE = f"""
+    WITH {dd.shingle_overlap_sql()}
     SELECT doc_a, doc_b,
            n_both / (ca.n_sh + cb.n_sh - n_both) AS jaccard
     FROM inter
     JOIN cnt ca ON ca.doc_id = doc_a
     JOIN cnt cb ON cb.doc_id = doc_b
     WHERE n_both / (ca.n_sh + cb.n_sh - n_both) >= 0.5
-    """,
+    """
+
+
+@query(
+    "dedup_ngram_jaccard",
+    oracle=_NGRAM_JACCARD_ORACLE,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 — exact 3-gram Jaccard similarity join via the shingle-join
@@ -289,30 +279,29 @@ def corpus_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.connected_components(pairs, src="doc_a", dst="doc_b")
 
 
+#: the oracle twin of :func:`corpus_dup_clusters`: the near-dup ``pairs``,
+#: their symmetric ``edges`` and the closure ``reach`` (node, m); each
+#: node's component id is MIN(m)
+_DUP_REACH_SQL = f"""{dd.shingle_overlap_sql()},
+    pairs AS ({dd.JACCARD_PAIRS_SQL}
+    ),
+    edges AS (
+        SELECT doc_a AS a, doc_b AS b FROM pairs
+        UNION
+        SELECT doc_b, doc_a FROM pairs
+    ),
+    reach AS (
+        SELECT DISTINCT a AS node, a AS m FROM edges
+        UNION
+        SELECT r.node, e.b FROM reach r JOIN edges e ON r.m = e.a
+    )"""
+
+
 @query(
     "dedup_ngram_hashjoin",
-    # identical oracle to dedup_ngram_jaccard: the hash mode changes the
-    # SHUFFLE representation, not the result (64-bit collision odds
-    # ~n²/2⁶⁵ — negligible; equality also asserted in tests/test_llm.py)
-    oracle=f"""
-    WITH sh AS (
-        SELECT DISTINCT doc_id, UNNEST({_SHINGLES_SQL}) AS shingle
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        WHERE len(t) >= 3
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           n_both / (ca.n_sh + cb.n_sh - n_both) AS jaccard
-    FROM inter
-    JOIN cnt ca ON ca.doc_id = doc_a
-    JOIN cnt cb ON cb.doc_id = doc_b
-    WHERE n_both / (ca.n_sh + cb.n_sh - n_both) >= 0.5
-    """,
+    # 64-bit collision odds ~n²/2⁶⁵ — negligible; equality also asserted
+    # in tests/test_llm.py
+    oracle=_NGRAM_JACCARD_ORACLE,
 )
 def dedup_ngram_hashjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 — the SAME exact 3-gram Jaccard join with the 100 TB shuffle
@@ -338,34 +327,7 @@ def dedup_ngram_hashjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE sh AS (
-        SELECT DISTINCT doc_id, UNNEST({_SHINGLES_SQL}) AS shingle
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        WHERE len(t) >= 3
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT doc_a, doc_b
-        FROM inter
-        JOIN cnt ca ON ca.doc_id = doc_a
-        JOIN cnt cb ON cb.doc_id = doc_b
-        WHERE n_both / (ca.n_sh + cb.n_sh - n_both) >= 0.5
-    ),
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach AS (
-        SELECT DISTINCT a AS node, a AS m FROM edges
-        UNION
-        SELECT r.node, e.b FROM reach r JOIN edges e ON r.m = e.a
-    )
+    WITH RECURSIVE {_DUP_REACH_SQL}
     SELECT node AS doc_id, MIN(m) AS cluster_id
     FROM reach
     GROUP BY node
@@ -414,7 +376,7 @@ def _minhash_oracle() -> str:
     )
     return f"""
     WITH sh AS (
-        SELECT DISTINCT doc_id, UNNEST({_SHINGLES_SQL}) AS shingle
+        SELECT DISTINCT doc_id, UNNEST({tx.SHINGLES_SQL}) AS shingle
         FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
         WHERE len(t) >= 3),
     h AS (
@@ -756,15 +718,7 @@ def _sim_lsh_oracle() -> str:
         FROM exact_top e JOIN lsh_top a
           USING (query_id, neighbor_id)
         GROUP BY 1),
-    tot AS (
-        SELECT query_id, CAST(COUNT(*) AS INT) AS n_exact
-        FROM exact_top GROUP BY 1)
-    SELECT t.query_id, CAST(10 AS INT) AS k, t.n_exact,
-           CAST(COALESCE(h.n_hit, 0) AS INT) AS n_hit,
-           FLOOR(COALESCE(h.n_hit, 0) / t.n_exact * 10000.0 + 0.5)
-               / 10000.0 AS recall
-    FROM tot t LEFT JOIN hits h USING (query_id)
-    ORDER BY t.query_id
+    {sim.SQL_TOPK_RECALL}
     """
 
 
@@ -792,21 +746,10 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sim_ivf_oracle() -> str:
-    cos = (
-        "list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}))"
-        " / sqrt(list_dot_product({b}, {b}))"
-    )
+    cos = sim.SQL_COSINE
     return f"""
-    WITH e AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               list_transform(embedding,
-                   x -> FLOOR(CAST(x AS DOUBLE) * 8192.0 + 0.5)) AS qi
-        FROM embeddings),
-    pp AS (
-        SELECT label, i AS pos, SUM(qi[i]) AS s
-        FROM e, UNNEST(range(1, len(qi) + 1)) AS t(i)
-        GROUP BY 1, 2),
-    cents AS (SELECT label, list(s ORDER BY pos) AS cvec FROM pp GROUP BY 1),
+    WITH {sim.SQL_QUANTIZED_VECTORS},
+    {sim.sql_ivf_centroids()},
     qs AS ({sim.sql_query_sample_cte()}),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e
           WHERE vec_id IN (SELECT vec_id FROM qs)),
@@ -839,15 +782,7 @@ def _sim_ivf_oracle() -> str:
         SELECT x.query_id, CAST(COUNT(*) AS INT) AS n_hit
         FROM exact_top x JOIN ivf_top a USING (query_id, neighbor_id)
         GROUP BY 1),
-    tot AS (
-        SELECT query_id, CAST(COUNT(*) AS INT) AS n_exact
-        FROM exact_top GROUP BY 1)
-    SELECT t.query_id, CAST(10 AS INT) AS k, t.n_exact,
-           CAST(COALESCE(h.n_hit, 0) AS INT) AS n_hit,
-           FLOOR(COALESCE(h.n_hit, 0) / t.n_exact * 10000.0 + 0.5)
-               / 10000.0 AS recall
-    FROM tot t LEFT JOIN hits h USING (query_id)
-    ORDER BY t.query_id
+    {sim.SQL_TOPK_RECALL}
     """
 
 
@@ -1859,7 +1794,7 @@ def _lsh_calibration_oracle() -> str:
     return f"""
     WITH ds AS ({sim.sql_query_sample_cte(_LSH_CAL_DOCS, "documents", "doc_id")}),
     sh AS (
-        SELECT DISTINCT doc_id, UNNEST({_SHINGLES_SQL}) AS shingle
+        SELECT DISTINCT doc_id, UNNEST({tx.SHINGLES_SQL}) AS shingle
         FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
         WHERE len(t) >= 3
           AND doc_id IN (SELECT doc_id FROM ds)),
@@ -2393,34 +2328,7 @@ def embedding_quantize_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_keep_canonical",
     oracle=f"""
-    WITH RECURSIVE sh AS (
-        SELECT DISTINCT doc_id, UNNEST({_SHINGLES_SQL}) AS shingle
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        WHERE len(t) >= 3
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT doc_a, doc_b
-        FROM inter
-        JOIN cnt ca ON ca.doc_id = doc_a
-        JOIN cnt cb ON cb.doc_id = doc_b
-        WHERE n_both / (ca.n_sh + cb.n_sh - n_both) >= 0.5
-    ),
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach AS (
-        SELECT DISTINCT a AS node, a AS m FROM edges
-        UNION
-        SELECT r.node, e.b FROM reach r JOIN edges e ON r.m = e.a
-    ),
+    WITH RECURSIVE {_DUP_REACH_SQL},
     cc AS (SELECT node, MIN(m) AS cluster_id FROM reach GROUP BY node),
     manifest AS (
         SELECT d.doc_id,
@@ -3412,7 +3320,7 @@ _INC_NEAR_PPM = 800_000
         SELECT doc_id, text, {_INC_COIN_SQL} AS indexed
         FROM documents),
     sh AS (
-        SELECT DISTINCT doc_id, indexed, UNNEST({_SHINGLES_SQL}) AS shingle
+        SELECT DISTINCT doc_id, indexed, UNNEST({tx.SHINGLES_SQL}) AS shingle
         FROM (SELECT doc_id, indexed, string_split(text, ' ') AS t
               FROM tagged)
         WHERE len(t) >= 3),
@@ -3868,65 +3776,21 @@ def _pq_lloyd_sql(iters: int) -> str:
 def _sim_pq_oracle() -> str:
     it = _PQ_SEARCH_ITERS
     return f"""
-    WITH {_pq_flat_sql(_PQ_SEARCH_K)},
-    {_pq_lloyd_sql(it)},
-    qsamp AS ({sim.sql_query_sample_cte()}),
-    qflat AS (
-        SELECT vec_id AS query_id, m, d, q FROM flat
-        WHERE vec_id IN (SELECT vec_id FROM qsamp)),
-    lut AS (
-        SELECT qf.query_id, qf.m, c.k,
-               CAST(SUM((qf.q - c.cq) * (qf.q - c.cq)) AS BIGINT) AS l
-        FROM qflat qf JOIN c{it} c ON c.m = qf.m AND c.d = qf.d
-        GROUP BY 1, 2, 3),
+    WITH {_PQ_LUT_SQL},
     adc AS (
         SELECT l.query_id, cd.vec_id AS neighbor_id,
                CAST(SUM(l.l) AS BIGINT) AS ad
         FROM a{it} cd JOIN lut l ON l.m = cd.m AND l.k = cd.k_code
         WHERE cd.vec_id <> l.query_id
         GROUP BY 1, 2),
-    adc_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY ad, neighbor_id) AS rank
-            FROM adc)
-        WHERE rank <= 10),
-    qe AS (
-        SELECT vec_id,
-               list_transform(embedding, x ->
-                   CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0e0 + 0.5e0)
-                        AS BIGINT)) AS qi
-        FROM embeddings),
-    qq AS (
-        SELECT vec_id AS query_id, qi AS qv FROM qe
-        WHERE vec_id IN (SELECT vec_id FROM qsamp)),
-    exd AS (
-        SELECT qq.query_id, qe.vec_id AS neighbor_id,
-               CAST(list_sum(list_transform(range(1, len(qe.qi) + 1),
-                   i -> (qe.qi[i] - qq.qv[i]) * (qe.qi[i] - qq.qv[i])))
-                    AS BIGINT) AS dd
-        FROM qq CROSS JOIN qe WHERE qe.vec_id <> qq.query_id),
-    exact_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY dd, neighbor_id) AS rank
-            FROM exd)
-        WHERE rank <= 10),
+    adc_top AS ({_pq_top_sql("adc", "ad")}),
+    {_PQ_VECS_SQL},
+    {_PQ_EXACT_SQL},
     hits AS (
         SELECT e.query_id, CAST(COUNT(*) AS INT) AS n_hit
         FROM exact_top e JOIN adc_top a USING (query_id, neighbor_id)
         GROUP BY 1),
-    tot AS (
-        SELECT query_id, CAST(COUNT(*) AS INT) AS n_exact
-        FROM exact_top GROUP BY 1)
-    SELECT t.query_id, CAST(10 AS INT) AS k, t.n_exact,
-           CAST(COALESCE(h.n_hit, 0) AS INT) AS n_hit,
-           FLOOR(COALESCE(h.n_hit, 0) / t.n_exact * 10000.0 + 0.5)
-               / 10000.0 AS recall
-    FROM tot t LEFT JOIN hits h USING (query_id)
-    ORDER BY t.query_id
+    {sim.SQL_TOPK_RECALL}
     """
 
 
@@ -4219,6 +4083,61 @@ def _pq_search(
 _pq_search.__doc__ = _pq_search.__doc__.format(b=_PQ_SCAN_BLOCK)
 
 
+def _pq_top_sql(src: str, key: str, n: int = 10) -> str:
+    """Each query's best ``n`` (query_id, neighbor_id) rows of ``src``
+    by (``key``, neighbor_id) — the order both arms of
+    :func:`_pq_search` keep."""
+    return f"""
+        SELECT query_id, neighbor_id FROM (
+            SELECT query_id, neighbor_id,
+                   ROW_NUMBER() OVER (PARTITION BY query_id
+                       ORDER BY {key}, neighbor_id) AS rank
+            FROM {src})
+        WHERE rank <= {n}"""
+
+
+#: the oracle twin of :func:`_pq_index`: the trained codebook
+#: (``c{it}``, ``a{it}``), the sampled queries ``qsamp`` and their
+#: lookup table ``lut`` (query_id, m, k, l)
+_PQ_LUT_SQL = f"""{_pq_flat_sql(_PQ_SEARCH_K)},
+    {_pq_lloyd_sql(_PQ_SEARCH_ITERS)},
+    qsamp AS ({sim.sql_query_sample_cte()}),
+    qflat AS (
+        SELECT vec_id AS query_id, m, d, q FROM flat
+        WHERE vec_id IN (SELECT vec_id FROM qsamp)),
+    lut AS (
+        SELECT qf.query_id, qf.m, c.k,
+               CAST(SUM((qf.q - c.cq) * (qf.q - c.cq)) AS BIGINT) AS l
+        FROM qflat qf JOIN c{_PQ_SEARCH_ITERS} c
+          ON c.m = qf.m AND c.d = qf.d
+        GROUP BY 1, 2, 3)"""
+
+#: micro-unit integer vectors ``qe`` (vec_id, qi) and the sampled
+#: queries ``qq`` (query_id, qv)
+_PQ_VECS_SQL = """qe AS (
+        SELECT vec_id,
+               list_transform(embedding, x ->
+                   CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0e0 + 0.5e0)
+                        AS BIGINT)) AS qi
+        FROM embeddings),
+    qq AS (
+        SELECT vec_id AS query_id, qi AS qv FROM qe
+        WHERE vec_id IN (SELECT vec_id FROM qsamp))"""
+
+#: the exact int64 squared L2 ``dd`` between ``qe.qi`` and ``qq.qv``
+_PQ_L2_SQL = """CAST(list_sum(list_transform(range(1, len(qe.qi) + 1),
+                   i -> (qe.qi[i] - qq.qv[i]) * (qe.qi[i] - qq.qv[i])))
+                    AS BIGINT) AS dd"""
+
+#: the exact arm of :func:`_pq_search` over :data:`_PQ_VECS_SQL`: each
+#: query's exact top-10 ``exact_top`` (query_id, neighbor_id)
+_PQ_EXACT_SQL = f"""exd AS (
+        SELECT qq.query_id, qe.vec_id AS neighbor_id,
+               {_PQ_L2_SQL}
+        FROM qq CROSS JOIN qe WHERE qe.vec_id <> qq.query_id),
+    exact_top AS ({_pq_top_sql("exd", "dd")})"""
+
+
 @query("sim_topk_pq", oracle=_sim_pq_oracle())
 def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5 — PQ-ADC approximate search, the SERVING rung of the
@@ -4283,22 +4202,9 @@ _IVFPQ_NPROBE = 3
 
 def _sim_ivfpq_oracle() -> str:
     it = _PQ_SEARCH_ITERS
-    cos = (
-        "list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}))"
-        " / sqrt(list_dot_product({b}, {b}))"
-    )
+    cos = sim.SQL_COSINE
     return f"""
-    WITH {_pq_flat_sql(_PQ_SEARCH_K)},
-    {_pq_lloyd_sql(it)},
-    qsamp AS ({sim.sql_query_sample_cte()}),
-    qflat AS (
-        SELECT vec_id AS query_id, m, d, q FROM flat
-        WHERE vec_id IN (SELECT vec_id FROM qsamp)),
-    lut AS (
-        SELECT qf.query_id, qf.m, c.k,
-               CAST(SUM((qf.q - c.cq) * (qf.q - c.cq)) AS BIGINT) AS l
-        FROM qflat qf JOIN c{it} c ON c.m = qf.m AND c.d = qf.d
-        GROUP BY 1, 2, 3),
+    WITH {_PQ_LUT_SQL},
     e AS (
         SELECT vec_id, label, embedding::DOUBLE[] AS v,
                list_transform(embedding,
@@ -4330,48 +4236,14 @@ def _sim_ivfpq_oracle() -> str:
         JOIN lut l ON l.query_id = cn.query_id
                   AND l.m = cd.m AND l.k = cd.k_code
         GROUP BY 1, 2),
-    adc_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY ad, neighbor_id) AS rank
-            FROM adc)
-        WHERE rank <= 10),
-    qe AS (
-        SELECT vec_id,
-               list_transform(embedding, x ->
-                   CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0e0 + 0.5e0)
-                        AS BIGINT)) AS qi
-        FROM embeddings),
-    qq AS (
-        SELECT vec_id AS query_id, qi AS qv FROM qe
-        WHERE vec_id IN (SELECT vec_id FROM qsamp)),
-    exd AS (
-        SELECT qq.query_id, qe.vec_id AS neighbor_id,
-               CAST(list_sum(list_transform(range(1, len(qe.qi) + 1),
-                   i -> (qe.qi[i] - qq.qv[i]) * (qe.qi[i] - qq.qv[i])))
-                    AS BIGINT) AS dd
-        FROM qq CROSS JOIN qe WHERE qe.vec_id <> qq.query_id),
-    exact_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY dd, neighbor_id) AS rank
-            FROM exd)
-        WHERE rank <= 10),
+    adc_top AS ({_pq_top_sql("adc", "ad")}),
+    {_PQ_VECS_SQL},
+    {_PQ_EXACT_SQL},
     hits AS (
         SELECT e2.query_id, CAST(COUNT(*) AS INT) AS n_hit
         FROM exact_top e2 JOIN adc_top a USING (query_id, neighbor_id)
         GROUP BY 1),
-    tot AS (
-        SELECT query_id, CAST(COUNT(*) AS INT) AS n_exact
-        FROM exact_top GROUP BY 1)
-    SELECT t.query_id, CAST(10 AS INT) AS k, t.n_exact,
-           CAST(COALESCE(h.n_hit, 0) AS INT) AS n_hit,
-           FLOOR(COALESCE(h.n_hit, 0) / t.n_exact * 10000.0 + 0.5)
-               / 10000.0 AS recall
-    FROM tot t LEFT JOIN hits h USING (query_id)
-    ORDER BY t.query_id
+    {sim.SQL_TOPK_RECALL}
     """
 
 
@@ -4433,80 +4305,28 @@ _RERANK_POOL = 20
 def _sim_pq_rerank_oracle() -> str:
     it = _PQ_SEARCH_ITERS
     return f"""
-    WITH {_pq_flat_sql(_PQ_SEARCH_K)},
-    {_pq_lloyd_sql(it)},
-    qsamp AS ({sim.sql_query_sample_cte()}),
-    qflat AS (
-        SELECT vec_id AS query_id, m, d, q FROM flat
-        WHERE vec_id IN (SELECT vec_id FROM qsamp)),
-    lut AS (
-        SELECT qf.query_id, qf.m, c.k,
-               CAST(SUM((qf.q - c.cq) * (qf.q - c.cq)) AS BIGINT) AS l
-        FROM qflat qf JOIN c{it} c ON c.m = qf.m AND c.d = qf.d
-        GROUP BY 1, 2, 3),
+    WITH {_PQ_LUT_SQL},
     adc AS (
         SELECT l.query_id, cd.vec_id AS neighbor_id,
                CAST(SUM(l.l) AS BIGINT) AS ad
         FROM a{it} cd JOIN lut l ON l.m = cd.m AND l.k = cd.k_code
         WHERE cd.vec_id <> l.query_id
         GROUP BY 1, 2),
-    pool AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY ad, neighbor_id) AS rank
-            FROM adc)
-        WHERE rank <= {_RERANK_POOL}),
-    qe AS (
-        SELECT vec_id,
-               list_transform(embedding, x ->
-                   CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0e0 + 0.5e0)
-                        AS BIGINT)) AS qi
-        FROM embeddings),
-    qq AS (
-        SELECT vec_id AS query_id, qi AS qv FROM qe
-        WHERE vec_id IN (SELECT vec_id FROM qsamp)),
+    pool AS ({_pq_top_sql("adc", "ad", _RERANK_POOL)}),
+    {_PQ_VECS_SQL},
     rr AS (
         SELECT p.query_id, p.neighbor_id,
-               CAST(list_sum(list_transform(range(1, len(qe.qi) + 1),
-                   i -> (qe.qi[i] - qq.qv[i]) * (qe.qi[i] - qq.qv[i])))
-                    AS BIGINT) AS dd
+               {_PQ_L2_SQL}
         FROM pool p
         JOIN qe ON qe.vec_id = p.neighbor_id
         JOIN qq ON qq.query_id = p.query_id),
-    rr_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY dd, neighbor_id) AS rank
-            FROM rr)
-        WHERE rank <= 10),
-    exd AS (
-        SELECT qq.query_id, qe.vec_id AS neighbor_id,
-               CAST(list_sum(list_transform(range(1, len(qe.qi) + 1),
-                   i -> (qe.qi[i] - qq.qv[i]) * (qe.qi[i] - qq.qv[i])))
-                    AS BIGINT) AS dd
-        FROM qq CROSS JOIN qe WHERE qe.vec_id <> qq.query_id),
-    exact_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY dd, neighbor_id) AS rank
-            FROM exd)
-        WHERE rank <= 10),
+    rr_top AS ({_pq_top_sql("rr", "dd")}),
+    {_PQ_EXACT_SQL},
     hits AS (
         SELECT e2.query_id, CAST(COUNT(*) AS INT) AS n_hit
         FROM exact_top e2 JOIN rr_top a USING (query_id, neighbor_id)
         GROUP BY 1),
-    tot AS (
-        SELECT query_id, CAST(COUNT(*) AS INT) AS n_exact
-        FROM exact_top GROUP BY 1)
-    SELECT t.query_id, CAST(10 AS INT) AS k, t.n_exact,
-           CAST(COALESCE(h.n_hit, 0) AS INT) AS n_hit,
-           FLOOR(COALESCE(h.n_hit, 0) / t.n_exact * 10000.0 + 0.5)
-               / 10000.0 AS recall
-    FROM tot t LEFT JOIN hits h USING (query_id)
-    ORDER BY t.query_id
+    {sim.SQL_TOPK_RECALL}
     """
 
 
@@ -4557,10 +4377,7 @@ _IVF_SWEEP_PROBES = (1, 2, 4)
 
 
 def _ivf_sweep_oracle() -> str:
-    cos = (
-        "list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}))"
-        " / sqrt(list_dot_product({b}, {b}))"
-    )
+    cos = sim.SQL_COSINE
     per_p = []
     for p in _IVF_SWEEP_PROBES:
         per_p.append(f"""
@@ -4587,16 +4404,8 @@ def _ivf_sweep_oracle() -> str:
     )
     maxp = max(_IVF_SWEEP_PROBES)
     return f"""
-    WITH e AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               list_transform(embedding,
-                   x -> FLOOR(CAST(x AS DOUBLE) * 8192.0 + 0.5)) AS qi
-        FROM embeddings),
-    pp AS (
-        SELECT label, i AS pos, SUM(qi[i]) AS s
-        FROM e, UNNEST(range(1, len(qi) + 1)) AS t(i)
-        GROUP BY 1, 2),
-    cents AS (SELECT label, list(s ORDER BY pos) AS cvec FROM pp GROUP BY 1),
+    WITH {sim.SQL_QUANTIZED_VECTORS},
+    {sim.sql_ivf_centroids()},
     qs AS ({sim.sql_query_sample_cte()}),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e
           WHERE vec_id IN (SELECT vec_id FROM qs)),
@@ -4953,10 +4762,7 @@ _NSW_CAP = 256
 
 
 def _sim_graph_oracle() -> str:
-    cos = (
-        "list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}))"
-        " / sqrt(list_dot_product({b}, {b}))"
-    )
+    cos = sim.SQL_COSINE
     hops = []
     for i in range(1, _NSW_H + 1):
         hops.append(f"""
@@ -5099,15 +4905,7 @@ def _sim_graph_oracle() -> str:
         SELECT x.query_id, CAST(COUNT(*) AS INT) AS n_hit
         FROM exact_top x JOIN graph_top a USING (query_id, neighbor_id)
         GROUP BY 1),
-    tot AS (
-        SELECT query_id, CAST(COUNT(*) AS INT) AS n_exact
-        FROM exact_top GROUP BY 1)
-    SELECT t.query_id, CAST(10 AS INT) AS k, t.n_exact,
-           CAST(COALESCE(h.n_hit, 0) AS INT) AS n_hit,
-           FLOOR(COALESCE(h.n_hit, 0) / t.n_exact * 10000.0 + 0.5)
-               / 10000.0 AS recall
-    FROM tot t LEFT JOIN hits h USING (query_id)
-    ORDER BY t.query_id
+    {sim.SQL_TOPK_RECALL}
     """
 
 
@@ -5450,7 +5248,7 @@ def _minhash_sweep_oracle() -> str:
     return f"""
     WITH ds AS ({sim.sql_query_sample_cte(_LSH_CAL_DOCS, "documents", "doc_id")}),
     sh AS MATERIALIZED (
-        SELECT DISTINCT doc_id, UNNEST({_SHINGLES_SQL}) AS shingle
+        SELECT DISTINCT doc_id, UNNEST({tx.SHINGLES_SQL}) AS shingle
         FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
         WHERE len(t) >= 3
           AND doc_id IN (SELECT doc_id FROM ds)),
@@ -5582,23 +5380,12 @@ _IDXM_BASE = 8
 
 
 def _idx_maintenance_oracle() -> str:
-    cos = (
-        "list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}))"
-        " / sqrt(list_dot_product({b}, {b}))"
-    )
+    cos = sim.SQL_COSINE
     return f"""
-    WITH e AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               list_transform(embedding,
-                   x -> FLOOR(CAST(x AS DOUBLE) * 8192.0 + 0.5)) AS qi
-        FROM embeddings),
+    WITH {sim.SQL_QUANTIZED_VECTORS},
     base AS (SELECT * FROM e WHERE vec_id % {_IDXM_MOD} < {_IDXM_BASE}),
     delta AS (SELECT * FROM e WHERE vec_id % {_IDXM_MOD} >= {_IDXM_BASE}),
-    pp AS (
-        SELECT label, i AS pos, SUM(qi[i]) AS s
-        FROM base, UNNEST(range(1, len(qi) + 1)) AS t(i)
-        GROUP BY 1, 2),
-    cents AS (SELECT label, list(s ORDER BY pos) AS cvec FROM pp GROUP BY 1),
+    {sim.sql_ivf_centroids("base")},
     assigned AS (
         SELECT vec_id, own_label, label AS cell FROM (
             SELECT d.vec_id, d.label AS own_label, c.label,
@@ -5746,34 +5533,7 @@ sim_index_maintenance.__doc__ = sim_index_maintenance.__doc__.format(
 
 def _soft_dedup_oracle() -> str:
     return f"""
-    WITH RECURSIVE sh AS (
-        SELECT DISTINCT doc_id, UNNEST({_SHINGLES_SQL}) AS shingle
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        WHERE len(t) >= 3
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT doc_a, doc_b
-        FROM inter
-        JOIN cnt ca ON ca.doc_id = doc_a
-        JOIN cnt cb ON cb.doc_id = doc_b
-        WHERE n_both / (ca.n_sh + cb.n_sh - n_both) >= 0.5
-    ),
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach AS (
-        SELECT DISTINCT a AS node, a AS m FROM edges
-        UNION
-        SELECT r.node, e.b FROM reach r JOIN edges e ON r.m = e.a
-    ),
+    WITH RECURSIVE {_DUP_REACH_SQL},
     cc AS (SELECT node AS doc_id, MIN(m) AS cluster_id
            FROM reach GROUP BY node),
     csize AS (

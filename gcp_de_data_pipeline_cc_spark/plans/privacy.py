@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn
+from gcp_de_data_pipeline_cc_spark.functions.uniform import sql_u48, u48
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 #: k-anonymity threshold — every released QI class must hold ≥ K people
@@ -399,14 +400,10 @@ _DP_EPS_NUM, _DP_EPS_DEN = 1, 1  # ε = 1
 #: string→int path on both engines.  A production release swaps in a
 #: CSPRNG; the QUERY SHAPE (per-group noise, inverse-CDF transform,
 #: budget column) is what this key pins.
-_DP_U_SQL = (
-    "(CAST(CAST('0x' || SUBSTR(md5('dp:' || {key}), 1, 12) AS BIGINT)"
-    " AS DOUBLE) + 0.5) / 281474976710656.0"
-)
 
 
 def _dp_oracle() -> str:
-    u = _DP_U_SQL.format(key="o_orderpriority")
+    u = sql_u48("dp", "o_orderpriority")
     b = f"({_DP_EPS_DEN}.0 / {_DP_EPS_NUM}.0)"
     noise = (
         f"-{b} * CASE WHEN {u} >= 0.5 THEN 1.0 ELSE -1.0 END"
@@ -450,16 +447,7 @@ def privacy_dp_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = orders.groupBy("o_orderpriority").agg(
         F.count("*").alias("true_count")
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dp:"), F.col("o_orderpriority"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(281474976710656.0)
+    u = u48("dp", F.col("o_orderpriority"))
     b = F.lit(float(_DP_EPS_DEN) / float(_DP_EPS_NUM))
     noise = (
         -b
@@ -995,17 +983,7 @@ def privacy_dp_exponential(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank_below",
         )
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("em:"),
-                               F.col("candidate").cast("string"))),
-                1, 12,
-            ),
-            16, 10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(281474976710656.0)
+    u = u48("em", F.col("candidate").cast("string"))
     gumbel = -F.log(-F.log(u))
     scored = rankb.crossJoin(F.broadcast(n)).select(
         "candidate",

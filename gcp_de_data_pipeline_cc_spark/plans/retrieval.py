@@ -491,10 +491,7 @@ embedding_ood_mahalanobis.__doc__ = embedding_ood_mahalanobis.__doc__.format(
 
 
 def _binary_oracle() -> str:
-    cos = (
-        "list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}))"
-        " / sqrt(list_dot_product({b}, {b}))"
-    )
+    cos = sim.SQL_COSINE
     word = (
         "CAST(list_sum(list_transform(range({lo}, {hi}),"
         " i -> CASE WHEN qi[i] >= 0"

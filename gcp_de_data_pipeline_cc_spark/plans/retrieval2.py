@@ -29,28 +29,17 @@ from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 
 def _rebalance_oracle() -> str:
-    cos = (
-        "list_dot_product({a}, {b}) / sqrt(list_dot_product({a}, {a}))"
-        " / sqrt(list_dot_product({b}, {b}))"
-    )
+    cos = sim.SQL_COSINE
     bound = sim.BOUNDED_CELL_SIZE
     plane = sim._bounded_cell_plane()
     lits = "[" + ", ".join(f"{int(x)}.0" for x in plane) + "]"
     return f"""
-    WITH e AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               list_transform(embedding,
-                   x -> FLOOR(CAST(x AS DOUBLE) * 8192.0 + 0.5)) AS qi
-        FROM embeddings),
+    WITH {sim.SQL_QUANTIZED_VECTORS},
     base AS (SELECT * FROM e WHERE vec_id % {llm._IDXM_MOD}
                                           < {llm._IDXM_BASE}),
     delta AS (SELECT * FROM e WHERE vec_id % {llm._IDXM_MOD}
                                            >= {llm._IDXM_BASE}),
-    pp AS (
-        SELECT label, i AS pos, SUM(qi[i]) AS s
-        FROM base, UNNEST(range(1, len(qi) + 1)) AS t(i)
-        GROUP BY 1, 2),
-    cents AS (SELECT label, list(s ORDER BY pos) AS cvec FROM pp GROUP BY 1),
+    {sim.sql_ivf_centroids("base")},
     assigned AS (
         SELECT vec_id, label AS cell FROM (
             SELECT d.vec_id, c.label,

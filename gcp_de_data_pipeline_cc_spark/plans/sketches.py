@@ -42,10 +42,8 @@ from pyspark.sql import functions as F
 from gcp_de_data_pipeline_cc_spark.catalog import fan_out, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators import dedup as dd
-from gcp_de_data_pipeline_cc_spark.plans.llm import (
-    _MINHASH_CHARFOLD,
-    _SHINGLES_SQL,
-)
+from gcp_de_data_pipeline_cc_spark.operators.text import SHINGLES_SQL
+from gcp_de_data_pipeline_cc_spark.plans.llm import _MINHASH_CHARFOLD
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 #: signature width — 16 components keeps the estimator grid at 1/16
@@ -67,7 +65,7 @@ def _union_oracle() -> str:
     )
     return f"""
     WITH sh AS (
-        SELECT DISTINCT doc_id, source, UNNEST({_SHINGLES_SQL}) AS shingle
+        SELECT DISTINCT doc_id, source, UNNEST({SHINGLES_SQL}) AS shingle
         FROM (SELECT doc_id, source, string_split(text, ' ') AS t
               FROM documents)
         WHERE len(t) >= 3),
@@ -464,22 +462,8 @@ def _dedup_eval_oracle() -> str:
     from gcp_de_data_pipeline_cc_spark.plans.llm import _minhash_oracle
 
     exact_pairs = f"""
-        WITH sh AS (
-            SELECT DISTINCT doc_id, UNNEST({_SHINGLES_SQL}) AS shingle
-            FROM (SELECT doc_id, string_split(text, ' ') AS t
-                  FROM documents)
-            WHERE len(t) >= 3),
-        cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_both
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2)
-        SELECT doc_a, doc_b
-        FROM inter
-        JOIN cnt ca ON ca.doc_id = doc_a
-        JOIN cnt cb ON cb.doc_id = doc_b
-        WHERE n_both / (ca.n_sh + cb.n_sh - n_both) >= 0.5"""
+        WITH {dd.shingle_overlap_sql()}
+        {dd.JACCARD_PAIRS_SQL}"""
     return f"""
     WITH ex AS (SELECT doc_a, doc_b FROM ({exact_pairs})),
     mh AS (SELECT doc_a, doc_b FROM ({_minhash_oracle()})),

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
+from gcp_de_data_pipeline_cc_spark.functions.uniform import sql_u48, u48
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 # ---------------------------------------------------------------------------
@@ -657,12 +658,8 @@ _KS1_C = 1.358
 
 
 def _ks_uniform_oracle() -> str:
-    u = (
-        "(CAST(CAST('0x' || SUBSTR(md5('k:' || CAST(o_orderkey AS VARCHAR)),"
-        " 1, 12) AS BIGINT) AS DOUBLE) + 0.5) / 281474976710656.0"
-    )
     return f"""
-    WITH v AS (SELECT {u} AS u FROM orders),
+    WITH v AS (SELECT {sql_u48("k")} AS u FROM orders),
     n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM v),
     rk AS (
         SELECT u, ROW_NUMBER() OVER (ORDER BY u) AS i FROM v),
@@ -703,23 +700,7 @@ def stats_ks_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 
     orders = load_table(spark, sf_dir, "orders")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("k:"), F.col("o_orderkey").cast("string")
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(281474976710656.0)
-    v = orders.select(u.alias("u"))
+    v = orders.select(u48("k").alias("u"))
     v = v.localCheckpoint(eager=False)  # rank + count
     nn = v.agg(F.count("*").cast("long").alias("n"))
     rk = global_rank(v, [F.col("u")], rank_col="i")

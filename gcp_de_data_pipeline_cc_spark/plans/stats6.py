@@ -33,35 +33,12 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
+from gcp_de_data_pipeline_cc_spark.functions.uniform import sql_u48, u48
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
-#: the portable md5 U(0,1) draw over orders — identical to
+#: the salt of the portable md5 U(0,1) draw over orders — identical to
 #: stats_ks_uniform so the three EDF statistics audit the SAME sample
-_U_SPARK_SEED = "k:"
-_U_SQL = (
-    "(CAST(CAST('0x' || SUBSTR(md5('k:' || CAST(o_orderkey AS VARCHAR)),"
-    " 1, 12) AS BIGINT) AS DOUBLE) + 0.5) / 281474976710656.0"
-)
-
-
-def _u_col() -> F.Column:
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(_U_SPARK_SEED),
-                        F.col("o_orderkey").cast("string"),
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(281474976710656.0)
+_U_SALT = "k"
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +52,7 @@ _AD_CRIT_05 = 2.492
 
 def _ad_oracle() -> str:
     return f"""
-    WITH v AS (SELECT {_U_SQL} AS u FROM orders),
+    WITH v AS (SELECT {sql_u48(_U_SALT)} AS u FROM orders),
     n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM v),
     rk AS (SELECT u, ROW_NUMBER() OVER (ORDER BY u) AS i FROM v),
     s AS (
@@ -113,7 +90,7 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 
     orders = load_table(spark, sf_dir, "orders")
-    v = orders.select(_u_col().alias("u"))
+    v = orders.select(u48(_U_SALT).alias("u"))
     v = v.localCheckpoint(eager=False)  # rank + count
     nn = v.agg(F.count("*").cast("long").alias("n"))
     rk = global_rank(v, [F.col("u")], rank_col="i")
@@ -156,7 +133,7 @@ _CVM_CRIT_05 = 0.461
 
 def _cvm_oracle() -> str:
     return f"""
-    WITH v AS (SELECT {_U_SQL} AS u FROM orders),
+    WITH v AS (SELECT {sql_u48(_U_SALT)} AS u FROM orders),
     n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM v),
     rk AS (SELECT u, ROW_NUMBER() OVER (ORDER BY u) AS i FROM v),
     s AS (
@@ -191,7 +168,7 @@ def stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 
     orders = load_table(spark, sf_dir, "orders")
-    v = orders.select(_u_col().alias("u"))
+    v = orders.select(u48(_U_SALT).alias("u"))
     v = v.localCheckpoint(eager=False)
     nn = v.agg(F.count("*").cast("long").alias("n"))
     rk = global_rank(v, [F.col("u")], rank_col="i")

@@ -72,7 +72,9 @@ def test_verified_keys_oldest_check_first(monkeypatch):
 
 
 def test_manifest_covers_registry():
-    assert set(load()) == set(REGISTRY) - SKIP
+    manifest = load()
+    assert set(manifest) == set(REGISTRY)
+    assert {k for k, entry in manifest.items() if "fp" not in entry} == SKIP
 
 
 def test_oracle_sql_subset_of_queries():

@@ -77,7 +77,7 @@ def _duck_cat(decl: str) -> str:
 
 def _output_schema(spark, name: str) -> list[list[str]]:
     """``[column, simpleString type]`` pairs of a key's output."""
-    if name in _MANIFEST:
+    if "schema" in _MANIFEST[name]:
         return _MANIFEST[name]["schema"]
     if name not in _BUILT:
         _BUILT[name] = output_schema(REGISTRY[name].spark(spark, SF_DIR))

@@ -14,6 +14,7 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table, normalize_event_ts
+from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 from gcp_de_data_pipeline_cc_spark.sources.csv_ingest import EMPLOYEE_COLUMNS
 from gcp_de_data_pipeline_cc_spark.streaming.file_ingest import (
     ingest_available_now,
@@ -442,3 +443,38 @@ def test_custom_stateful_state_store_survives_kill_and_restart(
     for uid, (n, v) in want.items():
         assert got[uid][0] == n, f"user {uid}: state lost across restart"
         assert abs(got[uid][1] - v) < 0.02, f"user {uid}: value drift"
+
+
+def test_overrunning_stream_key_stops_its_query_and_raises(spark, monkeypatch):
+    """A stream key whose availableNow query is still running at the
+    drain timeout raises instead of returning a partial memory table,
+    and leaves no active query to block the next run's start."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    try:
+        with pytest.raises(TimeoutError):
+            REGISTRY["stream_topk"].spark(spark, SF_DIR)
+        assert spark.streams.active == []
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+
+
+#: Spark jobs outside the stream's own micro-batches while
+#: stream_static_enrich builds; the stream reads the copy it writes with
+#: the schema already known
+_ENRICH_BUILD_JOBS = 6
+
+
+def test_stream_static_enrich_build_jobs(spark):
+    sc = spark.sparkContext
+    group = "test_stream_static_enrich_build_jobs"
+    sc.setJobGroup(group, "stream_static_enrich build budget")
+    try:
+        REGISTRY["stream_static_enrich"].spark(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == _ENRICH_BUILD_JOBS

@@ -197,7 +197,7 @@ def test_triangles_each_counted_three_times_total(spark):
     """Σ per-node triangle participation = 3 × the number of distinct
     triangles (each triangle has exactly 3 corners) — recompute the
     distinct-triangle total independently from the backbone edges."""
-    from gcp_de_data_pipeline_cc_spark.plans.graph import _TRI_K
+    from gcp_de_data_pipeline_cc_spark.operators.graph import SUPPLIER_K
 
     rows = REGISTRY["graph_triangles"].spark(spark, SF_DIR).collect()
     assert rows, "fixture kNN backbone must contain triangles"
@@ -224,11 +224,11 @@ def test_triangles_each_counted_three_times_total(spark):
     edges = set()
     for u, lst in nbrs.items():
         lst.sort(key=lambda t: (-t[0], t[1]))
-        for _, v in lst[:_TRI_K]:
+        for _, v in lst[:SUPPLIER_K]:
             edges.add((min(u, v), max(u, v)))
     # every backbone node keeps at most K selected partners; edge count
     # is bounded by K*n — the linear-growth property the design buys
-    assert len(edges) <= _TRI_K * len(nbrs)
+    assert len(edges) <= SUPPLIER_K * len(nbrs)
     n_tri = sum(
         1
         for (a, b) in edges

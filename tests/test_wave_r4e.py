@@ -56,16 +56,16 @@ def test_graph_backbone_cached_per_session(spark):
     from gcp_de_data_pipeline_cc_spark.operators import graph as og
 
     clear()
-    bb1 = og.supplier_backbone(spark, SF_DIR, 8)
-    bb2 = og.supplier_backbone(spark, SF_DIR, 8)
+    bb1 = og.supplier_backbone(spark, SF_DIR)
+    bb2 = og.supplier_backbone(spark, SF_DIR)
     assert bb1 is bb2  # same checkpointed relation, not a rebuild
-    # the default K binds to the same entry as an explicit 8
-    assert og.supplier_backbone(spark, SF_DIR) is bb1
-    assert og.supplier_backbone(spark, SF_DIR, k=8) is bb1
-    g1 = og.supplier_graph(spark, SF_DIR, 8)
-    assert g1 is og.supplier_graph(spark, SF_DIR, 8)
-    # different K or sf_dir = different backbone
-    assert og.supplier_backbone(spark, SF_DIR, 4) is not bb1
+    g1 = og.supplier_graph(spark, SF_DIR)
+    assert g1 is og.supplier_graph(spark, SF_DIR)
+    # the default rounds bind to the same entry as an explicit 5; other
+    # rounds are a different closure
+    s1 = og.scc_labels(spark, SF_DIR)
+    assert og.scc_labels(spark, SF_DIR, rounds=5) is s1
+    assert og.scc_labels(spark, SF_DIR, 2) is not s1
     e1 = og.brand_copurchase_edges(spark, SF_DIR)
     assert e1 is og.brand_copurchase_edges(spark, SF_DIR)
     l1, l2 = og.lpa_labels(spark, SF_DIR, 2)

@@ -6,14 +6,15 @@ import duckdb
 import pandas as pd
 
 from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
-from gcp_de_data_pipeline_cc_spark.plans.evals import _POS_SQL, _U48_SQL
+from gcp_de_data_pipeline_cc_spark.functions.uniform import sql_u48
+from gcp_de_data_pipeline_cc_spark.plans.evals import _POS_SQL
 from tests.conftest import SF_DIR
 
 
 def _scored_log() -> pd.DataFrame:
     """The eval log recomputed independently in DuckDB (same derivation
     constants, but consumed by PANDAS rank math below, not SQL windows)."""
-    u = _U48_SQL.format(salt="s")
+    u = sql_u48("s")
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW orders AS SELECT * FROM '{SF_DIR}/orders.parquet'"

@@ -264,7 +264,7 @@ def test_ktruss_matches_python_fixpoint(spark):
         supplier_backbone,
     )
 
-    bb = supplier_backbone(spark, SF_DIR, 8).toPandas()
+    bb = supplier_backbone(spark, SF_DIR).toPandas()
     edges = list(zip(bb.sa, bb.sb))
     fix_edges, fix_sup = _python_ktruss_fixpoint(edges)
     out = REGISTRY["graph_ktruss"].spark(spark, SF_DIR).toPandas()

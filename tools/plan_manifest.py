@@ -1,7 +1,8 @@
 """The one plan manifest: capture, fingerprint and count every registry
 key's plans → plan_manifest.json + PLANS.md.
 
-For every registry key outside ``SKIP`` the manifest holds one line:
+The manifest holds one line per registry key.  A ``SKIP`` key's line
+holds only ``oracle`` and ``since``; every other key's line holds:
 
 - ``fp``: the first 16 hex digits of the sha256 of the key's normalised
   *analyzed* logical plans: the top-level plan, then every plan a
@@ -14,12 +15,15 @@ For every registry key outside ``SKIP`` the manifest holds one line:
   holds no file path and no RDD id.
 - the physical census: the ``_METRICS`` counts on the top-level
   formatted plan (no plan a checkpoint hides is counted).
+- ``oracle``: the first 16 hex digits of the sha256 of the key's DuckDB
+  oracle text with the whitespace outside single-quoted literals
+  normalised (:func:`oracle_hash`); null for a rows-only key.
 - ``since``: the first official verification round that could have
-  checked this plan.  A regenerated entry keeps the committed ``since``
-  while its fp and counts are unchanged; otherwise it gets the latest
-  ``CORRECTNESS_rNN.json`` round + 1.  ``__spark_entry__.queries()``
-  puts a key whose ``since`` is past its last official check first in
-  line for the driver's sample.
+  checked this plan and oracle.  A regenerated entry keeps the committed
+  ``since`` while its fp, counts and oracle hash are unchanged;
+  otherwise it gets the latest ``CORRECTNESS_rNN.json`` round + 1.
+  ``__spark_entry__.queries()`` puts a key whose ``since`` is past its
+  last official check first in line for the driver's sample.
 - ``schema``: the output's ``[column, type]`` pairs (Spark
   ``simpleString`` types), which tests/test_schema_parity.py checks
   without building the key.
@@ -35,7 +39,10 @@ Blind spots.  A fingerprint does not see:
   ``sim_topk_pq_rerank`` share one fp because they differ only in the
   closure's ``pool``/``rerank``;
 - side effects while the plan is built: the pipeline keys' tier writes
-  have changed while their plans did not.
+  have changed while their plans did not;
+- the ``SKIP`` keys' plans: only their oracles are tracked here;
+- an oracle change that only moves whitespace outside a quoted literal
+  (DuckDB parses it the same).
 
 So an algorithm change behind an unchanged fp still needs a by-hand
 check at sf0.1.
@@ -105,6 +112,13 @@ _METRICS = {
     "python": r"EvalPython",
 }
 
+#: a single-quoted SQL literal (``''`` escapes a quote); whitespace inside
+#: one is data
+_SQL_LITERAL = re.compile(r"('(?:[^']|'')*')")
+
+#: whitespace beside a parenthesis or comma; SQL parses the same without it
+_SPACE_AT_PUNCT = re.compile(r"\s*([(),])\s*")
+
 #: counters the analyzer hands out; they differ between runs and orders
 _COUNTERS = (
     (re.compile(r"#\d+L?"), "#"),
@@ -161,6 +175,20 @@ def fingerprint(plans: list[str]) -> str:
     return hashlib.sha256(text.encode()).hexdigest()[:16]
 
 
+def oracle_hash(sql: str | None) -> str | None:
+    """sha256[:16] of ``sql`` with the whitespace outside single-quoted
+    literals normalised: each run collapsed to one space, and none kept
+    beside a parenthesis or comma.  None for a rows-only key."""
+    if sql is None:
+        return None
+    parts = _SQL_LITERAL.split(sql)
+    text = "".join(
+        p if i % 2 else _SPACE_AT_PUNCT.sub(r"\1", re.sub(r"\s+", " ", p))
+        for i, p in enumerate(parts)
+    ).strip()
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
 def census(df) -> dict[str, int]:
     plan = formatted(df)
     return {k: len(re.findall(pat, plan)) for k, pat in _METRICS.items()}
@@ -187,6 +215,11 @@ def _latest_round() -> int:
     return max(rounds, default=0)
 
 
+def _tracked(entry: dict) -> dict:
+    """The fields whose change resets ``since``: fp, oracle and census."""
+    return {k: v for k, v in entry.items() if k not in ("since", "schema")}
+
+
 def build(committed: dict[str, dict]) -> tuple[dict[str, dict], dict[str, str]]:
     """Recompute every entry; returns (entries, {key: build error})."""
     spark = session()
@@ -194,23 +227,21 @@ def build(committed: dict[str, dict]) -> tuple[dict[str, dict], dict[str, str]]:
     entries: dict[str, dict] = {}
     failed: dict[str, str] = {}
     for key in sorted(REGISTRY):
-        if key in SKIP:
-            continue
-        try:
-            df, plans = capture(spark, key)
+        entry = {"oracle": oracle_hash(REGISTRY[key].oracle), "since": next_round}
+        if key not in SKIP:
+            try:
+                df, plans = capture(spark, key)
+            except Exception as ex:  # noqa: BLE001 — report every key, then fail
+                failed[key] = f"{type(ex).__name__}: {ex}"[:200]
+                continue
             entry = {
                 "fp": fingerprint(plans),
-                "since": next_round,
+                **entry,
                 **census(df),
                 "schema": output_schema(df),
             }
-        except Exception as ex:  # noqa: BLE001 — report every key, then fail
-            failed[key] = f"{type(ex).__name__}: {ex}"[:200]
-            continue
         old = committed.get(key)
-        if old is not None and all(
-            old.get(k) == entry[k] for k in ("fp", *_METRICS)
-        ):
+        if old is not None and _tracked(old) == _tracked(entry):
             entry["since"] = old["since"]
         entries[key] = entry
     spark.stop()
@@ -227,6 +258,7 @@ def dump(entries: dict[str, dict]) -> str:
 
 
 def plans_md(entries: dict[str, dict]) -> str:
+    entries = {k: e for k, e in entries.items() if k not in SKIP}
     totals = Counter()
     for e in entries.values():
         totals.update({k: e[k] for k in _METRICS})

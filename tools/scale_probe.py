@@ -219,7 +219,7 @@ def probe_graph_backbone(spark, mult: int) -> float:
     d = materialize_dir(spark, mult, ("lineitem",))
     clear()
     t0 = time.time()
-    og.supplier_backbone(spark, d, 8).count()
+    og.supplier_backbone(spark, d).count()
     return time.time() - t0
 
 

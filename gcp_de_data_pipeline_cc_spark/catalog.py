@@ -11,10 +11,12 @@ Physical notes for the 100 TB design point:
 - Parquet columnar at rest; scans get column pruning + predicate pushdown
   from Catalyst for free (verify via ``df.explain``: ``ReadSchema`` /
   ``PushedFilters``).
-- `events.ts` lands as parquet TIMESTAMP(NANOS) which Spark's reader
-  maps to LongType under ``spark.sql.legacy.parquet.nanosAsLong``; the
-  catalog normalizes it to microsecond TimestampType — the exact
-  truncation DuckDB applies, so both engines see identical instants.
+- `events.ts` may land as parquet TIMESTAMP(NANOS) (the benchmark's
+  generated tables), which Spark's reader maps to LongType under
+  ``spark.sql.legacy.parquet.nanosAsLong``, or as TIMESTAMP(MICROS) (the
+  test warehouse), read as TIMESTAMP_NTZ; the catalog normalizes both
+  to microsecond TimestampType — the exact truncation DuckDB applies, so
+  both engines see identical instants.
 """
 
 from __future__ import annotations
@@ -49,9 +51,10 @@ TABLES = (
 REQUIRED_SQL_CONFS = {
     # instant semantics must match the oracle engine (naive UTC)
     "spark.sql.session.timeZone": "UTC",
-    # events.ts is parquet TIMESTAMP(NANOS); legacy readers need this to
-    # scan it at all (as raw longs). Newer readers map nanos natively to
-    # TIMESTAMP_NTZ and ignore this conf — load_table normalizes both.
+    # a parquet TIMESTAMP(NANOS) events.ts is unreadable without this
+    # (Spark 4.1.2: PARQUET_TYPE_ILLEGAL) and reads as raw nano longs
+    # with it; TIMESTAMP(MICROS) reads as TIMESTAMP_NTZ either way —
+    # normalize_event_ts handles both.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
@@ -234,14 +237,14 @@ def fan_out(df: DataFrame) -> DataFrame:
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
-    """Normalize ``events.ts`` (parquet TIMESTAMP(NANOS)) to micros
-    TimestampType, whichever way the reader surfaced it.
+    """Normalize ``events.ts`` to micros TimestampType, whichever way
+    the reader surfaced it.
 
-    Legacy readers (``nanosAsLong=true``) produce raw nano longs;
-    truncate to micros (integer div — matches DuckDB's ns→us
-    truncation). Newer readers map nanos natively to micros
-    TIMESTAMP_NTZ; cast to TimestampType — an exact reinterpretation
-    under the UTC session timezone — so every consumer (watermarks,
+    A TIMESTAMP(NANOS) column reads (under ``nanosAsLong=true``) as raw
+    nano longs; truncate to micros (integer div — matches DuckDB's ns→us
+    truncation). A TIMESTAMP(MICROS) column reads as TIMESTAMP_NTZ; cast
+    to TimestampType — an exact reinterpretation under the UTC session
+    timezone — so every consumer (watermarks,
     unix_micros, window ranges) sees one type either way. Works on both
     batch and streaming DataFrames.
     """

@@ -108,15 +108,11 @@ def supplier_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def supplier_backbone_sql(
-    bb: str = "bb", d: str = "d", r: str = "r", materialize: bool = False
-) -> str:
+def supplier_backbone_sql(materialize: bool = False) -> str:
     """The oracle twin of :func:`supplier_backbone`: the CTEs ``pl``,
     ``e``, ``d``, ``r`` and ``bb`` (sa, sb) at the :data:`SUPPLIER_K`
-    cut.  ``bb``, ``d`` and ``r`` name those CTEs as each consumer's
-    oracle spells them (an oracle's hash covers its text);
-    ``materialize`` marks e, d, r and bb MATERIALIZED for the consumer
-    that reads them once per peeling round."""
+    cut.  ``materialize`` marks e, d, r and bb MATERIALIZED for the
+    consumer that reads them once per peeling round."""
     m = " MATERIALIZED" if materialize else ""
     return f"""pl AS (
         SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
@@ -126,17 +122,17 @@ def supplier_backbone_sql(
         FROM pl a JOIN pl b
           ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
         GROUP BY 1, 2),
-    {d} AS{m} (
+    d AS{m} (
         SELECT sa AS u, sb AS v, w FROM e
         UNION ALL SELECT sb, sa, w FROM e),
-    {r} AS{m} (
+    r AS{m} (
         SELECT u, v,
                ROW_NUMBER() OVER (PARTITION BY u ORDER BY w DESC, v ASC)
                    AS rn
-        FROM {d}),
-    {bb} AS{m} (
+        FROM d),
+    bb AS{m} (
         SELECT DISTINCT LEAST(u, v) AS sa, GREATEST(u, v) AS sb
-        FROM {r} WHERE rn <= {SUPPLIER_K})"""
+        FROM r WHERE rn <= {SUPPLIER_K})"""
 
 
 @shared

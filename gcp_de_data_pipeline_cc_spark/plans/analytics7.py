@@ -44,7 +44,7 @@ from gcp_de_data_pipeline_cc_spark.plans.registry import query
 #: the supplier co-shipment kNN backbone CTEs (operators/graph
 #: .supplier_backbone's oracle twin)
 _BB_SQL = f"""
-    {supplier_backbone_sql(d="dd")}
+    {supplier_backbone_sql()}
 """
 
 

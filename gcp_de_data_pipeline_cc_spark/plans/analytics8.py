@@ -155,7 +155,7 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LS_TOP = 30
 
 _LS_BB_SQL = f"""
-    {supplier_backbone_sql(d="dd", r="rr")},
+    {supplier_backbone_sql()},
     und AS (
         SELECT sa AS u, sb AS v FROM bb
         UNION ALL SELECT sb, sa FROM bb),

@@ -12,12 +12,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from contextlib import contextmanager
-
 from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import ensure_session_posture, load_table
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
-from gcp_de_data_pipeline_cc_spark.streaming import await_drained
+from gcp_de_data_pipeline_cc_spark.streaming import (
+    await_drained,
+    events_stream,
+    run_bounded,
+)
 from gcp_de_data_pipeline_cc_spark.streaming.windows import (
     session_windows,
     sliding_counts,
@@ -123,25 +125,6 @@ def rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@contextmanager
-def _stream_state_partitions(spark: SparkSession, n: int = 4):
-    """Scope ``spark.sql.shuffle.partitions`` around a streaming-query
-    START: a stateful stream instantiates one state-store instance per
-    shuffle partition (per stateful operator, per side for joins), so
-    state parallelism should be sized to KEY CARDINALITY, not to the
-    session's batch-shuffle width — 32 stores for 150 users is pure
-    fixed overhead (measured 13 s → 3 s on stream_stream_join at
-    sf0.1). On a real cluster with millions of keys, size this to
-    cluster scale instead; the knob is per-query because it binds at
-    stream start, and the original value is always restored."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 @query("stream_custom_stateful", oracle=None)
 def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState): per-user
@@ -160,7 +143,6 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count/sum are associative). Measured at sf0.1: stream wall
     3-8 s -> ~1 s, and the r8 official bench's 34.6 s outlier on this
     key (Python-path payload x host band) is structurally removed."""
-    from gcp_de_data_pipeline_cc_spark.catalog import ensure_session_posture
     from gcp_de_data_pipeline_cc_spark.streaming.stateful import (
         running_user_totals_from_partials,
     )
@@ -187,27 +169,17 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         "maxFilesPerTrigger", "1"
     ).parquet(src_dir)
 
-    totals = running_user_totals_from_partials(sdf)
-    name = f"state_{abs(hash(tmp)) % 10**8}"
-    with _stream_state_partitions(spark):
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drained(q)
+    totals = run_bounded(
+        running_user_totals_from_partials(sdf), "update", "stream_state"
+    )
     # update mode appends one row per touched key per batch; the running
     # total is the LATEST row per user = the one with the highest event
     # count (monotone), not independent column maxima (value_sum can
     # decrease when event values are negative)
-    mem = spark.table(name)
-    latest = mem.groupBy("user_id").agg(
+    return totals.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max_by("value_sum", "n_events").alias("value_sum"),
     )
-    return latest
 
 
 @query("stream_watermark_dedup", oracle=None)
@@ -221,38 +193,16 @@ def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: dropDuplicatesWithinWatermark keeps only one watermark-window
     of keys in state — bounded memory on an unbounded stream.
     """
-    import shutil
-
-    from gcp_de_data_pipeline_cc_spark.catalog import (
-        ensure_session_posture,
-        normalize_event_ts,
-    )
     from gcp_de_data_pipeline_cc_spark.streaming.windows import streaming_dedup
 
-    ensure_session_posture(spark)  # direct parquet read bypasses load_table
-    tmp = scratch_dir("stream_wm")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{tmp}/part-0.parquet")
-    raw_schema = spark.read.parquet(tmp).schema
-    sdf = spark.readStream.schema(raw_schema).parquet(tmp)
-    sdf = normalize_event_ts(sdf)
-
+    sdf = events_stream(spark, sf_dir, "stream_wm")
     deduped = streaming_dedup(sdf, ["user_id", "event_type"], "1 hour")
     out = deduped.groupBy(F.window("ts", "1 day").alias("win")).agg(
         F.count("*").alias("n_first_seen")
     ).select(
         F.col("win.start").alias("day_start"), "n_first_seen"
     )
-    name = f"wm_dedup_{abs(hash(tmp)) % 10**8}"
-    with _stream_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drained(q)
-    return spark.table(name)
+    return run_bounded(out, "complete", "stream_wm")
 
 
 @query(
@@ -346,35 +296,11 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from gcp_de_data_pipeline_cc_spark.catalog import (
-        ensure_session_posture,
-        normalize_event_ts,
-    )
-
-    ensure_session_posture(spark)  # direct parquet read bypasses load_table
-    tmp = scratch_dir("stream_topk")
-    import shutil
-
-    shutil.copy(f"{sf_dir}/events.parquet", f"{tmp}/part-0.parquet")
-    raw_schema = spark.read.parquet(tmp).schema
-    sdf = spark.readStream.schema(raw_schema).parquet(tmp)
-    sdf = normalize_event_ts(sdf)
-
+    sdf = events_stream(spark, sf_dir, "stream_topk")
     counts = sdf.groupBy(
         F.window("ts", "1 day").alias("win"), "event_type"
     ).agg(F.count("*").alias("n_events"))
-    name = f"topk_{abs(hash(tmp)) % 10**8}"
-    with _stream_state_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drained(q)
-
-    agg = spark.table(name).select(
+    agg = run_bounded(counts, "complete", "stream_topk").select(
         F.col("win.start").alias("day_start"), "event_type", "n_events"
     )
     w = Window.partitionBy("day_start").orderBy(
@@ -445,25 +371,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     event time. Without the watermark the join state would grow
     unboundedly — the 100 TB failure mode this operator exists to avoid.
     """
-    import shutil
-
-    from gcp_de_data_pipeline_cc_spark.catalog import (
-        ensure_session_posture,
-        normalize_event_ts,
-    )
-
-    ensure_session_posture(spark)  # direct parquet read bypasses load_table
-    tmp = scratch_dir("stream_ss")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{tmp}/part-0.parquet")
-    raw_schema = spark.read.parquet(tmp).schema
-
-    def stream():
-        sdf = spark.readStream.schema(raw_schema).parquet(tmp)
-        return normalize_event_ts(sdf)
-
+    ev = events_stream(spark, sf_dir, "stream_ss")
     s = (
-        stream()
-        .filter(F.col("event_type") == "signup")
+        ev.filter(F.col("event_type") == "signup")
         .select(
             F.col("event_id").alias("signup_id"),
             "user_id",
@@ -472,8 +382,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("s_ts", "1 hour")
     )
     p = (
-        stream()
-        .filter(F.col("event_type") == "purchase")
+        ev.filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
             F.col("event_id").alias("purchase_id"),
@@ -485,17 +394,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         p,
         F.expr("user_id = p_user AND p_ts > s_ts AND p_ts <= s_ts + INTERVAL 1 HOUR"),
     ).select("signup_id", "purchase_id")
-    name = f"ssjoin_{abs(hash(tmp)) % 10**8}"
-    with _stream_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drained(q)
-    return spark.table(name)
+    return run_bounded(joined, "append", "stream_ss")
 
 
 @query(
@@ -523,8 +422,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-resolution actually executes."""
     import shutil
 
-    from gcp_de_data_pipeline_cc_spark.catalog import ensure_session_posture
-
     ensure_session_posture(spark)
     tmp = scratch_dir("stream_enrich")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -545,16 +442,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
         .select("event_id", "user_id", "segment", "nation")
     )
-    name = f"enrich_{abs(hash(tmp)) % 10**8}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    result = spark.table(name).localCheckpoint()
+    result = run_bounded(sdf, "append", "stream_enrich")
     shutil.rmtree(tmp, ignore_errors=True)
     return result
 
@@ -584,23 +472,19 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually exercised; the final target equals the batch latest-per-key
     query, which makes the whole pipeline oracle-checkable.
 
-    Scale: per batch, the merge is one WindowGroupLimit dedup of
-    (current ∪ batch-latest) keyed on user_id — shuffle bounded by
-    target + batch size. The swap-directory write stands in for a
+    Scale: per batch, the merge is one latest-row-per-user_id dedup of
+    (current ∪ batch) — shuffle bounded by target + batch size. The swap-directory write stands in for a
     transactional table format (Delta/Iceberg MERGE INTO); the batch
     logic is exactly what their merge executes, minus the log. State
     never lives in the stream (no watermark, no state store): the
     target IS the state, which is why restarts are safe — re-merging a
     batch is idempotent."""
-    import os
     import shutil
 
-    from pyspark.sql import Window
+    from gcp_de_data_pipeline_cc_spark.streaming.foreach_sink import (
+        streaming_upsert_sink,
+    )
 
-    from gcp_de_data_pipeline_cc_spark.catalog import ensure_session_posture
-    from gcp_de_data_pipeline_cc_spark.sources.sink import recover_swap, swap_in
-
-    ensure_session_posture(spark)
     stage = scratch_dir("stream_fb_src")
     root = scratch_dir("stream_fb_tgt")
     target = f"{root}/current"
@@ -609,47 +493,15 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_id", "ts", "event_type", "value"
     )
     ev.repartition(3).write.mode("overwrite").parquet(stage)
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        latest = (
-            batch.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        recover_swap(target)  # an earlier batch may have died inside the swap
-        merged = latest
-        if os.path.exists(target):
-            # the target was written from batch-shaped frames, so read it
-            # with the batch's schema: inferring it would cost a job
-            current = batch.sparkSession.read.schema(latest.schema).parquet(target)
-            merged = current.unionByName(latest)
-        merged = (
-            merged.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        tmp_out = f"{root}/merge_{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp_out)
-        swap_in(tmp_out, target)
-
-    q = (
+    updates = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
-        .writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
     )
-    await_drained(q)
-    result = (
-        spark.read.parquet(target)
-        .select("user_id", "event_id", "ts", "event_type", "value")
-        .localCheckpoint()
+    await_drained(
+        streaming_upsert_sink(
+            updates, target, ["user_id"], ["ts", "event_id"], f"{root}/checkpoint"
+        )
     )
     shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    return spark.read.schema(ev.schema).parquet(target)

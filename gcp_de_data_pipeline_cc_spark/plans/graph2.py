@@ -31,16 +31,18 @@ _KT_ROUNDS = 3     # unrolled peeling rounds
 def _ktruss_oracle() -> str:
     sup = _KT_K - 2
     prelude = f"""
-    WITH {supplier_backbone_sql("e0", materialize=True)},
+    WITH {supplier_backbone_sql(materialize=True)},
     g0 AS MATERIALIZED (
-        SELECT sa AS u, sb AS w FROM e0
-        UNION ALL SELECT sb, sa FROM e0)"""
+        SELECT sa AS u, sb AS w FROM bb
+        UNION ALL SELECT sb, sa FROM bb)"""
     steps = []
     for i in range(1, _KT_ROUNDS + 1):
+        # round i peels the edges that survived round i-1 (bb: none yet)
+        edges = f"e{i-1}" if i > 1 else "bb"
         steps.append(f"""
     t{i} AS MATERIALIZED (
         SELECT e.sa, e.sb, CAST(COUNT(*) AS BIGINT) AS sup
-        FROM e{i-1} e
+        FROM {edges} e
         JOIN g{i-1} a1 ON a1.u = e.sa
         JOIN g{i-1} a2 ON a2.u = e.sb AND a2.w = a1.w
         GROUP BY 1, 2),

@@ -11,7 +11,6 @@ equal to its batch twin in tests/test_streaming.py.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -167,27 +166,6 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.select("s_suppkey", "s_name", "s_acctbal")
 
 
-def avro_available() -> bool:
-    """True when the spark-avro datasource jar is on the classpath.
-
-    Avro has been an EXTERNAL module since Spark 2.4 (the core avro-*
-    jars bundled with pyspark are the serialization library only, not
-    the datasource). This container ships no ``spark-avro_*.jar`` and
-    has no network to fetch one, so the ``avro_roundtrip`` query is
-    registered only when the jar is actually present — probing the jar
-    directory at import keeps the registry free of keys that can only
-    throw. On a real deployment, ``--packages org.apache.spark:
-    spark-avro_2.13:<version>`` lights this up with no code change.
-    """
-    import glob as _glob
-    import os as _os
-
-    import pyspark as _pyspark
-
-    jar_dir = _os.path.join(_os.path.dirname(_pyspark.__file__), "jars")
-    return bool(_glob.glob(_os.path.join(jar_dir, "spark-avro*.jar")))
-
-
 @query(
     "avro_roundtrip",
     oracle="""
@@ -199,23 +177,17 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1-extension — Avro row-oriented source format (the streaming-
     interchange format; schema travels with the data).
 
-    Two engines, one key: with the external spark-avro jar on the
-    classpath the JVM datasource runs; without it (this container — no
-    jar, no network) the roundtrip runs through ``format("pyavro")``,
-    the pure-Python Avro Object Container File implementation in
-    ``sources/avro_py.py`` (spec-conformant: zigzag varints, deflate
-    blocks, schema-in-header — readable by any stock Avro tool). The
-    oracle is the same either way: losslessness makes the source
-    projection the expected result."""
+    The roundtrip runs through ``format("pyavro")``, the pure-Python
+    Avro Object Container File implementation in ``sources/avro_py.py``
+    (spec-conformant: zigzag varints, deflate blocks, schema-in-header —
+    readable by any stock Avro tool), so it needs no external spark-avro
+    jar. Losslessness makes the source projection the expected result."""
     src = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    tmp = scratch_dir("avro_roundtrip")
-    if avro_available():
-        src.write.mode("overwrite").format("avro").save(f"{tmp}/supp")
-        return spark.read.format("avro").load(f"{tmp}/supp")
     from gcp_de_data_pipeline_cc_spark.sources.avro_py import PyAvroDataSource
 
+    tmp = scratch_dir("avro_roundtrip")
     try:
         spark.dataSource.register(PyAvroDataSource)
     except Exception:

@@ -16,7 +16,6 @@ from gcp_de_data_pipeline_cc_spark.operators import dedup as dd
 from gcp_de_data_pipeline_cc_spark.operators import multimodal as mm
 from gcp_de_data_pipeline_cc_spark.operators import similarity as sim
 from gcp_de_data_pipeline_cc_spark.operators import text as tx
-from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 

@@ -1,9 +1,8 @@
 """Pure-Python Avro Object Container File codec + ``pyavro`` DataSource.
 
-Avro is an EXTERNAL Spark module (the ``spark-avro`` datasource jar is
-not bundled with pyspark, and this container has no network to fetch
-it — see ``plans/lifecycle.avro_available``). Rather than leaving the
-format as a capability gap, this module implements the Avro 1.x Object
+Avro is an EXTERNAL Spark module: the ``spark-avro`` datasource jar is
+not bundled with pyspark. Rather than leaving the format to depend on
+the deployment's classpath, this module implements the Avro 1.x Object
 Container File spec (public: avro.apache.org/docs/current/specification)
 directly — zigzag-varint primitives, file header with schema metadata,
 sync-marked data blocks, null/deflate codecs — and plugs it into Spark
@@ -11,9 +10,8 @@ through the PySpark 4 Python DataSource API as ``format("pyavro")``.
 
 Files written here are REAL Avro: any stock reader (avro-tools,
 fastavro, the spark-avro jar) can read them, and vice versa for flat
-record schemas. When the JVM datasource jar IS present, the engine uses
-it instead (``plans/lifecycle.avro_roundtrip`` picks at import time);
-this path exists so the format works everywhere the engine does.
+record schemas. ``format("pyavro")`` is the engine's one Avro path, so
+the format works everywhere the engine does.
 
 Scale notes: reads parallelize one task per container file (the writer
 produces one file per input partition, so layout parallelism is
@@ -45,7 +43,6 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
-    DataType,
     DoubleType,
     FloatType,
     IntegerType,

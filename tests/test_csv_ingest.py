@@ -55,10 +55,9 @@ def test_quarantine_catches_bad_required_casts(spark, landing):
 
 
 def test_avro_roundtrip_always_registered(spark):
-    """avro_roundtrip is no longer capability-gated: the JVM spark-avro
-    datasource is used when its jar exists, the pure-Python ``pyavro``
-    container codec otherwise — either way the key must run and return
-    the supplier projection."""
+    """avro_roundtrip is not capability-gated: it runs through the
+    pure-Python ``pyavro`` container codec, which needs no spark-avro
+    jar, and must return the supplier projection."""
     from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 
     assert "avro_roundtrip" in REGISTRY

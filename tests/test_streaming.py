@@ -13,14 +13,15 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table, normalize_event_ts
+from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 from gcp_de_data_pipeline_cc_spark.sources.csv_ingest import EMPLOYEE_COLUMNS
+from gcp_de_data_pipeline_cc_spark.streaming import events_stream, run_bounded
 from gcp_de_data_pipeline_cc_spark.streaming.file_ingest import (
     ingest_available_now,
     landing_stream,
 )
-from gcp_de_data_pipeline_cc_spark.streaming.foreach_sink import streaming_scd1_sink
+from gcp_de_data_pipeline_cc_spark.streaming.foreach_sink import streaming_upsert_sink
 from gcp_de_data_pipeline_cc_spark.streaming.windows import (
     streaming_dedup,
     tumbling_counts,
@@ -117,31 +118,13 @@ def test_ingest_restart_mid_drain_no_loss_no_dupes(spark, tmp_path):
     assert spark.read.parquet(out).count() == n_files * rows_per
 
 
-def test_tumbling_stream_equals_batch(spark, tmp_path):
-    # stream the events table from a file-source copy
-    src = f"{SF_DIR}/events.parquet"
-    events_dir = tmp_path / "events"
-    events_dir.mkdir()
-    shutil.copy(src, events_dir / "part-0.parquet")
-
-    raw_schema = spark.read.parquet(str(events_dir)).schema
-    sdf = spark.readStream.schema(raw_schema).parquet(str(events_dir))
-    sdf = normalize_event_ts(sdf)
-
+def test_tumbling_stream_equals_batch(spark):
+    sdf = events_stream(spark, SF_DIR, "tumbling_test")
     # complete mode: append+watermark would hold back windows newer than
     # the final watermark (they'd emit on the *next* batch in production)
     agg = tumbling_counts(with_watermark(sdf, "1 hour"))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tumbling_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
     got = {
-        tuple(r) for r in spark.table("tumbling_test").collect()
+        tuple(r) for r in run_bounded(agg, "complete", "tumbling_test").collect()
     }
     want = {
         tuple(r)
@@ -173,12 +156,16 @@ def _land_scd1_drops(tmp_path):
 
 
 def _start_scd1_sink(spark, tmp_path):
-    """Start (or restart from its checkpoint) the foreachBatch SCD1 sink
-    over the landed drops; returns (query, dimension path)."""
+    """Start (or restart from its checkpoint) the foreachBatch upsert
+    sink over the landed drops, latest ingest winning per employee;
+    returns (query, dimension path)."""
     stream = landing_stream(spark, str(tmp_path / "landing"), EMPLOYEE_COLUMNS,
-                            max_files_per_trigger=1).drop("ingest_ts")
+                            max_files_per_trigger=1)
     target = str(tmp_path / "dim" / "employee")
-    return streaming_scd1_sink(stream, target, ["emp_id"], str(tmp_path / "ckpt")), target
+    query = streaming_upsert_sink(
+        stream, target, ["emp_id"], ["ingest_ts"], str(tmp_path / "ckpt")
+    )
+    return query, target
 
 
 def _dimension(spark, target):
@@ -220,27 +207,18 @@ def test_foreachbatch_scd1_failed_swap_keeps_dimension(spark, tmp_path, monkeypa
     assert _dimension(spark, target) == _SCD1_DIMENSION
 
 
-def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
+def test_stream_stream_interval_join_equals_batch(spark):
     """Watermarked stream-stream inner join with a time-range condition
     must emit exactly the batch join's matches (inner joins emit matches
     eagerly; the watermark only bounds state)."""
-    src = f"{SF_DIR}/events.parquet"
-    d = tmp_path / "ev"
-    d.mkdir()
-    shutil.copy(src, d / "part-0.parquet")
-    raw_schema = spark.read.parquet(str(d)).schema
-
-    def stream():
-        sdf = spark.readStream.schema(raw_schema).parquet(str(d))
-        return normalize_event_ts(sdf)
-
+    ev = events_stream(spark, SF_DIR, "ssjoin_test")
     s = (
-        stream().filter(F.col("event_type") == "signup")
+        ev.filter(F.col("event_type") == "signup")
         .select(F.col("event_id").alias("signup_id"), "user_id", F.col("ts").alias("s_ts"))
         .withWatermark("s_ts", "1 hour")
     )
     p = (
-        stream().filter(F.col("event_type") == "purchase")
+        ev.filter(F.col("event_type") == "purchase")
         .select(F.col("user_id").alias("p_user"), F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts"))
         .withWatermark("p_ts", "1 hour")
     )
@@ -250,15 +228,7 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
             "user_id = p_user AND p_ts > s_ts AND p_ts <= s_ts + INTERVAL 1 HOUR"
         ),
     ).select("signup_id", "p_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssjoin_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {tuple(r) for r in spark.table("ssjoin_test").collect()}
+    got = {tuple(r) for r in run_bounded(joined, "append", "ssjoin_test").collect()}
 
     ev = load_table(spark, SF_DIR, "events")
     bs = ev.filter(F.col("event_type") == "signup").select(
@@ -302,17 +272,9 @@ def test_custom_stateful_totals_equal_batch(spark, tmp_path):
         "maxFilesPerTrigger", "1"
     ).parquet(src)
     totals = running_user_totals_from_partials(_one_event_partials(sdf))
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("stateful_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         r.user_id: (r.n_events, r.value_sum)
-        for r in spark.table("stateful_test")
+        for r in run_bounded(totals, "update", "stateful_test")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -447,8 +409,8 @@ def test_custom_stateful_state_store_survives_kill_and_restart(
 
 def test_overrunning_stream_key_stops_its_query_and_raises(spark, monkeypatch):
     """A stream key whose availableNow query is still running at the
-    drain timeout raises instead of returning a partial memory table,
-    and leaves no active query to block the next run's start."""
+    drain timeout raises instead of returning a partial result, and
+    leaves no active query to block the next run's start."""
     from pyspark.sql.streaming import StreamingQuery
 
     monkeypatch.setattr(
@@ -463,10 +425,21 @@ def test_overrunning_stream_key_stops_its_query_and_raises(spark, monkeypatch):
             q.stop()
 
 
+def test_stream_keys_register_no_table_and_stop_their_query(spark):
+    """Stream keys drain into scratch parquet, not into a driver-memory
+    table: building one adds nothing to the catalog and leaves no query
+    running."""
+    before = {t.name for t in spark.catalog.listTables()}
+    for key in ("stream_topk", "stream_static_enrich"):
+        REGISTRY[key].spark(spark, SF_DIR)
+    assert {t.name for t in spark.catalog.listTables()} == before
+    assert spark.streams.active == []
+
+
 #: Spark jobs outside the stream's own micro-batches while
 #: stream_static_enrich builds; the stream reads the copy it writes with
-#: the schema already known
-_ENRICH_BUILD_JOBS = 6
+#: the schema already known, and its output is read back the same way
+_ENRICH_BUILD_JOBS = 5
 
 
 def test_stream_static_enrich_build_jobs(spark):

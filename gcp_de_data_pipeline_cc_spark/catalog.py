@@ -17,6 +17,11 @@ Physical notes for the 100 TB design point:
   test warehouse), read as TIMESTAMP_NTZ; the catalog normalizes both
   to microsecond TimestampType — the exact truncation DuckDB applies, so
   both engines see identical instants.
+- The reference's tables carry declared schemas; here a table's schema
+  is inferred from its parquet footers once per session and warehouse
+  (:func:`table_schema`, a :func:`shared` entry) and every later read
+  is given it, so reading a table the session has seen runs no Spark
+  job while the plan is built.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 #: every table the test warehouse carries (TESTDATA.md)
 TABLES = (
@@ -105,11 +110,11 @@ def shared(fn):
     warehouse, and hand every later call the same object.
 
     Several registry keys read the same derived relation (graph backbones,
-    dedup pairs, quality signals) or the same driver-side values bounded
-    by config (the PQ codebook and query index); the builder behind this
-    decorator runs once and every consumer — in the same or any later
-    query of the session — reuses what it returned, as built: a
-    DataFrame, a pandas frame, a tuple, or a list.
+    dedup pairs, quality signals), the same driver-side values bounded
+    by config (the PQ codebook and query index) or the same table schema;
+    the builder behind this decorator runs once and every consumer — in
+    the same or any later query of the session — reuses what it returned,
+    as built: a DataFrame, a pandas frame, a tuple, a list or a schema.
 
     Key: (applicationId, sf_dir, ``fn.__qualname__``, params), with params
     bound through ``fn``'s signature and defaults applied, so
@@ -192,14 +197,31 @@ def fixpoint(
     return state
 
 
+@shared
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema of one warehouse table as the parquet reader infers it
+    (``events.ts`` still raw, before :func:`normalize_event_ts`).
+
+    Inference submits one Spark job (a footer read), even for one file;
+    as a :func:`shared` entry it runs once per table per warehouse and
+    session, and again only after a warehouse table is rewritten.
+    ``name`` is one of :data:`TABLES`, the tables whose rewrite
+    :func:`shared` notices."""
+    ensure_session_posture(spark)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one warehouse table, normalizing physical quirks.
 
-    Column normalization happens *after* the scan node, so pushdown and
+    The scan is given the table's :func:`table_schema`, so a read plans
+    without a Spark job once the session has seen the table.  Column
+    normalization happens *after* the scan node, so pushdown and
     pruning still reach the parquet reader for every other column.
     """
     ensure_session_posture(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(table_schema(spark, sf_dir, name)).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df

@@ -5,77 +5,35 @@ Every operator from SURVEY.md §2 is registered here as a named
 DataFrame-first Spark implementation with (where SQL-expressible) an ANSI
 SQL oracle that DuckDB can execute over the same parquet tables.
 
-Importing this package populates the registry.
+The first read of ``REGISTRY`` from this package imports every plan
+module, which populates it.  Importing one plan module does not: a Python
+worker that unpickles a UDF from ``plans.llm`` imports ``llm`` and what
+it imports, not the rest of the registry.  Registry order is the plan
+modules' name order (and that of the modules they import) when
+``REGISTRY`` is the first thing a process takes from the package, as the
+driver contract does.
 """
 
-from gcp_de_data_pipeline_cc_spark.plans.registry import REGISTRY, QuerySpec, query
+import importlib
+import pkgutil
 
-# registration side effects
-from gcp_de_data_pipeline_cc_spark.plans import (  # noqa: E402,F401
-    abtest,
-    analytics,
-    analytics2,
-    analytics3,
-    analytics4,
-    analytics5,
-    analytics6,
-    analytics7,
-    analytics8,
-    corpus,
-    corpus2,
-    corpus3,
-    corpus4,
-    corpus5,
-    corpus6,
-    corpus7,
-    corpus8,
-    corpus_stats,
-    curation,
-    evals,
-    events,
-    graph,
-    graph2,
-    layout,
-    lifecycle,
-    llm,
-    multimodal2,
-    ops,
-    pipeline_e2e,
-    pipeline_ops,
-    privacy,
-    recsys,
-    relational,
-    relational_ext,
-    relational_ext2,
-    relational_ext3,
-    relational_ext4,
-    relational_ext5,
-    relational_ext6,
-    relational_ext7,
-    relational_ext8,
-    retrieval,
-    retrieval2,
-    scale,
-    sketches,
-    stats,
-    stats2,
-    stats3,
-    stats4,
-    stats5,
-    stats6,
-    timeseries,
-    timeseries2,
-    timeseries3,
-    timeseries4,
-    timeseries5,
-    timeseries6,
-    timeseries7,
-    timeseries8,
-    training,
-    udfs,
-)
+from gcp_de_data_pipeline_cc_spark.plans.registry import QuerySpec, query
 
-# imported after the signal modules: its oracle nests theirs
-from gcp_de_data_pipeline_cc_spark.plans import quality_composite  # noqa: E402,F401
+
+def __getattr__(name):
+    if name != "REGISTRY":
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    # every plan module in name order, quality_composite last (where it
+    # has always registered; queries() breaks ties by registry order)
+    names = sorted(m.name for m in pkgutil.iter_modules(__path__))
+    names.remove("registry")
+    names.remove("quality_composite")
+    for mod in names + ["quality_composite"]:
+        importlib.import_module(f"{__name__}.{mod}")
+    from gcp_de_data_pipeline_cc_spark.plans.registry import REGISTRY
+
+    globals()["REGISTRY"] = REGISTRY
+    return REGISTRY
+
 
 __all__ = ["REGISTRY", "QuerySpec", "query"]

@@ -13,7 +13,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir
-from gcp_de_data_pipeline_cc_spark.catalog import ensure_session_posture, load_table
+from gcp_de_data_pipeline_cc_spark.catalog import (
+    ensure_session_posture,
+    load_table,
+    table_schema,
+)
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 from gcp_de_data_pipeline_cc_spark.streaming import (
     await_drained,
@@ -153,8 +157,10 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two half-streams → two micro-batches; each landed file is the
     # per-user partial aggregate of its (deterministic) half, so the
     # stream never carries the raw event payload at all
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", "value"
+    raw = (
+        spark.read.schema(table_schema(spark, sf_dir, "events"))
+        .parquet(f"{sf_dir}/events.parquet")
+        .select("event_id", "user_id", "value")
     )
     partials = raw.groupBy(
         F.pmod(F.xxhash64("event_id"), F.lit(2)).alias("half"), "user_id"
@@ -424,7 +430,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session_posture(spark)
     tmp = scratch_dir("stream_enrich")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = spark.read.schema(table_schema(spark, sf_dir, "events")).parquet(
+        f"{sf_dir}/events.parquet"
+    )
     raw.repartition(3).write.mode("overwrite").parquet(tmp)
 
     cust = load_table(spark, sf_dir, "customer").select(

@@ -1,8 +1,8 @@
 """Composite quality score — the curation capstone key.
 
-Imported LAST in plans/__init__: its oracle NESTS the oracle SQL of the
-three signal keys (text_entropy / text_repetition / text_perplexity),
-which must already be registered.
+Its oracle NESTS the oracle SQL of the three signal keys (text_entropy /
+text_repetition / text_perplexity), so their modules are imported, and
+the keys registered, before it is built.
 """
 
 from __future__ import annotations
@@ -10,6 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_de_data_pipeline_cc_spark.plans.corpus2 import text_perplexity
+from gcp_de_data_pipeline_cc_spark.plans.corpus_stats import (
+    text_entropy,
+    text_repetition,
+)
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 
@@ -81,11 +86,6 @@ def quality_composite_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: three signal passes (each one shuffle), three two-phase
     rank passes over the entity-sized signal table, one final join."""
     from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
-    from gcp_de_data_pipeline_cc_spark.plans.corpus2 import text_perplexity
-    from gcp_de_data_pipeline_cc_spark.plans.corpus_stats import (
-        text_entropy,
-        text_repetition,
-    )
 
     e = text_entropy(spark, sf_dir).select("doc_id", "entropy")
     r = text_repetition(spark, sf_dir).select("doc_id", "repetition_ratio")

@@ -11,6 +11,7 @@ from pyspark.sql.streaming import StreamingQuery
 from gcp_de_data_pipeline_cc_spark.catalog import (
     ensure_session_posture,
     normalize_event_ts,
+    table_schema,
 )
 from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir
 
@@ -83,10 +84,11 @@ def events_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The warehouse's ``events`` table as a file-source stream: the
     file is copied into a scratch landing directory (one file, so one
     micro-batch) and read back with ``ts`` normalized as ``load_table``
-    does.  The stream reads the file itself, not through ``load_table``,
-    so the session posture is applied here."""
+    does.  The copy is byte-identical, so it is read with the table's
+    session schema; the stream reads the file itself, not through
+    ``load_table``, so the session posture is applied here."""
     ensure_session_posture(spark)
     landing = scratch_dir(f"{name}_src")
     shutil.copy(f"{sf_dir}/events.parquet", f"{landing}/part-0.parquet")
-    schema = spark.read.parquet(landing).schema
+    schema = table_schema(spark, sf_dir, "events")
     return normalize_event_ts(spark.readStream.schema(schema).parquet(landing))

@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from gcp_de_data_pipeline_cc_spark import catalog
 from gcp_de_data_pipeline_cc_spark.operators.quality import QualityGateError
 from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 from gcp_de_data_pipeline_cc_spark.plans.pipeline_e2e import (
@@ -109,11 +110,13 @@ def test_failed_gate_aborts_the_run(spark, tmp_path):
     )  # not archived
 
 
-#: (build, exec) Spark jobs of end_to_end_pipeline at the test scale
+#: (build, exec) Spark jobs of end_to_end_pipeline at the test scale,
+#: from cold session schemas
 _E2E_JOBS = (19, 3)
 
 
 def test_end_to_end_pipeline_job_budget(spark):
+    catalog.clear()  # cold schemas, whichever tests ran before
     sc = spark.sparkContext
     group = "test_end_to_end_pipeline_job_budget"
     try:

@@ -710,6 +710,23 @@ def test_global_rank_is_two_phase_range_exchange(spark):
         assert "__pid" in chunk, chunk
 
 
+@pytest.mark.parametrize("cumsum", [False, True])
+def test_global_rank_pins_its_range_partitions(spark, cumsum):
+    """Both global_rank paths checkpoint the range-partitioned relation
+    by default: planned twice, the range exchange would sample its
+    boundaries twice with different seeds, and local ranks could
+    disagree with the partition offsets.  The checkpoint shows in the
+    analyzed plan as a LogicalRDD."""
+    from pyspark.sql import functions as F
+
+    from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
+
+    df = spark.range(1000).select("id", (F.col("id") % 7).alias("v"))
+    kw = {"value_col": "v", "cumsum_col": "cv"} if cumsum else {}
+    ranked = global_rank(df, [F.col("v"), F.col("id")], **kw)
+    assert "LogicalRDD" in ranked._jdf.queryExecution().analyzed().toString()
+
+
 # --------------------------------------------------------------------------
 # Registry-wide EMPIRICAL SinglePartition classification (r4 verdict #3)
 # --------------------------------------------------------------------------

@@ -13,6 +13,7 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from gcp_de_data_pipeline_cc_spark import catalog
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
 from gcp_de_data_pipeline_cc_spark.sources.csv_ingest import EMPLOYEE_COLUMNS
@@ -437,12 +438,15 @@ def test_stream_keys_register_no_table_and_stop_their_query(spark):
 
 
 #: Spark jobs outside the stream's own micro-batches while
-#: stream_static_enrich builds; the stream reads the copy it writes with
-#: the schema already known, and its output is read back the same way
+#: stream_static_enrich builds from cold session schemas (3 of them infer
+#: the events, customer and nation schemas); the stream reads the copy it
+#: writes with the schema already known, and its output is read back the
+#: same way
 _ENRICH_BUILD_JOBS = 5
 
 
 def test_stream_static_enrich_build_jobs(spark):
+    catalog.clear()  # cold schemas, whichever tests ran before
     sc = spark.sparkContext
     group = "test_stream_static_enrich_build_jobs"
     sc.setJobGroup(group, "stream_static_enrich build budget")

@@ -111,7 +111,7 @@ def shared(fn):
 
     Several registry keys read the same derived relation (graph backbones,
     dedup pairs, quality signals), the same driver-side values bounded
-    by config (the PQ codebook and query index) or the same table schema;
+    by config (the PQ training stratum and query index) or the same table schema;
     the builder behind this decorator runs once and every consumer — in
     the same or any later query of the session — reuses what it returned,
     as built: a DataFrame, a pandas frame, a tuple, a list or a schema.
@@ -195,6 +195,25 @@ def fixpoint(
     if done is not None:
         raise NonConvergence(name, max_rounds)
     return state
+
+
+def collect_bounded(df: DataFrame, bound: int, why: str) -> list:
+    """The one driver collect for plans: ``df``'s rows, at most
+    ``bound`` of them.  ``bound`` comes from config or a domain (a
+    codebook size, a query sample, a dimension's cardinality), never
+    from the data; more rows than that raise, naming ``why``, instead
+    of pulling a data-sized result onto the driver.
+
+    The limit rides the collect itself: a CollectLimit, or over a sort
+    a TakeOrderedAndProject.  On the small shuffled relations bounded
+    collects read (one partition once AQE coalesces them) that runs no
+    Spark job a plain ``collect`` would not, and over a sort one fewer:
+    no range-boundary sample.  CollectLimit reads partitions a few at a
+    time, so over a narrow many-partition scan it can run more jobs."""
+    rows = df.limit(bound + 1).collect()
+    if len(rows) > bound:
+        raise ValueError(f"{why}: more than {bound} rows reached the driver")
+    return rows
 
 
 @shared

@@ -61,18 +61,20 @@ _QS_MULT = 1000003
 _QS_MOD = 7919993
 
 
+def hash_rank(id_col: str = "vec_id") -> list:
+    """The query sample's total order as sort columns: the id hash,
+    then the id.  The first Q ids in this order are the sample."""
+    h = F.pmod(F.col(id_col).cast("long") * _QS_MULT, F.lit(_QS_MOD))
+    return [h.asc(), F.col(id_col).asc()]
+
+
 def query_sample_ids(
     emb: DataFrame, q: int = QUERY_SAMPLE_Q, id_col: str = "vec_id"
 ) -> DataFrame:
     """The Q sampled query ids: one-column frame, Q rows regardless of
     corpus size.  Plan: TakeOrderedAndProject (per-partition top-Q then a
     Q-row driver merge) — scale-safe, no full sort."""
-    h = F.pmod(F.col(id_col).cast("long") * _QS_MULT, F.lit(_QS_MOD))
-    return (
-        emb.select(id_col)
-        .orderBy(h.asc(), F.col(id_col).asc())
-        .limit(q)
-    )
+    return emb.select(id_col).orderBy(*hash_rank(id_col)).limit(q)
 
 
 def sample_queries(

@@ -814,6 +814,8 @@ def graph_bridges_tarjan(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational per-edge sweep is the wide-graph fallback exactly as
     for articulation."""
     g = trade_sparse_graph(spark, sf_dir)
+    # one group, so one partition holds the output: sort it in place,
+    # where a global sort would re-run the DFS to sample its boundaries
     return (
         g.groupBy(F.lit(1).alias("grp"))
         .applyInPandas(
@@ -821,7 +823,8 @@ def graph_bridges_tarjan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a long, b long, comp_without long, comp_full long,"
             " is_bridge int",
         )
-        .orderBy("a", "b")
+        .coalesce(1)
+        .sortWithinPartitions("a", "b")
     )
 
 

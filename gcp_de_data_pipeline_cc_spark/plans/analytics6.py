@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import collect_bounded, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.functions.uniform import sql_u48, u48
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
@@ -1036,6 +1036,8 @@ stats_siegel_tukey.__doc__ = stats_siegel_tukey.__doc__.format(
 #: against the full-precision 2^13 base view
 _CKA_VIEWS = (("int8", 127), ("int4", 7), ("sign", 1))
 _CKA_BASE_SCALE = 8192
+#: the embeddings' width: the per-dimension sums are one row per dim
+_CKA_DIM = 64
 #: norm-cell quantization grain (1e-6 of the n^2-and-scale-normalized
 #: covariance squared)
 _CKA_Q = "1000000.0e0"
@@ -1164,7 +1166,7 @@ def embedding_cka(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # one explode pass computes per-dim sums for ALL views at once
     xq = F.floor(F.col("x").cast("double") * F.lit(float(bs)) + F.lit(0.5))
-    sums = (
+    sums = collect_bounded(
         emb.select(F.posexplode("embedding").alias("d", "x"))
         .groupBy("d")
         .agg(
@@ -1189,9 +1191,10 @@ def embedding_cka(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for name, sc in _CKA_VIEWS
             ],
         )
-        .orderBy("d")
-        .collect()
-    )  # 64 rows — a BOUNDED collect (dimension-sized, never data-sized)
+        .orderBy("d"),
+        _CKA_DIM,
+        "CKA per-dimension sums",
+    )
     n = int(sums[0]["cnt"])
     s_x = np.array([r["sx"] for r in sums], dtype=np.int64)
     s_v = {

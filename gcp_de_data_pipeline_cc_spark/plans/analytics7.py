@@ -858,18 +858,18 @@ def fn_jaro_winkler(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: blocking bounds candidates at Σ|block|² with |block| =
     n/(|brands|·|sizes|) — the standard ER blocking discipline (the
     dedup-family argument); the UDF is Arrow-batched, one scan, one
-    self-join co-partitioned on the block key."""
+    self-join co-partitioned on the block key, and one range sort of
+    the pairs BEFORE the scorer, so the scorer runs once per pair."""
 
     @F.pandas_udf("double")
     def jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         return pd.Series(_jw_batch(a.tolist(), b.tolist()))
 
-    # r10 (guide §4.4): the jw >= 0.8 filter references the UDF output,
-    # and the optimizer pushes a COPY of the filter below the
-    # projection — the plan carried TWO ArrowEvalPython nodes, so every
-    # candidate pair paid the interpreted DP twice.  Marking the UDF
-    # non-deterministic fences the push-down duplication; the function
-    # itself is pure, results unchanged.
+    # the jw >= 0.8 filter references the UDF output, and the optimizer
+    # would push a COPY of the filter below the projection: two
+    # ArrowEvalPython nodes, the interpreted DP paid twice per pair.
+    # Marking the UDF non-deterministic fences that duplication; the
+    # function itself is pure, results unchanged.
     jw_udf = jw_udf.asNondeterministic()
 
     part = load_table(spark, sf_dir, "part")
@@ -886,15 +886,15 @@ def fn_jaro_winkler(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.p_name").alias("name_a"),
         F.col("b.p_name").alias("name_b"),
     )
-    # the broadcast self-join leaves the pair relation on the scan's
-    # few input partitions — spread the Arrow batches across the
-    # executor cores before the python scorer (measured 7.9 -> ~2 s
-    # at sf0.1; on a cluster the block-key shuffle co-partitions)
-    scored = pairs.repartition("pk_a").withColumn(
-        "jw", jw_udf("name_a", "name_b")
-    )
+    # sort the pairs BEFORE the python scorer: the scorer and the
+    # filter keep row order, so the output stays sorted, and the range
+    # exchange spreads the Arrow batches the broadcast self-join left
+    # on the scan's few partitions across the executor cores.  A sort
+    # after the scorer would sample its boundaries by re-running the
+    # stage below it, and so score every pair twice.
     return (
-        scored.filter(F.col("jw") >= _JW_MIN)
+        pairs.orderBy("pk_a", "pk_b")
+        .withColumn("jw", jw_udf("name_a", "name_b"))
+        .filter(F.col("jw") >= _JW_MIN)
         .select("pk_a", "pk_b", "name_a", "name_b", "jw")
-        .orderBy("pk_a", "pk_b")
     )

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import collect_bounded, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators.graph import (
     supplier_backbone,
@@ -45,6 +45,8 @@ from gcp_de_data_pipeline_cc_spark.plans.registry import query
 # ---------------------------------------------------------------------------
 
 _MS_ITERS = 20
+#: the events table's event types: click, error, purchase, signup, view
+_MS_TYPES = 5
 
 _MS_TRANS_SQL = """
     seq AS (
@@ -127,7 +129,11 @@ def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |types|² cells — bounded by construction, never data-sized
     cells = [
         (r["i"], r["j"], r["c"], r["r"])
-        for r in cnt.join(rowt, "i").select("i", "j", "c", "r").collect()
+        for r in collect_bounded(
+            cnt.join(rowt, "i").select("i", "j", "c", "r"),
+            _MS_TYPES ** 2,
+            "event-type transition cells",
+        )
     ]
     states = sorted({i for i, _, _, _ in cells})
     k = len(states)

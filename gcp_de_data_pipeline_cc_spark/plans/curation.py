@@ -19,7 +19,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import collect_bounded, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators.scd2 import point_in_time, scd2_apply, scd2_init
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
@@ -2005,13 +2005,14 @@ def qc_config_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         elif rule == "not_null":
             viol = df.filter(F.col(r["column"]).isNull()).count()
         elif rule == "unique":
-            viol = (
+            viol = collect_bounded(
                 df.groupBy(r["column"])
                 .count()
                 .filter(F.col("count") > 1)
-                .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)))
-                .collect()[0][0]
-            )
+                .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0))),
+                1,
+                "unique-rule violations",
+            )[0][0]
         elif rule == "accepted_values":
             viol = df.filter(
                 F.col(r["column"]).isNull()

@@ -16,7 +16,11 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import ensure_session_posture, load_table
+from gcp_de_data_pipeline_cc_spark.catalog import (
+    collect_bounded,
+    ensure_session_posture,
+    load_table,
+)
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 from gcp_de_data_pipeline_cc_spark.sources.csv_ingest import raw_to_staging, read_landing_csv
 from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir
@@ -595,7 +599,9 @@ def incremental_watermark_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts")
     )
-    d0, d1 = ev.agg(F.min("day"), F.max("day")).collect()[0]
+    d0, d1 = collect_bounded(
+        ev.agg(F.min("day"), F.max("day")), 1, "event day bounds"
+    )[0]
     target = scratch_dir("wm_ingest_target")
     wm_path = scratch_dir("wm_ingest_watermark")
     cuts = [

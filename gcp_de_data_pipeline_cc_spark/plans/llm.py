@@ -5,12 +5,19 @@ plumbing — each a registry entry over the documents/embeddings tables.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import fan_out, load_table, shared
+from gcp_de_data_pipeline_cc_spark.catalog import (
+    collect_bounded,
+    fan_out,
+    load_table,
+    shared,
+)
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators import dedup as dd
 from gcp_de_data_pipeline_cc_spark.operators import multimodal as mm
@@ -3520,12 +3527,12 @@ _PQ_M_DIMS = 8
 _PQ_K = 4
 
 
-def _pq_flat(emb: DataFrame, k: int = _PQ_K) -> DataFrame:
+def _pq_flat(emb: DataFrame) -> DataFrame:
     """(vec_id, d, q, m, c0): micro-unit-quantized components with their
-    subspace id and deterministic md5 seed assignment over a
-    ``k``-centroid codebook — the shared first stage of the PQ codebook
-    (k=4: the 2-bit compression exhibit) and the PQ-ADC search (k=16:
-    the 4-bit serving operating point)."""
+    subspace id and deterministic md5 seed assignment over the
+    _PQ_K-centroid codebook — the first stage of embedding_pq_codebook.
+    The PQ-ADC search quantizes and seeds the same way on the driver
+    (_pq_quantize, _pq_trained)."""
     return (
         emb.select("vec_id", F.posexplode("embedding").alias("pos", "x"))
         .select(
@@ -3556,7 +3563,7 @@ def _pq_flat(emb: DataFrame, k: int = _PQ_K) -> DataFrame:
                     16,
                     10,
                 ).cast("long")
-                % k
+                % _PQ_K
             ).alias("c0"),
         )
     )
@@ -3720,12 +3727,14 @@ embedding_pq_codebook.__doc__ = embedding_pq_codebook.__doc__.format(
 _PQ_SEARCH_K = 64
 _PQ_SEARCH_ITERS = 3
 #: fixed-size Lloyd TRAINING stratum (hash-rank sample, the faiss
-#: production pattern): each subspace group of the grouped training
-#: pass holds ≤512 vectors, so training cost is O(D·K·iters) regardless
-#: of corpus size; each key's fused search scan (_pq_search) is the only
-#: corpus-proportional stage.  512 ≥ the sf0.01 corpus, so small-SF
-#: results are bit-identical to full-corpus training.
+#: production pattern): the driver trains on ≤512 collected vectors, so
+#: training cost is O(D·K·iters) regardless of corpus size; each key's
+#: fused search scan (_pq_search) is the only corpus-proportional
+#: stage.  512 ≥ the sf0.01 corpus, so small-SF results are
+#: bit-identical to full-corpus training.  The stratum's first Q rows
+#: are the query sample (same hash, same tie-break), so Q ≤ 512.
 _PQ_TRAIN_D = 512
+assert sim.QUERY_SAMPLE_Q <= _PQ_TRAIN_D
 
 
 def _pq_lloyd_sql(iters: int) -> str:
@@ -3737,7 +3746,8 @@ def _pq_lloyd_sql(iters: int) -> str:
     from it{i-1} and reassigns the stratum (d{i}/g{i}/a{i}/it{i});
     the LAST reassignment (d{iters}/a{iters}) runs over the FULL
     corpus — one linear encode pass against the final codebook.
-    Mirrors _pq_trained + _pq_encoder exactly."""
+    Mirrors _pq_trained (the driver-side Lloyd chain over
+    _pq_stratum) + _pq_encoder exactly."""
     parts = [
         f"""ts AS (
         SELECT vec_id FROM embeddings
@@ -3793,41 +3803,55 @@ def _sim_pq_oracle() -> str:
     """
 
 
-#: session-shared (catalog.shared): the K=64 Lloyd-trained codebook and
-#: the query index built on it serve sim_topk_pq, sim_topk_ivfpq and
-#: sim_topk_pq_rerank — training and the LUT build run once per session
-#: and warehouse; each key then runs its own fused search scan
+#: session-shared (catalog.shared): the training stratum behind the
+#: K=64 codebook, and the query index built on it, serve sim_topk_pq,
+#: sim_topk_ivfpq and sim_topk_pq_rerank — the collect, training and
+#: the LUT build run once per session and warehouse; each key then runs
+#: its own fused search scan
 @shared
-def _pq_trained(spark: SparkSession, sf_dir: str) -> pd.DataFrame:
-    """The search codebook (m, k, d, cq) as a driver-side frame: Lloyd
-    training on the fixed-D hash-rank TRAINING STRATUM.
-
-    Training is ONE grouped pass: the ≤{D}-vector stratum groups by
-    subspace and each group runs the whole chain — md5 seed assignment
-    -> (centroids -> reassign) x iters — on a dense n x {md} int64
-    matrix (_pq_lloyd), the faiss production pattern with
-    corpus-independent training cost.  The codebook (≤ M·K·{md} rows,
-    bounded by config) is the one driver collect."""
+def _pq_stratum(spark: SparkSession, sf_dir: str):
+    """(ids, x): the fixed-D hash-rank TRAINING STRATUM, from one
+    bounded collect of ≤ _PQ_TRAIN_D vectors in hash-rank order — ids and
+    their micro-unit vectors (n x dims int64, quantized as _pq_flat
+    does).  Its first Q rows are the query sample.  Null or ragged
+    vectors and components of magnitude ≥ 268 raise."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ids = emb.select("vec_id").orderBy(
-        F.pmod(F.col("vec_id") * sim._QS_MULT, F.lit(sim._QS_MOD)).asc(),
-        F.col("vec_id").asc(),
-    ).limit(_PQ_TRAIN_D)
-    strat = _pq_flat(emb, k=_PQ_SEARCH_K).join(
-        F.broadcast(ids), "vec_id", "semi"
+    rows = collect_bounded(
+        emb.select("vec_id", "embedding")
+        .orderBy(*sim.hash_rank("vec_id"))
+        .limit(_PQ_TRAIN_D),
+        _PQ_TRAIN_D,
+        "PQ training stratum",
     )
-    return (
-        strat.groupBy("m")
-        .applyInPandas(
-            lambda pdf: _pq_lloyd(pdf, _PQ_SEARCH_ITERS), _PQ_CENT_SCHEMA
-        )
-        .toPandas()
-    )
+    vecs = pd.Series([r.embedding for r in rows], dtype=object)
+    dims = int(vecs.str.len().max()) if len(rows) else 0
+    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    return ids, _pq_quantize(vecs, dims)
 
 
-_pq_trained.__doc__ = _pq_trained.__doc__.format(
-    D=_PQ_TRAIN_D, md=_PQ_M_DIMS
-)
+def _pq_trained(spark: SparkSession, sf_dir: str) -> pd.DataFrame:
+    """The search codebook (m, k, d, cq), trained on the driver from
+    :func:`_pq_stratum`: per _PQ_M_DIMS-dim subspace m, the md5 seed
+    assignment int(md5('vec_id:m')[:2], 16) % K, then (centroids ->
+    reassign) x iters on the dense stratum matrix (_pq_lloyd) — the
+    faiss production pattern, corpus-independent training cost."""
+    ids, x = _pq_stratum(spark, sf_dir)
+    books = []
+    for m, lo in enumerate(range(0, x.shape[1], _PQ_M_DIMS)):
+        cols = np.arange(lo, min(lo + _PQ_M_DIMS, x.shape[1]))
+        seed = np.array(
+            [int(hashlib.md5(f"{v}:{m}".encode()).hexdigest()[:2], 16)
+             for v in ids],
+            dtype=np.int64,
+        ) % _PQ_SEARCH_K
+        ks, cent = _pq_lloyd(x[:, cols], seed, _PQ_SEARCH_ITERS)
+        books.append(pd.DataFrame({
+            "m": np.int64(m),
+            "k": np.repeat(ks, len(cols)),
+            "d": np.tile(cols + 1, len(ks)).astype(np.int64),
+            "cq": cent.ravel(),
+        }))
+    return pd.concat(books, ignore_index=True)
 
 
 @shared
@@ -3836,24 +3860,18 @@ def _pq_index(spark: SparkSession, sf_dir: str):
     config only — the fixed-Q query sample's ids (ascending) and
     micro-unit vectors (Q x D int64), the |Q| x M x K ADC lookup table
     (lut[q, j, k] = exact int64 squared L2 between query q's j-th
-    subspace and centroid k), and the codebook's encoder."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    subspace and centroid k), and the codebook's encoder.  The query
+    sample is the stratum's first Q rows: no Spark job of its own."""
+    ids, x = _pq_stratum(spark, sf_dir)
     book = _pq_trained(spark, sf_dir)
-    encode = _pq_encoder(book)
-    qs = (
-        sim.sample_queries(emb).select("vec_id", "embedding").toPandas()
-        .sort_values("vec_id")
-    )
-    qv, _ = encode(qs["embedding"])
+    order = np.argsort(ids[:sim.QUERY_SAMPLE_Q])
+    qids, qv = ids[order], x[order]
     books = _pq_books(book)
-    lut = np.zeros((len(qs), len(books), int(book.k.max()) + 1), np.int64)
+    lut = np.zeros((len(qids), len(books), int(book.k.max()) + 1), np.int64)
     for j, (ks, cols, c) in enumerate(books):
         diff = qv[:, None, cols] - c[None, :, :]
         lut[:, j, ks] = (diff * diff).sum(axis=2)
-    return qs["vec_id"].to_numpy(dtype=np.int64), qv, lut, encode
-
-
-_PQ_CENT_SCHEMA = "m long, k long, d long, cq long"
+    return qids, qv, lut, _pq_encoder(book)
 
 
 def _pq_nearest(x: np.ndarray, cent: np.ndarray) -> np.ndarray:
@@ -3863,25 +3881,16 @@ def _pq_nearest(x: np.ndarray, cent: np.ndarray) -> np.ndarray:
     return (diff * diff).sum(axis=2).argmin(axis=1)
 
 
-def _pq_lloyd(pdf: pd.DataFrame, iters: int) -> pd.DataFrame:
-    """One subspace's Lloyd chain on its stratum rows (vec_id, m, d, q,
-    c0), densely: centroids are floor(double(sum q) / count) over the
-    non-empty clusters only (an empty cluster drops out of the codebook,
-    as it does from the oracle's GROUP BY), reassignment is exact int64
-    squared L2 with ties to the smallest k.  Returns the codebook after
-    ``iters`` centroid steps as (m, k, d, cq)."""
-    wide = pdf.pivot(index="vec_id", columns="d", values="q")
-    if wide.isna().to_numpy().any():
-        raise ValueError(
-            f"PQ training: subspace {int(pdf.m.iloc[0])} has vectors with"
-            " missing components (ragged embeddings)"
-        )
-    x = wide.to_numpy(dtype=np.int64)
-    label = (
-        pdf.drop_duplicates("vec_id").set_index("vec_id")["c0"]
-        .reindex(wide.index)
-        .to_numpy(dtype=np.int64)
-    )
+def _pq_lloyd(
+    x: np.ndarray, label: np.ndarray, iters: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """One subspace's Lloyd chain on its n x dims stratum matrix ``x``
+    from the seed codes ``label``: centroids are floor(double(sum q) /
+    count) over the non-empty clusters only (an empty cluster drops out
+    of the codebook, as it does from the oracle's GROUP BY),
+    reassignment is exact int64 squared L2 with ties to the smallest k.
+    Returns the codes and centroid matrix after ``iters`` centroid
+    steps."""
     for i in range(iters):
         ks, inv = np.unique(label, return_inverse=True)
         sums = np.zeros((len(ks), x.shape[1]), dtype=np.int64)
@@ -3889,13 +3898,7 @@ def _pq_lloyd(pdf: pd.DataFrame, iters: int) -> pd.DataFrame:
         cent = np.floor(sums / np.bincount(inv)[:, None]).astype(np.int64)
         if i < iters - 1:
             label = ks[_pq_nearest(x, cent)]
-    d = wide.columns.to_numpy(dtype=np.int64)
-    return pd.DataFrame({
-        "m": int(pdf.m.iloc[0]),
-        "k": np.repeat(ks, len(d)),
-        "d": np.tile(d, len(ks)),
-        "cq": cent.ravel(),
-    })
+    return ks, cent
 
 
 def _pq_books(cent: pd.DataFrame) -> list:
@@ -3911,31 +3914,37 @@ def _pq_books(cent: pd.DataFrame) -> list:
     return books
 
 
+def _pq_quantize(emb: pd.Series, dims: int) -> np.ndarray:
+    """A pandas column of ``dims``-dim vectors as n x dims micro-unit
+    int64, quantized exactly as _pq_flat does; null or ragged vectors
+    and components of magnitude ≥ 268 raise."""
+    if emb.str.len().ne(dims).any():
+        raise ValueError(
+            f"PQ encode: every embedding must be a non-null"
+            f" {dims}-dim vector (null or ragged input)"
+        )
+    xf = np.stack(emb.to_numpy()).astype(np.float64)
+    # |q| < 2^28 micro-units keeps every 8-dim squared distance
+    # below 2^61: numpy int64 would wrap silently past 2^63
+    if not (np.abs(xf) < 268.0).all():
+        raise ValueError(
+            "PQ encode: embedding components must be non-null"
+            " and below 268 in magnitude"
+        )
+    return np.floor(xf * 1000000.0 + 0.5).astype(np.int64)
+
+
 def _pq_encoder(cent: pd.DataFrame):
     """encode(embedding) -> (x, codes) against the codebook ``cent``:
-    quantize a pandas column of vectors exactly as _pq_flat does (x, n
-    x D micro-unit int64) and code every subspace to its nearest
-    centroid (codes, n x M, column j = the j-th subspace in m order).
-    The one encode path: the query index, the search scan and the
-    codebook tests all go through it."""
+    quantize a pandas column of vectors (_pq_quantize; x, n x D) and
+    code every subspace to its nearest centroid (codes, n x M, column
+    j = the j-th subspace in m order).  The one encode path: the search
+    scan and the codebook tests go through it."""
     books = _pq_books(cent)
     dims = int(cent.d.max()) if len(cent) else 0
 
     def encode(emb: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-        if emb.str.len().ne(dims).any():
-            raise ValueError(
-                f"PQ encode: every embedding must be a non-null"
-                f" {dims}-dim vector (null or ragged input)"
-            )
-        xf = np.stack(emb.to_numpy()).astype(np.float64)
-        # |q| < 2^28 micro-units keeps every 8-dim squared distance
-        # below 2^61: numpy int64 would wrap silently past 2^63
-        if not (np.abs(xf) < 268.0).all():
-            raise ValueError(
-                "PQ encode: embedding components must be non-null"
-                " and below 268 in magnitude"
-            )
-        x = np.floor(xf * 1000000.0 + 0.5).astype(np.int64)
+        x = _pq_quantize(emb, dims)
         codes = np.stack(
             [ks[_pq_nearest(x[:, cols], c)] for ks, cols, c in books], axis=1
         )
@@ -3953,9 +3962,6 @@ _PQ_SCAN_BLOCK = 256
 _PQ_L2_MAX = 189_000_000
 _PQ_FAR = np.iinfo(np.int64).max
 _PQ_HIT_SCHEMA = "query_id long, vec_id long, ad long, dd long, exact boolean"
-_PQ_RECALL_SCHEMA = (
-    "query_id long, k int, n_exact int, n_hit int, recall double"
-)
 
 
 def _row_topk(k: int, key: np.ndarray, ids: np.ndarray, *more: np.ndarray):
@@ -3987,12 +3993,15 @@ def _pq_search(
     in the query's probed cells.  A partition emits at most
     Q·(pool + 10) rows.
 
-    Merge (groupBy query_id + applyInPandas): the per-partition top
-    lists of a total order contain the global ones, so the merge is
-    exact.  The approximate top-10 is the ADC top-10, or with
-    ``rerank`` the global ADC pool re-ordered by (exact, vec_id); the
-    recall rounds as roundn does: floor(n_hit / n_exact · 10000 + 0.5)
-    / 10000.
+    Merge (one native groupBy query_id): the per-partition top lists
+    of a total order contain the global ones, so the merge is exact.
+    Each query sorts its collected (exact, vec_id) and (ADC, vec_id,
+    exact) structs and slices the top 10 and the global ADC pool; the
+    approximate top-10 is the pool's first 10, or with ``rerank`` the
+    pool re-sorted by (exact, vec_id); hits are the size of the two
+    id lists' intersection, and the recall rounds with roundn:
+    floor(n_hit / n_exact · 10000 + 0.5) / 10000.  No Python stage
+    feeds the output's global sort.
 
     Both arms read every vector once, in this key's own scan: the
     exact arm is the recall evidence and is O(corpus · Q · D) by
@@ -4054,27 +4063,33 @@ def _pq_search(
                 "exact": exact,
             })
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        exact = pdf[pdf.exact].sort_values(["dd", "vec_id"]).vec_id.head(10)
-        approx = pdf[~pdf.exact].sort_values(["ad", "vec_id"]).head(pool)
-        if rerank:
-            approx = approx.sort_values(["dd", "vec_id"])
-        n_hit = int(exact.isin(approx.vec_id.head(10)).sum())
-        recall = n_hit / len(exact)
-        return pd.DataFrame({
-            "query_id": pdf.query_id.iloc[:1],
-            "k": np.int32(10),
-            "n_exact": np.int32(len(exact)),
-            "n_hit": np.int32(n_hit),
-            "recall": _math.floor(recall * 10000.0 + 0.5) / 10000.0,
-        })
+    def top(arm, n: int, *fields: str):
+        """The first ``n`` of one arm's rows, sorted by ``fields``."""
+        rows = F.array_sort(F.collect_list(F.when(arm, F.struct(*fields))))
+        return F.slice(rows, 1, n)
 
+    approx = F.col("pool")
+    if rerank:
+        by_dd = lambda p: F.struct(p.dd.alias("dd"), p.vec_id.alias("vec_id"))
+        approx = F.array_sort(F.transform(approx, by_dd))
+    approx = F.slice(approx, 1, 10).getField("vec_id")
+    exact = F.col("top").getField("vec_id")
     cols = ["vec_id", "embedding"] + ([] if cells is None else ["label"])
     return (
         emb.select(*cols)
         .mapInPandas(scan, _PQ_HIT_SCHEMA)
         .groupBy("query_id")
-        .applyInPandas(merge, _PQ_RECALL_SCHEMA)
+        .agg(
+            top(F.col("exact"), 10, "dd", "vec_id").alias("top"),
+            top(~F.col("exact"), pool, "ad", "vec_id", "dd").alias("pool"),
+        )
+        .select(
+            "query_id",
+            F.lit(10).alias("k"),
+            F.size(exact).alias("n_exact"),
+            F.size(F.array_intersect(exact, approx)).alias("n_hit"),
+        )
+        .withColumn("recall", roundn(F.col("n_hit") / F.col("n_exact"), 4))
         .orderBy("query_id")
     )
 
@@ -4168,13 +4183,13 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     its centroid means identically on both engines; rank ties break on
     neighbor id.
 
-    100 TB: training is one grouped pass over the fixed ≤{d}-vector
-    stratum (one group per subspace), and its codebook — ≤ M x K x {m}
-    values, bounded by config — is a driver collect, as are the Q
-    query vectors and their |Q| x M x K LUT; serving is ONE map-only
-    scan in which each partition encodes its own vectors and keeps a
-    bounded partial top-k per query (the REPOSE partition-local shape),
-    then ONE per-query merge — no vector crosses an exchange, no
+    100 TB: training reads the fixed ≤{d}-vector stratum through one
+    bounded driver collect (its first Q rows are the query sample) and
+    runs on the driver; the codebook (≤ M x K x {m} values) and the
+    |Q| x M x K LUT are bounded by config; serving is ONE map-only scan
+    in which each partition encodes its own vectors and keeps a bounded
+    partial top-k per query (the REPOSE partition-local shape), then
+    ONE native per-query merge — no vector crosses an exchange, no
     nested-loop join.  The exact baseline is the deliberate recall
     reference over the FIXED-Q query sample (O(corpus·Q), linear — the
     r6 rework of the old corpus-proportional sample), same as the
@@ -4271,16 +4286,22 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: the probe runs in Spark (its cosine is the one double
     expression matched against the oracle) and its |Q| x nprobe
-    (query, cell) rows are collected — bounded by config — into the
-    fused search scan, which ADC-scores only candidates in each query's
-    probed cells with M LUT lookups apiece; the exact recall arm reads
-    every vector in the same scan (_pq_search), so no vector crosses an
-    exchange and the plan has no nested-loop join.
+    (query, cell) rows are one bounded collect into the fused search
+    scan, which ADC-scores only candidates in each query's probed cells
+    with M LUT lookups apiece; the exact recall arm reads every vector
+    in the same scan (_pq_search), and the shared index trains on the
+    driver from one bounded collect of the fixed stratum (sim_topk_pq),
+    so no vector crosses an exchange and the plan has no nested-loop
+    join.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    probed = sim.ivf_probe_portable(
-        sim.sample_queries(emb), emb, nprobe=_IVFPQ_NPROBE
-    ).collect()
+    probed = collect_bounded(
+        sim.ivf_probe_portable(
+            sim.sample_queries(emb), emb, nprobe=_IVFPQ_NPROBE
+        ),
+        sim.QUERY_SAMPLE_Q * _IVFPQ_NPROBE,
+        "IVF-PQ probed cells",
+    )
     cells: dict = {}
     for r in probed:
         cells.setdefault(r.query_id, []).append(r.label)
@@ -5092,8 +5113,9 @@ def sim_topk_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     lr_rows = sorted(
-        linkreps.collect(), key=lambda r: r["rep"]
-    )  # ≤ _NSW_CAP rows by construction — a BOUNDED collect
+        collect_bounded(linkreps, _NSW_CAP, "NSW link-layer reps"),
+        key=lambda r: r["rep"],
+    )
     lr_ids = np.array([r["rep"] for r in lr_rows], dtype=np.int64)
     lr_mat = np.array([r["qrv"] for r in lr_rows], dtype=np.int64)
 

@@ -87,16 +87,20 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     production plumbing: Arrow-batched mapInPandas, payloads never
     leaving the executors.
 
-    100 TB: one map-side synth+resize pass, no shuffle at all until the
-    (row-per-image) evidence rollup; per-image cost is output-pixel
-    bounded (constant {w}x{h}x3 work), so the stage scales with image
-    COUNT, not image size; swap the codec functions for
-    PIL/libvips UDFs and the plan is unchanged."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 2 == 0
+    100 TB: one range sort of the image rows' ids and texts, then one
+    map-side synth+resize pass that keeps their order; per-image cost
+    is output-pixel bounded (constant {w}x{h}x3 work), so the stage
+    scales with image COUNT, not image size; swap the codec functions
+    for PIL/libvips UDFs and the plan is unchanged."""
+    # sorted before the Arrow passes, which keep row order: a sort
+    # after them would re-run both to sample its range boundaries
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 2 == 0)
+        .orderBy("doc_id")
     )
     media = mm.attach_media_payload(docs)
-    return mm.resize_images(media, _RS_W, _RS_H).orderBy("doc_id")
+    return mm.resize_images(media, _RS_W, _RS_H)
 
 
 multimodal_resize.__doc__ = multimodal_resize.__doc__.format(

@@ -33,9 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import collect_bounded, load_table
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 from gcp_de_data_pipeline_cc_spark.scratch import scratch_dir
+
+#: TPC-H's region dimension: five rows at every scale factor
+_REGIONS = 5
 
 #: injected outage: days [min+_OUT_LO, min+_OUT_HI] missing from staging
 _OUT_LO, _OUT_HI = 9, 11
@@ -80,7 +83,9 @@ def ops_backfill_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src_days = ev.select(F.to_date("ts").alias("day")).distinct()
     src_days = src_days.localCheckpoint(eager=False)  # bounds + spine + stage
-    d0, d1 = src_days.agg(F.min("day"), F.max("day")).first()
+    d0, d1 = collect_bounded(
+        src_days.agg(F.min("day"), F.max("day")), 1, "event day bounds"
+    )[0]
 
     # land the staged replica (full rows, partition-pruned predicate) —
     # a REAL parquet round trip, not a relational simulation
@@ -1080,10 +1085,14 @@ def ops_cron_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     the run set Airflow's scheduler would create for it.
     """
     ev = load_table(spark, sf_dir, "events")
-    t0, t1 = ev.agg(
-        F.date_trunc("minute", F.min("ts")),
-        F.date_trunc("minute", F.max("ts")),
-    ).first()
+    t0, t1 = collect_bounded(
+        ev.agg(
+            F.date_trunc("minute", F.min("ts")),
+            F.date_trunc("minute", F.max("ts")),
+        ),
+        1,
+        "event minute bounds",
+    )[0]
     spine = spark.sql(
         "SELECT explode(sequence(to_timestamp('{0}'),"
         " to_timestamp('{1}'), interval 1 minute)) AS mn".format(
@@ -1219,7 +1228,7 @@ def ops_artifact_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("content"),
         )
     )
-    for r in models.collect():  # region-cardinality dim — bounded
+    for r in collect_bounded(models, _REGIONS, "region models"):
         with open(f"{src_dir}/models/region_{r.slug}.sql", "w") as f:
             f.write(r.content)
         if r.r_regionkey % 2 == 0:  # stale bucket copy (missing line 2)
@@ -1269,7 +1278,8 @@ def ops_artifact_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MATERIALIZE the plan before mutating the destination — the lazy
     # manifest would otherwise re-scan the already-synced tree and
     # report everything as skip
-    acts = plan.collect()  # repo-file-cardinality metadata
+    # one model file per region, plus the bucket's obsolete file
+    acts = collect_bounded(plan, _REGIONS + 1, "sync actions")
     for a in acts:
         dst = f"{dst_dir}/{a.rel_path}"
         if a.action == "delete":

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import collect_bounded, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators.scale import (
     global_rank,
@@ -323,6 +323,8 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: pass-1 histogram bucket width (cents) — ~$1000 buckets over o_totalprice
 _Q2P_WIDTH = 100000
+#: TPC-H order totals stay below $600k: under 600 buckets of $1000
+_Q2P_MAX_BUCKETS = 1000
 
 #: quantiles as exact rationals (numerator, denominator)
 _Q2P_PS = ((1, 2), (9, 10), (99, 100))
@@ -377,11 +379,12 @@ def quantile_exact_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("v")
     )
     c = c.localCheckpoint(eager=False)  # histogram + 3 pass-2 consumers
-    hist = (
+    hist = collect_bounded(
         c.groupBy((F.col("v") - F.pmod(F.col("v"), _Q2P_WIDTH)).alias("b"))
         .agg(F.count("*").alias("cnt"))
-        .orderBy("b")
-        .collect()
+        .orderBy("b"),
+        _Q2P_MAX_BUCKETS,
+        "order-total histogram",
     )
     n = sum(r.cnt for r in hist)
     arms = []

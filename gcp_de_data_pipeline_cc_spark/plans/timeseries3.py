@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import collect_bounded, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
@@ -2591,7 +2591,9 @@ def attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n")
     )
     # (channels+2)^2-bounded metadata: the collect is invariant to scale
-    rows = cnt.collect()
+    rows = collect_bounded(
+        cnt, (len(_MK_CHANNELS) + 2) ** 2, "Markov transition counts"
+    )
     tot: dict[str, int] = {}
     for r in rows:
         tot[r.src] = tot.get(r.src, 0) + r.n

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gcp_de_data_pipeline_cc_spark.catalog import load_table
+from gcp_de_data_pipeline_cc_spark.catalog import collect_bounded, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 from gcp_de_data_pipeline_cc_spark.operators.text import tokens_col
@@ -652,7 +652,9 @@ def tokenizer_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # class; a constant-key join here constant-folds into a
     # BroadcastNestedLoopJoin). Symbols are whitespace-tokenized word
     # characters — no regex metacharacters by construction.
-    bp = top1.filter(F.col("rnk") == 1).first()["pair"]
+    bp = collect_bounded(
+        top1.filter(F.col("rnk") == 1), 1, "BPE first merge"
+    )[0]["pair"]
     pat = " " + bp.replace("+", " ") + " "
     rep = " " + bp.replace("+", "") + " "
     merged = s1.select(

@@ -458,11 +458,13 @@ def udtf_arrow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 50 == 0
     )
     docs.select("doc_id", "text").createOrReplaceTempView("docs_arrow_udtf")
+    # the UDTF keeps its input's row order and numbers each doc's tokens
+    # in order, so sorting its input sorts the output: a sort after it
+    # would re-run the Python pass to sample its range boundaries
     return spark.sql(
         "SELECT doc_id, pos, tok "
         "FROM tokenize_batch_udtf(TABLE(SELECT doc_id, text "
-        "FROM docs_arrow_udtf)) "
-        "ORDER BY doc_id, pos"
+        "FROM docs_arrow_udtf ORDER BY doc_id))"
     )
 
 

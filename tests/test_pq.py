@@ -24,17 +24,20 @@ from gcp_de_data_pipeline_cc_spark.plans.llm import (
 from tests.conftest import SF_DIR
 
 #: Spark jobs to build _pq_trained and count the corpus codes at
-#: sf0.001: 4 for the build (schema read, stratum TakeOrdered, the
-#: grouped Lloyd pass's shuffle + result), 3 for the codes count
-#: (schema read, the map-only encode + partial count, the final count)
-_PQ_JOB_BUDGET = 7
+#: sf0.001 (measured): 2 for the build (the embeddings schema read, the
+#: stratum's one bounded collect, a TakeOrderedAndProject; training
+#: runs on the driver), 2 for the codes count (the map-only encode +
+#: partial count, the final count; the schema is already read)
+_PQ_JOB_BUDGET = 4
 
 #: Spark jobs to build and collect sim_topk_pq and sim_topk_ivfpq at
-#: sf0.001 from cold shared state (measured): the shared codebook and
-#: query index, the ivfpq probe collect, then per key one fused scan +
-#: per-query merge + ordered output (4 jobs each).  The join/window
-#: plans this replaced ran 45.
-_PQ_SEARCH_JOB_BUDGET = 23
+#: sf0.001 from cold shared state (measured): 2 for the shared index
+#: (schema read, stratum collect), 6 for the ivfpq probe collect, then
+#: per key 4: the fused scan with the merge's partial aggregate, the
+#: output sort's boundary sample over the merged rows, its range
+#: shuffle, the result.  The join/window plans the fused scan replaced
+#: ran 45; the grouped-map training and pandas merge ran 23.
+_PQ_SEARCH_JOB_BUDGET = 16
 
 
 def _corpus_codes(spark, sf_dir, book):
@@ -134,7 +137,8 @@ def test_pq_rejects_malformed_embeddings(spark, tmp_path, bad, match):
         # inside the 8-dim encode bound (268), but 64-dim int64 squared
         # distances could wrap
         ([200.0, -200.0] * 32, 0, "below 189"),
-        # vec_id 7 is not in the query sample: the search scan catches it
+        # vec_id 7 is not in the query sample, but in the training
+        # stratum: the stratum's quantization catches it
         (None, 7, "null or ragged"),
         ([0.5] * 63, 7, "ragged"),
     ],

@@ -40,7 +40,7 @@ _READS = {
     llm.corpus_dup_pairs: {"documents"},
     llm.corpus_dup_clusters: {"documents"},
     llm.exact_topk10: {"embeddings"},
-    llm._pq_trained: {"embeddings"},
+    llm._pq_stratum: {"embeddings"},
     llm._pq_index: {"embeddings"},
     recsys._cf_incidence: {"lineitem", "orders", "part"},
     recsys._cf_cooccurrence: {"lineitem", "orders", "part"},

@@ -27,6 +27,13 @@ holds only ``oracle`` and ``since``; every other key's line holds:
 - ``schema``: the output's ``[column, type]`` pairs (Spark
   ``simpleString`` types), which tests/test_schema_parity.py checks
   without building the key.
+- ``python_range``: the Python exec nodes (every kind: ``EvalPython``,
+  the UDTF nodes, ``MapInPandas``, ``FlatMapGroupsInPandas``, ...)
+  whose nearest exchange above is a ``rangepartitioning`` one, over the
+  top-level and the checkpoint-hidden physical plans.  A global sort
+  samples its range boundaries by re-running the stage below it, so
+  such a node runs its Python twice per row; tests/test_plan_manifest.py
+  holds the count at 0.  Like ``schema`` it does not reset ``since``.
 
 Every key is built from cold session caches (``catalog.clear()``) at
 ``SF_DIR`` (the sf0.001 warehouse ``entry()`` smoke-runs on) in one
@@ -35,9 +42,8 @@ key order nor on the host's core count.
 
 Blind spots.  A fingerprint does not see:
 
-- Python UDF bodies and closures: ``sim_topk_pq`` and
-  ``sim_topk_pq_rerank`` share one fp because they differ only in the
-  closure's ``pool``/``rerank``;
+- Python UDF bodies and closures: a change inside ``fn_jaro_winkler``'s
+  scorer or ``_pq_search``'s scan leaves the fp as it was;
 - side effects while the plan is built: the pipeline keys' tier writes
   have changed while their plans did not;
 - the ``SKIP`` keys' plans: only their oracles are tracked here;
@@ -147,6 +153,38 @@ def formatted(df) -> str:
     )
 
 
+def physical(df) -> str:
+    """The physical plan as a tree, one node per line (under AQE, the
+    initial plan)."""
+    return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+
+
+#: a physical node that runs Python code on the executors
+_PYTHON_NODE = re.compile(r"\w*(?:Python|InPandas|InArrow)\w*\b")
+
+#: a node that ends a stage: its subtree runs in the stages below
+_EXCHANGE_NODE = re.compile(r"(?:\w*Exchange|\w*QueryStage)\b")
+
+
+def python_under_range(tree: str) -> int:
+    """The Python nodes of a :func:`physical` tree whose nearest
+    exchange above is ``rangepartitioning``: they share a stage with
+    the sample job of a global sort, which runs that stage once more."""
+    above: list[str] = []
+    n = 0
+    for line in tree.splitlines():
+        node = line.lstrip(" :+-")
+        depth = (len(line) - len(node)) // 3
+        del above[depth:]
+        if _PYTHON_NODE.match(node):
+            exchange = next(
+                (a for a in reversed(above) if _EXCHANGE_NODE.match(a)), ""
+            )
+            n += exchange.startswith("Exchange rangepartitioning")
+        above.append(node)
+    return n
+
+
 def capture(spark, key: str, explain=analyzed):
     """Build ``key`` at ``SF_DIR`` from cold session caches.  Returns the
     frame and ``explain`` of its top-level plan followed by ``explain``
@@ -217,7 +255,11 @@ def _latest_round() -> int:
 
 def _tracked(entry: dict) -> dict:
     """The fields whose change resets ``since``: fp, oracle and census."""
-    return {k: v for k, v in entry.items() if k not in ("since", "schema")}
+    return {
+        k: v
+        for k, v in entry.items()
+        if k not in ("since", "schema", "python_range")
+    }
 
 
 def build(committed: dict[str, dict]) -> tuple[dict[str, dict], dict[str, str]]:
@@ -230,15 +272,18 @@ def build(committed: dict[str, dict]) -> tuple[dict[str, dict], dict[str, str]]:
         entry = {"oracle": oracle_hash(REGISTRY[key].oracle), "since": next_round}
         if key not in SKIP:
             try:
-                df, plans = capture(spark, key)
+                df, plans = capture(
+                    spark, key, explain=lambda d: (analyzed(d), physical(d))
+                )
             except Exception as ex:  # noqa: BLE001 — report every key, then fail
                 failed[key] = f"{type(ex).__name__}: {ex}"[:200]
                 continue
             entry = {
-                "fp": fingerprint(plans),
+                "fp": fingerprint([a for a, _ in plans]),
                 **entry,
                 **census(df),
                 "schema": output_schema(df),
+                "python_range": sum(python_under_range(p) for _, p in plans),
             }
         old = committed.get(key)
         if old is not None and _tracked(old) == _tracked(entry):

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
+from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
 
 # ---------------------------------------------------------------------------
@@ -477,24 +478,21 @@ def corpus_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression sums are exact int64 (all < 2^62) and the slope is ONE
     final division rounded 4 dp.
 
-    100 TB: one token explode with two aggregates (first-position per
-    token — vocabulary-sized; per-doc counts — doc-sized); checkpoints
-    are a 10-row spine; no per-checkpoint rescans."""
+    100 TB: doc positions come from the two-phase global_rank (range
+    exchange + partition offsets, never one reducer); one token explode
+    with two aggregates (first-position per token — vocabulary-sized;
+    per-doc counts — doc-sized), each streamed against the broadcast
+    10-row decile spine; no per-checkpoint rescans."""
     docs = load_table(spark, sf_dir, "documents")
-    wp = Window.orderBy("doc_id")
-    pos = docs.select(
-        "doc_id",
-        F.row_number().over(wp).alias("p"),
-        F.count("*").over(Window.partitionBy()).alias("nd"),
-    )
+    pos = global_rank(docs.select("doc_id"), [F.col("doc_id")], rank_col="p")
     tok = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .join(pos.select("doc_id", "p"), "doc_id")
+        .join(pos, "doc_id")
     )
     tok = tok.localCheckpoint(eager=False)  # firstp + dtok
     firstp = tok.groupBy("token").agg(F.min("p").cast("long").alias("fp"))
     dtok = tok.groupBy("p").agg(F.count("*").cast("long").alias("ntok"))
-    nd = pos.agg(F.max("nd").cast("long").alias("nd"))
+    nd = docs.agg(F.count("*").cast("long").alias("nd"))
     marks = (
         spark.range(1, _HEAPS_D + 1)
         .select(F.col("id").cast("long").alias("dec"))
@@ -511,7 +509,7 @@ def corpus_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pcut") >= 1)
     )
     ntk = (
-        marks.join(F.broadcast(dtok), dtok["p"] <= marks["pcut"])
+        dtok.join(F.broadcast(marks), dtok["p"] <= marks["pcut"])
         .groupBy("dec", "pcut")
         .agg(F.sum("ntok").cast("long").alias("n_tokens"))
     )

@@ -4482,8 +4482,7 @@ def sim_topk_ivf_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = sim.sample_queries(emb)
     maxp = max(_IVF_SWEEP_PROBES)
-    probed = sim.ivf_probe_portable(queries, emb, nprobe=maxp)
-    # re-derive cell_rank (ivf_probe_portable drops it): rank probed
+    # the probe keeps cell_rank (ivf_probe_portable drops it): rank
     # cells per query by the same centroid cosine
     cents = sim.ivf_centroids_portable(emb)
     q = sim.as_double_vectors(queries).select(

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from gcp_de_data_pipeline_cc_spark.catalog import fan_out, load_table
 from gcp_de_data_pipeline_cc_spark.functions.rounding import roundn, sql_roundn
 from gcp_de_data_pipeline_cc_spark.operators import dedup as dd
+from gcp_de_data_pipeline_cc_spark.operators.scale import global_rank
 from gcp_de_data_pipeline_cc_spark.operators.text import SHINGLES_SQL
 from gcp_de_data_pipeline_cc_spark.plans.llm import _MINHASH_CHARFOLD
 from gcp_de_data_pipeline_cc_spark.plans.registry import query
@@ -1047,9 +1048,10 @@ def sketch_quantile_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: the per-shard rank windows are hash-partitioned (the
     distributed phase); the merged sample is constant-sized and its
-    window trivially small. The exact comparator column is the
-    domain-bounded ROW_NUMBER path — drop it in production and only
-    the sample machinery remains."""
+    window trivially small. The exact comparator column ranks every
+    order through the two-phase global_rank (range exchange + partition
+    offsets, never one reducer) — drop it in production and only the
+    sample machinery remains."""
     orders = load_table(spark, sf_dir, "orders")
     c = orders.select(
         (F.col("o_orderkey") % _QS_SHARDS).alias("shard"),
@@ -1086,8 +1088,7 @@ def sketch_quantile_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mc = samp.select("v", F.sum("w").over(wm).alias("cw"))
     mc = mc.localCheckpoint(eager=False)  # three quantile arms
-    wr = Window.orderBy("v")
-    ranked = c.select("v", F.row_number().over(wr).alias("rn"))
+    ranked = global_rank(c.select("v"), [F.col("v")], rank_col="rn")
     ranked = ranked.localCheckpoint(eager=False)
     n = c.count()
     arms = []

@@ -118,8 +118,8 @@ def test_pq_search_job_budget(spark):
 @pytest.mark.parametrize(
     "bad, match",
     [
-        ([0.5] * 63, "ragged"),  # caught by the training pass
-        (None, "null or ragged"),  # no flat rows: caught by the encode
+        ([0.5] * 63, "ragged"),  # caught by _pq_quantize over the stratum
+        (None, "null or ragged"),  # caught by _pq_quantize over the stratum
         ([300.0] * 64, "below 268"),  # int64 distances would overflow
     ],
     ids=["ragged", "null", "out_of_range"],

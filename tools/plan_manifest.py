@@ -14,7 +14,14 @@ holds only ``oracle`` and ``since``; every other key's line holds:
   lambda-variable suffixes, CTE and UnionLoop ids); the analyzed text
   holds no file path and no RDD id.
 - the physical census: the ``_METRICS`` counts on the top-level
-  formatted plan (no plan a checkpoint hides is counted).
+  formatted plan.
+- ``hidden``: the non-zero counts of the three node kinds
+  tools/sp_audit.py measures (SinglePartition exchange, BNLJ,
+  Cartesian) over the checkpoint-hidden physical plans.  The audit
+  gates every such node, top-level or hidden, by its measured rows, and
+  tests/test_plans_physical.py fails on a key that shows one here or in
+  the census but has no audit record.  Like ``schema`` it does not
+  reset ``since``: the fp already covers the hidden plans.
 - ``oracle``: the first 16 hex digits of the sha256 of the key's DuckDB
   oracle text with the whitespace outside single-quoted literals
   normalised (:func:`oracle_hash`); null for a rows-only key.
@@ -118,6 +125,17 @@ _METRICS = {
     "python": r"EvalPython",
 }
 
+#: the node kinds tools/sp_audit.py measures, as :func:`physical` prints
+#: them; ``hidden`` counts them over the checkpoint-hidden plans
+_HIDDEN = {
+    k: re.compile(rf"^[ :+-]*{node}\b", re.M)
+    for k, node in (
+        ("single_part", "Exchange SinglePartition"),
+        ("bnlj", "BroadcastNestedLoopJoin"),
+        ("cartesian", "CartesianProduct"),
+    )
+}
+
 #: a single-quoted SQL literal (``''`` escapes a quote); whitespace inside
 #: one is data
 _SQL_LITERAL = re.compile(r"('(?:[^']|'')*')")
@@ -185,12 +203,12 @@ def python_under_range(tree: str) -> int:
     return n
 
 
-def capture(spark, key: str, explain=analyzed):
-    """Build ``key`` at ``SF_DIR`` from cold session caches.  Returns the
+def capture(spark, key: str, explain=analyzed, sf_dir: str = SF_DIR):
+    """Build ``key`` at ``sf_dir`` from cold session caches.  Returns the
     frame and ``explain`` of its top-level plan followed by ``explain``
     of every frame a ``localCheckpoint`` hid, taken as each checkpoint is
-    called (in creation order)."""
-    hidden: list[str] = []
+    called (in creation order); ``explain=lambda d: d`` keeps the frames."""
+    hidden: list = []
     original = DataFrame.localCheckpoint
 
     def recording(self, *args, **kwargs):
@@ -200,7 +218,7 @@ def capture(spark, key: str, explain=analyzed):
     catalog.clear()
     DataFrame.localCheckpoint = recording
     try:
-        df = REGISTRY[key].spark(spark, SF_DIR)
+        df = REGISTRY[key].spark(spark, sf_dir)
     finally:
         DataFrame.localCheckpoint = original
     return df, [explain(df), *hidden]
@@ -232,6 +250,12 @@ def census(df) -> dict[str, int]:
     return {k: len(re.findall(pat, plan)) for k, pat in _METRICS.items()}
 
 
+def hidden_census(trees: list[str]) -> dict[str, int]:
+    """The non-zero ``_HIDDEN`` counts over :func:`physical` trees."""
+    counts = {k: sum(len(p.findall(t)) for t in trees) for k, p in _HIDDEN.items()}
+    return {k: n for k, n in counts.items() if n}
+
+
 def output_schema(df) -> list[list[str]]:
     return [[f.name, f.dataType.simpleString()] for f in df.schema]
 
@@ -258,7 +282,7 @@ def _tracked(entry: dict) -> dict:
     return {
         k: v
         for k, v in entry.items()
-        if k not in ("since", "schema", "python_range")
+        if k not in ("since", "schema", "python_range", "hidden")
     }
 
 
@@ -284,6 +308,7 @@ def build(committed: dict[str, dict]) -> tuple[dict[str, dict], dict[str, str]]:
                 **census(df),
                 "schema": output_schema(df),
                 "python_range": sum(python_under_range(p) for _, p in plans),
+                "hidden": hidden_census([p for _, p in plans[1:]]),
             }
         old = committed.get(key)
         if old is not None and _tracked(old) == _tracked(entry):
@@ -313,11 +338,15 @@ def plans_md(entries: dict[str, dict]) -> str:
         f"{len(entries)} registered queries planned (streams/write-side "
         f"excluded: {len(SKIP)}); generated by tools/plan_manifest.py from "
         "plan_manifest.json; the invariants behind these numbers are "
-        "enforced by tests/test_plans_physical.py. Caveat: the counts "
-        "read the top-level plan only, and a localCheckpoint boundary "
-        "hides its upstream subtree there, so checkpointed queries "
-        "under-count scans (the manifest's fp does cover the hidden "
-        "plans; `python tools/plan_manifest.py <key>` prints them).",
+        "enforced by tests/test_plans_physical.py. The metric rows read "
+        "the top-level plan, where a localCheckpoint hides its upstream "
+        "subtree, so checkpointed queries under-count scans; the "
+        "`hidden` rows count the three scale-gated node kinds in the "
+        "checkpoint-hidden plans. tools/sp_audit.py measures the rows "
+        "through every SinglePartition exchange, BNLJ broadcast side and "
+        "Cartesian side in top-level and hidden plans alike, and the "
+        "tests gate them (`python tools/plan_manifest.py <key>` prints "
+        "a key's hidden plans).",
         "",
         "| metric | total | queries with >0 |",
         "|---|---|---|",
@@ -325,6 +354,9 @@ def plans_md(entries: dict[str, dict]) -> str:
     for k in _METRICS:
         n_q = sum(1 for e in entries.values() if e[k])
         lines.append(f"| {k} | {totals[k]} | {n_q} |")
+    for k in _HIDDEN:
+        n = [e["hidden"].get(k, 0) for e in entries.values()]
+        lines.append(f"| hidden {k} | {sum(n)} | {sum(map(bool, n))} |")
     lines += [
         "",
         "Heaviest plans by shuffle count:",

@@ -1,35 +1,35 @@
-"""Registry-wide EMPIRICAL SinglePartition exchange audit → sp_audit.json.
+"""Registry-wide measured plan gate → sp_audit.json.
 
-The static census (tools/plan_manifest.py → PLANS.md) counts ~450
-``Arguments: SinglePartition`` exchange lines across ~208 plans but
-cannot tell a one-row totals readout from an entity-sized global sort —
-the round-4 verdict's "What's wrong" #3.  This tool closes that gap by
-MEASURING: it executes every registry query that plans a SinglePartition
-exchange (at sf0.001 and sf0.01) and reads the actual
-``shuffleRecordsWritten`` of each such exchange from the executed plan's
-metrics, via the AQE plan tree.
+Three node kinds break at 100 TB when the rows they carry grow with the
+data: a SinglePartition exchange (one reducer takes its whole input), a
+BroadcastNestedLoopJoin (every streamed row meets every row of the
+broadcast side) and a CartesianProduct.  The manifest census
+(tools/plan_manifest.py) counts them but cannot tell a one-row total
+from an entity-sized relation.  This tool measures them: it executes
+every non-``SKIP`` key at sf0.001, and at sf0.01 too when sf0.001 showed
+one of the kinds, and reads from the executed plans' metrics (through
+the AQE plan tree and its subqueries):
 
-A SinglePartition exchange is scale-safe iff the rows it carries are
-bounded by DOMAIN CARDINALITY (one-row totals, shuffle-partition ``__pid``
-offsets, calendar days, class labels, vocabulary types), not by data
-size.  The audit therefore records, per key, the max rows any
-SinglePartition exchange carried at each SF; tests/test_plans_physical.py
-asserts (a) every audited key stays under the absolute cap and (b) rows
-do not scale with the data (10x data -> <=3x rows through the exchange).
+- ``sp_<sf>``: the rows written through each SinglePartition exchange;
+- ``bnlj_<sf>``: the rows on each BNLJ's broadcast side;
+- ``cartesian_<sf>``: ``[left, right]`` rows of each CartesianProduct.
 
-Blind spot (same as the static census, documented there): a lazy
-localCheckpoint or a cached relation truncates the visible plan, so
-SinglePartition exchanges strictly upstream of such a boundary are not
-walked here — those subtrees are covered by the per-key plan pins on
-their builder helpers instead.
+It walks the top-level plan and every plan a ``localCheckpoint`` hid
+while the key was built: ``plan_manifest.capture`` returns those frames,
+and each keeps the executed plan (and metrics) its checkpoint ran.  A
+hidden plan whose checkpoint is never read reports 0 rows for the nodes
+of its last stage; its exchanges and broadcasts ran at the checkpoint
+call, so their rows are real.
 
-Each key is built through the plan manifest's ``capture`` in its session
-shape, and the audit records the key's plan fingerprint (``fps``), so
-tests/test_plans_physical.py can tell an audit of an older plan from a
-current one.
+``tools/sp_bounds.classify_offenders`` applies one rule to all three
+kinds, and this tool exits 1 on any offender before the artifact can be
+committed as clean; tests/test_plans_physical.py runs the same rule over
+the committed artifact, and checks that it covers every key whose
+manifest shows one of the kinds and that its fingerprints (``fps``)
+are the manifest's.
 
-Usage: python tools/sp_audit.py            # writes sp_audit.json
-       python tools/sp_audit.py prefix...  # audit only matching keys
+Usage: python tools/sp_audit.py            # writes sp_audit.json (~10 min)
+       python tools/sp_audit.py prefix...  # re-audit matching keys, merge
 """
 
 from __future__ import annotations
@@ -42,134 +42,174 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gcp_de_data_pipeline_cc_spark.plans import REGISTRY
-from tools.plan_manifest import SF_DIR, SKIP, capture, fingerprint, session
+from tools.plan_manifest import SF_DIR, SKIP, analyzed, capture, fingerprint, session
+from tools.plan_manifest import dump as one_line_per_key
+from tools.sp_bounds import KINDS, classify_offenders
 
-SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+SF_DIRS = (SF_DIR, os.path.join(os.path.dirname(SF_DIR), "sf0.01"))
+PATH = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "sp_audit.json")
 
 
-def single_partition_rows(df) -> list[int]:
-    """Execute ``df`` and return shuffleRecordsWritten for every
-    SinglePartition ShuffleExchangeExec reachable in the final adaptive
-    plan.  Executes via collect() on purpose: a sink write would create
-    its own QueryExecution and leave this plan's metrics at zero — and
-    registry outputs are readout-sized, so the driver transfer is noise."""
-    df.collect()
-    root = df._jdf.queryExecution().executedPlan()
-    rows: list[int] = []
-    seen: set[str] = set()
+def _unwrap(node):
+    """The node an AQE stage or a reused exchange stands for."""
+    while True:
+        cls = node.getClass().getSimpleName()
+        if cls.endswith("QueryStageExec"):
+            node = node.plan()
+        elif cls in ("ReusedExchangeExec", "ReusedSubqueryExec"):
+            node = node.child()
+        else:
+            return node
+
+
+def output_rows(node) -> int:
+    """Rows ``node`` produced: the nearest ``numOutputRows`` (or an
+    exchange's ``shuffleRecordsWritten``) down a single-child chain;
+    -1 where neither can be read."""
+    while True:
+        node = _unwrap(node)
+        for name in ("numOutputRows", "shuffleRecordsWritten"):
+            m = node.metrics().get(name)
+            if m.isDefined():
+                return int(m.get().value())
+        kids = node.children()
+        if kids.size() != 1:
+            return -1
+        node = kids.head()
+
+
+def measured_rows(frames) -> dict[str, list]:
+    """Execute ``frames[0]`` (readout-sized, so collect() costs nothing;
+    a sink write would run its own QueryExecution) and read, for each
+    kind, the rows of every node of that kind in the executed plans of
+    all ``frames``."""
+    frames[0].collect()
+    out: dict[str, list] = {k: [] for k in KINDS}
+    identity = frames[0]._sc._jvm.System.identityHashCode  # noqa: SLF001
+    seen: set[int] = set()
 
     def walk(node) -> None:
+        node = _unwrap(node)
+        ident = identity(node)  # a reused stage resolves to its original
+        if ident in seen:
+            return
+        seen.add(ident)
         cls = node.getClass().getSimpleName()
-        node_id = str(node.id()) if hasattr(node, "id") else None
-        if cls == "ShuffleExchangeExec":
-            key = node.nodeName() + "#" + str(node.hashCode())
-            if key not in seen:
-                seen.add(key)
-                if node.outputPartitioning().toString() == "SinglePartition":
-                    m = node.metrics().get("shuffleRecordsWritten")
-                    rows.append(int(m.get().value()) if m.isDefined() else -1)
-        it = node.children().iterator()
-        while it.hasNext():
-            walk(it.next())
-        # AQE wrappers hold their materialized subtree out-of-band
-        if cls.endswith("QueryStageExec"):
-            walk(node.plan())
-        elif cls == "AdaptiveSparkPlanExec":
+        if cls == "AdaptiveSparkPlanExec":
             walk(node.executedPlan())
-        elif cls == "ReusedExchangeExec":
-            pass  # metrics belong to the original, already walked
+            return
+        if (cls == "ShuffleExchangeExec"
+                and node.outputPartitioning().toString() == "SinglePartition"):
+            out["sp"].append(output_rows(node))
+        elif cls == "BroadcastNestedLoopJoinExec":
+            side = node.right() if node.buildSide().toString() == "BuildRight" \
+                else node.left()
+            out["bnlj"].append(output_rows(side))
+        elif cls == "CartesianProductExec":
+            out["cartesian"].append(
+                [output_rows(node.left()), output_rows(node.right())]
+            )
+        for kids in (node.children(), node.subqueries()):
+            it = kids.iterator()
+            while it.hasNext():
+                walk(it.next())
 
-    walk(root)
-    return rows
+    for df in frames:
+        walk(df._jdf.queryExecution().executedPlan())  # noqa: SLF001
+    return {k: v for k, v in out.items() if v}
 
 
-def main() -> None:
+def audit(spark, name: str) -> tuple[dict, str | None]:
+    """``name``'s record (``<kind>_<sf>`` lists, or ``err_<sf>``) and
+    its plan fingerprint at sf0.001."""
+    rec: dict = {}
+    fp = None
+    for sf_dir in SF_DIRS:
+        sf = sf_dir.rsplit("sf", 1)[1]
+        try:
+            _, frames = capture(spark, name, explain=lambda d: d, sf_dir=sf_dir)
+            if sf_dir == SF_DIR:
+                fp = fingerprint([analyzed(d) for d in frames])
+            rows = measured_rows(frames)
+        except Exception as ex:  # noqa: BLE001 — record, don't abort
+            rec[f"err_{sf}"] = str(ex)[:160]
+            continue
+        rec.update({f"{k}_{sf}": v for k, v in rows.items()})
+        if not rec:
+            break  # none of the kinds at sf0.001: skip the larger SF
+    return rec, fp
+
+
+def dump(payload: dict) -> str:
+    """The payload with one line per key in ``fps`` and ``keys``, so a
+    diff names the keys that moved."""
+    return (
+        f'{{"audited": {payload["audited"]},\n'
+        f'"skip": {json.dumps(payload["skip"])},\n'
+        f'"fps": {one_line_per_key(payload["fps"]).rstrip()},\n'
+        f'"keys": {one_line_per_key(payload["keys"]).rstrip()}}}\n'
+    )
+
+
+def main() -> int:
     prefixes = tuple(a for a in sys.argv[1:] if not a.startswith("-"))
-
     spark = session()
     names = [
-        n
-        for n in sorted(REGISTRY)
+        n for n in sorted(REGISTRY)
         if n not in SKIP and (not prefixes or n.startswith(prefixes))
     ]
     out: dict[str, dict] = {}
     fps: dict[str, str] = {}
     t0 = time.time()
     for i, name in enumerate(names):
-        rec: dict = {}
-        for sf_dir in SF_DIRS:
-            sf = sf_dir.rsplit("sf", 1)[1]
-            try:
-                if sf_dir == SF_DIR:
-                    df, plans = capture(spark, name)
-                    fps[name] = fingerprint(plans)
-                else:
-                    df = REGISTRY[name].spark(spark, sf_dir)
-                rows = single_partition_rows(df)
-            except Exception as ex:  # noqa: BLE001 — record, don't abort
-                rec[f"err_{sf}"] = str(ex)[:160]
-                continue
-            rec[f"n_sp_{sf}"] = len(rows)
-            rec[f"max_rows_{sf}"] = max(rows, default=0)
-            if not rows:
-                break  # no SP exchange at sf0.001 -> skip the big SF
-        if rec.get("n_sp_0.001") or rec.get("n_sp_0.01") or "err_0.001" in rec:
+        rec, fp = audit(spark, name)
+        if fp is not None:
+            fps[name] = fp
+        if rec:
             out[name] = rec
         if (i + 1) % 50 == 0:
             print(f"  {i + 1}/{len(names)} audited ({time.time() - t0:.0f}s)")
     spark.stop()
 
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "sp_audit.json")
-    if prefixes and os.path.exists(path):
-        # subset runs MERGE into the existing artifact (incremental
-        # re-audit of new/changed keys without the full 15-minute pass);
-        # stale entries for keys no longer in the registry are dropped so
-        # the audited count never overstates coverage
+    if prefixes and os.path.exists(PATH):
+        # a subset run replaces the records of the keys it re-audited
+        # (a re-audited key keeps only the fields it measured now) and
+        # drops keys no longer in the registry
         current = {n for n in REGISTRY if n not in SKIP}
-        with open(path) as f:
+        with open(PATH) as f:
             prev = json.load(f)
         fps = {
-            k: v for k, v in {**prev.get("fps", {}), **fps}.items()
-            if k in current
+            k: v for k, v in {**prev["fps"], **fps}.items() if k in current
         }
         out = {
-            k: v for k, v in {**prev.get("keys", {}), **out}.items()
+            k: v for k, v in {**prev["keys"], **out}.items()
             if k in current and (k in out or k not in names)
         }
-    payload = {
-        "audited": len(fps),
-        "fps": fps,
-        "skip": sorted(SKIP),
-        "keys": out,
-    }
-    with open(path, "w") as f:
-        json.dump(payload, f, indent=0, sort_keys=True)
-    worst = sorted(
-        out.items(), key=lambda kv: -kv[1].get("max_rows_0.01", 0)
-    )[:12]
-    print(f"{len(names)} keys audited, {len(out)} with SinglePartition "
-          f"exchanges ({time.time() - t0:.0f}s)")
-    for name, rec in worst:
-        print(f"  {name}: sf0.001 max={rec.get('max_rows_0.001')} "
-              f"sf0.01 max={rec.get('max_rows_0.01')} "
-              f"(n={rec.get('n_sp_0.01', rec.get('n_sp_0.001'))})")
+    payload = {"audited": len(fps), "fps": fps, "skip": sorted(SKIP), "keys": out}
+    with open(PATH, "w") as f:
+        f.write(dump(payload))
+    print(f"{len(names)} keys audited, {len(out)} of {len(fps)} with a "
+          f"SinglePartition exchange, BNLJ or Cartesian "
+          f"({time.time() - t0:.0f}s)")
+    for name in names:
+        if name in out:
+            print(f"  {name}: {json.dumps(out[name], sort_keys=True)}")
 
-    # PROCESS PIN (round-7 gap): run the exact classification the test
-    # suite pins, over the artifact JUST WRITTEN.  A subset merge that
-    # introduces an unclassified SinglePartition bound exits 1 here —
-    # before it can be committed with a stale "all green" claim.
-    from tools.sp_bounds import classify_offenders
-
-    offenders = classify_offenders(payload["keys"])
+    offenders = classify_offenders(out)
     if offenders:
-        print("\nUNCLASSIFIED SinglePartition bounds (classify in "
-              "tools/sp_bounds.py or restructure the window):")
-        for name, why in sorted(offenders.items()):
-            print(f"  {name}: {why}")
-        sys.exit(1)
-    print("sp bound classification: clean")
+        print("\nOFFENDERS (restructure the key, or exempt it in "
+              "tools/sp_bounds.py with its measured rows and domain):")
+        for kind in (*KINDS, "err"):
+            rows = {k: why for (k, kd), why in offenders.items() if kd == kind}
+            if rows:
+                print(f"  {kind}:")
+                for key, why in sorted(rows.items()):
+                    print(f"    {key}: {why}")
+        return 1
+    print("classification: clean")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

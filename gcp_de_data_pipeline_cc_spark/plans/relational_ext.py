@@ -83,10 +83,11 @@ def fn_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     standardization problem the reference's cleansing stage implies):
     edit distance over a bounded candidate block. Scale: always block
     (here by key range; in production by phonetic/prefix keys) — never
-    all-pairs."""
+    all-pairs; the block is the broadcast side, every supplier streams
+    past it."""
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 30)
     s = load_table(spark, sf_dir, "supplier")
-    return c.crossJoin(s).select(
+    return F.broadcast(c).crossJoin(s).select(
         "c_custkey",
         "s_suppkey",
         F.levenshtein("c_name", "s_name").alias("edit_dist"),

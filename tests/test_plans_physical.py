@@ -464,10 +464,9 @@ def test_sp_audit_covers_current_registry():
 def test_measured_plan_sides_all_bounded():
     """Every SinglePartition exchange, BNLJ broadcast side and smaller
     Cartesian side in every audited plan stayed under its cap at both
-    scale factors and did not grow with the data (10x input -> <=3x
-    rows, with a 64-row floor for parallelism artifacts): no
-    entity-sized relation funnels through one reducer or meets every
-    row of another."""
+    scale factors, and no side past 64 rows grew with the data (10x
+    input -> <=3x rows, node by node): no entity-sized relation funnels
+    through one reducer or meets every row of another."""
     assert not classify_offenders(_sp_audit()["keys"])
 
 

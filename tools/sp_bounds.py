@@ -5,11 +5,14 @@ of three node kinds carried: every SinglePartition exchange (``sp``),
 every BroadcastNestedLoopJoin's broadcast side (``bnlj``) and both sides
 of every CartesianProduct (``cartesian``).  One rule holds for all of
 them: the bounded side (the exchange's input, the broadcast side, the
-smaller Cartesian side) stays under an absolute cap, and carries at most
-3x more rows for 10x more data (with a 64-row floor for shuffle-partition
-artifacts).  Rows bounded by a domain (one-row totals, ``__pid``
-offsets, class labels, a calendar spine) pass; rows that grow with the
-data do not.
+smaller Cartesian side) stays under an absolute cap, and a side above
+64 rows (past shuffle-partition artifacts) carries at most 3x more rows
+for 10x more data.  Growth is checked node by node: each kind's sides,
+sorted, pair up across the two scale factors, so a large constant side
+cannot hide a smaller one that grows; when the node counts differ no
+pairing holds, and every sf0.01 side must stay within the 64 rows.
+Rows bounded by a domain (one-row totals, ``__pid`` offsets, class
+labels, a calendar spine) pass; rows that grow with the data do not.
 
 Both the audit (before it writes the artifact) and
 tests/test_plans_physical.py (over the committed artifact) call
@@ -54,27 +57,19 @@ EXEMPT: dict[tuple[str, str], int] = {
     ("stats_kruskal_wallis", "sp"): 512,
     # the merged sample, _QS_SHARDS x (_QS_PER_SHARD + 1) rows: 260 -> 264
     ("sketch_quantile_samples", "sp"): 264,
-    # NOT domain-bounded: one window ranks every document (500 -> 500,
-    # the documents table does not grow between the audit SFs).  A
-    # global_rank ranking changes the summation order of the per-bucket
-    # float AVG, which the oracle meets on a half-unit tie at sf0.1
-    # (zh/tail: exactly 4.93225), so the fix moves the oracle too
-    ("corpus_perplexity_buckets", "sp"): 512,
 }
 
 
-def bounded_rows(kind: str, rows: list) -> int:
-    """The largest bounded side among one kind's measured nodes (-1 if
-    any went unmeasured)."""
-    sides = [min(r) if kind == "cartesian" else r for r in rows]
-    return -1 if any(s < 0 for s in sides) else max(sides, default=0)
+def bounded_sides(kind: str, rows: list) -> list[int]:
+    """One kind's bounded sides, sorted (a Cartesian's smaller side)."""
+    return sorted(min(r) if kind == "cartesian" else r for r in rows)
 
 
 def classify_offenders(audit_keys: dict[str, dict]) -> dict[tuple[str, str], str]:
     """``{(key, kind): why}`` for every audited node kind that errored
-    (kind ``err``), went unmeasured, exceeds its cap, or grows with the
-    data (10x input -> more than 3x rows).  Empty: the artifact is
-    clean."""
+    (kind ``err``), went unmeasured, exceeds its cap, or has a side that
+    grows with the data (10x input -> more than 3x rows, past 64).
+    Empty: the artifact is clean."""
     offenders: dict[tuple[str, str], str] = {}
     for key, rec in audit_keys.items():
         errs = {f: v for f, v in rec.items() if f.startswith("err")}
@@ -82,13 +77,17 @@ def classify_offenders(audit_keys: dict[str, dict]) -> dict[tuple[str, str], str
             offenders[key, "err"] = str(errs)
             continue
         for kind in KINDS:
-            lo = bounded_rows(kind, rec.get(f"{kind}_0.001", []))
-            hi = bounded_rows(kind, rec.get(f"{kind}_0.01", []))
+            lo = bounded_sides(kind, rec.get(f"{kind}_0.001", []))
+            hi = bounded_sides(kind, rec.get(f"{kind}_0.01", []))
             cap = EXEMPT.get((key, kind), CAP)
-            if min(lo, hi) < 0:
+            pairs = zip(lo if len(lo) == len(hi) else [0] * len(hi), hi)
+            grown = [(a, b) for a, b in pairs if b > 64 and b > 3 * a]
+            if min(lo + hi, default=0) < 0:
                 offenders[key, kind] = "rows not measured"
-            elif max(lo, hi) > cap:
-                offenders[key, kind] = f"max {max(lo, hi)} rows > cap {cap}"
-            elif hi > 3 * max(lo, 64):
-                offenders[key, kind] = f"scales with data: {lo} -> {hi}"
+            elif max(lo + hi, default=0) > cap:
+                offenders[key, kind] = f"max {max(lo + hi)} rows > cap {cap}"
+            elif grown:
+                offenders[key, kind] = "scales with data: " + ", ".join(
+                    f"{a} -> {b}" for a, b in grown
+                )
     return offenders
